@@ -1,5 +1,6 @@
 """Benchmark harness: run the query catalog at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
+/root/testdata/sf0.1) on ``session.get_spark()`` (width from $SPARK_GRAFT_CPUS,
+driver memory from $SPARK_DRIVER_MEMORY) and print ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}
 """
 
@@ -13,6 +14,56 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+
+# Headline subset by default (one per workload family, weighted toward
+# the heavy ones); BENCH_ALL=1 runs the whole catalog.
+HEADLINE = [
+    "pricing_summary",
+    "dim_broadcast_join",
+    "local_supplier_volume",
+    "update_key_split",
+    "asof_join",
+    "gaps_islands",
+    "sessionize",
+    "topk_revenue",
+    "rolling_revenue",
+    "climatology_anomaly",
+    "token_stats",
+    "language_id",
+    "dedup_exact",
+    "minhash_signatures",
+    "minhash_lsh_neardups",
+    "ngram_jaccard_pairs",
+    "knn_brute_force",
+    "embedding_neardup_pairs",
+    # round-3 additions (the r2 operators a user actually runs; n_queries
+    # records the population change — 18-query and 21-query totals are
+    # not comparable)
+    "simhash_neardups",
+    "ivf_knn",
+    "curation_pipeline",
+    # round-4 addition (unlabeled hyperplane-LSH embedding dedup)
+    "embedding_lsh_neardups",
+    # round-5 addition (concatenate-and-slice token packing)
+    "sequence_packing",
+    # round-6 additions (wide-band hyperplane LSH — the scale-mode knob;
+    # TF-IDF keyword extraction; Lee-et-al-style span dedup)
+    "embedding_lsh_neardups_wide",
+    "tfidf_top_terms",
+    "paragraph_dedup",
+    "sq_ann_topk",
+    # round-7 additions: the portable oracle-checkable sketch family,
+    # the bigram LM scorer, container-metadata probing, and the two
+    # analytics-breadth joins
+    "hll_user_distinct",
+    "bloom_decontamination",
+    "countmin_heavy_hitters",
+    "bigram_logprob_quality",
+    "media_probe_stats",
+    "nation_pair_volume",
+    "rollup_revenue",
+]
 
 
 def plan_fingerprint(df) -> str:
@@ -49,23 +100,14 @@ def plan_fingerprint(df) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from pyspark.sql import SparkSession
-
+    from tools.check import TABLES
     from zarr_climate_etl_ipfs_spark.plans.queries import REGISTRY
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench")
-        .config("spark.sql.shuffle.partitions", str(max(8, int(cpus) if cpus.isdigit() else 32)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .getOrCreate()
-    )
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM/scan path once so per-query numbers measure the queries,
@@ -75,54 +117,6 @@ def main() -> None:
     except Exception:  # noqa: BLE001 — warmup only; the timed run records it
         pass
 
-    # Headline subset by default (one per workload family, weighted toward
-    # the heavy ones); BENCH_ALL=1 runs the whole catalog.
-    HEADLINE = [
-        "pricing_summary",
-        "dim_broadcast_join",
-        "local_supplier_volume",
-        "update_key_split",
-        "asof_join",
-        "gaps_islands",
-        "sessionize",
-        "topk_revenue",
-        "rolling_revenue",
-        "climatology_anomaly",
-        "token_stats",
-        "language_id",
-        "dedup_exact",
-        "minhash_signatures",
-        "minhash_lsh_neardups",
-        "ngram_jaccard_pairs",
-        "knn_brute_force",
-        "embedding_neardup_pairs",
-        # round-3 additions (the r2 operators a user actually runs; n_queries
-        # records the population change — 18-query and 21-query totals are
-        # not comparable)
-        "simhash_neardups",
-        "ivf_knn",
-        "curation_pipeline",
-        # round-4 addition (unlabeled hyperplane-LSH embedding dedup)
-        "embedding_lsh_neardups",
-        # round-5 addition (concatenate-and-slice token packing)
-        "sequence_packing",
-        # round-6 additions (wide-band hyperplane LSH — the scale-mode knob;
-        # TF-IDF keyword extraction; Lee-et-al-style span dedup)
-        "embedding_lsh_neardups_wide",
-        "tfidf_top_terms",
-        "paragraph_dedup",
-        "sq_ann_topk",
-        # round-7 additions: the portable oracle-checkable sketch family,
-        # the bigram LM scorer, container-metadata probing, and the two
-        # analytics-breadth joins
-        "hll_user_distinct",
-        "bloom_decontamination",
-        "countmin_heavy_hitters",
-        "bigram_logprob_quality",
-        "media_probe_stats",
-        "nation_pair_volume",
-        "rollup_revenue",
-    ]
     run_all = bool(os.environ.get("BENCH_ALL"))
     selected = (
         REGISTRY if run_all else {k: REGISTRY[k] for k in HEADLINE if k in REGISTRY}
@@ -173,11 +167,7 @@ def main() -> None:
         import duckdb
 
         con = duckdb.connect()
-        tables = (
-            "region nation customer supplier part orders lineitem events "
-            "documents embeddings"
-        ).split()
-        for tname in tables:
+        for tname in TABLES:
             p = f"{sf_dir}/{tname}.parquet"
             if Path(p).exists():
                 con.execute(f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{p}')")

@@ -37,7 +37,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor, register
@@ -49,6 +48,7 @@ from zarr_climate_etl_ipfs_spark.operators.qc import (
 from zarr_climate_etl_ipfs_spark.operators.rollup import RollupStore
 from zarr_climate_etl_ipfs_spark.operators.updates import contiguous_ranges
 from zarr_climate_etl_ipfs_spark.plans.catalog import StacCatalog
+from zarr_climate_etl_ipfs_spark.session import get_spark
 from zarr_climate_etl_ipfs_spark.sources.ingest import canonicalize
 from zarr_climate_etl_ipfs_spark.sources.store import GridStore
 
@@ -87,14 +87,7 @@ def fake_provider_frame(spark, start: str, days: int, seed: int) -> "pd.DataFram
 
 def main() -> None:
     work = Path(tempfile.mkdtemp(prefix="chirps_like_"))
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("chirps-like-example")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("chirps-like-example")
     spark.sparkContext.setLogLevel("ERROR")
     desc = CHIRPS_LIKE
     store = GridStore(work / "store", desc, spark)

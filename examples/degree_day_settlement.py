@@ -37,24 +37,17 @@ import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor  # noqa: E402
+from zarr_climate_etl_ipfs_spark.session import get_spark  # noqa: E402
 from zarr_climate_etl_ipfs_spark.sources.grib2 import grib2_decoder  # noqa: E402
 from zarr_climate_etl_ipfs_spark.sources.ingest import read_binary_gridded  # noqa: E402
 from zarr_climate_etl_ipfs_spark.sources.store import GridStore  # noqa: E402
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("degree_day_settlement")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("degree_day_settlement")
     spark.sparkContext.setLogLevel("ERROR")
     work = Path(tempfile.mkdtemp(prefix="ddsettle_"))
 

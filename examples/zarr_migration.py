@@ -33,23 +33,16 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import datetime as dt
 
 import numpy as np
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
+from zarr_climate_etl_ipfs_spark.session import get_spark
 from zarr_climate_etl_ipfs_spark.sources import zarr2
 from zarr_climate_etl_ipfs_spark.sources.store import GridStore
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("zarr-migration-example")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("zarr-migration-example")
     spark.sparkContext.setLogLevel("ERROR")
     work = Path(tempfile.mkdtemp(prefix="zarr_migration_"))
 

@@ -372,18 +372,10 @@ def main() -> int:
         print(f"ERROR: unknown --corpus {mode!r} (edge|minimal|empty)")
         return 1
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("adversarial_check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("adversarial_check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -22,17 +22,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
     from zarr_climate_etl_ipfs_spark.plans.queries import REGISTRY
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("capture_plans")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     for name in names:

@@ -101,16 +101,9 @@ def main() -> int:
     only = set(argv[1:])
 
     import __spark_entry__ as entrymod
-    from pyspark.sql import SparkSession
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -54,25 +54,15 @@ def main() -> None:
     ny = int(sys.argv[2]) if len(sys.argv) > 2 else 40
     nx = int(sys.argv[3]) if len(sys.argv) > 3 else 40
 
-    from pyspark.sql import SparkSession
-
     from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
+    from zarr_climate_etl_ipfs_spark.session import get_spark
     from zarr_climate_etl_ipfs_spark.sources.grib2 import (
         grib2_decoder,
         write_grib2_sharded,
     )
     from zarr_climate_etl_ipfs_spark.sources.ingest import read_binary_gridded
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("grib2_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("grib2_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # GRIB section 3 wants a microdegree-regular grid: exact 1-degree steps
@@ -176,7 +166,7 @@ def main() -> None:
         "flatMap decode (the per-file parallel unit of any GRIB archive);",
         "one-bucket read = a fixed month by path glob, which must stay FLAT",
         "as the archive grows — the file-per-bucket sharding IS the",
-        "partition pruning. Warm session, local[32]. Reproduce:",
+        f"partition pruning. Warm session, {spark.sparkContext.master}. Reproduce:",
         "`python tools/grib2_bench.py`.",
         "",
         *table,

@@ -5,11 +5,13 @@ machine" for a full CHIRPS US 0.25° parse (~8.6B cells, README.md:55).
 This harness generates synthetic NetCDF3 and GRIB2 files with this repo's
 own writers, ingests them through the production path
 (`read_binary_gridded`: binaryFile scan → Arrow mapInPandas decode → tall
-rows), and reports cells/second on local[32] — the number that, divided
-into a corpus's cell count, estimates the wall-clock of a full parse at a
-given cluster width.
+rows), and reports cells/second at the session's width — the number that,
+divided into a corpus's cell count, estimates the wall-clock of a full parse
+at a given cluster width.
 
 Usage: python tools/ingest_bench.py [n_files] [timesteps] [ny] [nx]
+The session comes from get_spark(): width from $SPARK_GRAFT_CPUS (default all
+cores), driver memory from $SPARK_DRIVER_MEMORY.
 """
 
 from __future__ import annotations
@@ -33,9 +35,8 @@ def main() -> None:
     ny = int(sys.argv[3]) if len(sys.argv) > 3 else 100
     nx = int(sys.argv[4]) if len(sys.argv) > 4 else 100
 
-    from pyspark.sql import SparkSession
-
     from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
+    from zarr_climate_etl_ipfs_spark.session import get_spark
     from zarr_climate_etl_ipfs_spark.sources.grib2 import (
         GRIB2Message,
         grib2_decoder,
@@ -90,15 +91,7 @@ def main() -> None:
         )
     gen_s = time.perf_counter() - t0
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ingest-bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark("ingest-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     out = {}

@@ -16,7 +16,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import sys
 import time
 from pathlib import Path
@@ -32,30 +31,18 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
 
     import duckdb
-    from pyspark.sql import SparkSession
 
+    from bench import HEADLINE
+    from tools.check import TABLES
     from zarr_climate_etl_ipfs_spark.plans.queries import REGISTRY
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("interleave_catalog")
-        .config("spark.sql.shuffle.partitions", str(max(8, int(cpus))))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .getOrCreate()
-    )
+    spark = get_spark("interleave_catalog")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    for tname in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
+    for tname in TABLES:
         p = f"{sf_dir}/{tname}.parquet"
         if Path(p).exists():
             con.execute(f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{p}')")
@@ -66,10 +53,7 @@ def main() -> None:
     if args.all:
         selected = {k: q for k, q in REGISTRY.items() if q.oracle}
     else:
-        # headline list lives in bench.py's main(); re-derive it from source
-        src = Path(__file__).resolve().parent.parent / "bench.py"
-        names = re.findall(r'^\s+"([a-z0-9_]+)",\s*$', src.read_text(), re.M)
-        selected = {k: REGISTRY[k] for k in names if k in REGISTRY and REGISTRY[k].oracle}
+        selected = {k: REGISTRY[k] for k in HEADLINE if k in REGISTRY and REGISTRY[k].oracle}
 
     out: dict = {"sf_dir": sf_dir, "runs": args.runs, "interleaved": True, "queries": {}}
     for name, qd in selected.items():

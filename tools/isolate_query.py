@@ -3,8 +3,9 @@
 
 Usage: python tools/isolate_query.py [--runs N] [--explain DIR] QUERY [QUERY...]
 
-Timing methodology matches bench.py (same tune(), same local[$SPARK_GRAFT_CPUS]
-master, warm pricing_summary scan first) but runs ONLY the named queries, so
+Timing methodology matches bench.py (same get_spark() session, so width comes
+from $SPARK_GRAFT_CPUS and driver memory from $SPARK_DRIVER_MEMORY; warm
+pricing_summary scan first) but runs ONLY the named queries, so
 numbers are free of the 145-query bench's contention; the noop sink times the
 computation, not the sink (guide section 1.4).
 """
@@ -28,21 +29,11 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
 
     from zarr_climate_etl_ipfs_spark.plans.queries import REGISTRY
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("isolate")
-        .config("spark.sql.shuffle.partitions", str(max(8, int(cpus))))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .getOrCreate()
-    )
+    spark = get_spark("isolate")
     spark.sparkContext.setLogLevel("ERROR")
     REGISTRY["pricing_summary"].fn(spark, sf_dir).collect()  # warm
 

@@ -47,7 +47,6 @@ def main() -> None:
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
     n_cells = int(sys.argv[3]) if len(sys.argv) > 3 else 64
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from zarr_climate_etl_ipfs_spark.operators.similarity import (
@@ -55,16 +54,9 @@ def main() -> None:
         search_ivf_index,
         write_ivf_index,
     )
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("ivf_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark("ivf_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warmup: one tiny build+search so the 1x row isn't charged cold-start
@@ -181,7 +173,7 @@ def main() -> None:
         f"(PartitionFilters, pinned in tests). {dim}-dim vectors, {n_cells}",
         "cells, 4 queries, vectors synthesized JVM-side (spark.range + hash",
         "expression — the harness has no driver-side materialization to",
-        "distort the curve). Warm session, local[32]. Reproduce:",
+        f"distort the curve). Warm session, {spark.sparkContext.master}. Reproduce:",
         "`python tools/ivf_bench.py`.",
         "",
         *table,

@@ -4,10 +4,12 @@ Builds dup-heavy corpora at 1x/10x/100x of sf0.1's documents table
 (5k -> 50k -> 500k rows; copies carry a deterministic mutation on half the
 docs so the corpus mixes exact dups, near dups and unique text), runs the
 shipped catalog queries unchanged (REGISTRY entries), and records runtime,
-shuffle-write bytes and output rows per point from the Spark UI REST API.
+shuffle-write bytes (from the JVM status store) and output rows per point.
 
 Usage: python tools/scale_curve.py [out_md]
-Writes SCALE.md at the repo root by default.
+Writes SCALE.md at the repo root by default. The session comes from
+get_spark(): width from $SPARK_GRAFT_CPUS, driver memory from
+$SPARK_DRIVER_MEMORY.
 """
 
 from __future__ import annotations
@@ -17,7 +19,6 @@ import os
 import shutil
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -25,7 +26,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 BASE = Path("/root/testdata/sf0.1/documents.parquet")
 EMB_BASE = Path("/root/testdata/sf0.1/embeddings.parquet")
 WORK = Path("/tmp/scale_curve")
-UI_PORT = 4061
 
 QUERIES = [
     "dedup_exact",
@@ -238,34 +238,34 @@ def build_emb_corpora(dirs: dict[str, Path]) -> None:
         writer.close()
 
 
-def shuffle_write_bytes(app_id: str) -> int:
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
+def shuffle_write_bytes(spark, group: str) -> int:
+    """Shuffle bytes written by the stages of every job in ``group``, read
+    from the JVM status store (no UI server needed)."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store = jsc.statusStore()
+    total = 0
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        info = sc.statusTracker().getJobInfo(jid)
+        for sid in info.stageIds if info else ():
+            try:
+                total += store.lastStageAttempt(sid).shuffleWriteBytes()
+            except Exception:  # noqa: BLE001 — stage skipped or evicted
+                continue
+    return total
 
 
 def main() -> None:
     out_md = Path(sys.argv[1]) if len(sys.argv) > 1 else Path(__file__).parent.parent / "SCALE.md"
-    from pyspark.sql import SparkSession
-
     from zarr_climate_etl_ipfs_spark.plans.queries import REGISTRY
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
     dirs = build_corpora()
     build_emb_corpora(dirs)
     build_events_corpora(dirs)
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("scale-curve")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark("scale-curve")
     spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
     # warm
     REGISTRY["dedup_exact"].fn(spark, str(dirs["x1"])).collect()
 
@@ -287,13 +287,14 @@ def main() -> None:
         for qname in all_names:
             best = float("inf")
             n = sw = 0
+            group = f"scale_curve:{label}:{qname}"
+            spark.sparkContext.setJobGroup(group, group)
             for rep in range(n_runs):
-                sw0 = shuffle_write_bytes(app_id)
                 t0 = time.perf_counter()
                 n = len(runners[qname](spark, sf_dir).collect())
                 t = time.perf_counter() - t0
                 if rep == 0:
-                    sw = shuffle_write_bytes(app_id) - sw0
+                    sw = shuffle_write_bytes(spark, group)
                 best = min(best, t)
             results[qname][label] = {"sec": round(best, 2), "shuffle_mb": round(sw / 1e6, 1), "rows": n}
             print(f"{label:5s} {qname:38s} {best:8.2f}s  shuffle={sw/1e6:9.1f} MB  rows={n}", flush=True)
@@ -352,10 +353,10 @@ def write_md(out_md: Path, results: dict) -> None:
         "two bracketed production scale modes (operator defaults the pinned",
         "catalog entries can't use because their oracles need fixed",
         "parameters).",
-        "Runtime = min over full runs, local[32] (the host shows multi-second",
+        "Runtime = min over full runs, local[$SPARK_GRAFT_CPUS] (the host shows multi-second",
         "contention spikes; shuffle bytes are run-invariant and come from the",
-        "Spark UI REST API — sum of completed stages' shuffleWriteBytes, delta",
-        "per query). Reproduce: `python tools/scale_curve.py` (run twice, take",
+        "JVM status store — sum of shuffleWriteBytes over the stages of the",
+        "query's jobs). Reproduce: `python tools/scale_curve.py` (run twice, take",
         "per-cell min).",
         "",
         "## Text dedup family (5k → 50k → 500k docs)",

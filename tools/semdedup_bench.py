@@ -29,23 +29,14 @@ MARK_END = "<!-- semdedup-bench:end -->"
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from scale_curve import build_corpora, build_emb_corpora
     from zarr_climate_etl_ipfs_spark.operators.similarity import semdedup_census
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
     dirs = build_corpora()
     build_emb_corpora(dirs)
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("semdedup_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark("semdedup_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     results = []
@@ -84,7 +75,7 @@ def main() -> None:
         "",
         "`semdedup_census(assign_method=\"pandas\")`, k = max(8, n/250) so the",
         "per-cluster pair space stays ~constant (the paper's tractability",
-        "condition); dim 64, threshold 0.35, local[32]. The seed collect is",
+        f"condition); dim 64, threshold 0.35, {spark.sparkContext.master}. The seed collect is",
         "k rows (bounded driver step); assignment is one Arrow-matmul scan —",
         "no n·k row materialization.",
         "",

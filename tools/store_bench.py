@@ -59,20 +59,11 @@ def main() -> None:
     ny = int(sys.argv[2]) if len(sys.argv) > 2 else 40
     nx = int(sys.argv[3]) if len(sys.argv) > 3 else 40
 
-    from pyspark.sql import SparkSession
-
     from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
+    from zarr_climate_etl_ipfs_spark.session import get_spark
     from zarr_climate_etl_ipfs_spark.sources.store import GridStore
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("store_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark("store_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     lats = np.linspace(50.0, 10.0, ny)
@@ -194,7 +185,7 @@ def main() -> None:
         "mid-table month; compact: the buckets those fragmented), so flat",
         "rows are the pass criterion — the design claim in sources/store.py",
         "that insert cost ∝ touched buckets, not table size — while initial",
-        "write is expected ~linear. Warm session, local[32]. Reproduce:",
+        f"write is expected ~linear. Warm session, {spark.sparkContext.master}. Reproduce:",
         "`python tools/store_bench.py`.",
         "",
         *table,

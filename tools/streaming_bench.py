@@ -213,6 +213,20 @@ def _resolve_op(name: str):
     raise SystemExit(f"unknown op {name!r}")
 
 
+def _rocksdb_session(app_name: str):
+    """The shared get_spark() session with the RocksDB state-store provider
+    (a runtime SQL conf, so it is set after the session is built)."""
+    from zarr_climate_etl_ipfs_spark.session import get_spark
+
+    spark = get_spark(app_name)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
 def _run_one_op(name: str, n_keys: int, rows_per_key: int) -> None:
     """Subprocess entry: run BOTH scales for one op in this process's own
     JVM and print one JSON line per scale. Process-per-op isolation is
@@ -221,23 +235,8 @@ def _run_one_op(name: str, n_keys: int, rows_per_key: int) -> None:
     per-batch latency in that JVM (measured: the dedup op at 3.4-3.9
     s/batch after a 250 s TWS run vs 0.6 s/batch in a fresh process)."""
     _shim_protobuf()
-    from pyspark.sql import SparkSession
-
     build, fresh = _resolve_op(name)
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("streaming_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _rocksdb_session("streaming_bench")
     for n_batches in SCALES:
         src = build_drops(n_batches, n_keys, rows_per_key, fresh)
         r = run_stream(spark, src, name, build, WORK / "ckpt")
@@ -258,23 +257,8 @@ def _run_dedup_long(n_batches: int, n_keys: int, rows_per_key: int) -> None:
     stream length — the 10×-the-curve run that pins the state bound as a
     hard asymptote rather than a two-point trend."""
     _shim_protobuf()
-    from pyspark.sql import SparkSession
-
     build, fresh = _resolve_op("dedup_within_watermark")
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("streaming_bench_long")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _rocksdb_session("streaming_bench_long")
     src = build_drops(n_batches, n_keys, rows_per_key, fresh)
     r = run_stream(spark, src, "dedup_within_watermark", build, WORK / "ckpt")
     r["scale_batches"] = n_batches
@@ -420,7 +404,7 @@ def main() -> None:
         "time advancing 1 h/batch against a 2 h watermark): keys seen grows",
         "with the stream, state rows must NOT — eviction, not accumulation,",
         "is the pass criterion. One parquet drop per micro-batch",
-        "(maxFilesPerTrigger=1, AvailableNow), local[32], RocksDB provider,",
+        "(maxFilesPerTrigger=1, AvailableNow), local[$SPARK_GRAFT_CPUS], RocksDB provider,",
         "one PROCESS per op (stop()+getOrCreate() reuses the py4j JVM, and",
         "a long TWS run measurably slows the next query's batches there —",
         "0.6 vs 3.9 s/batch for the same dedup stream). Reproduce:",

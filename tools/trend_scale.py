@@ -70,18 +70,10 @@ def build(label: str, days: int) -> Path:
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
 
-    from pyspark.sql import SparkSession
-
     from zarr_climate_etl_ipfs_spark.plans.queries import REGISTRY
+    from zarr_climate_etl_ipfs_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark("trend_scale")
     spark.sparkContext.setLogLevel("ERROR")
     REGISTRY["pricing_summary"].fn(spark, "/root/testdata/sf0.1").collect()  # warmup
 

@@ -56,23 +56,13 @@ def main() -> None:
     ny = int(sys.argv[2]) if len(sys.argv) > 2 else 40
     nx = int(sys.argv[3]) if len(sys.argv) > 3 else 40
 
-    from pyspark.sql import SparkSession
-
+    from zarr_climate_etl_ipfs_spark.session import get_spark
     from zarr_climate_etl_ipfs_spark.sources.zarr2 import (
         read_zarr_tall,
         write_zarr_tall,
     )
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("zarr_bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("zarr_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     lats = np.linspace(50.0, 10.0, ny)
@@ -165,7 +155,7 @@ def main() -> None:
         "pruned read = a fixed 7-day window, where the chunk-grid filter on",
         "the range ordinal must keep cost FLAT as the time axis grows (the",
         "zarr analog of GridStore's manifest bucket pruning). Warm session,",
-        "local[32]. Reproduce: `python tools/zarr_bench.py`.",
+        f"{spark.sparkContext.master}. Reproduce: `python tools/zarr_bench.py`.",
         "",
         *table,
         "",

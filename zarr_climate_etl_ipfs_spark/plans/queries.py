@@ -2752,7 +2752,8 @@ def simhash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 dump; 0 in the r16 one — both sides now scan the checkpoint
     # blocks). One extra eager action vs one fewer kernel execution was
     # the verdict's measure-both-ways ask: interleaved A/B
-    # (tools/simhash_ab_r16.py) had checkpoint win EVERY rep — mins
+    # (tools/simhash_ab_r16.py, since deleted; last present at commit
+    # 978e419) had checkpoint win EVERY rep — mins
     # 4.45/2.04/1.25 s for barrier-only / checkpoint / checkpoint
     # without the final repartition.
     sh = (
@@ -3558,8 +3559,9 @@ def embedding_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     entirely. Norms are hoisted per row before the pair join
     (bit-identical to per-pair cosine, same fold).
 
-    Incremental stage costs measured at sf0.1 (tools/profile_lsh.py, noop
-    sink, warm, min-of-3, pre-rebuild plan): scan 0.14 s, +signature
+    Incremental stage costs measured at sf0.1 (tools/profile_lsh.py, since
+    deleted; last present at commit 978e419; noop sink, warm, min-of-3,
+    pre-rebuild plan): scan 0.14 s, +signature
     0.08 s, +banding ~0, +bucket-agg 0.23 s, +pair-gen 0.17 s,
     +pair-dedup 0.52 s, +verify 0.29 s, +final sort 0.37 s — no single
     hot stage; the floor was ~8 jobs of spread cost, dominated by the
@@ -3761,7 +3763,8 @@ def embedding_lsh_neardups_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride on probabilistic recall.
 
     FLOOR RECORD (r14; roster entry frozen): the r13 local riser
-    1.19→3.12 s was interleave-A/B'd (BENCH_interleave_r13risers.json) —
+    1.19→3.12 s was interleave-A/B'd (BENCH_interleave_r13risers.json,
+    since deleted; last present at commit 978e419) —
     quiet-host min 1.79 s, so the 3.12 s row was mostly ENVIRONMENT, with
     a residual ~1.5× vs the r12 row that motivated one last attempt: a
     pure-JVM 48-plane expression signature (no Python worker) is
@@ -6446,7 +6449,8 @@ def bigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.44-1.88 across four sessions). A straight COUNT over the token
     # explode is a cheap concurrent broadcast-build job; Σn == COUNT(*)
     # exactly, so results are unchanged. Also measured and rejected this
-    # round (tools/bigram_ab_r16.py): folding t into the unigram
+    # round (tools/bigram_ab_r16.py, since deleted; last present at commit
+    # 978e419): folding t into the unigram
     # broadcast via an unpartitioned window (mins ~1.5-1.7 s, no AQE
     # broadcast reuse materialized), a broadcast join-back replacing the
     # window (2.2 s), a localCheckpoint single-tokenize variant (2.3 s),

@@ -38,7 +38,6 @@ def get_spark(app_name: str = "zarr-climate-etl-ipfs-spark", cpus: int | None = 
     b = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
