@@ -339,31 +339,6 @@ def test_brute_force_matches_numpy(spark, embeddings):
     assert got == expected_ids
 
 
-def test_lsh_topk_recall(spark, embeddings):
-    """LSH top-10 must recover most of the exact top-10 (recall ≥ 0.5 on
-    this small corpus with 3 bands)."""
-    query = embeddings.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = {r["vec_id"] for r in similarity.brute_force_topk(embeddings, query, k=10).collect()}
-    approx = {r["vec_id"] for r in similarity.lsh_topk(embeddings, query, k=10).collect()}
-    assert len(exact & approx) >= 5
-
-
-def test_embedding_near_duplicates_finds_planted(spark, embeddings):
-    """Plant a near-identical copy of vec 0 and expect the pair out."""
-    pdf = embeddings.limit(50).toPandas()
-    v0 = np.array(pdf.loc[pdf.vec_id == 0, "embedding"].iloc[0], dtype=np.float32)
-    noisy = (v0 + np.float32(0.001)).tolist()
-    extra = pdf.iloc[[0]].copy()
-    extra["vec_id"] = 99999
-    extra["embedding"] = [noisy]
-    df = spark.createDataFrame(pd.concat([pdf, extra]), schema=embeddings.schema)
-    pairs = similarity.embedding_near_duplicates(df, threshold=0.999)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert (0, 99999) in got
-
-
 def test_scrub_pii_redacts_and_counts(spark):
     rows = [
         ("write to bob.smith+x@example.co.uk or call (555) 123-4567 now",),
@@ -417,28 +392,36 @@ def test_rademacher_planes_portable_definition():
 
 
 def test_srp_signature_matches_numpy(spark, embeddings):
+    """srp_signature_expr must be bit-identical to the numpy matmul sign
+    bits (float32 × ±1 products are exact in float64, so the plane-dot
+    signs do not depend on summation order), including the zero vector:
+    every dot is 0, so no bit is set."""
     planes = similarity.rademacher_planes(16, 64, seed=42)
+    zero = spark.createDataFrame(
+        [(-1, [0.0] * 64)], embeddings.select("vec_id", "embedding").schema
+    )
+    df = embeddings.select("vec_id", "embedding").unionByName(zero)
     got = {
         r["vec_id"]: r["sig"]
-        for r in embeddings.select(
-            "vec_id", similarity.srp_signature("embedding", planes).alias("sig")
+        for r in df.select(
+            "vec_id", similarity.srp_signature_expr("embedding", planes).alias("sig")
         ).collect()
     }
-    pdf = embeddings.select("vec_id", "embedding").toPandas()
+    pdf = df.toPandas()
     mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     bits = (mat @ planes.T) > 0
     want = bits @ (1 << np.arange(16, dtype=np.int64))
+    assert len(got) == len(pdf)
     for vid, sig in zip(pdf["vec_id"], want):
         assert got[int(vid)] == int(sig)
+    assert got[-1] == 0
 
 
 def test_ivf_dataframe_engine_and_pandas_assign(spark, embeddings):
-    """The DataFrame Lloyd trainer is a drop-in for pyspark.ml: full-probe
-    search equals brute force, and the Arrow-batched matmul assignment
-    agrees with the inlined-expression argmin for the same centroids."""
-    assigned, centroids = similarity.ivf_index(
-        embeddings, n_cells=6, max_iter=1, engine="dataframe"
-    )
+    """The DataFrame Lloyd trainer: full-probe search equals brute force,
+    and the Arrow-batched matmul assignment puts every vector in its
+    nearest centroid's cell by squared L2."""
+    assigned, centroids = similarity.ivf_index(embeddings, n_cells=6, max_iter=1)
     assert len(centroids) == 6 and all(len(c) == len(centroids[0]) for c in centroids)
     query = embeddings.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -447,20 +430,17 @@ def test_ivf_dataframe_engine_and_pandas_assign(spark, embeddings):
     full = [r["vec_id"] for r in
             similarity.ivf_topk(assigned, centroids, query, k=10, n_probe=6).collect()]
     assert full == exact
-    # both assignment methods put every vector in the same cell
-    by_expr = {r["vec_id"]: r["cell"] for r in
-               similarity.assign_ivf_cell(embeddings, centroids, method="expr")
-               .select("vec_id", "cell").collect()}
-    by_pandas = {r["vec_id"]: r["cell"] for r in
-                 similarity.assign_ivf_cell(embeddings, centroids, method="pandas")
-                 .select("vec_id", "cell").collect()}
-    assert by_expr == by_pandas
+    got = {r["vec_id"]: r["cell"] for r in assigned.select("vec_id", "cell").collect()}
+    pdf = embeddings.select("vec_id", "embedding").toPandas()
+    mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    d2 = ((mat[:, None, :] - np.asarray(centroids)[None, :, :]) ** 2).sum(axis=2)
+    want = dict(zip(pdf["vec_id"].tolist(), np.argmin(d2, axis=1).tolist()))
+    assert got == want
 
 
 def test_assign_ivf_cell_null_and_ragged_rows(spark):
-    """NULL / wrong-width embeddings must yield a NULL cell on BOTH
-    assignment paths instead of crashing the pandas kernel's np.stack
-    (r15 advice fix)."""
+    """NULL / wrong-width embeddings must yield a NULL cell instead of
+    crashing the pandas kernel's np.stack (r15 advice fix)."""
     centroids = [[0.0, 0.0, 0.0], [10.0, 10.0, 10.0]]
     df = spark.createDataFrame(
         [
@@ -471,16 +451,15 @@ def test_assign_ivf_cell_null_and_ragged_rows(spark):
         ],
         "vec_id int, embedding array<double>",
     )
-    for method in ("expr", "pandas"):
-        got = {
-            r["vec_id"]: r["cell"]
-            for r in similarity.assign_ivf_cell(df, centroids, "embedding", method=method)
-            .select("vec_id", "cell")
-            .collect()
-        }
-        assert got[0] == 0 and got[2] == 1, method
-        assert got[1] is None, method
-        assert got[3] is None, method
+    got = {
+        r["vec_id"]: r["cell"]
+        for r in similarity.assign_ivf_cell(df, centroids, "embedding")
+        .select("vec_id", "cell")
+        .collect()
+    }
+    assert got[0] == 0 and got[2] == 1
+    assert got[1] is None
+    assert got[3] is None
 
 
 def test_ivf_topk_recall_and_exactness(spark, embeddings):
@@ -499,6 +478,61 @@ def test_ivf_topk_recall_and_exactness(spark, embeddings):
     half = {r["vec_id"] for r in
             similarity.ivf_topk(assigned, centroids, query, k=10, n_probe=4).collect()}
     assert len(half & set(exact)) >= 5
+
+
+def test_ivf_probes_match_numpy_nearest_centroid(spark, embeddings, tmp_path):
+    """With n_probe < n_cells, ivf_topk and search_ivf_index both probe
+    exactly the cells a numpy brute-force nearest-centroid ranking gives
+    (squared L2, ties → lowest cell id). k exceeds every cell's size, so
+    the cells of the returned candidates ARE the probed cells."""
+
+    def expected(qvecs, cents, n_probe):
+        d2 = ((np.asarray(qvecs)[:, None, :] - np.asarray(cents)[None, :, :]) ** 2).sum(axis=2)
+        return [set(row[:n_probe].tolist()) for row in np.argsort(d2, axis=1, kind="stable")]
+
+    def probed_cells(out, cell_of):
+        got: list[set] = [set() for _ in qvecs]
+        for r in out.collect():
+            got[r["query_id"]].add(cell_of[r["vec_id"]])
+        return got
+
+    # hand-made index with exact ties: q1 is equidistant from cells 0 and
+    # 1, q2 from cells 0 and 3 (and then from 1 and 2)
+    cents = [[0.0, 0.0], [1.0, 0.0], [-1.0, 0.0], [0.0, 5.0]]
+    rows = [
+        (10 * i + j, [c[0] + dx, c[1]], i)
+        for i, c in enumerate(cents)
+        for j, dx in enumerate((0.25, -0.25))
+    ]
+    assigned = spark.createDataFrame(rows, "vec_id long, embedding array<float>, cell int")
+    cell_of = {r[0]: r[2] for r in rows}
+    qvecs = [[0.0, 0.0], [0.5, 0.0], [0.0, 2.5]]
+    query = spark.createDataFrame(
+        list(enumerate(qvecs)), "query_id long, embedding array<float>"
+    )
+    idx = str(tmp_path / "ties")
+    similarity.write_ivf_index(assigned, cents, idx)
+    for n_probe in (1, 2, 3):
+        want = expected(qvecs, cents, n_probe)
+        mem = similarity.ivf_topk(assigned, cents, query, k=100, n_probe=n_probe)
+        disk = similarity.search_ivf_index(spark, idx, query, k=100, n_probe=n_probe)
+        assert probed_cells(mem, cell_of) == want, n_probe
+        assert probed_cells(disk, cell_of) == want, n_probe
+    assert expected(qvecs, cents, 1) == [{0}, {0}, {0}]  # ties → lowest id
+
+    # trained index over the real corpus
+    assigned, cents = similarity.ivf_index(embeddings, n_cells=6, max_iter=1)
+    cell_of = {r["vec_id"]: r["cell"] for r in assigned.select("vec_id", "cell").collect()}
+    query = embeddings.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    qvecs = [r["embedding"] for r in query.orderBy("query_id").collect()]
+    idx = str(tmp_path / "trained")
+    similarity.write_ivf_index(assigned, cents, idx)
+    want = expected(qvecs, cents, 2)
+    k = len(cell_of)
+    assert probed_cells(similarity.ivf_topk(assigned, cents, query, k=k, n_probe=2), cell_of) == want
+    assert probed_cells(similarity.search_ivf_index(spark, idx, query, k=k, n_probe=2), cell_of) == want
 
 
 def test_repetition_ratio_ranks_repetitive_docs(spark):
@@ -568,16 +602,17 @@ def test_connected_components_releases_old_checkpoints(spark):
 
 
 def test_srp_signature_expr_matches_arrow_kernel(spark, embeddings):
-    """The JVM-expression SRP twin must be bit-identical to the Arrow
-    matmul kernel: float32 × ±1 products are exact in float64, so the
-    plane-dot signs cannot depend on summation order."""
+    """The JVM-expression SRP signature must be bit-identical to the Arrow
+    matmul kernel with one band: float32 × ±1 products are exact in
+    float64, so the plane-dot signs cannot depend on summation order."""
     planes = similarity.rademacher_planes(16, 64, seed=42)
     a = embeddings.select(
-        "vec_id", similarity.srp_signature("embedding", planes).alias("sa")
+        "vec_id", similarity.srp_band_values("embedding", planes, bands=1)[0].alias("sa")
     )
     b = embeddings.select(
         "vec_id", similarity.srp_signature_expr("embedding", planes).alias("sb")
     )
+    assert a.count() == b.count() > 0
     assert a.join(b, "vec_id").filter(F.col("sa") != F.col("sb")).count() == 0
 
 
@@ -834,28 +869,28 @@ def test_sq_asym_cosine_scan_query_edge_cases(spark):
 
 
 def test_srp_signature_expr_string_path_bit_identical(spark):
-    """r15 construction fast path: when vec_col is a NAME, the signature
-    expression is built from one parsed SQL string (the Column-object form
-    paid n_planes x dim F.lit py4j round trips — 2.4 s of driver time per
-    fresh 16x64 build). Both paths must produce bit-identical signatures,
-    including the zero vector (all dots 0 → no bits set)."""
-    import numpy as np
-
-    from zarr_climate_etl_ipfs_spark.operators.similarity import (
-        rademacher_planes,
-        srp_signature_expr,
-    )
-
+    """r15 construction fast path: the signature expression is built from
+    one parsed SQL string (the Column-object form paid n_planes x dim
+    F.lit py4j round trips — 2.4 s of driver time per fresh 16x64 build).
+    At 12 planes x 16 dims it must be bit-identical to the numpy sign bits
+    and to the one-band Arrow kernel, including the zero vector (all dots
+    0 → no bits set)."""
     rng = np.random.RandomState(3)
     rows = [(i, [float(np.float32(x)) for x in rng.standard_normal(16)]) for i in range(64)]
     rows.append((64, [0.0] * 16))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    planes = rademacher_planes(12, 16, seed=42)
-    fast = {r["vec_id"]: r["s"] for r in
-            df.select("vec_id", srp_signature_expr("embedding", planes).alias("s")).collect()}
-    slow = {r["vec_id"]: r["s"] for r in
-            df.select("vec_id", srp_signature_expr(F.col("embedding"), planes).alias("s")).collect()}
-    assert fast == slow
+    planes = similarity.rademacher_planes(12, 16, seed=42)
+    out = df.select(
+        "vec_id",
+        similarity.srp_signature_expr("embedding", planes).alias("s"),
+        similarity.srp_band_values("embedding", planes, bands=1)[0].alias("k"),
+    ).collect()
+    fast = {r["vec_id"]: r["s"] for r in out}
+    kernel = {r["vec_id"]: r["k"] for r in out}
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    want = ((mat @ planes.T) > 0) @ (1 << np.arange(12, dtype=np.int64))
+    assert fast == {i: int(w) for i, w in enumerate(want)}
+    assert fast == kernel
     assert fast[64] == 0
 
 
@@ -974,7 +1009,7 @@ def test_persisted_ivf_index_roundtrip_and_pruning(spark, embeddings, tmp_path):
     (unprobed inverted lists cost zero I/O), and the index.json commit
     marker gates half-written indexes."""
     assigned, centroids = similarity.ivf_index(
-        embeddings, n_cells=6, max_iter=1, engine="dataframe"
+        embeddings, n_cells=6, max_iter=1
     )
     idx = str(tmp_path / "ivf")
     man = similarity.write_ivf_index(assigned, centroids, idx)
@@ -1017,7 +1052,7 @@ def test_append_ivf_index_incremental(spark, embeddings, tmp_path):
     base = embeddings.filter(F.col("vec_id") % 2 == 0)
     late = embeddings.filter(F.col("vec_id") % 2 != 0)
     assigned, centroids = similarity.ivf_index(
-        base, n_cells=4, max_iter=1, engine="dataframe"
+        base, n_cells=4, max_iter=1
     )
     idx = str(tmp_path / "ivf_inc")
     similarity.write_ivf_index(assigned, centroids, idx)
@@ -1054,7 +1089,7 @@ def test_append_ivf_index_incremental(spark, embeddings, tmp_path):
     # an empty-centroid index refuses appends with a named error
     empty_idx = str(tmp_path / "ivf_empty")
     a0, c0 = similarity.ivf_index(
-        embeddings.filter(F.lit(False)), n_cells=4, max_iter=1, engine="dataframe"
+        embeddings.filter(F.lit(False)), n_cells=4, max_iter=1
     )
     similarity.write_ivf_index(a0, c0, empty_idx)
     with pytest.raises(ValueError, match="no centroids"):
@@ -1066,7 +1101,7 @@ def test_compact_ivf_index_consolidates_without_content_change(spark, embeddings
     cells to one file each and the search result is unchanged."""
     thirds = [embeddings.filter(F.col("vec_id") % 3 == i) for i in range(3)]
     assigned, centroids = similarity.ivf_index(
-        thirds[0], n_cells=3, max_iter=1, engine="dataframe"
+        thirds[0], n_cells=3, max_iter=1
     )
     idx = str(tmp_path / "ivf_c")
     similarity.write_ivf_index(assigned, centroids, idx)
@@ -1121,7 +1156,7 @@ def test_compact_ivf_atomic_swap_and_crash_recovery(spark, embeddings, tmp_path)
 
     halves = [embeddings.filter(F.col("vec_id") % 2 == i) for i in range(2)]
     assigned, centroids = similarity.ivf_index(
-        halves[0], n_cells=3, max_iter=1, engine="dataframe"
+        halves[0], n_cells=3, max_iter=1
     )
     idx = str(tmp_path / "ivf_r")
     similarity.write_ivf_index(assigned, centroids, idx)
@@ -1322,32 +1357,31 @@ def test_source_span_overlap_hand_case(spark):
     assert r["n_shared_spans"] == 1
 
 
-def test_hyperplane_signature_full_64_planes(spark):
-    """n_planes=64 must build and set bit 63 via shiftleft — F.lit(1 << 63)
-    exceeds Long.MaxValue and used to fail plan-build (round-14 review
-    catch); out-of-range plane counts raise a clear ValueError."""
-    import pytest as _pytest
-
-    df = spark.createDataFrame([([1.0] * 64,)], "v array<float>")
-    sig = df.select(similarity.hyperplane_signature("v", n_planes=64).alias("s")).first()["s"]
-    assert isinstance(sig, int)  # built and evaluated; sign bit may be set
-    with _pytest.raises(ValueError, match="n_planes"):
-        similarity.hyperplane_signature("v", n_planes=65)
-    with _pytest.raises(ValueError, match="n_planes"):
-        similarity.hyperplane_signature("v", n_planes=0)
+def test_srp_signature_expr_full_64_planes(spark):
+    """64 planes build and set bit 63 (the sign bit). 65 planes must raise:
+    bigint shiftleft wraps at 64, so plane 64 would silently land on bit 0;
+    0 planes raise too."""
+    planes = similarity.rademacher_planes(65, 8, seed=42)
+    # v = plane 63 itself: its dot with plane 63 is 8 > 0, so bit 63 is set
+    df = spark.createDataFrame([(planes[63].tolist(),)], "v array<float>")
+    sig = df.select(similarity.srp_signature_expr("v", planes[:64]).alias("s")).first()["s"]
+    assert sig < 0
+    with pytest.raises(ValueError, match="n_planes"):
+        similarity.srp_signature_expr("v", planes)
+    with pytest.raises(ValueError, match="n_planes"):
+        similarity.srp_signature_expr("v", planes[:0])
 
 
 def test_lsh_band_divisibility_enforced(spark):
-    """lsh_topk and embedding_near_duplicates enforce the same precondition
-    as srp_band_values: a remainder would silently discard the top
+    """srp_band_values and srp_neardup_pairs refuse a plane count the band
+    count does not divide: a remainder would silently discard the top
     n_planes % bands signature bits (round-14 review catch)."""
-    import pytest as _pytest
-
+    planes = similarity.rademacher_planes(16, 8, seed=42)
+    with pytest.raises(ValueError, match="not divisible"):
+        similarity.srp_band_values("embedding", planes, bands=3)
     df = spark.createDataFrame([(1, [1.0] * 8)], "vec_id long, embedding array<float>")
-    with _pytest.raises(ValueError, match="not divisible"):
-        similarity.lsh_topk(df, df, n_planes=16, bands=3)
-    with _pytest.raises(ValueError, match="not divisible"):
-        similarity.embedding_near_duplicates(df, n_planes=13, bands=4)
+    with pytest.raises(ValueError, match="not divisible"):
+        similarity.srp_neardup_pairs(df, n_planes=13, bands=4, dim=8)
 
 
 def test_srp_neardup_pairs_no_self_pairs_on_duplicate_ids(spark):

@@ -174,6 +174,26 @@ def test_time_travel_versions(store, spark, desc, initial_pdf):
     assert [e["version"] for e in store.versions()] == [1, 2]
 
 
+def test_pure_insert_update_reuses_validator_keys(store, spark, desc, monkeypatch):
+    """A pure-insert update rewrites its buckets from the validator's
+    insert times and buckets: it must not go through insert(), whose own
+    (time, bucket) collect is one more Spark action. The version is still
+    labelled "insert" and only the replaced day changes."""
+
+    def _no_insert(*_a, **_k):
+        raise AssertionError("update() re-collected the insert keys via insert()")
+
+    monkeypatch.setattr(GridStore, "insert", _no_insert)
+    t = dt.datetime(2021, 10, 10)
+    before = store.dataset().count()
+    store.update(spark.createDataFrame(_tall([t], seed=7), schema=desc.schema()))
+    assert store.manifest()["action"] == "insert"
+    assert store.dataset().count() == before
+    assert _point(store.dataset(), t, 10.0, 100.0) == _tall([t], seed=7).query(
+        "latitude == 10.0 and longitude == 100.0"
+    )["data"].iloc[0]
+
+
 def test_time_sliced_prunes_and_matches(store):
     sl = store.time_sliced(dt.datetime(2021, 10, 1), dt.datetime(2021, 10, 31))
     assert sl.count() == 31 * 16

@@ -63,7 +63,7 @@ def main() -> None:
     warm = WORK / "warm"
     shutil.rmtree(warm, ignore_errors=True)
     wv = synth_vectors(spark, 2000, dim)
-    a, c = ivf_index(wv, n_cells=8, max_iter=1, engine="dataframe")
+    a, c = ivf_index(wv, n_cells=8, max_iter=1)
     write_ivf_index(a, c, str(warm), mode="overwrite")
     q = wv.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -83,7 +83,6 @@ def main() -> None:
             vecs,
             n_cells=n_cells,
             max_iter=1,
-            engine="dataframe",
             train_fraction=min(1.0, 50_000 / n),
         )
         write_ivf_index(assigned, centroids, str(idx), mode="overwrite")

@@ -41,6 +41,19 @@ def cf_decode_time(raw: Column | str, epoch: str, unit_seconds: int = 86400) -> 
     )
 
 
+def _epoch_s(c: Column | str) -> Column:
+    """Seconds-since-epoch as DOUBLE, valid for TIMESTAMP and TIMESTAMP_NTZ.
+
+    Spark 4 forbids a direct numeric cast on TIMESTAMP_NTZ (the type
+    tz-less parquet now infers), so route through TIMESTAMP first; the
+    session timezone is pinned UTC (session.tune), making the hop
+    value-exact. The DOUBLE target keeps sub-second precision, matching
+    DuckDB's EPOCH().
+    """
+    c = F.col(c) if isinstance(c, str) else c
+    return c.cast("timestamp").cast("double")
+
+
 def _as_epoch_seconds(c: Column) -> Column:
     # NTZ timestamps can't cast straight to long; route through the session-tz
     # timestamp (sessions are pinned to UTC, so wall-clock is preserved)

@@ -123,12 +123,13 @@ def shingles_from_words(ws: Column | str, k: int = 3, distinct: bool = True) -> 
     return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
 
 
-def minhash_signature(text: Column | str, n_hashes: int = 16, portable: bool = True) -> Column:
-    """MinHash signature from raw text. Prefer :func:`minhash_from_shingles`
-    over a materialized shingle column when the shingles are reused —
-    embedding ``shingles(text)`` once per hash duplicates the split/slice
-    subtree n_hashes times (Catalyst does not CSE across aggregate lambdas)."""
-    return minhash_from_shingles(shingles(text), n_hashes, portable)
+def minhash_signature(text: Column | str, n_hashes: int = 16) -> Column:
+    """MinHash signature from raw text in one expression. When the
+    shingles are reused, materialize :func:`shingle_bases` as a column and
+    call :func:`minhash_from_bases` instead — embedding ``shingles(text)``
+    once per hash duplicates the split/slice subtree n_hashes times
+    (Catalyst does not CSE across aggregate lambdas)."""
+    return minhash_from_bases(shingle_bases(shingles(text)), n_hashes)
 
 
 #: affine MinHash family h_i(x) = (a_i·base(x) + b_i) mod p over a 28-bit
@@ -146,13 +147,12 @@ def minhash_coeffs(n_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def shingle_bases(sh: Column, portable: bool = True) -> Column:
-    """28-bit base hash per shingle — materialize this as a column before
-    :func:`minhash_from_bases` so the md5 runs once per shingle, not once
-    per shingle×hash (Catalyst does not CSE across aggregate lambdas)."""
-    if portable:
-        return F.transform(sh, lambda s: md5int(s) % MINHASH_BASE_MOD)
-    return F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_BASE_MOD)))
+def shingle_bases(sh: Column) -> Column:
+    """28-bit base hash per shingle (:func:`md5int`, engine-portable) —
+    materialize this as a column before :func:`minhash_from_bases` so the
+    md5 runs once per shingle, not once per shingle×hash (Catalyst does not
+    CSE across aggregate lambdas)."""
+    return F.transform(sh, lambda s: md5int(s) % MINHASH_BASE_MOD)
 
 
 def minhash_from_bases(bases: Column, n_hashes: int = 16) -> Column:
@@ -168,12 +168,6 @@ def minhash_from_bases(bases: Column, n_hashes: int = 16) -> Column:
         for i, (a, b) in enumerate(minhash_coeffs(n_hashes))
     ]
     return F.array(*mins)
-
-
-def minhash_from_shingles(sh: Column, n_hashes: int = 16, portable: bool = True) -> Column:
-    """One-expression convenience; for reuse-heavy plans materialize
-    :func:`shingle_bases` first."""
-    return minhash_from_bases(shingle_bases(sh, portable), n_hashes)
 
 
 def lsh_candidate_pairs(

@@ -1,21 +1,27 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers (BASELINE.json north star):
+One implementation per operator:
 
-  brute-force   exact cosine top-k — the correctness baseline. Scales as a
-                single scan + TakeOrderedAndProject when the query set is
-                broadcastable (the common case: few query vectors vs many
-                candidates).
-  LSH-bucketed  random-hyperplane signature buckets; candidates only join
-                within a bucket (multi-probe over signature bands). The
-                100 TB path: shuffle keys are (band, sig), never a cross
-                join.
-
-Plus an IVF (inverted-file) tier: a k-means coarse quantizer (pyspark.ml,
-trained on a sample) assigns each vector to a cell; queries probe only the
-``n_probe`` nearest cells — search cost ∝ n_probe/n_cells of the corpus,
-the FAISS-IVF plan shape expressed as a broadcast semi-join on cell ids.
-All vector math is JVM-side (functions/vectors.py).
+  brute-force   exact cosine top-k (:func:`brute_force_topk`) — the
+                correctness baseline: broadcast query set, one scan of the
+                candidates, per-query ranking window.
+  SRP signature sign-random-projection bits against the md5
+                :func:`rademacher_planes` the DuckDB oracle recomputes —
+                :func:`srp_signature_expr` (one packed long, JVM-only) and
+                :func:`srp_band_values` (per-band longs, one Arrow matmul,
+                any plane count).
+  near-dup      :func:`srp_neardup_pairs`: band buckets filter candidate
+                pairs, exact cosine verifies them (:func:`gram_bucket_pairs`
+                is the per-bucket BLAS verify the catalog entries use).
+  IVF ANN       :func:`ivf_index` trains a k-means coarse quantizer
+                (DataFrame Lloyd rounds) and assigns each vector to a cell;
+                :func:`ivf_topk` probes the ``n_probe`` nearest cells per
+                query — search cost ∝ n_probe/n_cells of the corpus. Every
+                nearest-centroid decision (training, assignment, appends,
+                probe choice) goes through :func:`_nearest_cells`. The
+                persisted form (:func:`write_ivf_index`,
+                :func:`search_ivf_index`) prunes unprobed cell partitions at
+                planning time.
 """
 
 from __future__ import annotations
@@ -57,145 +63,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(vec: Column | str, n_planes: int = 16, seed: int = 42, dim: int = 64) -> Column:
-    """Sign-random-projection signature: bit i = sign(v · rᵢ) where rᵢ is a
-    deterministic pseudo-random hyperplane derived from (seed, i, component).
-
-    The hyperplanes are generated *inside the expression* from hash values —
-    no driver-side randomness, no broadcast of a plane matrix, identical
-    across runs and engines that share the hash.
-    """
-    if not 1 <= n_planes <= 64:
-        raise ValueError(f"n_planes must be in [1, 64] for a long signature, got {n_planes}")
-    v = F.col(vec) if isinstance(vec, str) else vec
-
-    def plane_dot(i: int) -> Column:
-        # component j of plane i ∈ {-1, +1} from xxhash64(seed, i, j):
-        # a Rademacher projection, which preserves cosine structure like
-        # Gaussian planes do.
-        comps = F.transform(
-            v,
-            lambda x, j: x.cast("double")
-            * F.when(F.xxhash64(F.lit(seed), F.lit(i), j) % 2 == 0, 1.0).otherwise(-1.0),
-        )
-        return F.aggregate(comps, F.lit(0.0), lambda acc, x: acc + x)
-
-    out = F.lit(0).cast("long")
-    for i in range(n_planes):
-        # shiftleft, not F.lit(1 << i): bit 63 exceeds Long.MaxValue as a
-        # Python literal and fails plan-build (round-14 review catch); the
-        # shift is constant-folded by Catalyst, so plans are unchanged
-        bit = F.shiftleft(F.lit(1).cast("long"), i)
-        out = out + F.when(plane_dot(i) > 0, bit).otherwise(F.lit(0).cast("long"))
-    return out
-
-
-def lsh_topk(
-    candidates: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    n_planes: int = 12,
-    bands: int = 3,
-) -> DataFrame:
-    """Approximate top-k: candidates and queries hashed to hyperplane
-    signatures split into bands; exact cosine only for candidates sharing at
-    least one band with the query (multi-probe recall knob = bands)."""
-    if n_planes % bands:
-        # same precondition srp_band_values enforces: a remainder would
-        # silently discard the top n_planes % bands signature bits, so the
-        # effective recall differs from the requested configuration
-        raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
-    bits_per_band = n_planes // bands
-    mask = (1 << bits_per_band) - 1
-
-    def with_bands(df: DataFrame, idc: str) -> DataFrame:
-        sig = hyperplane_signature(vec_col, n_planes)
-        bandcols = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftrightunsigned(sig, b * bits_per_band)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bsig"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return df.select(idc, vec_col, F.explode(bandcols).alias("bb")).select(
-            idc, vec_col, F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig")
-        )
-
-    cb = with_bands(candidates, id_col)
-    qb = with_bands(
-        query.select(F.col(query_id_col), F.col(vec_col)), query_id_col
-    ).withColumnRenamed(vec_col, "_qvec")
-    matched = (
-        cb.join(F.broadcast(qb), ["band", "bsig"])
-        .select(query_id_col, id_col, vec_col, "_qvec")
-        .dropDuplicates([query_id_col, id_col])
-    )
-    scored = matched.select(
-        query_id_col, id_col, cosine_similarity(F.col(vec_col), F.col("_qvec")).alias("cosine")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
-    )
-
-
-def embedding_near_duplicates(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 12,
-    bands: int = 4,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id_a < id_b, cosine ≥ threshold).
-
-    Same banded-signature bucketing as lsh_topk but self-joined: near-
-    identical vectors agree on most sign bits, so they collide in ≥1 band
-    with high probability; exact cosine verifies in-bucket."""
-    if n_planes % bands:
-        raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
-    bits_per_band = n_planes // bands
-    mask = (1 << bits_per_band) - 1
-    sig = hyperplane_signature(vec_col, n_planes)
-    banded = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(sig, b * bits_per_band)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bsig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "vec", F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig"))
-    a = banded.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), "band", "bsig")
-    b = banded.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), "band", "bsig")
-    pairs = (
-        a.join(b, ["band", "bsig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cosine", cosine_similarity(F.col("vec_a"), F.col("vec_b")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
-    return pairs
-
-
 def rademacher_planes(n_planes: int, dim: int, seed: int = 42) -> "np.ndarray":
     """Engine-portable ±1 hyperplanes: component (i, j) is +1 when the
     md5-derived 56-bit integer of ``"hp:{seed}:{i}:{j}"`` is even. The same
@@ -215,81 +82,53 @@ def rademacher_planes(n_planes: int, dim: int, seed: int = 42) -> "np.ndarray":
     return out
 
 
-def srp_signature(vec_col: Column | str, planes: "np.ndarray") -> Column:
-    """Sign-random-projection signature against a precomputed plane matrix:
-    bit i = (v · planeᵢ) > 0, packed into a long. One Arrow-batched BLAS
-    matmul per batch — the scale path for wide embeddings (the in-expression
-    :func:`hyperplane_signature` variant is plan-only, no Python, but
-    interpreted per element)."""
-    pm = planes.astype(np.float64)
-    weights = (1 << np.arange(pm.shape[0], dtype=np.int64))
-
-    @F.pandas_udf("long")
-    def _sig(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        bits = (mat @ pm.T) > 0
-        return pd.Series((bits @ weights).astype(np.int64))
-
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return _sig(c)
-
-
-def srp_signature_expr(vec_col: Column | str, planes: "np.ndarray") -> Column:
-    """JVM-expression twin of :func:`srp_signature`: the ±1 plane matrix is
-    embedded as array literals and each bit is a zip_with/aggregate fold.
-    Each float32×(±1.0) product is exact in float64, but float64 *addition*
-    is not associative, so numpy's pairwise-summed matmul and this sequential
-    fold can in principle disagree in sign when |dot| sits below accumulated
-    rounding error (~1e-13 for these dims); the equivalence is guarded
-    empirically by tests, not guaranteed mathematically. No Python worker in
-    the plan — for modest plane counts this wins
-    on both latency and stage-launch overhead; prefer the Arrow variant
-    when n_planes × dim makes the expression tree unwieldy (≳ thousands of
+def srp_signature_expr(vec_col: str, planes: "np.ndarray") -> Column:
+    """Sign-random-projection signature as one JVM expression: bit i =
+    (v · planeᵢ) > 0, packed into a long, with the ±1 plane matrix embedded
+    as array literals and each bit a zip_with/aggregate fold. Equal to
+    :func:`srp_band_values` with ``bands=1`` (guarded by tests against
+    numpy). Each float32×(±1.0) product is exact in float64, but float64
+    *addition* is not associative, so numpy's pairwise-summed matmul and
+    this sequential fold can in principle disagree in sign when |dot| sits
+    below accumulated rounding error (~1e-13 for these dims); the
+    equivalence is guarded empirically, not guaranteed mathematically. No
+    Python worker in the plan — for modest plane counts this wins on both
+    latency and stage-launch overhead; prefer :func:`srp_band_values` when
+    n_planes × dim makes the expression tree unwieldy (≳ thousands of
     literals).
 
-    Construction note (r15, measured): the Column-object form paid
-    n_planes × dim ``F.lit`` py4j round trips — 2.4 s of DRIVER time per
-    fresh embedding_lsh_neardups build at 16×64 (most of that query's
-    isolated wall). When ``vec_col`` is a name, the identical expression
-    tree is now built from ONE parsed SQL string (~10 ms); results are
-    bit-identical (guarded by test), and a Column input keeps the
-    object-built path."""
-    if isinstance(vec_col, str):
+    The plane count is capped at 64: a bigint ``shiftleft`` wraps at 64,
+    so plane 64 would silently land on bit 0. Bit 63 is the sign bit.
 
-        def dlit(x: float) -> str:
-            return f"cast({x!r} as double)"
+    Construction note (r15, measured): building the tree from Column
+    objects paid n_planes × dim ``F.lit`` py4j round trips — 2.4 s of
+    DRIVER time per fresh embedding_lsh_neardups build at 16×64. The tree
+    is built from ONE parsed SQL string instead (~10 ms)."""
+    n_planes = planes.shape[0]
+    if not 1 <= n_planes <= 64:
+        raise ValueError(f"n_planes must be in [1, 64] for a long signature, got {n_planes}")
 
-        terms = []
-        for i in range(planes.shape[0]):
-            arr = ",".join(dlit(float(x)) for x in planes[i])
-            d = (
-                f"aggregate(zip_with(`{vec_col}`, array({arr}), "
-                "(a, b) -> cast(a as double) * b), cast(0.0 as double), "
-                "(acc, x) -> acc + x)"
-            )
-            terms.append(
-                f"(case when {d} > 0 then shiftleft(cast(1 as bigint), {i}) "
-                "else cast(0 as bigint) end)"
-            )
-        return F.expr("cast(0 as bigint) + " + " + ".join(terms))
-    v = vec_col
-    out = F.lit(0).cast("long")
-    for i in range(planes.shape[0]):
-        lit_plane = F.array(*[F.lit(float(x)) for x in planes[i]])
-        d = F.aggregate(
-            F.zip_with(v, lit_plane, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    def dlit(x: float) -> str:
+        return f"cast({x!r} as double)"
+
+    terms = []
+    for i in range(n_planes):
+        arr = ",".join(dlit(float(x)) for x in planes[i])
+        d = (
+            f"aggregate(zip_with(`{vec_col}`, array({arr}), "
+            "(a, b) -> cast(a as double) * b), cast(0.0 as double), "
+            "(acc, x) -> acc + x)"
         )
-        out = out + F.when(d > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
+        terms.append(
+            f"(case when {d} > 0 then shiftleft(cast(1 as bigint), {i}) "
+            "else cast(0 as bigint) end)"
         )
-    return out
+    return F.expr("cast(0 as bigint) + " + " + ".join(terms))
 
 
 def srp_band_values(vec_col: Column | str, planes: "np.ndarray", bands: int) -> Column:
     """Per-band packed SRP values as ``array<long>`` — the band-width-
-    generalized form of :func:`srp_signature`. One Arrow-batched BLAS matmul
+    generalized form of :func:`srp_signature_expr`. One Arrow-batched BLAS matmul
     computes all ``n_planes`` sign bits per batch, then band ``b`` packs bits
     ``[b·w, (b+1)·w)`` (w = n_planes // bands) into its own long, so the
     plane count is NOT capped at 64 by the signature dtype: 128 planes / 8
@@ -636,175 +475,125 @@ def ivf_index(
     seed: int = 42,
     train_fraction: float = 1.0,
     max_iter: int = 20,
-    init_mode: str = "k-means||",
-    engine: str = "ml",
 ):
     """Train the IVF coarse quantizer (k-means over a sample) and assign
     every vector to its nearest centroid cell.
 
     Returns (assigned_df with a ``cell`` column, centroids: list[list[float]]).
     Training runs on a sample (``train_fraction``) — at 100 TB you train on
-    ~1M vectors and assign the rest in one codegen'd pass; assignment is a
-    per-row argmin over a broadcast centroid array, no shuffle.
+    ~1M vectors and assign the rest in one pass; assignment is
+    :func:`assign_ivf_cell` against the broadcast centroids, no shuffle.
 
-    ``engine`` picks the trainer:
-
-    ``"ml"``      pyspark.ml KMeans. ``max_iter``/``init_mode`` bound the
-                  training job count: every iteration (and each k-means||
-                  init round) is a driver-synchronized Spark job, which
-                  dominates wall-clock on small inputs.
-    ``"dataframe"`` Lloyd's algorithm as plain DataFrame ops: deterministic
-                  hash-ordered seed rows, then ``max_iter`` rounds of
-                  (Arrow-batched matmul argmin assign → per-cell vector
-                  mean via applyInPandas). Two jobs per round and ~one for
-                  seeding — an order of magnitude fewer than pyspark.ml on
-                  small data, same cell quality for a coarse quantizer.
-                  Assignment uses ``method="pandas"`` (one BLAS matmul per
-                  Arrow batch) — ~10× the interpreted HOF argmin.
+    The trainer is Lloyd's algorithm as plain DataFrame ops: deterministic
+    hash-ordered seed rows, then ``max_iter`` rounds of (assign → per-cell
+    vector mean). Two jobs per round and ~one for seeding — an order of
+    magnitude fewer than pyspark.ml's driver-synchronized job per
+    iteration on small data, same cell quality for a coarse quantizer.
 
     IVF recall degrades gracefully with centroid quality — and with full
     probing (n_probe = n_cells) results are exact regardless — so a cheap
-    trainer (``engine="dataframe"``, 1 round) is usually enough for a
-    partitioner.
+    trainer (1 round) is usually enough for a partitioner.
     """
-    if engine == "dataframe":
-        train = (
-            candidates
-            if train_fraction >= 1.0
-            else candidates.sample(train_fraction, seed)
-        )
-        # deterministic, spread-out seeds: order by a keyed hash (adjacent
-        # ids are often similar vectors; hash order decorrelates), take the
-        # first n_cells — a TakeOrdered, not a full sort
-        seeds = (
-            train.orderBy(F.md5(F.concat(F.lit(f"ivf:{seed}:"), F.col(id_col).cast("string"))))
-            .limit(n_cells)
-            .select(vec_col)
+    train = (
+        candidates
+        if train_fraction >= 1.0
+        else candidates.sample(train_fraction, seed)
+    )
+    # deterministic, spread-out seeds: order by a keyed hash (adjacent
+    # ids are often similar vectors; hash order decorrelates), take the
+    # first n_cells — a TakeOrdered, not a full sort
+    seeds = (
+        train.orderBy(F.md5(F.concat(F.lit(f"ivf:{seed}:"), F.col(id_col).cast("string"))))
+        .limit(n_cells)
+        .select(vec_col)
+        .collect()
+    )
+    centroids = [[float(x) for x in r[vec_col]] for r in seeds]
+    if not centroids:
+        # empty input: nothing to train — return the (empty) frame with
+        # the assigned-schema cell column so downstream probe joins are
+        # empty rather than a driver-side numpy crash on a (0,) matrix
+        # (empty-corpus gate catch, r9)
+        return candidates.withColumn("cell", F.lit(None).cast("int")), []
+
+    for _ in range(max_iter):
+        assigned = assign_ivf_cell(train, centroids, vec_col)
+        # r16 (cold-build finding): per-cell mean as a codegen'd
+        # posexplode + avg instead of a groupBy.applyInPandas numpy
+        # kernel — one fewer python stage per Lloyd round (measured
+        # ~0.85 -> ~0.45 s/round at sf0.1) and a (n_cells × dim) tiny
+        # collect either way. Float summation order differs from the
+        # numpy mean in the last ulp, which cannot change any
+        # consumer's output: every catalog/search consumer
+        # full-probes (results exact for ANY centroids), and empty
+        # cells keep their previous centroid exactly as before. The
+        # positional average is also strictly more robust than
+        # np.stack on ragged/NULL-cell groups (which would crash).
+        means = (
+            assigned.select("cell", F.posexplode(vec_col).alias("pos", "v"))
+            .groupBy("cell", "pos")
+            .agg(F.avg("v").alias("m"))
             .collect()
         )
-        centroids = [[float(x) for x in r[vec_col]] for r in seeds]
-        if not centroids:
-            # empty input: nothing to train — return the (empty) frame with
-            # the assigned-schema cell column so downstream probe joins are
-            # empty rather than a driver-side numpy crash on a (0,) matrix
-            # (empty-corpus gate catch, r9)
-            return candidates.withColumn("cell", F.lit(None).cast("int")), []
+        per_cell: dict[int, dict[int, float]] = {}
+        for r in means:
+            if r["cell"] is not None:
+                per_cell.setdefault(int(r["cell"]), {})[int(r["pos"])] = r["m"]
+        by_cell = {
+            c: [d[p] for p in sorted(d)] for c, d in per_cell.items()
+        }
+        # empty cells keep their previous centroid
+        centroids = [by_cell.get(i, c) for i, c in enumerate(centroids)]
+    return assign_ivf_cell(candidates, centroids, vec_col), centroids
 
-        for _ in range(max_iter):
-            assigned = assign_ivf_cell(train, centroids, vec_col, method="pandas")
-            # r16 (cold-build finding): per-cell mean as a codegen'd
-            # posexplode + avg instead of a groupBy.applyInPandas numpy
-            # kernel — one fewer python stage per Lloyd round (measured
-            # ~0.85 -> ~0.45 s/round at sf0.1) and a (n_cells × dim) tiny
-            # collect either way. Float summation order differs from the
-            # numpy mean in the last ulp, which cannot change any
-            # consumer's output: every catalog/search consumer
-            # full-probes (results exact for ANY centroids), and empty
-            # cells keep their previous centroid exactly as before. The
-            # positional average is also strictly more robust than
-            # np.stack on ragged/NULL-cell groups (which would crash).
-            means = (
-                assigned.select("cell", F.posexplode(vec_col).alias("pos", "v"))
-                .groupBy("cell", "pos")
-                .agg(F.avg("v").alias("m"))
-                .collect()
-            )
-            per_cell: dict[int, dict[int, float]] = {}
-            for r in means:
-                if r["cell"] is not None:
-                    per_cell.setdefault(int(r["cell"]), {})[int(r["pos"])] = r["m"]
-            by_cell = {
-                c: [d[p] for p in sorted(d)] for c, d in per_cell.items()
-            }
-            # empty cells keep their previous centroid
-            centroids = [by_cell.get(i, c) for i, c in enumerate(centroids)]
-        assigned = assign_ivf_cell(candidates, centroids, vec_col, method="pandas")
-        return assigned, centroids
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
 
-        train = (
-            candidates if train_fraction >= 1.0 else candidates.sample(train_fraction, seed)
-        )
-        if train.isEmpty():
-            # same graceful empty-corpus contract as the dataframe branch
-            # (r9 catch, applied to both trainers per the r14 review): an
-            # empty fit would die inside MLlib with an opaque error
-            return candidates.withColumn("cell", F.lit(None).cast("int")), []
-        km = KMeans(
-            k=n_cells, seed=seed, featuresCol="_features", maxIter=max_iter, initMode=init_mode
-        )
-        model = km.fit(train.select(array_to_vector(F.col(vec_col)).alias("_features")))
-        centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    # pandas assignment on both branches: one BLAS matmul per Arrow batch
-    # vs the literal-expression argmin whose n_cells x dim tree dominates
-    # analysis time at 64x64 (search_ivf_index docstring measurement)
-    assigned = assign_ivf_cell(candidates, centroids, vec_col, method="pandas")
-    return assigned, centroids
+def _nearest_cells(vecs, centroids, n: int = 1) -> np.ndarray:
+    """The one nearest-centroid rule of the IVF family (training,
+    assignment, appends and probe choice all call it): for each vector the
+    ids of its ``n`` nearest centroids by squared L2, nearest first, as a
+    ``(len(vecs), n)`` int64 array. Ties go to the lowest cell id. A NULL
+    or wrong-width vector gets no cell: -1 in every column, as are the
+    columns past the centroid count.
+
+    ‖v−c‖² = ‖v‖² − 2·v·c + ‖c‖² and ‖v‖² is constant per row, so the
+    order is that of descending v·c − ‖c‖²/2: one BLAS matmul per batch
+    instead of a rows × cells × dim difference tensor. The stable sort
+    keeps equal scores in cell-id order."""
+    out = np.full((len(vecs), n), -1, dtype=np.int64)
+    if not len(centroids):
+        return out
+    cmat = np.asarray(centroids, dtype=np.float64)  # (cells, dim)
+    ok = np.fromiter(
+        (v is not None and len(v) == cmat.shape[1] for v in vecs),
+        dtype=bool,
+        count=len(vecs),
+    )
+    if ok.any():
+        mat = np.stack([v for v, keep in zip(vecs, ok) if keep]).astype(np.float64)
+        scores = mat @ cmat.T - (cmat * cmat).sum(axis=1) / 2.0
+        order = np.argsort(-scores, axis=1, kind="stable")[:, :n]
+        out[ok, : order.shape[1]] = order
+    return out
 
 
 def assign_ivf_cell(
     df: DataFrame,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-    method: str = "expr",
 ) -> DataFrame:
-    """Add a ``cell`` column: index of the nearest centroid (L2).
+    """Add a ``cell`` column: the nearest centroid's index by
+    :func:`_nearest_cells`, one Arrow-batched BLAS matmul per batch —
+    ~10× an inlined literal-array argmin on wide embeddings, the trade the
+    guide's "vectorized Pandas UDF for embedding math" case describes.
+    NULL / wrong-width embeddings get a NULL ``cell`` instead of failing
+    the whole batch's ``np.stack``."""
 
-    ``method="expr"`` inlines the centroids as literals — a pure codegen'd
-    argmin with no Python in the loop. ``method="pandas"`` computes the
-    argmin as one Arrow-batched BLAS matmul per batch
-    (argmin‖v−c‖² == argmax(v·c − ‖c‖²/2); exact-distance ties → lowest
-    cell id in both paths, though the two formulas can round differently
-    in the last float64 ulp, so a *near*-tie may assign differently
-    between methods) — ~10× faster per pass on wide embeddings, the trade
-    the guide's "vectorized Pandas UDF for embedding math" case describes.
+    @F.pandas_udf("int")
+    def _cell(v: pd.Series) -> pd.Series:
+        cells = _nearest_cells(v.to_numpy(), centroids)[:, 0]
+        return pd.Series(cells, dtype="Int32").mask(cells < 0)
 
-    NULL / wrong-width embeddings get a NULL ``cell`` on BOTH paths via an
-    explicit width guard (r15 advice fix). Neither path was safe before:
-    the pandas ``np.stack`` raised on a ragged batch (one bad row killed
-    the job), and the expr path's struct-argmin silently assigned cell 0 —
-    a NULL distance sorts FIRST in Spark's struct ordering, so
-    ``array_min`` picked ``{d: NULL, i: 0}`` (measured, not the
-    NULL-propagation one might assume from aggregate semantics)."""
-    if method == "pandas":
-        cmat = np.asarray(centroids, dtype=np.float64)  # (k, d)
-        dim = cmat.shape[1] if cmat.ndim == 2 else 0
-        half = (cmat * cmat).sum(axis=1) / 2.0
-
-        @F.pandas_udf("int")
-        def _cell(v: pd.Series) -> pd.Series:
-            vals = v.to_numpy()
-            ok = np.array(
-                [x is not None and len(x) == dim for x in vals], dtype=bool
-            )
-            out = np.full(len(vals), None, dtype=object)
-            if ok.any():
-                mat = np.stack(vals[ok]).astype(np.float64)  # (m, d)
-                scores = mat @ cmat.T - half
-                out[ok] = np.argmax(scores, axis=1).astype(np.int32)
-            return pd.Series(out, dtype="Int32")
-
-        return df.withColumn("cell", _cell(F.col(vec_col)))
-    v = F.col(vec_col)
-
-    def dist2(c: list[float]) -> Column:
-        carr = F.array(*[F.lit(float(x)) for x in c])
-        return F.aggregate(
-            F.zip_with(v, carr, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    pairs = F.array(
-        *[F.struct(dist2(c).alias("d"), F.lit(i).alias("i")) for i, c in enumerate(centroids)]
-    )
-    dim = len(centroids[0]) if centroids else 0
-    return df.withColumn(
-        "cell",
-        F.when(v.isNotNull() & (F.size(v) == dim), F.array_min(pairs)["i"]),
-    )
+    return df.withColumn("cell", _cell(F.col(vec_col)))
 
 
 def ivf_topk(
@@ -816,41 +605,55 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    probed: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF search: score each query against the centroids, probe the
-    ``n_probe`` nearest cells, exact cosine only within those cells.
+    """IVF search: probe each query's ``n_probe`` nearest cells, exact
+    cosine only against the candidates inside them.
 
-    Search cost ∝ n_probe/n_cells of the corpus; the probed-cell filter is a
-    broadcast semi-join on the tiny (query, cell) relation, so the big side
-    is one pruned scan — the same shape FAISS IVF gives on a single node.
+    Probe choice runs on the driver through :func:`_nearest_cells`, the
+    rule that assigned the cells: the query batch is collected (query
+    batches are driver-sized — the FAISS search contract; probe math is
+    queries × n_cells × dim flops) and the probed cells become a literal
+    ``cell IN (…)`` filter on ``assigned``. On a cell-partitioned source
+    (:func:`search_ivf_index`) that filter prunes unprobed partitions at
+    planning time, so scan cost ∝ probed/total cells. The tiny
+    (query, cell) probe relation is broadcast-joined to the surviving
+    candidates — the shape FAISS IVF gives on a single node.
 
-    ``probed`` (optional) supplies a precomputed (query_id, _qvec, cell)
-    relation — search_ivf_index passes a driver-computed one so the
-    n_cells × dim literal-expression tree of assign_probe_cells is never
-    planned (at 64 cells x 64 dims that tree dominated wall-clock).
+    A query whose vector is NULL or of the wrong width probes no cell and
+    returns no rows; an index without centroids (empty corpus) returns an
+    empty result with the output schema.
     """
-    if not centroids:
-        # an index over an empty corpus has no cells: every search returns
-        # empty, with the output schema intact (the probe-cell expression
-        # would otherwise be a zero-element array of VOID type and fail
-        # analysis — empty-corpus gate catch, r9)
-        return (
-            query.select(query_id_col)
-            .limit(0)
-            .crossJoin(assigned.select(id_col).limit(0))
-            .withColumn("cosine", F.lit(None).cast("double"))
-            .withColumn("rank", F.lit(None).cast("int"))
-        )
-    if probed is None:
-        probed = assign_probe_cells(query, centroids, n_probe, vec_col, query_id_col)
+    from pyspark.sql import types as _T
+
+    qrows = query.select(query_id_col, vec_col).collect()
+    cells = _nearest_cells([r[vec_col] for r in qrows], centroids, n_probe)
+    probe_rows = [
+        (r[query_id_col], r[vec_col], int(c))
+        for r, row_cells in zip(qrows, cells)
+        for c in row_cells
+        if c >= 0
+    ]
+    schema = _T.StructType(
+        [
+            _T.StructField(query_id_col, query.schema[query_id_col].dataType),
+            _T.StructField("_qvec", query.schema[vec_col].dataType),
+            _T.StructField("cell", _T.IntegerType()),
+        ]
+    )
+    probed = query.sparkSession.createDataFrame(probe_rows, schema=schema)
+    used = sorted({c for _q, _v, c in probe_rows})
+    pruned = (
+        assigned.filter(F.col("cell").isin(*used))
+        if used
+        else assigned.filter(F.lit(False))  # nothing probed: empty result
+    )
     # Norm hoisting: ‖v‖ once per candidate row and ‖q‖ once per probe row
     # BEFORE the join — cosine on the O(candidates × probes) side is then a
     # single dot-product pass instead of three array folds. Same fold over
     # the same array ⇒ bit-identical to cosine_similarity's value.
     probed = probed.withColumn("_qn", l2_norm("_qvec"))
     scored = (
-        assigned.withColumn("_cn", l2_norm(vec_col))
+        pruned.withColumn("_cn", l2_norm(vec_col))
         .join(F.broadcast(probed), "cell")
         .select(
             query_id_col,
@@ -869,37 +672,6 @@ def ivf_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .orderBy(query_id_col, "rank")
-    )
-
-
-def assign_probe_cells(
-    query: DataFrame,
-    centroids: list[list[float]],
-    n_probe: int,
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """(query_id, cell, _qvec) rows for the n_probe nearest cells per query."""
-    v = F.col(vec_col)
-
-    def dist2(c: list[float]) -> Column:
-        carr = F.array(*[F.lit(float(x)) for x in c])
-        return F.aggregate(
-            F.zip_with(v, carr, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    pairs = F.array_sort(
-        F.array(
-            *[F.struct(dist2(c).alias("d"), F.lit(i).alias("i")) for i, c in enumerate(centroids)]
-        )
-    )
-    probes = F.slice(pairs, 1, n_probe)
-    return query.select(
-        query_id_col,
-        F.col(vec_col).alias("_qvec"),
-        F.explode(F.transform(probes, lambda s: s["i"])).alias("cell"),
     )
 
 
@@ -1340,59 +1112,15 @@ def search_ivf_index(
     n_probe: int = 4,
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Search a persisted index: resolve the probed cells for the query
-    batch entirely DRIVER-SIDE (query batches are driver-sized — the FAISS
-    search contract; probe math is queries × n_cells × dim flops), turn
-    them into a literal IN filter so the parquet source prunes unprobed
-    cell partitions at planning time, then run the exact in-cell ranking
-    against the precomputed probe relation. Scan cost ∝ probed/total cells
-    — at 100 TB the unprobed inverted lists cost zero I/O, not just zero
-    compute. The driver path exists for plan economics too: the
-    expression-tree alternative (assign_probe_cells) inlines n_cells × dim
-    literals and its ANALYSIS dominated wall-clock at 64×64. Distances
-    accumulate left-to-right exactly like the JVM fold, so probe choice is
-    bit-identical to the expression path."""
+    """Search a persisted index: :func:`read_ivf_index` + :func:`ivf_topk`.
+    The probed cells reach the parquet source as a literal IN filter on its
+    ``cell`` partition column, so unprobed inverted lists are pruned at
+    planning time — at 100 TB they cost zero I/O, not just zero compute."""
     assigned, centroids, meta = read_ivf_index(spark, path)
-    if not centroids:
-        return ivf_topk(
-            assigned, centroids, query, k=k,
-            id_col=meta["id_col"], vec_col=meta["vec_col"],
-            query_id_col=query_id_col,
-        )
-    qrows = query.select(query_id_col, meta["vec_col"]).collect()
-    probe_rows = []
-    cells_used = set()
-    for r in qrows:
-        qv = [float(x) for x in r[meta["vec_col"]]]
-        dists = []
-        for i, c in enumerate(centroids):
-            d = 0.0
-            for a, b in zip(qv, c):  # left-to-right, matching the JVM fold
-                d = d + (a - b) * (a - b)
-            dists.append((d, i))
-        dists.sort()
-        for d, i in dists[:n_probe]:
-            probe_rows.append((r[query_id_col], qv, int(i)))
-            cells_used.add(int(i))
-    from pyspark.sql import types as _T
-
-    schema = _T.StructType(
-        [
-            _T.StructField(query_id_col, query.schema[query_id_col].dataType),
-            _T.StructField("_qvec", _T.ArrayType(_T.DoubleType())),
-            _T.StructField("cell", _T.IntegerType()),
-        ]
-    )
-    probed = spark.createDataFrame(probe_rows, schema=schema)
-    pruned = (
-        assigned.filter(F.col("cell").isin(*sorted(cells_used)))
-        if cells_used
-        else assigned.filter(F.lit(False))  # empty query batch: empty result
-    )
     return ivf_topk(
-        pruned, centroids, query, k=k, n_probe=n_probe,
+        assigned, centroids, query, k=k, n_probe=n_probe,
         id_col=meta["id_col"], vec_col=meta["vec_col"],
-        query_id_col=query_id_col, probed=F.broadcast(probed),
+        query_id_col=query_id_col,
     )
 
 
@@ -1552,12 +1280,7 @@ def semdedup_census(
     )
 
 
-def append_ivf_index(
-    spark,
-    path: str,
-    df: DataFrame,
-    assign_method: str = "expr",
-) -> dict:
+def append_ivf_index(spark, path: str, df: DataFrame) -> dict:
     """Incremental IVF maintenance: assign NEW vectors to the EXISTING
     centroids and append their inverted-list rows — the operational form
     at corpus scale, where a nightly batch must not trigger an index
@@ -1584,10 +1307,7 @@ def append_ivf_index(
             "empty corpus) — rebuild with write_ivf_index instead"
         )
     cells = assign_ivf_cell(
-        df.select(meta["id_col"], meta["vec_col"]),
-        centroids,
-        meta["vec_col"],
-        method=assign_method,
+        df.select(meta["id_col"], meta["vec_col"]), centroids, meta["vec_col"]
     ).select(meta["id_col"], meta["vec_col"], "cell")
     cells.repartition(F.col("cell")).write.mode("append").partitionBy(
         "cell"

@@ -17,19 +17,10 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _epoch_s(c: Column | str) -> Column:
-    """Seconds-since-epoch as DOUBLE for TIMESTAMP *and* TIMESTAMP_NTZ input.
-
-    Spark 4 rejects a direct numeric cast on TIMESTAMP_NTZ (what tz-less
-    parquet now infers), so hop through TIMESTAMP first; callers pin the
-    session timezone to UTC (session.tune) so the hop is value-exact.
-    """
-    c = F.col(c) if isinstance(c, str) else c
-    return c.cast("timestamp").cast("double")
+from zarr_climate_etl_ipfs_spark.functions.scalars import _epoch_s
 
 
 def split_update_times(
@@ -133,10 +124,10 @@ class UpdateValidation:
     # behind (the append commit wrote last). Same aggregation pass.
     last_append: dt.datetime | None = None
     # Distinct storage buckets of the INSERT leg (only when the caller
-    # passed ``insert_bucket_fmt``) — store._update_mixed's touched-bucket
-    # set, folded into the same single aggregation instead of a second
-    # collect over the insert key frame (r15 store-latency consolidation:
-    # one fewer driver-synchronized action per mixed update).
+    # passed ``insert_bucket_fmt``) — store.update's touched-bucket set
+    # for its insert legs, folded into the same single aggregation instead
+    # of a second collect over the insert key frame (one fewer
+    # driver-synchronized action per update with an insert leg).
     insert_buckets: frozenset[str] | None = None
     # Distinct time keys of the INSERT leg (only when the caller asked) —
     # r16: store.update routes its legs by literal predicates on these

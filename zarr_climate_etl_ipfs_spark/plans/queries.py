@@ -21,9 +21,10 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 import pandas as pd  # noqa: F401 — pandas_udf type hints resolve via module globals
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zarr_climate_etl_ipfs_spark.functions.scalars import _epoch_s
 from zarr_climate_etl_ipfs_spark.session import tune
 from zarr_climate_etl_ipfs_spark.streaming.incremental import ensure_protobuf
 
@@ -37,19 +38,6 @@ from zarr_climate_etl_ipfs_spark.streaming.incremental import ensure_protobuf
 ensure_protobuf()
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
-
-
-def _epoch_s(c: Column | str) -> Column:
-    """Seconds-since-epoch as DOUBLE, valid for TIMESTAMP and TIMESTAMP_NTZ.
-
-    Spark 4 forbids a direct numeric cast on TIMESTAMP_NTZ (the type the
-    tz-less testdata parquet now infers), so route through TIMESTAMP first;
-    the session timezone is pinned UTC (session.tune), making the hop
-    value-exact. The DOUBLE target keeps sub-second precision, matching
-    DuckDB's EPOCH().
-    """
-    c = F.col(c) if isinstance(c, str) else c
-    return c.cast("timestamp").cast("double")
 
 
 def _constant_raster_bytes(d: int, rotate_variants: bool) -> bytes:
@@ -2988,7 +2976,7 @@ def ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t_wide(spark, sf_dir, "embeddings")
     cached = _IVF_INDEX.get(sf_dir)
     if cached is None:
-        assigned, centroids = ivf_index(emb, n_cells=8, max_iter=1, engine="dataframe")
+        assigned, centroids = ivf_index(emb, n_cells=8, max_iter=1)
         assigned = assigned.persist()
         _IVF_INDEX[sf_dir] = (assigned, centroids)
     else:
@@ -3638,8 +3626,8 @@ def embedding_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = t_wide(spark, sf_dir, "embeddings")
     planes = rademacher_planes(16, 64, seed=42)
-    # JVM-expression signature (bit-identical to the Arrow kernel, see
-    # srp_signature_expr): keeps the whole query Python-free, so no
+    # JVM-expression signature (bit-identical to srp_band_values' Arrow
+    # matmul, see srp_signature_expr): keeps the whole query Python-free, so no
     # worker-launch stalls in the signature stage. The _mid filter is the
     # always-true pushdown barrier (dedup_exact note): the verify
     # threshold's constraint chain otherwise plants the whole
@@ -7434,7 +7422,7 @@ def ivf_persisted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo_key = (sf_dir, _corpus_fingerprint(sf_dir, "embeddings"))
     path = _IVF_DISK.get(memo_key)
     if path is None:
-        assigned, centroids = ivf_index(emb, n_cells=8, max_iter=1, engine="dataframe")
+        assigned, centroids = ivf_index(emb, n_cells=8, max_iter=1)
         path = _scratch_root("ivf", sf_dir)
         _shutil.rmtree(path, ignore_errors=True)
         _os.makedirs(path)
@@ -8688,7 +8676,7 @@ def ivf_incremental_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     if path is None:
         base = emb.filter(F.col("vec_id") % 2 == 0)
         late = emb.filter(F.col("vec_id") % 2 != 0)
-        assigned, centroids = ivf_index(base, n_cells=8, max_iter=1, engine="dataframe")
+        assigned, centroids = ivf_index(base, n_cells=8, max_iter=1)
         path = _scratch_root("ivf_inc", sf_dir)
         _shutil.rmtree(path, ignore_errors=True)
         _os.makedirs(path)

@@ -603,8 +603,8 @@ class GridStore:
         action: str,
         prev_end: Any = None,
     ) -> None:
-        """Shared carry-over pipeline for :meth:`insert` and
-        :meth:`_update_mixed` (they differ only in how ``touched`` /
+        """Shared carry-over pipeline for :meth:`insert` and the insert
+        legs of :meth:`update` (they differ only in how ``touched`` /
         ``anti_times`` are derived, the action label, and ``prev_end``):
         flag, observe the NEW rows' leg (the manifest's time range / row
         count describe the update, not the carried-over bucket rows), read
@@ -684,9 +684,9 @@ class GridStore:
             time_dim=td,
             dataset_start=desc.dataset_start_date,
             cadence_bounds=desc.update_cadence_bounds,
-            # the mixed path's touched-bucket set rides the validator's
-            # single aggregation — collecting it separately in
-            # _update_mixed cost one more driver action per update
+            # the insert legs' touched-bucket set rides the validator's
+            # single aggregation — collecting it separately cost one more
+            # driver action per update
             insert_bucket_fmt=_BUCKET_FMT[desc.time_bucket],
             # r16: the insert key TIMES ride the same aggregation, so leg
             # routing below is a literal predicate on the input frame —
@@ -734,62 +734,37 @@ class GridStore:
             if skipped:
                 leg = leg.filter(~F.col(td).isin(list(skipped)))
             self.append(leg, dry_run)
-        elif not n_app:
-            self.insert(df.filter(F.col(td).isNotNull()), dry_run)
-        else:
-            # Mixed update: ONE publish cycle (the reference's update_zarr is
-            # a single write + publish, publish.py:265-397), so both legs
-            # stage in one write job and commit one new version — halving the
-            # write/commit round-trips of the old insert-then-append chain.
+        elif not dry_run:
+            # Insert legs rewrite the touched buckets keyed by the
+            # validator's insert times and buckets — insert() would collect
+            # the same (time, bucket) pairs again, one more Spark action.
+            # A pure insert drops NULL-time rows, as its leg routing always
+            # did. A mixed update is ONE publish cycle (the reference's
+            # update_zarr is a single write + publish, publish.py:265-397):
+            # every row of df is one leg or the other (its distinct times
+            # ARE the update key set), so the whole frame is the new-rows
+            # leg, both legs stage in one write job and commit one version.
             # Conflict semantics follow insert: the rewritten buckets were
             # computed against this snapshot, so a racing commit is a true
             # conflict (no retry).
-            self._update_mixed(
-                df,
+            #
+            # ``update_previous_end_date`` is anchored on ``last_append``
+            # (the append leg's max, None for a pure insert) inside the
+            # commit's own property write: a mixed commit's observed range
+            # spans BOTH legs, and with ``cadence_bounds`` set an irregular
+            # backfill append can end below an overwritten existing time —
+            # cadence anchoring must keep reading the append leg's max, not
+            # the whole-batch max. Threading it through ``_commit`` (instead
+            # of a second ``set_properties`` after it) leaves no crash
+            # window where the whole-batch max persists.
+            self._rewrite_touched(
+                df if n_app else df.filter(F.col(td).isNotNull()),
                 val.insert_times,
-                dry_run,
-                last_append=val.last_append,
-                touched=val.insert_buckets,
+                set(val.insert_buckets),
+                action="update" if n_app else "insert",
+                prev_end=val.last_append,
             )
         return {"inserts": n_ins, "appends": n_app}
-
-    def _update_mixed(
-        self,
-        df: DataFrame,
-        insert_times,
-        dry_run: bool,
-        last_append: Any = None,
-        touched: frozenset[str] | None = None,
-    ) -> None:
-        """Single staged write + single commit for an insert+append update.
-        Every row of ``df`` is one leg or the other (its distinct times ARE
-        the update key set), so the whole frame is the new-rows leg; only
-        insert-touched buckets need their surviving rows carried over.
-
-        ``update_previous_end_date`` is anchored on ``last_append`` (the
-        append leg's max, from the validator's aggregation) inside the
-        commit's own property write: the commit's observed range spans
-        BOTH legs, and with ``cadence_bounds`` set an irregular backfill
-        append can end below an overwritten existing time — the old
-        insert-then-append sequence left the append leg's max in the
-        property (its commit wrote last), and cadence anchoring must keep
-        reading that, not the whole-batch max. Threading it through
-        ``_commit`` (instead of a second ``set_properties`` after it)
-        removes the crash window where the whole-batch max persisted."""
-        if dry_run:
-            return
-        td = self.desc.time_dim
-        fmt = _BUCKET_FMT[self.desc.time_bucket]
-        if touched is None:
-            # fallback for direct callers: touched buckets derive from the
-            # literal insert key list driver-side (r16 — ``insert_times``
-            # replaced the key FRAME, so no Spark action is needed at
-            # all); the strftime translation mirrors time_sliced's.
-            py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m").replace("dd", "%d")
-            touched = frozenset(t.strftime(py_fmt) for t in insert_times)
-        self._rewrite_touched(
-            df, insert_times, set(touched), action="update", prev_end=last_append
-        )
 
     def compact(self, max_files_per_bucket: int = 1) -> dict[str, int]:
         """Small-file compaction (Delta OPTIMIZE analog). Every append/insert
