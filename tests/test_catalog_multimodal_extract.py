@@ -11,8 +11,7 @@ from zarr_climate_etl_ipfs_spark import multimodal
 from zarr_climate_etl_ipfs_spark.plans.catalog import (
     StacCatalog,
     bbox_geometry,
-    spatial_extent,
-    temporal_extent,
+    extent,
     union_extent,
 )
 from zarr_climate_etl_ipfs_spark.sources.extractors import (
@@ -26,8 +25,8 @@ from zarr_climate_etl_ipfs_spark.sources.extractors import (
 
 
 def test_extents(initial_df, desc):
-    assert spatial_extent(initial_df) == [100.0, 10.0, 130.0, 40.0]
-    lo, hi = temporal_extent(initial_df)
+    bbox, (lo, hi) = extent(initial_df)
+    assert bbox == [100.0, 10.0, 130.0, 40.0]
     assert lo.startswith("2021-09-16") and hi.startswith("2022-01-31")
 
 

@@ -643,3 +643,51 @@ def test_empty_batch_append_and_insert_are_clean_noops(store, spark, desc):
     with pytest.warns(UserWarning, match="no data files"):
         store.insert(empty)
     assert [v["version"] for v in store.versions()] == before
+
+
+def _boom_frame(spark, desc, times):
+    """Rows whose data column fails the job that evaluates it. The
+    repartition keeps the optimizer from evaluating that column over the
+    local relation while it plans the key collects, so the job that fails
+    is the staging write."""
+    df = spark.createDataFrame(_tall(times), schema=desc.schema()).repartition(2)
+    fail = F.when(F.col("latitude") > -1000.0, F.raise_error(F.lit("boom")))
+    return df.withColumn("data", fail.otherwise(F.col("data")).cast("float"))
+
+
+def _prepare_compact(store, spark, desc):
+    """Crowd one bucket, then delete one of its live files."""
+    for start in ("2022-02-01", "2022-02-03"):
+        store.append(spark.createDataFrame(_tall(daily(start, 2)), schema=desc.schema()))
+    crowded = [f for f in store.manifest()["files"] if f.startswith("time_bucket=2022-02")]
+    assert len(crowded) == 2
+    (store.data_path / crowded[0]).unlink()
+    return store.compact
+
+
+#: action → (GridStore method, times of the failing input)
+_BOOM_WRITES = {
+    "write_initial": ("write_initial", daily("2021-09-16", 3)),
+    "append": ("append", daily("2022-02-01", 2)),
+    "insert": ("insert", [dt.datetime(2021, 10, 10)]),
+    "mixed_update": ("update", [dt.datetime(2021, 10, 10)] + daily("2022-02-01", 2)),
+}
+
+
+@pytest.mark.parametrize("action", [*_BOOM_WRITES, "compact"])
+def test_failed_write_leaves_flag_clear_and_version_unchanged(store, spark, desc, action):
+    """A write whose input fails (a raising data column, or a live file gone
+    from under compact) raises, commits no version and leaves the
+    update-in-progress flag clear — a stuck True would wedge every later
+    update's guard."""
+    if action == "compact":
+        write, error = _prepare_compact(store, spark, desc), "PATH_NOT_FOUND|does not exist"
+    else:
+        method, times = _BOOM_WRITES[action]
+        df = _boom_frame(spark, desc, times)
+        write, error = (lambda: getattr(store, method)(df)), "boom"
+    before = store.current_version()
+    with pytest.raises(Exception, match=error):
+        write()
+    assert store.properties()["update_in_progress"] is False
+    assert store.current_version() == before

@@ -58,3 +58,50 @@ def test_sessions_come_from_get_spark():
 @pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: f"{p.parent.name}/{p.name}")
 def test_script_compiles(path, tmp_path):
     py_compile.compile(str(path), cfile=str(tmp_path / "out.pyc"), doraise=True)
+
+
+STORE = REPO / "zarr_climate_etl_ipfs_spark" / "sources" / "store.py"
+
+#: write-path steps only the stage-and-commit bracket may call
+BRACKET = "GridStore._publish"
+BRACKET_STEPS = ("_flag_update", "_stage_files", "_commit")
+READER = "GridStore._read"
+
+
+def _store_sites(path: Path) -> tuple[dict[str, list[str]], list[str]]:
+    """Qualified enclosing function of every call to a bracket step, and of
+    every ``….read….parquet(...)`` data-file read, in ``path``."""
+    tree = ast.parse(path.read_text(), filename=str(path))
+    steps: dict[str, list[str]] = {s: [] for s in BRACKET_STEPS}
+    reads: list[str] = []
+
+    def visit(node: ast.AST, fn: str) -> None:
+        if isinstance(node, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = f"{fn}.{node.name}" if fn else node.name
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            if node.func.attr in steps:
+                steps[node.func.attr].append(fn)
+            if node.func.attr == "parquet":
+                recv = node.func.value
+                while isinstance(recv, (ast.Call, ast.Attribute)):
+                    if isinstance(recv, ast.Attribute) and recv.attr == "read":
+                        reads.append(fn)
+                        break
+                    recv = recv.func if isinstance(recv, ast.Call) else recv.value
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, "")
+    return steps, reads
+
+
+def test_store_writes_go_through_one_bracket_and_reads_through_one_reader():
+    """Every GridStore write is the one stage-and-commit bracket: each of
+    its steps has exactly one call site, inside the bracket; every data
+    parquet read is the one reader."""
+    steps, reads = _store_sites(STORE)
+    assert {s: set(fns) for s, fns in steps.items()} == {
+        s: {BRACKET} for s in BRACKET_STEPS
+    }, steps
+    assert len(steps["_stage_files"]) == len(steps["_commit"]) == 1, steps
+    assert reads == [READER], reads

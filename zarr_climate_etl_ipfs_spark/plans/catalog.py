@@ -39,21 +39,22 @@ def _iso_key(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s.replace("Z", "+00:00"))
 
 
-def spatial_extent(df: DataFrame, rounding: int = 5) -> list[float]:
-    """A1: [min_lon, min_lat, max_lon, max_lat] bbox (convenience.py:444-464)."""
+def extent(
+    df: DataFrame, time_dim: str = "time", rounding: int = 5
+) -> tuple[list[float], list[str]]:
+    """A1 + A2 in one aggregation job: the [min_lon, min_lat, max_lon,
+    max_lat] bbox (convenience.py:444-464) and the [start, end] ISO interval
+    (convenience.py:281-306)."""
     row = df.agg(
         F.round(F.min("longitude"), rounding).alias("lo_lon"),
         F.round(F.min("latitude"), rounding).alias("lo_lat"),
         F.round(F.max("longitude"), rounding).alias("hi_lon"),
         F.round(F.max("latitude"), rounding).alias("hi_lat"),
+        F.min(time_dim).alias("lo"),
+        F.max(time_dim).alias("hi"),
     ).first()
-    return [row["lo_lon"], row["lo_lat"], row["hi_lon"], row["hi_lat"]]
-
-
-def temporal_extent(df: DataFrame, time_dim: str = "time") -> list[str]:
-    """A2: [start, end] ISO strings (convenience.py:281-306)."""
-    row = df.agg(F.min(time_dim).alias("lo"), F.max(time_dim).alias("hi")).first()
-    return [row["lo"].isoformat() + "Z", row["hi"].isoformat() + "Z"]
+    bbox = [row["lo_lon"], row["lo_lat"], row["hi_lon"], row["hi_lat"]]
+    return bbox, [row["lo"].isoformat() + "Z", row["hi"].isoformat() + "Z"]
 
 
 def bbox_geometry(bbox: list[float]) -> dict[str, Any]:
@@ -117,8 +118,7 @@ class StacCatalog:
         re-publish."""
         self.ensure_root_catalog()
         name = desc.collection_name or desc.dataset_name
-        bbox = spatial_extent(df, desc.bbox_rounding_value)
-        interval = temporal_extent(df, desc.time_dim)
+        bbox, interval = extent(df, desc.time_dim, desc.bbox_rounding_value)
         f = self._collection_file(name)
         if f.exists():
             coll = json.loads(f.read_text())
@@ -176,8 +176,7 @@ class StacCatalog:
         items_dir.mkdir(parents=True, exist_ok=True)
         existing = sorted(items_dir.glob("v*.json"))
         version = len(existing) + 1
-        bbox = spatial_extent(df, desc.bbox_rounding_value)
-        interval = temporal_extent(df, desc.time_dim)
+        bbox, interval = extent(df, desc.time_dim, desc.bbox_rounding_value)
         props = {
             "dataset": desc.dataset_name,
             "time_resolution": desc.time_resolution,

@@ -380,24 +380,15 @@ def grib1_decoder(desc, parameter: int | None = None):
     value) rows; ``parameter`` filters multi-parameter files."""
     import pandas as pd
 
+    from zarr_climate_etl_ipfs_spark.sources.ingest import tall_frame
+
     def decode(path: str, content: bytes) -> pd.DataFrame:
         frames = []
         for msg in parse_grib1(content):
             if parameter is not None and msg.parameter != parameter:
                 continue
-            nj, ni = msg.values.shape
-            frames.append(
-                pd.DataFrame(
-                    {
-                        desc.time_dim: np.repeat(
-                            np.datetime64(msg.ref_time, "us"), nj * ni
-                        ),
-                        "latitude": np.repeat(msg.lats, ni),
-                        "longitude": np.tile(msg.lons, nj),
-                        desc.data_var: msg.values.reshape(-1),
-                    }
-                )
-            )
+            t = [np.datetime64(msg.ref_time, "us")]
+            frames.append(tall_frame(desc, t, msg.lats, msg.lons, msg.values))
         if not frames:
             raise GRIB1Error(f"{path}: no matching GRIB1 messages")
         return pd.concat(frames, ignore_index=True)

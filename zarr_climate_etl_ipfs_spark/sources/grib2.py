@@ -43,7 +43,6 @@ reference's products), non-lat/lon grids, GRIB1 (see sources/grib1.py).
 from __future__ import annotations
 
 import datetime as dt
-import os
 import struct
 from dataclasses import dataclass, field
 
@@ -904,6 +903,8 @@ def grib2_decoder(
     over a non-ensemble product is a clear error)."""
     import pandas as pd
 
+    from zarr_climate_etl_ipfs_spark.sources.ingest import tall_frame
+
     want_step = "step" in desc.dims
     want_ens = "ensemble" in desc.dims
 
@@ -919,25 +920,18 @@ def grib2_decoder(
     def decode(path: str, content: bytes) -> pd.DataFrame:
         frames = []
         for msg in parse_grib2(content, select=select, j2k_decoder=j2k_decoder):
-            nj, ni = msg.values.shape
-            cols = {
-                desc.time_dim: np.repeat(np.datetime64(msg.ref_time, "us"), nj * ni)
-            }
+            const = {}
             if want_step:
-                cols["step"] = np.full(nj * ni, msg.forecast_seconds, dtype=np.int64)
+                const["step"] = np.int64(msg.forecast_seconds)
             if want_ens:
                 if msg.ensemble_member is None:
                     raise GRIB2Error(
                         f"{path}: descriptor {desc.dataset_name!r} declares an "
                         "ensemble dim but the message is not PDT 4.1/4.11"
                     )
-                cols["ensemble"] = np.full(
-                    nj * ni, msg.ensemble_member, dtype=np.int32
-                )
-            cols["latitude"] = np.repeat(msg.lats, ni)
-            cols["longitude"] = np.tile(msg.lons, nj)
-            cols[desc.data_var] = msg.values.reshape(-1)
-            frames.append(pd.DataFrame(cols))
+                const["ensemble"] = np.int32(msg.ensemble_member)
+            t = [np.datetime64(msg.ref_time, "us")]
+            frames.append(tall_frame(desc, t, msg.lats, msg.lons, msg.values, **const))
         if not frames:
             raise GRIB2Error(f"{path}: no matching GRIB2 messages")
         return pd.concat(frames, ignore_index=True)
@@ -968,107 +962,62 @@ def write_grib2_sharded(
 ) -> dict:
     """Distributed GRIB2 sink over a tall (time, lat, lon, value) frame —
     one ``.grib2`` file per ``bucket_fmt`` time bucket, one message per time
-    step, written executor-side. The directory at ``path`` must already
-    exist (callers own create/overwrite semantics). Scale shape: spatial
-    axes resolve once driver-side (axis-sized) and ride the kernel closure;
-    the data takes ONE shuffle keyed on the bucket; each group materializes
-    only its own (time, lat, lon) slab. Section-3 template 3.0 stores only
-    endpoints + integer-microdegree increments, so axes must be evenly
-    spaced on that grid — enforced with a named error. All-missing time
-    slices are skipped (a message cannot carry zero present points) and
-    counted in the returned manifest."""
+    step, through the shared bucket-grid sink (sources/sink.py: one shuffle
+    keyed on the bucket, executor-side writes). The directory at ``path``
+    must already exist (callers own create/overwrite semantics). Section-3
+    template 3.0 stores only endpoints + integer-microdegree increments, so
+    axes must be evenly spaced on that grid — enforced with a named error.
+    All-missing time slices are skipped (a message cannot carry zero
+    present points) and counted in the returned manifest."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    row = df.agg(
-        *[F.collect_set(d).alias(d) for d in (lat_dim, lon_dim)]
-    ).collect()[0]
-    axes = {}
-    for d in (lat_dim, lon_dim):
-        ax = np.sort(np.asarray(row[d] or [], dtype="float64"))
-        n = len(ax)
-        if n > 1:
-            recon = np.linspace(
-                round(ax[0] * 1e6) / 1e6, round(ax[-1] * 1e6) / 1e6, n
-            )
-            if np.abs(recon - ax).max() > 5e-7:
-                raise GRIB2Error(
-                    f"axis {d!r} is not evenly spaced on GRIB's microdegree "
-                    "grid; section 3 template 3.0 cannot represent it "
-                    "(write_zarr_tall/export_netcdf4 carry explicit "
-                    "coordinate arrays instead)"
+    from zarr_climate_etl_ipfs_spark.sources.sink import write_bucket_grids
+
+    def encoder_for(axes):
+        for d in (lat_dim, lon_dim):
+            ax = axes[d]
+            n = len(ax)
+            if n > 1:
+                recon = np.linspace(
+                    round(ax[0] * 1e6) / 1e6, round(ax[-1] * 1e6) / 1e6, n
                 )
-        axes[d] = ax
-    lats_asc, lons_asc = axes[lat_dim], axes[lon_dim]
-    out_str = str(path)
-    disc, (pcat, pnum) = discipline, parameter
-    ltyp, lev = level_type, level
-    tmpl, bits, dscale = template, bits_per_value, decimal_scale
-    td = time_dim
+                if np.abs(recon - ax).max() > 5e-7:
+                    raise GRIB2Error(
+                        f"axis {d!r} is not evenly spaced on GRIB's microdegree "
+                        "grid; section 3 template 3.0 cannot represent it "
+                        "(write_zarr_tall/export_netcdf4 carry explicit "
+                        "coordinate arrays instead)"
+                    )
+        lats_asc, lons_asc = axes[lat_dim], axes[lon_dim]
 
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = str(pdf["__grib_bucket"].iloc[0])
-        tvals = np.sort(pd.DatetimeIndex(pdf[td].unique()).values)
-        shape = (len(tvals), len(lats_asc), len(lons_asc))
-        vals = pdf[var].to_numpy()
-        grid = np.full(shape, np.nan, dtype="float64")
-        ti = np.searchsorted(tvals, pd.DatetimeIndex(pdf[td]).values)
-        li = np.searchsorted(lats_asc, pdf[lat_dim].to_numpy())
-        oi = np.searchsorted(lons_asc, pdf[lon_dim].to_numpy())
-        grid[(ti, li, oi)] = vals.astype("float64", copy=False)
-        msgs = []
-        skipped = 0
-        for k, tv in enumerate(tvals):
-            slab = grid[k][::-1]  # N→S rows: scanning mode 0
-            if np.isnan(slab).all():
-                skipped += 1
-                continue
-            msgs.append(
-                GRIB2Message(
-                    discipline=disc,
-                    parameter_category=pcat,
-                    parameter_number=pnum,
-                    level_type=ltyp,
-                    level=lev,
-                    ref_time=pd.Timestamp(tv).to_pydatetime(),
-                    lats=lats_asc[::-1],
-                    lons=lons_asc,
-                    values=slab,
+        def encode(tvals, grid):
+            grid = grid.astype("float64", copy=False)
+            msgs = []
+            skipped = 0
+            for k, tv in enumerate(tvals):
+                slab = grid[k][::-1]  # N→S rows: scanning mode 0
+                if np.isnan(slab).all():
+                    skipped += 1
+                    continue
+                msgs.append(
+                    GRIB2Message(
+                        discipline=discipline,
+                        parameter_category=parameter[0],
+                        parameter_number=parameter[1],
+                        level_type=level_type,
+                        level=level,
+                        ref_time=pd.Timestamp(tv).to_pydatetime(),
+                        lats=lats_asc[::-1],
+                        lons=lons_asc,
+                        values=slab,
+                    )
                 )
-            )
-        if not msgs:  # a bucket of all-missing slices emits no file
-            return pd.DataFrame(
-                {"bucket": [bucket], "nbytes": [0], "rows": [len(pdf)],
-                 "messages": [0], "skipped": [skipped]}
-            )
-        blob = write_grib2(msgs, bits, dscale, tmpl)
-        fn = os.path.join(out_str, f"{bucket}.grib2")
-        tmp = f"{fn}.tmp.{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, fn)
-        return pd.DataFrame(
-            {"bucket": [bucket], "nbytes": [len(blob)], "rows": [len(pdf)],
-             "messages": [len(msgs)], "skipped": [skipped]}
-        )
+            if not msgs:  # a bucket of all-missing slices emits no file
+                return None, 0, skipped
+            return write_grib2(msgs, bits_per_value, decimal_scale, template), len(msgs), skipped
 
-    manifest = (
-        df.withColumn("__grib_bucket", F.date_format(F.col(td), bucket_fmt))
-        .groupBy("__grib_bucket")
-        .applyInPandas(
-            emit,
-            schema="bucket string, nbytes long, rows long, "
-            "messages long, skipped long",
-        )
+        return encode
+
+    return write_bucket_grids(
+        df, path, var, time_dim, [lat_dim, lon_dim], bucket_fmt, "grib2", encoder_for
     )
-    stats = manifest.agg(
-        F.coalesce(F.sum((F.col("messages") > 0).cast("long")), F.lit(0)).alias(
-            "files"
-        ),
-        F.coalesce(F.sum("nbytes"), F.lit(0)).alias("bytes"),
-        F.coalesce(F.sum("rows"), F.lit(0)).alias("rows"),
-        F.coalesce(F.sum("messages"), F.lit(0)).alias("messages"),
-        F.coalesce(F.sum("skipped"), F.lit(0)).alias("skipped_slices"),
-    ).collect()[0]
-    return {k: int(stats[k]) for k in
-            ("files", "bytes", "rows", "messages", "skipped_slices")}

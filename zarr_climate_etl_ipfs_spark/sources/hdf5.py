@@ -907,6 +907,7 @@ def netcdf4_decoder(
     attributes."""
     import pandas as pd
 
+    from zarr_climate_etl_ipfs_spark.sources.ingest import tall_frame
     from zarr_climate_etl_ipfs_spark.sources.netcdf3 import _cf_origin_and_seconds
 
     def decode(path: str, content: bytes) -> pd.DataFrame:
@@ -928,14 +929,6 @@ def netcdf4_decoder(
         times = origin + (times_raw * secs * 1e6).astype("timedelta64[us]")
         lats = h5.read(lat_var).astype("float64")
         lons = h5.read(lon_var).astype("float64")
-        nt, ny, nx = len(times), len(lats), len(lons)
-        return pd.DataFrame(
-            {
-                desc.time_dim: np.repeat(times, ny * nx),
-                "latitude": np.tile(np.repeat(lats, nx), nt),
-                "longitude": np.tile(lons, nt * ny),
-                desc.data_var: data.reshape(-1),
-            }
-        )
+        return tall_frame(desc, times, lats, lons, data)
 
     return decode

@@ -21,6 +21,7 @@ import functools
 from collections.abc import Callable, Iterator, Sequence
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,6 +75,21 @@ def canonicalize(
 #: decoder contract: (path, content) -> iterable of dict rows, or a whole
 #: pandas DataFrame (the vectorized fast path — no per-cell Python loop)
 Decoder = Callable[[str, bytes], "Iterator[dict[str, Any]] | pd.DataFrame"]
+
+
+def tall_frame(desc: DatasetDescriptor, times, lats, lons, values, **const) -> pd.DataFrame:
+    """The decoders' (time, lat, lon) grid → tall rows: repeat/tile the
+    coordinate axes in C order so no per-cell Python loop runs in the hot
+    ingest path. ``const`` adds constant dim columns (GRIB2's ``step`` /
+    ``ensemble``) after the time column, keeping each value's dtype."""
+    nt, ny, nx = len(times), len(lats), len(lons)
+    cols = {desc.time_dim: np.repeat(times, ny * nx)}
+    for name, v in const.items():
+        cols[name] = np.full(nt * ny * nx, v)
+    cols["latitude"] = np.tile(np.repeat(lats, nx), nt)
+    cols["longitude"] = np.tile(lons, nt * ny)
+    cols[desc.data_var] = values.reshape(-1)
+    return pd.DataFrame(cols)
 
 
 def default_decoder(path: str, content: bytes) -> Iterator[dict[str, Any]]:

@@ -426,6 +426,8 @@ def netcdf3_decoder(
 
     import pandas as pd
 
+    from zarr_climate_etl_ipfs_spark.sources.ingest import tall_frame
+
     def decode(path: str, content: bytes) -> pd.DataFrame:
         nc = parse_netcdf3(content)
         var = data_var or desc.data_var
@@ -444,16 +446,6 @@ def netcdf3_decoder(
         times = origin + (times_raw * secs * 1e6).astype("timedelta64[us]")
         lats = nc.read(lat_var).astype("float64")
         lons = nc.read(lon_var).astype("float64")
-        nt, ny, nx = len(times), len(lats), len(lons)
-        # vectorized tall-ification: repeat/tile the coordinate axes so no
-        # per-cell Python loop runs in the hot ingest path
-        return pd.DataFrame(
-            {
-                desc.time_dim: np.repeat(times, ny * nx),
-                "latitude": np.tile(np.repeat(lats, nx), nt),
-                "longitude": np.tile(lons, nt * ny),
-                desc.data_var: data.reshape(-1),
-            }
-        )
+        return tall_frame(desc, times, lats, lons, data)
 
     return decode

@@ -31,6 +31,14 @@ commit time would be just as lossy, landing a stale snapshot's file list on
 top of the winner's at N+1). The reference's ``update_in_progress`` flag protocol
 (publish.py:153-180) is kept as informational properties for parity.
 
+One write path: like the reference's guarded ``to_zarr`` wrapper (S16,
+publish.py:124-180), every write — initial, append, insert, update, compact,
+restore — goes through one bracket, :meth:`GridStore._publish` (flag on →
+observe → stage → empty guard → commit → conflict retry → flag off), and
+every data read through :meth:`GridStore._read`. The NetCDF4 and GRIB2
+exports share one bucket-grid sink (sources/sink.py) and supply only their
+encoders.
+
 Scale design: partition grain (descriptor.time_bucket) is the analog of the
 Zarr time-chunk spec (chirps.py:26-28). A bucket holds one calendar unit of
 cells; at CHIRPS-0.05 scale (2000×7200 grid, daily) a "month" bucket is
@@ -50,6 +58,7 @@ import json
 import os
 import shutil
 import uuid
+import warnings
 from collections.abc import Mapping
 from pathlib import Path
 from typing import Any
@@ -291,8 +300,15 @@ class GridStore:
             if version is not None:
                 raise StoreError("dataset: pass version= or as_of=, not both")
             version = self.version_as_of(as_of)
-        m = self.manifest(version)
-        paths = [str(self.data_path / f) for f in m["files"]]
+        return self._read(self.manifest(version)["files"])
+
+    def _read(self, files: list[str]) -> DataFrame:
+        """The one data-file reader: manifest-relative ``files`` as a frame
+        without the partition column. No files → an empty frame typed by
+        the descriptor's schema (no listing, no job)."""
+        if not files:
+            return self.spark.createDataFrame([], self.desc.schema())
+        paths = [str(self.data_path / f) for f in files]
         df = self.spark.read.option("basePath", str(self.data_path)).parquet(*paths)
         return df.drop(_BUCKET_COL)
 
@@ -304,16 +320,8 @@ class GridStore:
         fmt = _BUCKET_FMT[self.desc.time_bucket]
         py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m").replace("dd", "%d")
         lo, hi = start.strftime(py_fmt), end.strftime(py_fmt)
-        m = self.manifest()
-        paths = [
-            str(self.data_path / f)
-            for f in m["files"]
-            if lo <= _bucket_of(f) <= hi
-        ]
-        if not paths:
-            return self.dataset().filter(F.lit(False))
-        df = self.spark.read.option("basePath", str(self.data_path)).parquet(*paths)
-        return df.filter(F.col(td).between(F.lit(start), F.lit(end))).drop(_BUCKET_COL)
+        files = [f for f in self.manifest()["files"] if lo <= _bucket_of(f) <= hi]
+        return self._read(files).filter(F.col(td).between(F.lit(start), F.lit(end)))
 
     def restore(self, version: int) -> int:
         """Delta RESTORE analog, completing the versioning triad with
@@ -334,16 +342,7 @@ class GridStore:
                 f"restore: {len(missing)} file(s) of v{version} were vacuumed "
                 f"(first: {missing[0]}); the version is no longer restorable"
             )
-        self._flag_update(True, append_only=False)
-        try:
-            v = self._commit(
-                "restore",
-                list(m["files"]),
-                self._rng_of(self.dataset(version)),
-                base_version=cur,
-            )
-        finally:
-            self._flag_update(False, append_only=False)
+        v = self._publish("restore", list(m["files"]), base=cur)
         # The pre-commit existence check above races a concurrent
         # vacuum(retention=0) (TOCTOU): a reclaim can land between check and
         # commit, leaving the just-committed manifest with dangling
@@ -389,29 +388,17 @@ class GridStore:
             for b in by_bucket_old.keys() | by_bucket_new.keys()
             if by_bucket_old.get(b) != by_bucket_new.get(b)
         }
-        var = self.desc.data_var
-        dims = [f.name for f in self.desc.schema().fields if f.name != var]
+        var, dims = self.desc.data_var, self.desc.dims
 
-        def _read(m: dict[str, Any]) -> DataFrame:
-            paths = [
-                str(self.data_path / f)
-                for f in m["files"]
-                if _bucket_of(f) in changed_buckets
-            ]
-            if not paths:
-                return self.spark.createDataFrame([], self.desc.schema())
-            return (
-                self.spark.read.option("basePath", str(self.data_path))
-                .parquet(*paths)
-                .drop(_BUCKET_COL)
-            )
+        def changed(m: dict[str, Any]) -> DataFrame:
+            return self._read([f for f in m["files"] if _bucket_of(f) in changed_buckets])
 
-        old = _read(m_old).select(
+        old = changed(m_old).select(
             *dims,
             F.col(var).alias("old_value"),
             F.lit(True).alias("_has_old"),
         )
-        new = _read(m_new).select(
+        new = changed(m_new).select(
             *dims,
             F.col(var).alias("new_value"),
             F.lit(True).alias("_has_new"),
@@ -506,29 +493,74 @@ class GridStore:
         shutil.rmtree(staging)
         return moved
 
+    def _publish(
+        self,
+        action: str,
+        keep: list[str],
+        new: DataFrame | None = None,
+        carry: DataFrame | None = None,
+        base: int | None = None,
+        append_only: bool = False,
+        retries: int = 0,
+        **commit_kw: Any,
+    ) -> int | None:
+        """The one write path, the reference's guarded ``to_zarr`` (S16,
+        publish.py:124-180): flag on → observe → stage → empty guard →
+        commit → conflict retry → flag off. The flag clears even on failure
+        (a stuck True would wedge every later update's guard). Returns the
+        committed version, or None for a skipped empty input.
+
+        ``keep``: live files carried over unchanged. ``new``: the update's
+        rows, observed for the manifest's time range and row count; None
+        stages nothing and re-commits ``keep`` (restore). ``carry``: rows
+        restaged with ``new`` but not counted (an insert's surviving bucket
+        rows). ``base``: the version the caller read (None for an initial
+        write, which races for the next slot).
+
+        Empty guard, from the input alone: staging no files raises when the
+        commit would list no files at all (an empty manifest bricks the
+        store: has_existing() True, nothing to read), else warns and skips
+        (``obs.get`` would raise on metrics that never materialized).
+
+        Only a pure append passes ``retries``: its staged files stay valid
+        whatever a racing writer committed, so a lost race re-reads the
+        latest manifest as ``keep`` and recommits without restaging."""
+        self._flag_update(True, append_only)
+        try:
+            files: list[str] = []
+            if new is None:
+                rng = self._rng_of(self._read(keep))
+            else:
+                observed, obs = self._observe_rng(new.select(*self.desc.schema().fieldNames()))
+                files = self._stage_files(
+                    observed if carry is None else carry.unionByName(observed)
+                )
+                if not files:
+                    msg = f"{action}: input produced no data files (empty DataFrame?)"
+                    if not keep:
+                        raise StoreError(f"{msg} — refusing to commit an empty manifest")
+                    warnings.warn(f"{msg} — skipping commit", stacklevel=3)
+                    return None
+                rng = obs.get
+            for attempt in range(retries + 1):
+                try:
+                    return self._commit(
+                        action, keep + files, rng, base_version=base, **commit_kw
+                    )
+                except StoreError:
+                    if attempt == retries:
+                        raise
+                    m = self.manifest()  # re-read the winner's file list
+                    keep, base = m["files"], m["version"]
+        finally:
+            self._flag_update(False, append_only)
+
     def write_initial(self, df: DataFrame, dry_run: bool = False) -> None:
         """S13: full (re)publish — a fresh manifest referencing only the new
-        files; prior versions stay readable until vacuum."""
-        if dry_run:
-            return
-        self.meta_path.mkdir(parents=True, exist_ok=True)
-        self._flag_update(True, append_only=False)
-        try:
-            obs_df, obs = self._observe_rng(df)
-            files = self._stage_files(obs_df)
-            if not files:
-                # an empty initial publish would commit files=[] and brick
-                # the store: has_existing() turns True but dataset() has no
-                # paths to read (round-14 review catch) — refuse clearly
-                raise StoreError(
-                    "write_initial: input produced no data files (empty "
-                    "DataFrame?) — refusing to commit an empty manifest"
-                )
-            self._commit("initial", files, obs.get)
-        finally:
-            # the in-progress flag must clear even on a failed write —
-            # a stuck True would wedge every later update's guard
-            self._flag_update(False, append_only=False)
+        files; prior versions stay readable until vacuum. An empty input
+        raises StoreError instead of committing an empty manifest."""
+        if not dry_run:
+            self._publish("initial", [], df)
 
     def append(self, df: DataFrame, dry_run: bool = False, max_retries: int = 3) -> None:
         """S14: extend along the time dim (update_is_append_only=True).
@@ -541,40 +573,14 @@ class GridStore:
         snapshot it read, so a racing commit is a true conflict there.)
         Raises the final commit-conflict StoreError after ``max_retries``
         losses — pathological contention should be visible, not looped on
-        forever."""
+        forever. An empty batch warns and commits nothing."""
         if dry_run:
             return
-        self._flag_update(True, append_only=True)
-        try:
-            m = self.manifest()
-            obs_df, obs = self._observe_rng(df)
-            files = self._stage_files(obs_df)
-            if not files:
-                # empty batch: nothing staged, and obs.get would raise a
-                # bare AssertionError (the metrics never materialize when
-                # the write runs zero tasks). Warn-and-skip like update()'s
-                # zero-leg path — no new version for no data.
-                import warnings
-
-                warnings.warn(
-                    "append: input produced no data files (empty DataFrame?) "
-                    "— skipping commit",
-                    stacklevel=2,
-                )
-                return
-            rng = obs.get
-            for attempt in range(max_retries + 1):
-                try:
-                    self._commit(
-                        "append", m["files"] + files, rng, base_version=m["version"]
-                    )
-                    break
-                except StoreError:
-                    if attempt == max_retries:
-                        raise
-                    m = self.manifest()  # re-read the winner's file list
-        finally:
-            self._flag_update(False, append_only=True)
+        m = self.manifest()
+        self._publish(
+            "append", m["files"], df, base=m["version"], append_only=True,
+            retries=max_retries,
+        )
 
     def insert(self, df: DataFrame, dry_run: bool = False) -> None:
         """S15: overwrite existing time steps in place — only the buckets
@@ -603,70 +609,31 @@ class GridStore:
         action: str,
         prev_end: Any = None,
     ) -> None:
-        """Shared carry-over pipeline for :meth:`insert` and the insert
-        legs of :meth:`update` (they differ only in how ``touched`` /
-        ``anti_times`` are derived, the action label, and ``prev_end``):
-        flag, observe the NEW rows' leg (the manifest's time range / row
-        count describe the update, not the carried-over bucket rows), read
-        the touched bucket files, filter out the replaced times with a
-        literal NOT-IN (``anti_times`` is the bounded collected key list —
-        r16: the key-FRAME broadcast anti-join this replaces re-executed
-        its store-scan + distinct subtree inside the staging write job;
+        """Carry-over rewrite for :meth:`insert` and the insert legs of
+        :meth:`update`: restage each touched bucket's rows minus the
+        replaced times together with ``df`` (the new rows — only they are
+        observed for the manifest range and row count) and commit them with
+        the untouched files against the snapshot's version. The replaced
+        times are a literal NOT-IN (``anti_times`` is the bounded collected
+        key list — r16: the key-FRAME broadcast anti-join re-executed its
+        store-scan + distinct subtree inside the staging write job);
         NULL-time rows survive, matching left_anti's non-matching-row
-        semantics), union the new leg, stage, and commit untouched +
-        staged against the snapshot's base version. No conflict retry: the
-        rewritten buckets were computed against the snapshot this writer
-        READ — a racing commit is a true conflict the caller must re-plan
-        against (Delta parity)."""
-        td = self.desc.time_dim
+        semantics. No conflict retry: the rewritten buckets were computed
+        against the snapshot this writer READ — a racing commit is a true
+        conflict the caller must re-plan against (Delta parity)."""
         m = self.manifest()
-        prev = m["files"]
-        touched_paths = [
-            str(self.data_path / f) for f in prev if _bucket_of(f) in touched
-        ]
-        self._flag_update(True, append_only=False)
-        try:
-            new_leg, obs = self._observe_rng(
-                df.select(*self.desc.schema().fieldNames())
-            )
-            if touched_paths:
-                existing = self.spark.read.option(
-                    "basePath", str(self.data_path)
-                ).parquet(*touched_paths)
-                if anti_times:
-                    not_replaced = F.coalesce(
-                        ~F.col(td).isin(list(anti_times)), F.lit(True)
-                    )
-                    keep = existing.filter(not_replaced).drop(_BUCKET_COL)
-                else:
-                    keep = existing.drop(_BUCKET_COL)
-                combined = keep.unionByName(new_leg)
-            else:
-                combined = new_leg
-            files = self._stage_files(combined)
-            if not files:
-                # only reachable for an empty input frame (a non-empty df
-                # stages at least one file, and touched/anti_times derive
-                # from df): skip the commit instead of letting obs.get
-                # raise a bare AssertionError on unmaterialized metrics
-                import warnings
-
-                warnings.warn(
-                    f"{action}: input produced no data files (empty "
-                    "DataFrame?) — skipping commit",
-                    stacklevel=2,
-                )
-                return
-            untouched = [f for f in prev if _bucket_of(f) not in touched]
-            self._commit(
-                action,
-                untouched + files,
-                obs.get,
-                base_version=m["version"],
-                prev_end=prev_end,
-            )
-        finally:
-            self._flag_update(False, append_only=False)
+        carry = self._read([f for f in m["files"] if _bucket_of(f) in touched])
+        if anti_times:
+            td = self.desc.time_dim
+            carry = carry.filter(F.coalesce(~F.col(td).isin(list(anti_times)), F.lit(True)))
+        self._publish(
+            action,
+            [f for f in m["files"] if _bucket_of(f) not in touched],
+            df,
+            carry=carry,
+            base=m["version"],
+            prev_end=prev_end,
+        )
 
     def update(self, df: DataFrame, dry_run: bool = False) -> dict[str, int]:
         """The parse orchestration (publish.py:265-397 ``update_zarr``):
@@ -710,8 +677,6 @@ class GridStore:
             # footgun for callers who forgot the flag (found driving the
             # library user-style in round 12: an overwrite leg vanished
             # with no signal while the append leg landed)
-            import warnings
-
             warnings.warn(
                 f"update: skipping {n_ins} overwrite key(s) that already exist — "
                 "allow_overwrite is not set on the descriptor; only the append "
@@ -778,28 +743,21 @@ class GridStore:
         Returns {bucket: n_files_rewritten} for the compacted buckets.
         """
         m = self.manifest()
-        prev = m["files"]
         by_bucket: dict[str, list[str]] = {}
-        for f in prev:
+        for f in m["files"]:
             by_bucket.setdefault(_bucket_of(f), []).append(f)
         crowded = {
             b: fs for b, fs in by_bucket.items() if len(fs) > max_files_per_bucket
         }
         if not crowded:
             return {}
-        paths = [str(self.data_path / f) for fs in crowded.values() for f in fs]
-        df = self.spark.read.option("basePath", str(self.data_path)).parquet(*paths)
-        self._flag_update(True, append_only=False)
-        try:
-            obs_df, obs = self._observe_rng(df)
-            new_files = self._stage_files(obs_df)
-            keep = [f for f in prev if _bucket_of(f) not in crowded]
-            self._commit(
-                "compact", keep + new_files, obs.get, update_props=False,
-                base_version=m["version"],
-            )
-        finally:
-            self._flag_update(False, append_only=False)
+        self._publish(
+            "compact",
+            [f for f in m["files"] if _bucket_of(f) not in crowded],
+            self._read([f for fs in crowded.values() for f in fs]),
+            base=m["version"],
+            update_props=False,
+        )
         return {b: len(fs) for b, fs in crowded.items()}
 
     def vacuum(self, retention: dt.timedelta = dt.timedelta(days=7)) -> int:
@@ -967,14 +925,11 @@ class GridStore:
         EncryptionFilter), chunk-ciphertext-compatible."""
         from zarr_climate_etl_ipfs_spark.sources.zarr2 import write_zarr_tall
 
-        dims = [
-            f.name for f in self.desc.schema().fields if f.name != self.desc.data_var
-        ]
         return write_zarr_tall(
             self.dataset(version),
             str(path),
             self.desc.data_var,
-            dims,
+            self.desc.dims,
             chunks=chunks,
             compressor=compressor,
             filters=filters,
@@ -999,88 +954,42 @@ class GridStore:
         ``read_binary_gridded``/``netcdf4_decoder`` consumes, so the
         export round-trips through this engine too).
 
-        Scale design: spatial axes are resolved once driver-side
-        (axis-sized) and broadcast in the kernel closure; the data takes
-        ONE shuffle keyed on the time bucket (the storage grain — the
-        same key the store itself partitions by, so at scale this is a
-        near-aligned exchange), and each group materializes only its own
-        bucket's (time, lat, lon) slab. No single-writer bottleneck: the
-        HDF5 format is per-file single-writer, so the parallel unit is
-        the file, never the byte stream."""
+        Scale design: the shared bucket-grid sink
+        (sources/sink.write_bucket_grids) — ONE shuffle keyed on the time
+        bucket, the store's own partition grain; this method supplies only
+        the HDF5 encoder."""
         from zarr_climate_etl_ipfs_spark.sources.hdf5write import write_hdf5
-
-        out = Path(path)
-        if out.exists():
-            if not overwrite:
-                raise StoreError(f"export target {out} exists; pass overwrite=True")
-            shutil.rmtree(out)
-        try:  # put-if-absent, as export_zarr does
-            os.makedirs(out)
-        except FileExistsError:
-            raise StoreError(f"{out} was created concurrently by another writer") from None
-
-        import numpy as np
-        import pandas as pd
+        from zarr_climate_etl_ipfs_spark.sources.sink import claim_dir, write_bucket_grids
 
         desc = self.desc
-        var, td = desc.data_var, desc.time_dim
-        dims = [f.name for f in desc.schema().fields if f.name != var]
-        spatial = [d for d in dims if d != td]
-        row = self.dataset(version).agg(
-            *[F.collect_set(d).alias(d) for d in spatial]
-        ).collect()[0]
-        axes = {
-            d: np.sort(np.asarray(row[d] or [], dtype="float64")) for d in spatial
-        }
-        out_str = str(out)
+        var, td, dims = desc.data_var, desc.time_dim, desc.dims
+        spatial = dims[1:]
+        claim_dir(str(path), overwrite, StoreError)
 
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            bucket = str(pdf[_BUCKET_COL].iloc[0])
-            tvals = np.sort(pd.DatetimeIndex(pdf[td].unique()).values)
-            secs = tvals.astype("datetime64[s]").astype("int64").astype("float64")
-            shape = (len(tvals), *(len(axes[d]) for d in spatial))
-            vals = pdf[var].to_numpy()
-            dtype = vals.dtype if vals.dtype.kind == "f" else np.dtype("float64")
-            grid = np.full(shape, np.nan, dtype=dtype)
-            ti = np.searchsorted(tvals, pd.DatetimeIndex(pdf[td]).values)
-            sidx = [np.searchsorted(axes[d], pdf[d].to_numpy()) for d in spatial]
-            grid[(ti, *sidx)] = vals.astype(dtype, copy=False)
-            variables = {
-                td: ((td,), secs, {"units": "seconds since 1970-01-01"}),
-                var: (tuple(dims), grid, {"dataset_name": desc.dataset_name}),
-            }
-            for d in spatial:
-                variables[d] = ((d,), axes[d], {})
-            blob = write_hdf5(
-                variables,
-                global_attrs={"dataset_name": desc.dataset_name},
-                chunks={var: (1, *(len(axes[d]) for d in spatial))},
-                compress=compress,
-            )
-            fn = os.path.join(out_str, f"{bucket}.nc")
-            tmp = f"{fn}.tmp.{os.getpid()}"
-            with open(tmp, "wb") as f:
-                f.write(blob)
-            os.replace(tmp, fn)
-            return pd.DataFrame(
-                {"bucket": [bucket], "nbytes": [len(blob)], "rows": [len(pdf)]}
-            )
+        def encoder_for(axes):
+            def encode(tvals, grid):
+                secs = tvals.astype("datetime64[s]").astype("int64").astype("float64")
+                variables = {
+                    td: ((td,), secs, {"units": "seconds since 1970-01-01"}),
+                    var: (tuple(dims), grid, {"dataset_name": desc.dataset_name}),
+                }
+                for d in spatial:
+                    variables[d] = ((d,), axes[d], {})
+                blob = write_hdf5(
+                    variables,
+                    global_attrs={"dataset_name": desc.dataset_name},
+                    chunks={var: (1, *(len(axes[d]) for d in spatial))},
+                    compress=compress,
+                )
+                return blob, len(tvals), 0
 
-        manifest = (
-            self._with_bucket(self.dataset(version))
-            .groupBy(_BUCKET_COL)
-            .applyInPandas(emit, schema="bucket string, nbytes long, rows long")
+            return encode
+
+        stats = write_bucket_grids(
+            self.dataset(version), str(path), var, td, spatial,
+            _BUCKET_FMT[desc.time_bucket], "nc", encoder_for,
         )
-        stats = manifest.agg(
-            F.count("*").alias("files"),
-            F.coalesce(F.sum("nbytes"), F.lit(0)).alias("bytes"),
-            F.coalesce(F.sum("rows"), F.lit(0)).alias("rows"),
-        ).collect()[0]
-        return {
-            "files": int(stats["files"]),
-            "bytes": int(stats["bytes"]),
-            "rows": int(stats["rows"]),
-        }
+        return {k: stats[k] for k in ("files", "bytes", "rows")}
 
     def export_grib2(
         self,
@@ -1105,11 +1014,7 @@ class GridStore:
         feeds any reference-style pipeline AND re-ingests through this
         engine's own read_binary_gridded + grib2_decoder.
 
-        Same scale shape as export_netcdf4: spatial axes resolve once
-        driver-side (axis-sized) and ride the kernel closure; the data
-        takes ONE shuffle keyed on the time bucket (the store's own
-        partition grain — near-aligned at scale); each group materializes
-        only its own (time, lat, lon) slab. GRIB constraints enforced with
+        Same bucket-grid sink as export_netcdf4. GRIB constraints enforced with
         clear errors: exactly two spatial dims, axes evenly spaced and
         on-grid at GRIB's microdegree resolution (section 3 stores only
         endpoints + increments). Encoding is lossy at ``decimal_scale``
@@ -1121,11 +1026,10 @@ class GridStore:
             GRIB2Error,
             write_grib2_sharded,
         )
+        from zarr_climate_etl_ipfs_spark.sources.sink import claim_dir
 
         desc = self.desc
-        var, td = desc.data_var, desc.time_dim
-        dims = [f.name for f in desc.schema().fields if f.name != var]
-        spatial = [d for d in dims if d != td]
+        spatial = desc.dims[1:]
         if len(spatial) != 2:
             raise GRIB2Error(
                 f"GRIB2 export needs exactly (time, lat, lon); descriptor "
@@ -1136,21 +1040,12 @@ class GridStore:
         )
         lon_dim = next(d for d in spatial if d != lat_dim)
 
-        out = Path(path)
-        if out.exists():
-            if not overwrite:
-                raise StoreError(f"export target {out} exists; pass overwrite=True")
-            shutil.rmtree(out)
-        try:  # put-if-absent, as export_zarr does
-            os.makedirs(out)
-        except FileExistsError:
-            raise StoreError(f"{out} was created concurrently by another writer") from None
-
+        claim_dir(str(path), overwrite, StoreError)
         return write_grib2_sharded(
             self.dataset(version),
-            str(out),
-            var,
-            td,
+            str(path),
+            desc.data_var,
+            desc.time_dim,
             lat_dim,
             lon_dim,
             bucket_fmt=_BUCKET_FMT[desc.time_bucket],

@@ -94,6 +94,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from zarr_climate_etl_ipfs_spark.sources.sink import claim_dir
+
 
 class ZarrError(RuntimeError):
     pass
@@ -1430,19 +1432,7 @@ def write_zarr_tall(
     missing = [c for c in [*dims, var] if c not in dtypes]
     if missing:
         raise ZarrError(f"columns {missing} not in DataFrame ({list(dtypes)})")
-    if os.path.exists(store):
-        if not overwrite:
-            raise ZarrError(f"store {store!r} exists; pass overwrite=True")
-        shutil.rmtree(store)
-    try:
-        # put-if-absent on the store directory: two racing exporters both
-        # passing the exists-check above resolve here — exactly one mkdir
-        # wins (the GridStore manifest-commit lesson, at directory grain)
-        os.makedirs(store)
-    except FileExistsError:
-        raise ZarrError(
-            f"store {store!r} was created concurrently by another writer"
-        ) from None
+    claim_dir(store, overwrite, ZarrError)
 
     spark = df.sparkSession
     # one job: every axis's distinct values (axis-sized — driver-safe by
