@@ -237,6 +237,65 @@ def test_read_binary_gridded_checkpoint_resume(tmp_path, spark):
     assert decoded_files() == {"file_1"}
 
 
+def test_checkpoint_manifest_survives_interrupted_write(tmp_path, spark, monkeypatch):
+    """A kill while ``_completed.json`` is being rewritten leaves the
+    previous manifest whole and parseable, so the resume path still starts
+    and decodes only what that manifest does not list."""
+    import json
+    import pathlib
+
+    def decoder(path: str, content: bytes):
+        import datetime as dt
+        import struct
+
+        import numpy as np
+
+        day = struct.unpack("<i", content[:4])[0]
+        vals = struct.unpack("<4f", content[4:20])
+        base = dt.datetime(2003, 1, 1) + dt.timedelta(days=day)
+        for i, (lat, lon) in enumerate(
+            [(10.0, 100.0), (10.0, 110.0), (20.0, 100.0), (20.0, 110.0)]
+        ):
+            yield {
+                "time": base,
+                "latitude": np.float32(lat),
+                "longitude": np.float32(lon),
+                "precip": np.float32(vals[i]),
+            }
+
+    desc = DatasetDescriptor(dataset_name="ckpt_kill", data_var="precip")
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "file_0.bin").write_bytes(_fake_nc_bytes(0, [0.1, 0.2, 0.3, 0.4]))
+    ckpt = tmp_path / "ckpt"
+
+    def run():
+        return read_binary_gridded(
+            spark, str(src / "*.bin"), desc, decoder=decoder, checkpoint_dir=str(ckpt)
+        ).count()
+
+    assert run() == 4
+    manifest = ckpt / "_completed.json"
+    previous = json.loads(manifest.read_text())
+    (src / "file_1.bin").write_bytes(_fake_nc_bytes(1, [1.1, 1.2, 1.3, 1.4]))
+
+    real_write_text = pathlib.Path.write_text
+
+    def killed_mid_write(self, data, *args, **kwargs):
+        if "_completed" in self.name:
+            real_write_text(self, data[: len(data) // 2], *args, **kwargs)
+            raise RuntimeError("killed mid-write")
+        return real_write_text(self, data, *args, **kwargs)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(pathlib.Path, "write_text", killed_mid_write)
+        with pytest.raises(RuntimeError, match="killed"):
+            run()
+    assert json.loads(manifest.read_text()) == previous
+    assert run() == 8  # resumes: file_1 re-decodes into its own partition
+    assert len(json.loads(manifest.read_text())) == 2
+
+
 def test_read_binary_gridded_default_decoder_raises(tmp_path, spark):
     desc = DatasetDescriptor(dataset_name="bin_obs2", data_var="v")
     (tmp_path / "x.bin").write_bytes(b"1234")

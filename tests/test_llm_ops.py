@@ -1006,8 +1006,8 @@ def test_dot_fixed_bit_identical_to_hof_dot(spark):
 def test_persisted_ivf_index_roundtrip_and_pruning(spark, embeddings, tmp_path):
     """Build → write → read → search equals the in-memory search, the
     probed-cell IN filter reaches the parquet source as a PARTITION filter
-    (unprobed inverted lists cost zero I/O), and the index.json commit
-    marker gates half-written indexes."""
+    (unprobed inverted lists cost zero I/O), and an index without its
+    index.json does not open."""
     assigned, centroids = similarity.ivf_index(
         embeddings, n_cells=6, max_iter=1
     )
@@ -1034,7 +1034,7 @@ def test_persisted_ivf_index_roundtrip_and_pruning(spark, embeddings, tmp_path):
     scan = next(ln for ln in plan.splitlines() if "FileScan" in ln)
     assert "PartitionFilters: [cell" in scan.replace("[isnotnull(cell", "[cell")
 
-    # commit marker: an index without index.json must not open
+    # an index without index.json must not open
     import shutil as _shutil
 
     half = str(tmp_path / "half")
@@ -1046,7 +1046,7 @@ def test_persisted_ivf_index_roundtrip_and_pruning(spark, embeddings, tmp_path):
 
 def test_append_ivf_index_incremental(spark, embeddings, tmp_path):
     """Incremental maintenance: appended vectors route to the frozen
-    centroids' cells, the marker's appends generation bumps, a full-probe
+    centroids' cells, the manifest's appends generation bumps, a full-probe
     search over the appended index equals brute force over the FULL
     corpus, and partition pruning still holds after the append."""
     base = embeddings.filter(F.col("vec_id") % 2 == 0)
@@ -1134,136 +1134,126 @@ def test_compact_ivf_index_consolidates_without_content_change(spark, embeddings
     assert after == before
     _s, _c, meta = similarity.read_ivf_index(spark, idx)
     assert meta["compactions"] == 1
+    # the committed manifest lists exactly one file per compacted cell
+    from zarr_climate_etl_ipfs_spark.sources.store import read_manifest
+
+    live = read_manifest(Path(idx) / "manifests")["files"]
+    for cell in rewritten:
+        assert sum(f.startswith(f"{cell}/") for f in live) == 1, cell
     # idempotent: a second compact is a no-op
     assert similarity.compact_ivf_index(spark, idx) == {}
 
 
-def test_compact_ivf_atomic_swap_and_crash_recovery(spark, embeddings, tmp_path):
-    """The compact commit must never leave a cell dir missing: the primary
-    path is a renameat2(RENAME_EXCHANGE) swap, and the fallback's crash
-    window (cell renamed aside, replacement not yet landed) is healed by
-    _recover_cells on the next read."""
-    import os
+def test_write_ivf_index_claims_its_path(spark, embeddings, tmp_path):
+    """An existing index path raises unless overwrite=True, which replaces
+    the whole index: no mix of two builds' cells under one set of
+    centroids."""
+    from zarr_climate_etl_ipfs_spark.sources.store import StoreError
+
+    idx = str(tmp_path / "ivf_claim")
+    a1, c1 = similarity.ivf_index(embeddings, n_cells=4, max_iter=1)
+    similarity.write_ivf_index(a1, c1, idx)
+    half = embeddings.filter(F.col("vec_id") % 2 == 0)
+    a2, c2 = similarity.ivf_index(half, n_cells=3, max_iter=1)
+    with pytest.raises(StoreError, match="exists"):
+        similarity.write_ivf_index(a2, c2, idx)
+    similarity.write_ivf_index(a2, c2, idx, overwrite=True)
+    stored, cents, meta = similarity.read_ivf_index(spark, idx)
+    assert cents == c2 and meta["n_cells"] == 3 and meta["appends"] == 0
+    assert sorted(r["vec_id"] for r in stored.select("vec_id").collect()) == sorted(
+        r["vec_id"] for r in half.select("vec_id").collect()
+    )
+
+
+def _ivf_state(spark, idx, query):
+    """(stored (vec_id, cell) rows, appends, compactions, search hits, parquet
+    files on disk) of the persisted index at ``idx``."""
     from pathlib import Path
 
-    # the atomic-exchange primitive works on this filesystem
-    a, b = tmp_path / "a", tmp_path / "b"
-    a.mkdir(), b.mkdir()
-    (a / "x").write_text("A")
-    (b / "x").write_text("B")
-    similarity._exchange_dirs(a, b)
-    assert (a / "x").read_text() == "B" and (b / "x").read_text() == "A"
-
-    halves = [embeddings.filter(F.col("vec_id") % 2 == i) for i in range(2)]
-    assigned, centroids = similarity.ivf_index(
-        halves[0], n_cells=3, max_iter=1
-    )
-    idx = str(tmp_path / "ivf_r")
-    similarity.write_ivf_index(assigned, centroids, idx)
-    similarity.append_ivf_index(spark, idx, halves[1])
-    total = embeddings.count()
-    cells_root = Path(idx) / "cells"
-    victim = sorted(cells_root.glob("cell=*"))[0]
-
-    # simulate a crash inside the fallback window: the live cell dir was
-    # renamed aside and the replacement never landed
-    os.rename(victim, cells_root / f"_old_{victim.name}.{os.getpid()}")
-    assert not victim.exists()
-    stored, _c, _m = similarity.read_ivf_index(spark, idx)  # heals on read
-    assert victim.exists()
-    assert stored.count() == total
-
-    # stale leftovers with a live cell are garbage and get swept (owner
-    # pid chosen beyond pid_max so it is dead on any host)
-    junk_old = cells_root / f"_old_{victim.name}.999999999"
-    junk_tmp = cells_root / f"_compact_{victim.name}.999999999"
-    junk_old.mkdir(), junk_tmp.mkdir()
-    similarity._recover_cells(cells_root)
-    assert not junk_old.exists() and not junk_tmp.exists()
-    assert victim.exists()
-
-    # end-to-end compact after recovery still preserves content
-    similarity.compact_ivf_index(spark, idx)
-    stored2, _c2, _m2 = similarity.read_ivf_index(spark, idx)
-    assert stored2.count() == total
-    assert stored2.select("vec_id").distinct().count() == total
+    stored, _c, meta = similarity.read_ivf_index(spark, idx)
+    rows = sorted((r["vec_id"], r["cell"]) for r in stored.select("vec_id", "cell").collect())
+    hits = [
+        (r["query_id"], r["vec_id"])
+        for r in similarity.search_ivf_index(spark, idx, query, k=4, n_probe=3)
+        .orderBy("query_id", "rank").collect()
+    ]
+    on_disk = sorted(str(p) for p in (Path(idx) / "cells").rglob("*.parquet"))
+    return rows, meta.get("appends", 0), meta.get("compactions", 0), hits, on_disk
 
 
-def test_recover_cells_skips_live_foreign_compactor(tmp_path):
-    """A reader's recovery pass must not touch staging/aside dirs owned by
-    a LIVE compactor in another process — deleting a live _compact_ dir
-    mid-write (or resurrecting a live _old_ dir mid-swap) loses committed
-    cell data. pid 1 stands in for a live foreign process; a dead pid and
-    our own pid stay collectable."""
+def test_failed_ivf_append_and_compact_leave_index_unchanged(
+    spark, embeddings, tmp_path, monkeypatch
+):
+    """A commit forced to raise after staging leaves the index exactly as
+    it was: a failed append_ivf_index, then a failed compact_ivf_index,
+    each keep read_ivf_index's rows, the appends/compactions counts, the
+    search result and the files on disk (staged files are removed)."""
     import os
 
-    from zarr_climate_etl_ipfs_spark.operators import similarity
+    thirds = [embeddings.filter(F.col("vec_id") % 3 == i) for i in range(3)]
+    assigned, centroids = similarity.ivf_index(thirds[0], n_cells=3, max_iter=1)
+    idx = str(tmp_path / "ivf_f")
+    similarity.write_ivf_index(assigned, centroids, idx)
+    similarity.append_ivf_index(spark, idx, thirds[1])  # fragments the cells
+    query = embeddings.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    before = _ivf_state(spark, idx, query)
 
-    cells_root = tmp_path / "cells"
-    cells_root.mkdir()
-    live = cells_root / "cell=0"
-    live.mkdir()
+    def failing(real):
+        def op(src, dst, *args, **kwargs):
+            if str(dst).startswith(idx):  # any commit point inside the index
+                raise OSError("injected commit failure")
+            return real(src, dst, *args, **kwargs)
 
-    # live foreign owner (pid 1 = init, always running): leave alone
-    busy_old = cells_root / "_old_cell=0.1"
-    busy_tmp = cells_root / "_compact_cell=0.1"
-    busy_old.mkdir(), busy_tmp.mkdir()
-    similarity._recover_cells(cells_root)
-    assert busy_old.exists() and busy_tmp.exists()
+        return op
 
-    # even when the live cell is missing, a live owner's _old_ dir must
-    # not be resurrected out from under its in-flight second rename
-    live.rmdir()
-    similarity._recover_cells(cells_root)
-    assert busy_old.exists() and not live.exists()
-    busy_old.rmdir(), busy_tmp.rmdir()
+    for attempt in (
+        lambda: similarity.append_ivf_index(spark, idx, thirds[2]),
+        lambda: similarity.compact_ivf_index(spark, idx),
+    ):
+        with monkeypatch.context() as mp:
+            mp.setattr(os, "link", failing(os.link))
+            mp.setattr(os, "replace", failing(os.replace))
+            with pytest.raises(OSError, match="injected"):
+                attempt()
+        assert _ivf_state(spark, idx, query) == before
+    # the index is still healthy: the same compaction now commits
+    assert similarity.compact_ivf_index(spark, idx)
+    assert _ivf_state(spark, idx, query)[0] == before[0]
 
-    # our own pid = crashed predecessor call in this process: resurrect
-    mine = cells_root / f"_old_cell=0.{os.getpid()}"
-    mine.mkdir()
-    similarity._recover_cells(cells_root)
-    assert live.exists() and not mine.exists()
 
-    # dead owner (pid far past any live range on this host) with a live
-    # cell: plain garbage, swept
-    dead_tmp = cells_root / "_compact_cell=0.999999999"
-    dead_tmp.mkdir()
-    similarity._recover_cells(cells_root)
-    assert not dead_tmp.exists() and live.exists()
+def test_racing_ivf_appends_both_land_once(spark, embeddings, tmp_path, monkeypatch):
+    """A second append commits between an append's manifest read and its
+    commit: the loser re-reads the winner's manifest and recommits its
+    staged files, so both batches appear exactly once."""
+    from pathlib import Path
 
-    # same pid but WITH a registered in-flight compaction on this root:
-    # a sibling thread's staging dirs are live, not a crashed predecessor
-    busy_mine = cells_root / f"_compact_cell=0.{similarity._owner_token()}"
-    busy_mine.mkdir()
-    key = str(cells_root.resolve())
-    similarity._compaction_register(key)
-    try:
-        similarity._recover_cells(cells_root)
-        assert busy_mine.exists()
-        # registry is a counter: a nested register/unregister pair must
-        # not deregister the outer compaction
-        similarity._compaction_register(key)
-        similarity._compaction_unregister(key)
-        similarity._recover_cells(cells_root)
-        assert busy_mine.exists()
-    finally:
-        similarity._compaction_unregister(key)
-    similarity._recover_cells(cells_root)  # registry cleared: collectable
-    assert not busy_mine.exists()
+    from zarr_climate_etl_ipfs_spark.sources.store import read_manifest
 
-    # pid-recycling guard: pid 1 is alive, but a stamp whose start time
-    # contradicts /proc/1's start time names a DEAD process that happened
-    # to share the pid — collectable, not skipped forever
-    real_start = similarity._proc_start_ticks(1)
-    if real_start is not None:
-        recycled = cells_root / f"_compact_cell=0.1.{real_start + 12345}"
-        recycled.mkdir()
-        same = cells_root / f"_compact_cell=1.1.{real_start}"
-        same.mkdir()
-        similarity._recover_cells(cells_root)
-        assert not recycled.exists()  # wrong start time: owner is gone
-        assert same.exists()  # right start time: live foreign owner
-        same.rmdir()
+    thirds = [embeddings.filter(F.col("vec_id") % 3 == i) for i in range(3)]
+    assigned, centroids = similarity.ivf_index(thirds[0], n_cells=3, max_iter=1)
+    idx = str(tmp_path / "ivf_race")
+    similarity.write_ivf_index(assigned, centroids, idx)
+
+    real_commit = similarity.commit_manifest
+    raced: list[int] = []
+
+    def racing_commit(manifest_dir, manifest):
+        if manifest["action"] == "append" and not raced:
+            raced.append(manifest["version"])
+            similarity.append_ivf_index(spark, idx, thirds[2])  # wins v2
+        real_commit(manifest_dir, manifest)
+
+    monkeypatch.setattr(similarity, "commit_manifest", racing_commit)
+    man = similarity.append_ivf_index(spark, idx, thirds[1])
+    assert raced == [2] and man["appends"] == 2
+    latest = read_manifest(Path(idx) / "manifests")
+    assert (latest["version"], latest["action"]) == (3, "append")
+    stored, _c, meta = similarity.read_ivf_index(spark, idx)
+    ids = sorted(r["vec_id"] for r in stored.select("vec_id").collect())
+    assert ids == sorted(r["vec_id"] for r in embeddings.select("vec_id").collect())
+    assert meta["appends"] == 2
 
 
 def test_ngram_decontamination_hand_case(spark):

@@ -91,7 +91,7 @@ def test_scratch_root_pid_isolation_and_dead_pid_sweep(tmp_path, monkeypatch):
 
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
 
-    from zarr_climate_etl_ipfs_spark.operators.similarity import (
+    from zarr_climate_etl_ipfs_spark.plans.queries import (
         _owner_token,
         _proc_start_ticks,
     )

@@ -105,3 +105,95 @@ def test_store_writes_go_through_one_bracket_and_reads_through_one_reader():
     }, steps
     assert len(steps["_stage_files"]) == len(steps["_commit"]) == 1, steps
     assert reads == [READER], reads
+
+
+PACKAGE = REPO / "zarr_climate_etl_ipfs_spark"
+SIMILARITY = PACKAGE / "operators" / "similarity.py"
+
+#: the commit protocol's shared steps, defined once in store.py
+PROTOCOL = ("read_manifest", "commit_manifest", "stage_partitioned")
+
+
+def _sites(path: Path, match) -> list[str]:
+    """Qualified enclosing function ('' at module level) of every node in
+    ``path`` for which ``match(node)`` holds."""
+    out: list[str] = []
+
+    def visit(node: ast.AST, fn: str) -> None:
+        if isinstance(node, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = f"{fn}.{node.name}" if fn else node.name
+        if match(node):
+            out.append(fn)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(ast.parse(path.read_text(), filename=str(path)), "")
+    return out
+
+
+def _calls(name: str):
+    def match(node: ast.AST) -> bool:
+        if not isinstance(node, ast.Call):
+            return False
+        f = node.func
+        return (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)) == name
+
+    return match
+
+
+def test_one_commit_protocol_shared_by_store_and_ivf_index():
+    """The put-if-absent ``os.link`` exists once in the package, inside the
+    shared commit; the manifest read, the commit and the staged write are
+    defined once and called by both GridStore and the persisted IVF index."""
+    links = {
+        str(p.relative_to(PACKAGE)): fns
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (fns := _sites(p, _calls("link")))
+    }
+    assert links == {"sources/store.py": ["commit_manifest"]}, links
+    for name in PROTOCOL:
+        defs = [
+            str(p.relative_to(PACKAGE))
+            for p in sorted(PACKAGE.rglob("*.py"))
+            for _ in _sites(
+                p, lambda n: isinstance(n, ast.FunctionDef) and n.name == name
+            )
+        ]
+        assert defs == ["sources/store.py"], (name, defs)
+        store_callers = _sites(STORE, _calls(name))
+        assert any(fn.startswith("GridStore.") for fn in store_callers), (name, store_callers)
+        assert any(fn.startswith("_ivf_") for fn in _sites(SIMILARITY, _calls(name))), name
+
+
+def test_no_session_wide_partition_overwrite_mode():
+    """Dynamic partition overwrite is a per-write option: no package code
+    sets ``partitionOverwriteMode`` on the session conf."""
+
+    def sets_mode(node: ast.AST) -> bool:
+        return (
+            _calls("set")(node)
+            and bool(node.args)
+            and isinstance(node.args[0], ast.Constant)
+            and "partitionOverwriteMode" in str(node.args[0].value)
+        )
+
+    sites = {
+        str(p.relative_to(PACKAGE)): fns
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (fns := _sites(p, sets_mode))
+    }
+    assert not sites, sites
+
+
+def test_no_ctypes_under_operators():
+    def imports_ctypes(node: ast.AST) -> bool:
+        if isinstance(node, ast.Import):
+            return any(a.name.split(".")[0] == "ctypes" for a in node.names)
+        return isinstance(node, ast.ImportFrom) and (node.module or "").startswith("ctypes")
+
+    sites = {
+        str(p.relative_to(PACKAGE)): fns
+        for p in sorted((PACKAGE / "operators").rglob("*.py"))
+        if (fns := _sites(p, imports_ctypes))
+    }
+    assert not sites, sites

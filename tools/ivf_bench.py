@@ -61,10 +61,9 @@ def main() -> None:
 
     # warmup: one tiny build+search so the 1x row isn't charged cold-start
     warm = WORK / "warm"
-    shutil.rmtree(warm, ignore_errors=True)
     wv = synth_vectors(spark, 2000, dim)
     a, c = ivf_index(wv, n_cells=8, max_iter=1)
-    write_ivf_index(a, c, str(warm), mode="overwrite")
+    write_ivf_index(a, c, str(warm), overwrite=True)
     q = wv.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -76,7 +75,6 @@ def main() -> None:
         n = base_n * mult
         vecs = synth_vectors(spark, n, dim)
         idx = WORK / f"{mult}x"
-        shutil.rmtree(idx, ignore_errors=True)
 
         t0 = time.perf_counter()
         assigned, centroids = ivf_index(
@@ -85,7 +83,7 @@ def main() -> None:
             max_iter=1,
             train_fraction=min(1.0, 50_000 / n),
         )
-        write_ivf_index(assigned, centroids, str(idx), mode="overwrite")
+        write_ivf_index(assigned, centroids, str(idx), overwrite=True)
         t_build = time.perf_counter() - t0
 
         query = synth_vectors(spark, 4, dim).select(

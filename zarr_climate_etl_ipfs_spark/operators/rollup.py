@@ -72,14 +72,9 @@ class RollupStore:
             F.date_format(F.col(td), fmt).isin(buckets)
         )
         out = self._aggregate(base)
-        prev = self.store.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.store.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(
-                str(self.path)
-            )
-        finally:
-            self.store.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        out.repartition("bucket").write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(str(self.path))
         self.store.spark.catalog.refreshByPath(str(self.path))
         return len(buckets)
 

@@ -20,18 +20,33 @@ One implementation per operator:
                 nearest-centroid decision (training, assignment, appends,
                 probe choice) goes through :func:`_nearest_cells`. The
                 persisted form (:func:`write_ivf_index`,
-                :func:`search_ivf_index`) prunes unprobed cell partitions at
-                planning time.
+                :func:`append_ivf_index`, :func:`compact_ivf_index`) is a
+                cell-partitioned parquet file list committed through
+                GridStore's put-if-absent manifest log (sources/store.py);
+                :func:`search_ivf_index` reads the latest manifest's files
+                and prunes unprobed cell partitions at planning time.
 """
 
 from __future__ import annotations
+
+import datetime as dt
+import json
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from zarr_climate_etl_ipfs_spark.functions.vectors import cosine_similarity, dot, l2_norm
+from zarr_climate_etl_ipfs_spark.sources.sink import claim_dir
+from zarr_climate_etl_ipfs_spark.sources.store import (
+    StoreError,
+    commit_manifest,
+    read_manifest,
+    stage_partitioned,
+)
 
 
 def brute_force_topk(
@@ -880,6 +895,72 @@ def sq_asym_cosine_scan(
 # ---------------------------------------------------------------------------
 # persisted IVF index: build once, search many (the FAISS-on-disk analog)
 # ---------------------------------------------------------------------------
+#
+# Layout at ``path``: ``index.json`` (build metadata, schema, centroids —
+# written once, before v1), the inverted lists as ``cells/cell=N/*.parquet``,
+# and ``manifests/v{N}.json``, GridStore's manifest log (sources/store.py):
+# every write, append and compaction stages its parquet and commits, put-if-
+# absent, a manifest listing the live files; readers read exactly the latest
+# manifest's files, so no reader ever sees a partial batch.
+
+#: commit-conflict retries of an append (GridStore.append's default)
+_APPEND_RETRIES = 3
+
+
+def _ivf_open(path: str) -> tuple[dict, dict]:
+    """(index.json metadata, latest manifest) of the index at ``path``."""
+    marker = Path(path) / "index.json"
+    if not marker.exists():
+        raise FileNotFoundError(f"{path} has no index.json — not an IVF index")
+    return json.loads(marker.read_text()), read_manifest(Path(path) / "manifests")
+
+
+def _ivf_cells(spark, path: str, meta: dict, files: list[str]) -> DataFrame:
+    """Exactly ``files`` (relative to ``cells/``) as a frame whose ``cell``
+    stays a partition column (``basePath``), so a cell filter prunes files
+    at planning time. No files → an empty frame of the stored schema."""
+    schema = StructType.fromJson(json.loads(meta["schema"]))
+    if not files:
+        return spark.createDataFrame([], schema)
+    cells = Path(path) / "cells"
+    return (
+        spark.read.schema(schema)
+        .option("basePath", str(cells))
+        .parquet(*(str(cells / f) for f in files))
+    )
+
+
+def _ivf_commit(
+    path: str, action: str, base: dict, rows: DataFrame, drop=(), retries: int = 0
+) -> dict:
+    """Stage ``rows`` under ``cells/cell=N/`` (one writer per cell) and
+    commit ``base``'s files minus ``drop`` plus the staged ones as version
+    ``base + 1``. A lost race with retries left re-reads the latest
+    manifest and recommits the already-staged files; on any failure the
+    staged files are removed (no manifest references them)."""
+    root = Path(path)
+    added = stage_partitioned(rows.repartition(F.col("cell")), root, root / "cells", "cell")
+    try:
+        for attempt in range(retries + 1):
+            m = {
+                "version": base["version"] + 1,
+                "action": action,
+                "committed_utc": dt.datetime.now(dt.timezone.utc).isoformat(),
+                "files": sorted(set(base["files"]).difference(drop).union(added)),
+                "appends": base["appends"] + (action == "append"),
+                "compactions": base["compactions"] + (action == "compact"),
+            }
+            try:
+                commit_manifest(root / "manifests", m)
+                return m
+            except StoreError:
+                if attempt == retries:
+                    raise
+                base = read_manifest(root / "manifests")
+    except BaseException:
+        for f in added:
+            (root / "cells" / f).unlink(missing_ok=True)
+        raise
 
 
 def write_ivf_index(
@@ -888,220 +969,45 @@ def write_ivf_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "error",
+    overwrite: bool = False,
 ) -> dict:
-    """Persist a trained IVF index: the assigned vectors as parquet
-    PARTITIONED BY cell (so a probed search is a partition-pruned scan —
-    files for unprobed cells are never opened, the on-disk twin of FAISS's
-    inverted lists) plus an ``index.json`` sidecar with the centroids and
-    column names. The sidecar is written AFTER the data — its presence is
-    the commit marker, so a reader never sees a half-written index (the
-    GridStore manifest-last discipline)."""
-    import json as _json
-    import os as _os
-
+    """Persist a trained IVF index at ``path``: the assigned vectors as
+    parquet PARTITIONED BY cell (so a probed search is a partition-pruned
+    scan — files for unprobed cells are never opened, the on-disk twin of
+    FAISS's inverted lists), ``index.json`` with the centroids, schema and
+    column names, and manifest v1 listing the cell files. An existing
+    ``path`` raises StoreError unless ``overwrite`` (then it is replaced);
+    the target is claimed put-if-absent (sources/sink.claim_dir)."""
     cells = assigned.select(id_col, vec_col, "cell")
-    # align the shuffle with the on-disk layout: without it every input
-    # task writes a file into every cell directory (tasks x cells tiny
-    # files); with it each cell is one writer (AQE coalesces small cells)
-    cells.repartition(F.col("cell")).write.mode(mode).partitionBy("cell").parquet(
-        f"{path}/cells"
-    )
+    claim_dir(path, overwrite, StoreError)
     meta = {
-        "format": "ivf-index/1",
+        "format": "ivf-index/2",
         "id_col": id_col,
         "vec_col": vec_col,
         "n_cells": len(centroids),
         "dim": len(centroids[0]) if centroids else 0,
-        # the reader always applies this schema: an EMPTY index writes no
-        # parquet part files, so schema inference has nothing to read
+        # the reader always applies this schema: an EMPTY index commits no
+        # parquet files, so schema inference has nothing to read
         "schema": cells.schema.json(),
         "centroids": centroids,
     }
-    tmp = f"{path}/index.json.tmp.{_os.getpid()}"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, f"{path}/index.json")
+    (Path(path) / "index.json").write_text(json.dumps(meta))
+    _ivf_commit(path, "write", {"version": 0, "files": [], "appends": 0, "compactions": 0}, cells)
     return {"n_cells": meta["n_cells"], "dim": meta["dim"]}
 
 
 def read_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]], dict]:
-    """Open a persisted IVF index: (assigned frame with its partition-column
-    ``cell``, centroids, meta). Raises FileNotFoundError when the commit
-    marker is absent (half-written or not an index)."""
-    import json as _json
-    from pathlib import Path as _Path
-
-    from pyspark.sql import types as _T
-
-    marker = _Path(path) / "index.json"
-    if not marker.exists():
-        raise FileNotFoundError(f"{path} has no index.json — not a committed IVF index")
-    meta = _json.loads(marker.read_text())
-    schema = _T.StructType.fromJson(_json.loads(meta["schema"]))
-    _recover_cells(_Path(path) / "cells")
+    """Open a persisted IVF index at its latest manifest: (assigned frame
+    with the partition column ``cell``, centroids, meta — index.json plus
+    the manifest's ``appends``/``compactions`` counts). Raises
+    FileNotFoundError without ``index.json`` and StoreError without a
+    committed manifest."""
+    meta, m = _ivf_open(path)
     return (
-        spark.read.schema(schema).parquet(f"{path}/cells"),
+        _ivf_cells(spark, path, meta, m["files"]),
         meta["centroids"],
-        meta,
+        {**meta, "appends": m["appends"], "compactions": m["compactions"]},
     )
-
-
-#: cells-roots with an in-flight compact_ivf_index in THIS process — a
-#: concurrent reader thread's _recover_cells must not collect the live
-#: compactor's same-pid staging dirs (the pid alone can't distinguish a
-#: live sibling thread from a crashed predecessor call; round-12
-#: code-review catch). A COUNTER, not a set: two compactions on one root
-#: (itself outside the one-compactor-per-index contract, but registry
-#: integrity must not depend on callers honoring it) would otherwise
-#: deregister each other when the first finishes.
-_ACTIVE_COMPACTIONS: dict[str, int] = {}
-_ACTIVE_LOCK = __import__("threading").Lock()
-
-
-def _compaction_register(root_key: str) -> None:
-    with _ACTIVE_LOCK:
-        _ACTIVE_COMPACTIONS[root_key] = _ACTIVE_COMPACTIONS.get(root_key, 0) + 1
-
-
-def _compaction_unregister(root_key: str) -> None:
-    with _ACTIVE_LOCK:
-        n = _ACTIVE_COMPACTIONS.get(root_key, 0) - 1
-        if n > 0:
-            _ACTIVE_COMPACTIONS[root_key] = n
-        else:
-            _ACTIVE_COMPACTIONS.pop(root_key, None)
-
-
-def _proc_start_ticks(pid: int) -> int | None:
-    """Process start time in clock ticks since boot (/proc/<pid>/stat
-    field 22) — the token that makes 'pid is alive' mean 'the SAME
-    process is alive': a recycled pid gets a different start time, so a
-    crashed compactor's leftovers stay collectable even after its pid is
-    reused by an unrelated long-lived process. None where /proc is
-    unavailable (caller falls back to signal-0 liveness alone)."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as f:
-            data = f.read()
-        # comm (field 2) may contain spaces/parens; count from the last ')'
-        return int(data.rsplit(b")", 1)[1].split()[19])
-    except (OSError, IndexError, ValueError):
-        return None
-
-
-def _owner_token() -> str:
-    """``<pid>.<starttime>`` suffix stamped on compaction scratch dirs."""
-    import os as _os
-
-    pid = _os.getpid()
-    start = _proc_start_ticks(pid)
-    return f"{pid}.{start}" if start is not None else str(pid)
-
-
-def _stamp_alive(pid: int, start: int | None) -> bool:
-    """Is the process that stamped ``<pid>[.<starttime>]`` still running?
-    With a starttime the /proc comparison alone decides (world-readable
-    regardless of uid; a missing entry or different start time means the
-    stamping process is gone — pid recycling cannot read as alive).
-    Legacy pid-only stamps fall back to signal-0 liveness."""
-    import os as _os
-
-    if start is not None:
-        actual = _proc_start_ticks(pid)
-        return actual is not None and actual == start
-    try:
-        _os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # alive under another uid
-    return True
-
-
-def _leftover_owner_alive(name: str, cells_root_key: str) -> bool:
-    """True when a ``_old_``/``_compact_`` leftover dir is owned by a
-    compactor that is STILL RUNNING — such dirs are not garbage and
-    recovery must leave them alone, or a reader racing a live compactor
-    can delete the staging dir mid-write (or resurrect the aside dir
-    mid-swap, making the compactor's second rename fail ENOTEMPTY).
-
-    Ownership = ``.<pid>.<starttime>`` suffix: alive means the pid
-    responds to signal 0 AND its /proc start time matches the stamp (a
-    recycled pid is a different process — its presence must not block
-    recovery forever). Same-process ownership is decided by the
-    _ACTIVE_COMPACTIONS registry, not the pid: our own pid with no
-    registered compaction on this root is a crashed predecessor call and
-    collectable. Unparseable/legacy suffixes are treated as dead."""
-    import os as _os
-
-    parts = name.rsplit(".", 2)
-    if len(parts) == 3 and parts[1].isdigit() and parts[2].isdigit():
-        pid, start = int(parts[1]), int(parts[2])
-    elif len(parts) >= 2 and parts[-1].isdigit():
-        pid, start = int(parts[-1]), None  # legacy pid-only stamp
-    else:
-        return False
-    if pid == _os.getpid():
-        # live only while THIS process has a compaction in flight on this
-        # root (a sibling thread); otherwise a crashed predecessor call
-        return cells_root_key in _ACTIVE_COMPACTIONS
-    return _stamp_alive(pid, start)
-
-
-def _recover_cells(cells_root) -> None:
-    """Finish or discard an interrupted :func:`compact_ivf_index` swap.
-
-    The fallback (non-exchange) swap has a window where ``cell=N`` is
-    renamed to ``_old_cell=N.<pid>`` but the consolidated dir has not yet
-    taken its place; a crash there leaves the inverted list invisible
-    (Spark skips ``_``-prefixed dirs). One glob detects leftovers: an
-    ``_old_`` dir whose live cell is missing is renamed back (the old
-    files ARE the committed data until the swap completes); any other
-    ``_old_``/``_compact_`` dir is garbage from a completed or abandoned
-    swap and is removed. Leftovers whose owner process is still alive
-    (pid+starttime stamp, or a registered same-process compaction) are
-    skipped entirely — they belong to an in-flight compactor, not to a
-    crash."""
-    import shutil as _shutil
-
-    root_key = str(cells_root.resolve())
-    for leftover in cells_root.glob("_old_cell=*"):
-        if _leftover_owner_alive(leftover.name, root_key):
-            continue
-        live = cells_root / leftover.name[len("_old_") :].split(".", 1)[0]
-        if not live.exists():
-            try:
-                leftover.rename(live)
-            except OSError:
-                # a concurrent reader recovered the same leftover first —
-                # either it renamed it away (ours is gone) or the live dir
-                # just appeared; both mean the cell is healthy now
-                pass
-        else:
-            _shutil.rmtree(leftover, ignore_errors=True)
-    for leftover in cells_root.glob("_compact_cell=*"):
-        if _leftover_owner_alive(leftover.name, root_key):
-            continue
-        _shutil.rmtree(leftover, ignore_errors=True)
-
-
-def _exchange_dirs(a, b) -> None:
-    """Atomically exchange two directories via Linux ``renameat2`` with
-    ``RENAME_EXCHANGE``; raises OSError where the syscall or filesystem
-    does not support it (caller falls back to a verified two-rename)."""
-    import ctypes
-    import os as _os
-
-    libc = ctypes.CDLL(None, use_errno=True)
-    renameat2 = libc.renameat2  # glibc >= 2.28; AttributeError else
-    AT_FDCWD = -100
-    RENAME_EXCHANGE = 2
-    rc = renameat2(
-        AT_FDCWD, _os.fsencode(str(a)), AT_FDCWD, _os.fsencode(str(b)), RENAME_EXCHANGE
-    )
-    if rc != 0:
-        err = ctypes.get_errno()
-        raise OSError(err, _os.strerror(err))
 
 
 def search_ivf_index(
@@ -1112,9 +1018,10 @@ def search_ivf_index(
     n_probe: int = 4,
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Search a persisted index: :func:`read_ivf_index` + :func:`ivf_topk`.
-    The probed cells reach the parquet source as a literal IN filter on its
-    ``cell`` partition column, so unprobed inverted lists are pruned at
+    """Search a persisted index at its latest manifest:
+    :func:`read_ivf_index` + :func:`ivf_topk`. The probed cells reach the
+    parquet source as a literal IN filter on its ``cell`` partition column,
+    so the manifest's files of unprobed inverted lists are pruned at
     planning time — at 100 TB they cost zero I/O, not just zero compute."""
     assigned, centroids, meta = read_ivf_index(spark, path)
     return ivf_topk(
@@ -1289,35 +1196,23 @@ def append_ivf_index(spark, path: str, df: DataFrame) -> dict:
     as the data distribution drifts from the trained centroids, which is
     a re-train policy decision, not an append mechanic.
 
-    Commit discipline: the appended parquet files land first, the
-    ``index.json`` marker is rewritten LAST with a bumped ``appends``
-    generation. A concurrent reader holding the old marker keeps a valid
-    view of the schema/centroids; note parquet directory listing is per
-    read, so a reader that lists files MID-append can observe a partial
-    batch — callers needing snapshot isolation version the index path
-    (the GridStore manifest pattern); the marker bump is the metadata
-    commit point, not a file-level snapshot."""
-    import json as _json
-    import os as _os
-
-    _assigned0, centroids, meta = read_ivf_index(spark, path)
-    if not centroids:
+    Commit: the batch is staged under ``cells/`` and becomes visible only
+    when a manifest listing it (and bumping ``appends``) commits — a
+    reader sees the whole batch or none of it. Racing appends both land:
+    the loser of a version race re-reads the latest manifest and
+    recommits its already-staged files (GridStore.append's rule)."""
+    meta, m = _ivf_open(path)
+    if not meta["centroids"]:
         raise ValueError(
             "append_ivf_index: the index has no centroids (built on an "
             "empty corpus) — rebuild with write_ivf_index instead"
         )
-    cells = assign_ivf_cell(
-        df.select(meta["id_col"], meta["vec_col"]), centroids, meta["vec_col"]
-    ).select(meta["id_col"], meta["vec_col"], "cell")
-    cells.repartition(F.col("cell")).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{path}/cells")
-    meta["appends"] = int(meta.get("appends", 0)) + 1
-    tmp = f"{path}/index.json.tmp.{_os.getpid()}"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, f"{path}/index.json")
-    return {"n_cells": meta["n_cells"], "appends": meta["appends"]}
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    rows = assign_ivf_cell(df.select(id_col, vec_col), meta["centroids"], vec_col)
+    m = _ivf_commit(
+        path, "append", m, rows.select(id_col, vec_col, "cell"), retries=_APPEND_RETRIES
+    )
+    return {"n_cells": meta["n_cells"], "appends": m["appends"]}
 
 
 def compact_ivf_index(spark, path: str, max_files_per_cell: int = 1) -> dict:
@@ -1326,104 +1221,25 @@ def compact_ivf_index(spark, path: str, max_files_per_cell: int = 1) -> dict:
     parquet file per touched cell, and a long-lived index accumulates the
     same small-file read tax as any incremental table — per-file open
     cost, tiny row groups. Cells whose live file count exceeds the target
-    are rewritten into consolidated files; untouched cells keep their
-    files byte-identical.
+    are rewritten into one consolidated file each; untouched cells keep
+    their files byte-identical. Returns {"cell=N": n_files_rewritten}.
 
-    The rewrite stages into a ``_``-prefixed sibling directory (invisible
-    to Spark readers) and commits per cell with ``renameat2(RENAME_
-    EXCHANGE)`` — a true atomic swap: at no instant is the cell dir
-    missing or doubled. Where the syscall or filesystem lacks exchange
-    support, the fallback is rename-aside + rename-into-place, and the
-    aside copy is deleted only after verifying the new dir is in place
-    with its data file; a crash inside the fallback window is healed by
-    :func:`_recover_cells`, which every ``read_ivf_index`` runs (an
-    ``_old_`` dir whose live cell is missing is renamed back). Returns
-    {cell: n_files_rewritten}."""
-    import json as _json
-    import os as _os
-    import shutil as _shutil
-    from pathlib import Path as _Path
-
-    _assigned, _centroids, meta = read_ivf_index(spark, path)
-    # read_ivf_index already ran _recover_cells on this root — no second pass
-    cells_root = _Path(path) / "cells"
-    crowded: dict[str, int] = {}
-    for cell_dir in sorted(cells_root.glob("cell=*")):
-        n = sum(1 for p in cell_dir.glob("*.parquet"))
-        if n > max_files_per_cell:
-            crowded[cell_dir.name] = n
+    Commit: the consolidated files are staged and a manifest listing them
+    in place of the superseded ones commits (a racing commit raises the
+    commit-conflict StoreError; re-run the compaction). The superseded
+    files are deleted after the commit: a reader that resolved the
+    previous manifest but has not yet opened those files then fails with
+    a missing file — the same exposure as deleting a superseded cell
+    directory after a swap."""
+    meta, m = _ivf_open(path)
+    by_cell: dict[str, list[str]] = {}
+    for f in m["files"]:
+        by_cell.setdefault(f.split("/", 1)[0], []).append(f)
+    crowded = {c: fs for c, fs in sorted(by_cell.items()) if len(fs) > max_files_per_cell}
     if not crowded:
         return {}
-    token = _owner_token()
-    root_key = str(cells_root.resolve())
-    # register this root so a concurrent reader THREAD's _recover_cells
-    # (same pid — the stamp can't tell threads apart) leaves our live
-    # staging/aside dirs alone; the finally makes a predecessor that
-    # raised collectable again. Contract: ONE compactor per index at a
-    # time (concurrent compactors would race each other's per-cell
-    # swaps whatever the registry says); the counter only keeps registry
-    # integrity independent of callers honoring that.
-    _compaction_register(root_key)
-    try:
-        for name in crowded:
-            old_dir = cells_root / name
-            tmp_dir = cells_root / f"_compact_{name}.{token}"
-            _shutil.rmtree(tmp_dir, ignore_errors=True)
-            (
-                spark.read.schema(
-                    # per-cell read: the partition column is in the dir name,
-                    # not the files — drop it from the read schema
-                    _drop_field(meta["schema"], "cell")
-                )
-                .parquet(str(old_dir))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(str(tmp_dir))
-            )
-            # per-cell commit point; marker untouched (schema/centroids same)
-            try:
-                _exchange_dirs(old_dir, tmp_dir)
-                exchanged = True
-            except (OSError, AttributeError):
-                exchanged = False
-            if exchanged:
-                # verify the exchanged-in dir actually carries the
-                # consolidated file before discarding the superseded copy —
-                # if anything tampered with the staging dir between write and
-                # swap (e.g. an external cleaner), swap back and abort rather
-                # than delete the only committed copy
-                if not any(old_dir.glob("*.parquet")):  # pragma: no cover
-                    _exchange_dirs(old_dir, tmp_dir)
-                    raise OSError(f"compact staging dir for {name} was empty at swap")
-                _shutil.rmtree(tmp_dir)  # now holds the superseded files
-            else:
-                # no RENAME_EXCHANGE: rename-aside, rename-into-place, and only
-                # delete the aside copy after verifying the live dir took —
-                # _recover_cells heals the window if we crash between renames
-                back_dir = cells_root / f"_old_{name}.{token}"
-                _os.rename(old_dir, back_dir)
-                _os.rename(tmp_dir, old_dir)
-                if old_dir.is_dir() and any(old_dir.glob("*.parquet")):
-                    _shutil.rmtree(back_dir)
-                else:  # pragma: no cover - defensive: restore and abort
-                    _shutil.rmtree(old_dir, ignore_errors=True)
-                    _os.rename(back_dir, old_dir)
-                    raise OSError(f"compact swap failed to land for {name}")
-    finally:
-        _compaction_unregister(root_key)
-    meta["compactions"] = int(meta.get("compactions", 0)) + 1
-    tmp = f"{path}/index.json.tmp.{_os.getpid()}"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, f"{path}/index.json")
-    return crowded
-
-
-def _drop_field(schema_json: str, name: str):
-    import json as _json
-
-    from pyspark.sql import types as _T
-
-    doc = _json.loads(schema_json)
-    doc["fields"] = [f for f in doc["fields"] if f["name"] != name]
-    return _T.StructType.fromJson(doc)
+    drop = [f for fs in crowded.values() for f in fs]
+    _ivf_commit(path, "compact", m, _ivf_cells(spark, path, meta, drop), drop=drop)
+    for f in drop:
+        (Path(path) / "cells" / f).unlink(missing_ok=True)
+    return {c: len(fs) for c, fs in crowded.items()}

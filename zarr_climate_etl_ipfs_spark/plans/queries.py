@@ -304,6 +304,46 @@ def t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return t(spark, sf_dir, name).repartition(spark.sparkContext.defaultParallelism)
 
 
+def _proc_start_ticks(pid: int) -> int | None:
+    """Process start time in clock ticks since boot (/proc/<pid>/stat
+    field 22); None where /proc is unavailable."""
+    try:
+        with open(f"/proc/{pid}/stat", "rb") as f:
+            data = f.read()
+        # comm (field 2) may contain spaces/parens; count from the last ')'
+        return int(data.rsplit(b")", 1)[1].split()[19])
+    except (OSError, IndexError, ValueError):
+        return None
+
+
+def _owner_token() -> str:
+    """``<pid>.<starttime>`` stamp of this process (pid-only off-Linux)."""
+    import os as _os
+
+    pid = _os.getpid()
+    start = _proc_start_ticks(pid)
+    return f"{pid}.{start}" if start is not None else str(pid)
+
+
+def _stamp_alive(pid: int, start: int | None) -> bool:
+    """Is the process that stamped ``<pid>[.<starttime>]`` still running?
+    With a starttime the /proc comparison alone decides (a missing entry
+    or different start time means the stamping process is gone — pid
+    recycling cannot read as alive). Pid-only stamps fall back to signal-0
+    liveness."""
+    import os as _os
+
+    if start is not None:
+        return _proc_start_ticks(pid) == start
+    try:
+        _os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # alive under another uid
+    return True
+
+
 def _scratch_root(kind: str, sf_dir: str) -> str:
     """Per-(kind, sf_dir, PROCESS) scratch path for the store-building
     catalog queries. The owner stamp makes concurrent harnesses (pytest
@@ -312,21 +352,15 @@ def _scratch_root(kind: str, sf_dir: str) -> str:
     while keeping within-process memoization (index-once/search-many).
     Stale roots left by DEAD owners under the same (kind, sf_dir) tag are
     swept here — never live ones, so the sweep cannot reintroduce the
-    race. The stamp is ``<pid>.<starttime>`` (same scheme as the IVF
-    compaction scratch dirs, shared helpers): the /proc start time keeps
-    a recycled pid — especially one held by another uid, where a signal-0
-    probe reads EPERM — from pinning a dead harness's multi-GB scratch
-    store under /tmp forever."""
+    race. The stamp is ``<pid>.<starttime>`` (:func:`_owner_token`): the
+    /proc start time keeps a recycled pid — especially one held by another
+    uid, where a signal-0 probe reads EPERM — from pinning a dead
+    harness's multi-GB scratch store under /tmp forever."""
     import hashlib as _hashlib
     import os as _os
     import re as _re
     import shutil as _shutil
     import tempfile as _tempfile
-
-    from zarr_climate_etl_ipfs_spark.operators.similarity import (
-        _owner_token,
-        _stamp_alive,
-    )
 
     tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     base = _tempfile.gettempdir()
@@ -7397,7 +7431,7 @@ _IVF_DISK: dict[tuple[str, str], str] = {}
 def ivf_persisted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED IVF surface under the oracle gate: train the coarse
     quantizer once per sf_dir, write the index to disk (parquet inverted
-    lists partitioned by cell + index.json commit marker,
+    lists partitioned by cell, committed by a manifest,
     operators/similarity.write_ivf_index), then answer every search by
     re-OPENING the index — search_ivf_index resolves the probe cells into
     a literal IN filter so unprobed lists prune at planning time. Run with
@@ -7407,11 +7441,6 @@ def ivf_persisted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Index-once/search-many is the contract (FAISS shape), so the build +
     write is memoized per sf_dir — repeated bench runs measure open +
     search, which is the number that matters."""
-    import hashlib as _hashlib
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from zarr_climate_etl_ipfs_spark.operators.similarity import (
         ivf_index,
         search_ivf_index,
@@ -7424,9 +7453,7 @@ def ivf_persisted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     if path is None:
         assigned, centroids = ivf_index(emb, n_cells=8, max_iter=1)
         path = _scratch_root("ivf", sf_dir)
-        _shutil.rmtree(path, ignore_errors=True)
-        _os.makedirs(path)
-        write_ivf_index(assigned, centroids, path, mode="overwrite")
+        write_ivf_index(assigned, centroids, path, overwrite=True)
         _IVF_DISK[memo_key] = path
     query = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -8657,12 +8684,7 @@ def ivf_incremental_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     to an unreadable cell surfaces as a value-hash mismatch. Build +
     append is memoized per sf_dir (index-once/search-many, the FAISS
     shape); the partition-pruned probe path is pinned in
-    tests/test_llm_ops.py for the same on-disk format."""
-    import hashlib as _hashlib
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
+    tests/test_llm_ops.py for the same manifest-committed format."""
     from zarr_climate_etl_ipfs_spark.operators.similarity import (
         append_ivf_index,
         ivf_index,
@@ -8678,9 +8700,7 @@ def ivf_incremental_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         late = emb.filter(F.col("vec_id") % 2 != 0)
         assigned, centroids = ivf_index(base, n_cells=8, max_iter=1)
         path = _scratch_root("ivf_inc", sf_dir)
-        _shutil.rmtree(path, ignore_errors=True)
-        _os.makedirs(path)
-        write_ivf_index(assigned, centroids, path, mode="overwrite")
+        write_ivf_index(assigned, centroids, path, overwrite=True)
         if centroids and late.head(1):  # empty corpora: nothing to append
             append_ivf_index(spark, path, late)
         _IVF_INC_DISK[memo_key] = path

@@ -199,10 +199,12 @@ def _checkpointed_decode(
     """Decode-with-resume: see ``read_binary_gridded(checkpoint_dir=...)``.
 
     Layout: ``<dir>/rows/_src=<md5(path)>/*.parquet`` + ``<dir>/_completed.json``
-    (the manifest, written only after the decode job commits — a kill
-    between job and manifest write just re-decodes those files into the
-    same partitions, which dynamic overwrite replaces wholesale)."""
+    (the manifest, written only after the decode job commits and replaced
+    atomically — a kill between job and manifest write just re-decodes
+    those files into the same partitions, which dynamic overwrite replaces
+    wholesale)."""
     import json
+    import os
     from pathlib import Path
 
     ckpt = Path(checkpoint_dir)
@@ -221,17 +223,16 @@ def _checkpointed_decode(
         decoded = todo_df.mapInPandas(
             lambda it: _with_src(it, decode), schema=_schema_with_src(schema)
         )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            decoded.write.mode("overwrite").partitionBy("_src").parquet(str(rows_dir))
-        finally:
-            if prev is not None:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            else:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        # dynamic overwrite per write: the session conf stays untouched, so
+        # no other writer on the session runs in dynamic mode meanwhile
+        decoded.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("_src").parquet(str(rows_dir))
         done.update(todo)
-        manifest.write_text(json.dumps(sorted(done)))
+        # tmp + rename: a kill mid-write leaves the previous manifest whole
+        tmp = ckpt / f"._completed.{os.getpid()}.json.tmp"
+        tmp.write_text(json.dumps(sorted(done)))
+        os.replace(tmp, manifest)
     cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     return spark.read.parquet(str(rows_dir)).select(*cols)
 

@@ -1,7 +1,8 @@
 """Export sinks shared by every grid format.
 
 :func:`claim_dir` is the put-if-absent target creation used by
-``GridStore.export_netcdf4``/``export_grib2`` and ``zarr2.write_zarr_tall``.
+``GridStore.export_netcdf4``/``export_grib2``, ``zarr2.write_zarr_tall`` and
+``similarity.write_ivf_index``.
 :func:`write_bucket_grids` is the one bucket-grid sink behind the NetCDF4 and
 GRIB2 exports: a format supplies only its encoder.
 """

@@ -31,6 +31,13 @@ commit time would be just as lossy, landing a stale snapshot's file list on
 top of the winner's at N+1). The reference's ``update_in_progress`` flag protocol
 (publish.py:153-180) is kept as informational properties for parity.
 
+One commit protocol: the version discovery and manifest read
+(:func:`latest_version`, :func:`read_manifest`), the put-if-absent commit
+(:func:`commit_manifest`) and the staged partitioned write
+(:func:`stage_partitioned`) are module functions with two users — GridStore
+and the persisted IVF index (operators/similarity.py ``*_ivf_index``), whose
+cell-partitioned inverted lists commit through the same manifest log.
+
 One write path: like the reference's guarded ``to_zarr`` wrapper (S16,
 publish.py:124-180), every write — initial, append, insert, update, compact,
 restore — goes through one bracket, :meth:`GridStore._publish` (flag on →
@@ -101,6 +108,75 @@ def _bucket_of(relpath: str) -> str:
     return head.split("=", 1)[1] if "=" in head else ""
 
 
+# -- the commit protocol: GridStore and the persisted IVF index
+#    (operators/similarity.py) both read, stage and commit through these -----
+
+
+def latest_version(manifest_dir: Path) -> int:
+    """Highest committed ``v{N}.json`` under ``manifest_dir``; 0 for none."""
+    if not manifest_dir.exists():
+        return 0
+    return max((int(p.stem[1:]) for p in manifest_dir.glob("v*.json")), default=0)
+
+
+def read_manifest(manifest_dir: Path, version: int | None = None) -> dict[str, Any]:
+    """Manifest ``version`` (default: the latest); StoreError if absent."""
+    v = latest_version(manifest_dir) if version is None else version
+    p = manifest_dir / f"v{v}.json"
+    if v == 0 or not p.exists():
+        raise StoreError(f"no manifest v{v} at {manifest_dir}")
+    return json.loads(p.read_text())
+
+
+def commit_manifest(manifest_dir: Path, manifest: dict[str, Any]) -> None:
+    """Commit ``manifest`` as ``v{manifest['version']}.json``: the put-if-
+    absent commit point. A writer-unique temp file is hard-linked onto the
+    slot; os.link is atomic and raises if the slot exists, giving mutual
+    exclusion on the version counter (a rename would silently overwrite a
+    racing commit). The loser gets a commit-conflict StoreError."""
+    v = manifest["version"]
+    manifest_dir.mkdir(parents=True, exist_ok=True)
+    # writer-unique temp name: two racing writers that both computed
+    # version v must not share a staging file either, or one could
+    # hard-link the OTHER's content into the commit slot
+    tmp = manifest_dir / f".v{v}.{os.getpid()}.{uuid.uuid4().hex[:8]}.json.tmp"
+    tmp.write_text(json.dumps(manifest, indent=2))
+    try:
+        os.link(tmp, manifest_dir / f"v{v}.json")
+    except FileExistsError:
+        raise StoreError(
+            f"commit conflict: manifest v{v} already exists — a concurrent "
+            "writer won this version; re-read the latest version and retry"
+        ) from None
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
+def stage_partitioned(
+    df: DataFrame, root: Path, data_path: Path, part_col: str, **options: str
+) -> list[str]:
+    """Write ``df`` partitioned by ``part_col`` into a writer-unique staging
+    dir under ``root``, move the part files into the live partition dirs
+    under ``data_path`` (unique job-scoped names — no collisions) and
+    return their ``data_path``-relative paths. Files become *live* only
+    when a manifest commits them. The staging dir is writer-unique: a
+    shared path would let one concurrent writer rmtree the other's
+    in-flight part files (the sibling race to the commit conflict)."""
+    staging = root / f"_staging-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").options(**options).partitionBy(part_col).parquet(
+        str(staging)
+    )
+    moved: list[str] = []
+    for part_dir in staging.glob(f"{part_col}=*"):
+        dst_dir = data_path / part_dir.name
+        dst_dir.mkdir(parents=True, exist_ok=True)
+        for f in part_dir.glob("*.parquet"):
+            f.rename(dst_dir / f.name)
+            moved.append(f"{part_dir.name}/{f.name}")
+    shutil.rmtree(staging)
+    return moved
+
+
 class GridStore:
     """One published dataset at ``root/<dataset_name>/``: immutable parquet
     files + ``_meta/`` (manifests/v*.json, properties.json)."""
@@ -125,17 +201,10 @@ class GridStore:
     # -- manifest log --------------------------------------------------------
 
     def current_version(self) -> int:
-        if not self.manifest_path.exists():
-            return 0
-        vs = [int(p.stem[1:]) for p in self.manifest_path.glob("v*.json")]
-        return max(vs, default=0)
+        return latest_version(self.manifest_path)
 
     def manifest(self, version: int | None = None) -> dict[str, Any]:
-        v = version if version is not None else self.current_version()
-        p = self.manifest_path / f"v{v}.json"
-        if v == 0 or not p.exists():
-            raise StoreError(f"no manifest v{v} at {self.manifest_path}")
-        return json.loads(p.read_text())
+        return read_manifest(self.manifest_path, version)
 
     def _commit(
         self,
@@ -174,7 +243,6 @@ class GridStore:
         """
         base = self.current_version() if base_version is None else base_version
         v = base + 1
-        self.manifest_path.mkdir(parents=True, exist_ok=True)
         manifest = {
             "version": v,
             "action": action,
@@ -191,25 +259,7 @@ class GridStore:
             "rows": rng["n"],
         }
         manifest["content_digest"] = _content_digest(manifest["file_digests"])
-        # writer-unique temp name: two racing writers that both computed
-        # version v must not share a staging file either, or one could
-        # hard-link the OTHER's content into the commit slot
-        tmp = self.manifest_path / f".v{v}.{os.getpid()}.{uuid.uuid4().hex[:8]}.json.tmp"
-        tmp.write_text(json.dumps(manifest, indent=2))
-        final = self.manifest_path / f"v{v}.json"
-        try:
-            # the commit point — put-if-absent: os.link is atomic and raises
-            # if v{N}.json exists, giving mutual exclusion on the version
-            # counter (a rename would silently overwrite a racing commit)
-            os.link(tmp, final)
-        except FileExistsError:
-            tmp.unlink(missing_ok=True)
-            raise StoreError(
-                f"commit conflict: manifest v{v} already exists — a concurrent "
-                "writer won this version; re-read the latest version and retry"
-            ) from None
-        finally:
-            tmp.unlink(missing_ok=True)
+        commit_manifest(self.manifest_path, manifest)
         if update_props:  # maintenance actions (compact) aren't data updates
             self.set_properties(
                 update_date_range=[str(rng["lo"]), str(rng["hi"])],
@@ -471,27 +521,11 @@ class GridStore:
         return {"lo": r["lo"], "hi": r["hi"], "n": r["n"]}
 
     def _stage_files(self, df: DataFrame) -> list[str]:
-        """Write df into a staging dir, move the part files into the live
-        partition dirs (unique job-scoped names — no collisions), return the
-        relative paths. Files become *live* only when a manifest commits.
-        The staging dir is writer-unique: a shared path would let one
-        concurrent writer rmtree the other's in-flight part files (the
-        sibling race to the manifest commit conflict)."""
-        staging = self.root / f"_staging-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        """Lay df out by bucket and stage it (:func:`stage_partitioned`)."""
         out = self._layout(self._with_bucket(df.select(*self.desc.schema().fieldNames())))
-        out.write.mode("overwrite").option("compression", self.compression).partitionBy(
-            _BUCKET_COL
-        ).parquet(str(staging))
-        moved: list[str] = []
-        for part_dir in staging.glob(f"{_BUCKET_COL}=*"):
-            dst_dir = self.data_path / part_dir.name
-            dst_dir.mkdir(parents=True, exist_ok=True)
-            for f in part_dir.glob("*.parquet"):
-                dst = dst_dir / f.name
-                f.rename(dst)
-                moved.append(f"{part_dir.name}/{f.name}")
-        shutil.rmtree(staging)
-        return moved
+        return stage_partitioned(
+            out, self.root, self.data_path, _BUCKET_COL, compression=self.compression
+        )
 
     def _publish(
         self,
