@@ -66,3 +66,44 @@ def test_direct_numeric_cast_on_ntz_still_rejected(spark):
     df = spark.sql("SELECT TIMESTAMP_NTZ '2024-01-01 00:00:00' AS ts")
     with pytest.raises(AnalysisException):
         df.select(F.col("ts").cast("double")).collect()
+
+
+_FOREIGN_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from zarr_climate_etl_ipfs_spark.operators.similarity import ivf_index
+from zarr_climate_etl_ipfs_spark.session import get_spark
+
+spark = get_spark("foreign-cwd", cpus=2)
+spark.sparkContext.setLogLevel("ERROR")
+rows = [(i, [float(i % 3), float(i // 3)]) for i in range(12)]
+df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+assigned, centroids = ivf_index(df, n_cells=2, max_iter=1)
+print("cells", assigned.count(), len(centroids))
+spark.stop()
+"""
+
+
+def test_package_udfs_run_from_a_foreign_working_directory(tmp_path):
+    """A driver that finds the package on its own ``sys.path``, running
+    from a directory outside the checkout with no ``PYTHONPATH``: the
+    package's pandas UDFs (``ivf_index``'s cell assignment) still import it
+    in the Python workers, because ``get_spark`` puts the package root on
+    their path."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    run = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_CWD_SCRIPT.format(repo=repo)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "cells 12 2" in run.stdout

@@ -648,8 +648,10 @@ def test_empty_batch_append_and_insert_are_clean_noops(store, spark, desc):
 def _boom_frame(spark, desc, times):
     """Rows whose data column fails the job that evaluates it. The
     repartition keeps the optimizer from evaluating that column over the
-    local relation while it plans the key collects, so the job that fails
-    is the staging write."""
+    local relation while it plans the key collects. For write_initial and
+    append the job that fails is the staging write; insert and update
+    evaluate the whole batch once, in their first job (the key collect,
+    the validation), so that job fails."""
     df = spark.createDataFrame(_tall(times), schema=desc.schema()).repartition(2)
     fail = F.when(F.col("latitude") > -1000.0, F.raise_error(F.lit("boom")))
     return df.withColumn("data", fail.otherwise(F.col("data")).cast("float"))

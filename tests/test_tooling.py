@@ -197,3 +197,43 @@ def test_no_ctypes_under_operators():
         if (fns := _sites(p, imports_ctypes))
     }
     assert not sites, sites
+
+
+#: the one helper that holds a caller's frame for one library call, and the
+#: calls that use it: each runs several Spark actions over one update batch
+EVALUATE_ONCE = "_evaluated_once"
+EVALUATE_ONCE_CALLERS = {
+    "operators/qc.py": ["post_parse_quality_check"],
+    "sources/store.py": ["GridStore.insert", "GridStore.update"],
+}
+
+
+def test_update_batches_are_held_by_one_helper_in_three_calls():
+    """Under ``sources/`` and ``operators/qc.py`` a frame is persisted and
+    released only inside the helper (no ``cache``/``localCheckpoint``
+    either), the helper is defined once, and only GridStore.update,
+    GridStore.insert and post_parse_quality_check call it — never a
+    whole-store input such as the NaN or value scans or ``compact``."""
+    scoped = sorted((PACKAGE / "sources").rglob("*.py")) + [PACKAGE / "operators" / "qc.py"]
+    for name, where in (
+        ("persist", {"sources/ingest.py": [EVALUATE_ONCE]}),
+        ("unpersist", {"sources/ingest.py": [EVALUATE_ONCE]}),
+        ("cache", {}),
+        ("localCheckpoint", {}),
+    ):
+        sites = {
+            str(p.relative_to(PACKAGE)): fns for p in scoped if (fns := _sites(p, _calls(name)))
+        }
+        assert sites == where, (name, sites)
+    defs = [
+        str(p.relative_to(PACKAGE))
+        for p in sorted(PACKAGE.rglob("*.py"))
+        for _ in _sites(p, lambda n: isinstance(n, ast.FunctionDef) and n.name == EVALUATE_ONCE)
+    ]
+    assert defs == ["sources/ingest.py"], defs
+    callers = {
+        str(p.relative_to(PACKAGE)): sorted(fns)
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if (fns := _sites(p, _calls(EVALUATE_ONCE)))
+    }
+    assert callers == EVALUATE_ONCE_CALLERS, callers

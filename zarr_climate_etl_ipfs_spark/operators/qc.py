@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
 from zarr_climate_etl_ipfs_spark.functions.scalars import is_extreme, is_infinityish
+from zarr_climate_etl_ipfs_spark.sources.ingest import _evaluated_once
 
 
 class NanFrequencyMismatchError(ValueError):
@@ -259,23 +260,28 @@ def post_parse_quality_check(
     NaN/∞/tolerance rules, give up cleanly at the wall-clock cap (the
     reference's 20-minute budget, publish.py:24).
 
-    One job, not a per-sample loop: the sample is taken distributed, the
-    comparison is one broadcast join — the cap only matters when the
-    published table's scan itself is slow.
+    Evaluate-once contract: the source count, the sample and both of the
+    sample's uses in :func:`compare_datasets` (the broadcast join and the
+    missing-key anti-join) read one evaluation of ``source``, held for the
+    call (:func:`~zarr_climate_etl_ipfs_spark.sources.ingest._evaluated_once`)
+    — a lazily decoded batch runs its decoder once here, not once per Spark
+    action. The cap only matters when the published table's scan itself is
+    slow.
     """
     import time as _time
 
-    t0 = _time.monotonic()
-    total = source.count()
-    if _time.monotonic() - t0 > time_cap_s:
-        # the source scan alone ate the budget: give up before launching
-        # the comparison at all (the reference's budget bounds further
-        # checking, it never converts an un-run check into a failure)
-        return
-    fraction = min(1.0, (n_samples * 4) / max(total, 1))
-    sample = source.sample(False, fraction, seed).limit(n_samples)
-    mismatches = compare_datasets(sample, written, desc, tolerance)
-    bad = mismatches.limit(5).collect()
+    with _evaluated_once(source):
+        t0 = _time.monotonic()
+        total = source.count()
+        if _time.monotonic() - t0 > time_cap_s:
+            # the source scan alone ate the budget: give up before launching
+            # the comparison at all (the reference's budget bounds further
+            # checking, it never converts an un-run check into a failure)
+            return
+        fraction = min(1.0, (n_samples * 4) / max(total, 1))
+        sample = source.sample(False, fraction, seed).limit(n_samples)
+        mismatches = compare_datasets(sample, written, desc, tolerance)
+        bad = mismatches.limit(5).collect()
     # A detected discrepancy always fails — the reference's budget only
     # abandons *further sampling*, never an already-found mismatch
     # (publish.py:735-737).

@@ -10,8 +10,13 @@ timezone, and broadcast threshold.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: the directory holding this package; Python workers import the package
+#: from it whatever the driver's working directory
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 #: Defaults chosen for local[32] testing but scale-aware: AQE coalesces the
 #: shuffle partitions at runtime, so the static number only caps parallelism.
@@ -33,13 +38,18 @@ TUNING: dict[str, str] = {
 
 
 def get_spark(app_name: str = "zarr-climate-etl-ipfs-spark", cpus: int | None = None) -> SparkSession:
-    """Build a tuned local session. ``cpus`` defaults to $SPARK_GRAFT_CPUS or '*'."""
+    """Build a tuned local session. ``cpus`` defaults to $SPARK_GRAFT_CPUS or '*'.
+
+    The package root joins the Python workers' ``PYTHONPATH``
+    (``spark.executorEnv.PYTHONPATH``, which Spark merges with its own and
+    the driver's), so the package's UDFs run from any working directory."""
     n = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     b = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in TUNING.items():
         b = b.config(k, v)

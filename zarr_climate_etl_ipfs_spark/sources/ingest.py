@@ -17,6 +17,7 @@ xarray/cfgrib (absent in this container) and stay injectable.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 from collections.abc import Callable, Iterator, Sequence
 from typing import Any
@@ -157,6 +158,12 @@ def read_binary_gridded(
     purely lazy/in-flight as before. (Columns and types match
     ``desc.schema()`` exactly; nullability is relaxed by the parquet round
     trip, which ``canonicalize`` re-normalizes downstream.)
+
+    Without a checkpoint the returned frame is lazy: every Spark action over
+    it (or over a frame derived from it) runs the decoder again, unless a
+    consumer materializes the frame. Three consumers do, each for the length
+    of one call (:func:`_evaluated_once`): ``GridStore.update``,
+    ``GridStore.insert`` and ``qc.post_parse_quality_check``.
     """
     schema = desc.schema()
 
@@ -191,6 +198,27 @@ def read_binary_gridded(
     if checkpoint_dir is None:
         return binary.mapInPandas(decode, schema=schema)
     return _checkpointed_decode(spark, binary, decode, schema, checkpoint_dir)
+
+
+@contextlib.contextmanager
+def _evaluated_once(df: DataFrame) -> Iterator[None]:
+    """Persist a caller's frame for the length of one library call, so the
+    several Spark actions the call runs over ``df`` (and frames derived
+    from it) read one evaluation instead of re-running its source — for
+    :func:`read_binary_gridded`, the Python decoder — once per action. The
+    actions therefore also see the same rows, even from a source that
+    changes between them. A frame the caller already cached is left as it
+    is; otherwise the cache is released when the call returns or raises.
+    A cache block lost mid-call (executor loss) is recomputed by Spark.
+    """
+    if df.is_cached:
+        yield
+        return
+    df.persist()
+    try:
+        yield
+    finally:
+        df.unpersist()
 
 
 def _checkpointed_decode(

@@ -27,7 +27,7 @@ def claim_dir(path: str, overwrite: bool, error: type[Exception]) -> None:
     wins (the GridStore manifest-commit rule, at directory grain)."""
     if os.path.exists(path):
         if not overwrite:
-            raise error(f"export target {path!r} exists; pass overwrite=True")
+            raise error(f"target directory {path!r} already exists; pass overwrite=True")
         shutil.rmtree(path)
     try:
         os.makedirs(path)

@@ -75,6 +75,7 @@ from pyspark.sql import functions as F
 
 from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
 from zarr_climate_etl_ipfs_spark.operators.updates import validate_update
+from zarr_climate_etl_ipfs_spark.sources.ingest import _evaluated_once
 
 _BUCKET_FMT = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}
 _BUCKET_COL = "time_bucket"
@@ -620,20 +621,23 @@ class GridStore:
         """S15: overwrite existing time steps in place — only the buckets
         containing replaced steps are rewritten; untouched rows in those
         buckets are carried over via an anti-join on the time key. The old
-        bucket files leave the manifest but stay on disk (time travel)."""
+        bucket files leave the manifest but stay on disk (time travel).
+        The key collect and the staging write read one evaluation of ``df``
+        (:func:`~.ingest._evaluated_once`)."""
         if dry_run:
             return
-        update = self._with_bucket(df.select(*self.desc.schema().fieldNames()))
-        # r16: ONE collect serves both the replaced time keys (now a literal
-        # anti predicate in the carry-over rewrite — the key-FRAME form
-        # re-executed its store-scan + distinct subtree inside the staging
-        # write job) and the touched bucket set. Bounded by construction:
-        # an update batch's distinct time steps are small (operators/
-        # updates.py module docstring).
-        pairs = update.select(self.desc.time_dim, _BUCKET_COL).distinct().collect()
-        times = sorted({r[0] for r in pairs if r[0] is not None})
-        touched = {r[1] for r in pairs if r[1] is not None}
-        self._rewrite_touched(df, times, touched, action="insert")
+        with _evaluated_once(df):
+            update = self._with_bucket(df.select(*self.desc.schema().fieldNames()))
+            # r16: ONE collect serves both the replaced time keys (now a literal
+            # anti predicate in the carry-over rewrite — the key-FRAME form
+            # re-executed its store-scan + distinct subtree inside the staging
+            # write job) and the touched bucket set. Bounded by construction:
+            # an update batch's distinct time steps are small (operators/
+            # updates.py module docstring).
+            pairs = update.select(self.desc.time_dim, _BUCKET_COL).distinct().collect()
+            times = sorted({r[0] for r in pairs if r[0] is not None})
+            touched = {r[1] for r in pairs if r[1] is not None}
+            self._rewrite_touched(df, times, touched, action="insert")
 
     def _rewrite_touched(
         self,
@@ -673,97 +677,107 @@ class GridStore:
         """The parse orchestration (publish.py:265-397 ``update_zarr``):
         split update keys into inserts/appends (J1), run the Q5 guards,
         honor allow_overwrite (publish.py:287-294), then insert + append.
+
+        The validated rows are the written rows: like the reference, which
+        validates and writes one parsed in-memory Dataset, validation, leg
+        routing and the staging write read one evaluation of ``df``, held
+        for the call (:func:`~.ingest._evaluated_once`). A lazy source —
+        ``read_binary_gridded``'s decoder — runs once per call, and one
+        that changes between Spark actions cannot slip unvalidated rows
+        into the commit (barring a lost cache block, which Spark
+        recomputes from the source).
         """
-        desc = self.desc
-        td = desc.time_dim
-        existing_times = self.dataset().select(td).distinct()
-        update_times = df.select(td).distinct()
-        val = validate_update(
-            existing_times,
-            update_times,
-            desc.expected_delta,
-            time_dim=td,
-            dataset_start=desc.dataset_start_date,
-            cadence_bounds=desc.update_cadence_bounds,
-            # the insert legs' touched-bucket set rides the validator's
-            # single aggregation — collecting it separately cost one more
-            # driver action per update
-            insert_bucket_fmt=_BUCKET_FMT[desc.time_bucket],
-            # r16: the insert key TIMES ride the same aggregation, so leg
-            # routing below is a literal predicate on the input frame —
-            # the broadcast semi/anti-joins against the split key frames
-            # re-executed their store-scan + distinct + join subtrees
-            # inside each staging write job. Bounded by construction (an
-            # update batch's distinct steps are small — same argument as
-            # insert_buckets), so the literal IN list stays plan-cheap.
-            collect_insert_times=True,
-        )
-        if not val.ok:
-            raise StoreError("; ".join(val.errors))
-        # Split sizes come from the validation pass — counting the semi/anti
-        # joins here would cost two more driver actions for numbers the
-        # validator's single aggregation already produced.
-        n_ins = val.n_inserts
-        n_app = val.n_appends
-        if n_ins and not desc.allow_overwrite:
-            # warn-and-skip semantics (publish.py:287-293) — the reference
-            # WARNS here (self.warn), and a silent skip is a data-loss
-            # footgun for callers who forgot the flag (found driving the
-            # library user-style in round 12: an overwrite leg vanished
-            # with no signal while the append leg landed)
-            warnings.warn(
-                f"update: skipping {n_ins} overwrite key(s) that already exist — "
-                "allow_overwrite is not set on the descriptor; only the append "
-                "leg (if any) will be written",
-                stacklevel=2,
+        with _evaluated_once(df):
+            desc = self.desc
+            td = desc.time_dim
+            existing_times = self.dataset().select(td).distinct()
+            update_times = df.select(td).distinct()
+            val = validate_update(
+                existing_times,
+                update_times,
+                desc.expected_delta,
+                time_dim=td,
+                dataset_start=desc.dataset_start_date,
+                cadence_bounds=desc.update_cadence_bounds,
+                # the insert legs' touched-bucket set rides the validator's
+                # single aggregation — collecting it separately cost one more
+                # driver action per update
+                insert_bucket_fmt=_BUCKET_FMT[desc.time_bucket],
+                # r16: the insert key TIMES ride the same aggregation, so leg
+                # routing below is a literal predicate on the input frame —
+                # the broadcast semi/anti-joins against the split key frames
+                # re-executed their store-scan + distinct + join subtrees
+                # inside each staging write job. Bounded by construction (an
+                # update batch's distinct steps are small — same argument as
+                # insert_buckets), so the literal IN list stays plan-cheap.
+                collect_insert_times=True,
             )
-            n_ins = 0
-            skipped = val.insert_times or ()
-        else:
-            skipped = ()
-        if not n_ins and not n_app:
-            return {"inserts": 0, "appends": 0}
-        # r16 leg routing: the old broadcast semi-joins against the split
-        # key frames were IDENTITY on the pure paths (every non-NULL-time
-        # row of df belongs to the sole leg) apart from dropping
-        # NULL-time rows — which the literal filters below preserve.
-        if not n_ins:
-            # pure append: delegate — keeps the Delta-style conflict retry
-            leg = df.filter(F.col(td).isNotNull())
-            if skipped:
-                leg = leg.filter(~F.col(td).isin(list(skipped)))
-            self.append(leg, dry_run)
-        elif not dry_run:
-            # Insert legs rewrite the touched buckets keyed by the
-            # validator's insert times and buckets — insert() would collect
-            # the same (time, bucket) pairs again, one more Spark action.
-            # A pure insert drops NULL-time rows, as its leg routing always
-            # did. A mixed update is ONE publish cycle (the reference's
-            # update_zarr is a single write + publish, publish.py:265-397):
-            # every row of df is one leg or the other (its distinct times
-            # ARE the update key set), so the whole frame is the new-rows
-            # leg, both legs stage in one write job and commit one version.
-            # Conflict semantics follow insert: the rewritten buckets were
-            # computed against this snapshot, so a racing commit is a true
-            # conflict (no retry).
-            #
-            # ``update_previous_end_date`` is anchored on ``last_append``
-            # (the append leg's max, None for a pure insert) inside the
-            # commit's own property write: a mixed commit's observed range
-            # spans BOTH legs, and with ``cadence_bounds`` set an irregular
-            # backfill append can end below an overwritten existing time —
-            # cadence anchoring must keep reading the append leg's max, not
-            # the whole-batch max. Threading it through ``_commit`` (instead
-            # of a second ``set_properties`` after it) leaves no crash
-            # window where the whole-batch max persists.
-            self._rewrite_touched(
-                df if n_app else df.filter(F.col(td).isNotNull()),
-                val.insert_times,
-                set(val.insert_buckets),
-                action="update" if n_app else "insert",
-                prev_end=val.last_append,
-            )
-        return {"inserts": n_ins, "appends": n_app}
+            if not val.ok:
+                raise StoreError("; ".join(val.errors))
+            # Split sizes come from the validation pass — counting the semi/anti
+            # joins here would cost two more driver actions for numbers the
+            # validator's single aggregation already produced.
+            n_ins = val.n_inserts
+            n_app = val.n_appends
+            if n_ins and not desc.allow_overwrite:
+                # warn-and-skip semantics (publish.py:287-293) — the reference
+                # WARNS here (self.warn), and a silent skip is a data-loss
+                # footgun for callers who forgot the flag (found driving the
+                # library user-style in round 12: an overwrite leg vanished
+                # with no signal while the append leg landed)
+                warnings.warn(
+                    f"update: skipping {n_ins} overwrite key(s) that already exist — "
+                    "allow_overwrite is not set on the descriptor; only the append "
+                    "leg (if any) will be written",
+                    stacklevel=2,
+                )
+                n_ins = 0
+                skipped = val.insert_times or ()
+            else:
+                skipped = ()
+            if not n_ins and not n_app:
+                return {"inserts": 0, "appends": 0}
+            # r16 leg routing: the old broadcast semi-joins against the split
+            # key frames were IDENTITY on the pure paths (every non-NULL-time
+            # row of df belongs to the sole leg) apart from dropping
+            # NULL-time rows — which the literal filters below preserve.
+            if not n_ins:
+                # pure append: delegate — keeps the Delta-style conflict retry
+                leg = df.filter(F.col(td).isNotNull())
+                if skipped:
+                    leg = leg.filter(~F.col(td).isin(list(skipped)))
+                self.append(leg, dry_run)
+            elif not dry_run:
+                # Insert legs rewrite the touched buckets keyed by the
+                # validator's insert times and buckets — insert() would collect
+                # the same (time, bucket) pairs again, one more Spark action.
+                # A pure insert drops NULL-time rows, as its leg routing always
+                # did. A mixed update is ONE publish cycle (the reference's
+                # update_zarr is a single write + publish, publish.py:265-397):
+                # every row of df is one leg or the other (its distinct times
+                # ARE the update key set), so the whole frame is the new-rows
+                # leg, both legs stage in one write job and commit one version.
+                # Conflict semantics follow insert: the rewritten buckets were
+                # computed against this snapshot, so a racing commit is a true
+                # conflict (no retry).
+                #
+                # ``update_previous_end_date`` is anchored on ``last_append``
+                # (the append leg's max, None for a pure insert) inside the
+                # commit's own property write: a mixed commit's observed range
+                # spans BOTH legs, and with ``cadence_bounds`` set an irregular
+                # backfill append can end below an overwritten existing time —
+                # cadence anchoring must keep reading the append leg's max, not
+                # the whole-batch max. Threading it through ``_commit`` (instead
+                # of a second ``set_properties`` after it) leaves no crash
+                # window where the whole-batch max persists.
+                self._rewrite_touched(
+                    df if n_app else df.filter(F.col(td).isNotNull()),
+                    val.insert_times,
+                    set(val.insert_buckets),
+                    action="update" if n_app else "insert",
+                    prev_end=val.last_append,
+                )
+            return {"inserts": n_ins, "appends": n_app}
 
     def compact(self, max_files_per_bucket: int = 1) -> dict[str, int]:
         """Small-file compaction (Delta OPTIMIZE analog). Every append/insert
