@@ -4,7 +4,9 @@
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -643,6 +645,77 @@ def test_empty_batch_append_and_insert_are_clean_noops(store, spark, desc):
     with pytest.warns(UserWarning, match="no data files"):
         store.insert(empty)
     assert [v["version"] for v in store.versions()] == before
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_untyped_append_is_stored_in_the_declared_schema(store, spark, desc):
+    """The write side keeps the schema the read declares: float64 value,
+    latitude and longitude columns are stored as float32, so dataset()
+    returns the declared types and the input's float32 values, both
+    before and after compact() rewrites the appended bucket."""
+    appended = []
+    for seed, start in ((21, "2022-02-01"), (22, "2022-02-02")):
+        pdf = _tall(daily(start, 1))
+        pdf["latitude"] = pdf["latitude"].astype("float64")
+        pdf["longitude"] = pdf["longitude"].astype("float64")
+        pdf["data"] = np.random.RandomState(seed).standard_normal(len(pdf))
+        df = spark.createDataFrame(pdf)
+        assert dict(df.dtypes)["data"] == dict(df.dtypes)["latitude"] == "double"
+        store.append(df)
+        appended.append(df)
+    cast = [F.col(f.name).cast(f.dataType) for f in desc.schema()]
+    want = _rows(appended[0].unionByName(appended[1]).select(*cast))
+    declared = [(f.name, f.dataType.simpleString()) for f in desc.schema()]
+    for compacted in (False, True):
+        if compacted:
+            assert store.compact() == {"2022-02": 2}
+        ds = store.dataset()
+        assert ds.dtypes == declared
+        assert _rows(ds.filter(F.col("time") >= dt.datetime(2022, 2, 1))) == want
+
+
+@pytest.mark.parametrize("bucket", ["day", "month", "year"])
+def test_open_runs_no_spark_job(tmp_path, spark, desc, bucket):
+    """Opening a version plans from the manifest and the declared schema:
+    dataset(), time travel, time_sliced, diff and the empty read launch no
+    Spark job (inferring the schema costs one footer job per open). Every
+    bucket grain round-trips the written rows: partition values such as
+    "2022", "2022-01" and "2022-01-05" are all declared strings."""
+    from dataclasses import replace
+
+    d = replace(desc, time_bucket=bucket)
+    s = GridStore(tmp_path, d, spark)
+    first = spark.createDataFrame(_tall(daily("2021-12-30", 4), seed=31), schema=d.schema())
+    later = spark.createDataFrame(_tall(daily("2022-01-03", 2), seed=32), schema=d.schema())
+    s.write_initial(first)
+    s.append(later)
+    sc = spark.sparkContext
+    group = f"open-{bucket}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "GridStore open")
+    try:
+        latest, v1, sliced, diff, empty = (
+            s.dataset(),
+            s.dataset(version=1),
+            s.time_sliced(dt.datetime(2021, 12, 31), dt.datetime(2022, 1, 3)),
+            s.diff(1),
+            s._read([]),
+        )
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        latest.count()  # the group does record jobs, so the check above can fail
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _rows(v1) == _rows(first)
+    assert _rows(latest) == _rows(first.unionByName(later))
+    window = F.col("time").between(dt.datetime(2021, 12, 31), dt.datetime(2022, 1, 3))
+    assert _rows(sliced) == _rows(first.unionByName(later).filter(window))
+    assert _rows(diff.select("change")) == [("added",)] * 2 * 16
+    assert empty.schema == d.schema() and empty.count() == 0
+    s.destroy()
 
 
 def _boom_frame(spark, desc, times):

@@ -68,12 +68,14 @@ BRACKET_STEPS = ("_flag_update", "_stage_files", "_commit")
 READER = "GridStore._read"
 
 
-def _store_sites(path: Path) -> tuple[dict[str, list[str]], list[str]]:
+def _store_sites(path: Path) -> tuple[dict[str, list[str]], list[tuple[str, bool]]]:
     """Qualified enclosing function of every call to a bracket step, and of
-    every ``….read….parquet(...)`` data-file read, in ``path``."""
+    every ``….read….parquet(...)`` data-file read in ``path`` paired with
+    whether that read declares its schema (a ``.schema(...)`` call in the
+    chain)."""
     tree = ast.parse(path.read_text(), filename=str(path))
     steps: dict[str, list[str]] = {s: [] for s in BRACKET_STEPS}
-    reads: list[str] = []
+    reads: list[tuple[str, bool]] = []
 
     def visit(node: ast.AST, fn: str) -> None:
         if isinstance(node, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -82,11 +84,13 @@ def _store_sites(path: Path) -> tuple[dict[str, list[str]], list[str]]:
             if node.func.attr in steps:
                 steps[node.func.attr].append(fn)
             if node.func.attr == "parquet":
-                recv = node.func.value
+                recv, declared = node.func.value, False
                 while isinstance(recv, (ast.Call, ast.Attribute)):
                     if isinstance(recv, ast.Attribute) and recv.attr == "read":
-                        reads.append(fn)
+                        reads.append((fn, declared))
                         break
+                    if isinstance(recv, ast.Call) and isinstance(recv.func, ast.Attribute):
+                        declared = declared or recv.func.attr == "schema"
                     recv = recv.func if isinstance(recv, ast.Call) else recv.value
         for child in ast.iter_child_nodes(node):
             visit(child, fn)
@@ -98,13 +102,14 @@ def _store_sites(path: Path) -> tuple[dict[str, list[str]], list[str]]:
 def test_store_writes_go_through_one_bracket_and_reads_through_one_reader():
     """Every GridStore write is the one stage-and-commit bracket: each of
     its steps has exactly one call site, inside the bracket; every data
-    parquet read is the one reader."""
+    parquet read is the one reader, and it declares the store's schema
+    (an inferred schema costs a footer-reading Spark job per open)."""
     steps, reads = _store_sites(STORE)
     assert {s: set(fns) for s, fns in steps.items()} == {
         s: {BRACKET} for s in BRACKET_STEPS
     }, steps
     assert len(steps["_stage_files"]) == len(steps["_commit"]) == 1, steps
-    assert reads == [READER], reads
+    assert reads == [(READER, True)], reads
 
 
 PACKAGE = REPO / "zarr_climate_etl_ipfs_spark"

@@ -42,7 +42,9 @@ One write path: like the reference's guarded ``to_zarr`` wrapper (S16,
 publish.py:124-180), every write — initial, append, insert, update, compact,
 restore — goes through one bracket, :meth:`GridStore._publish` (flag on →
 observe → stage → empty guard → commit → conflict retry → flag off), and
-every data read through :meth:`GridStore._read`. The NetCDF4 and GRIB2
+every data read through :meth:`GridStore._read`. The bracket casts the new
+rows to the descriptor's schema, so every data file holds exactly the types
+the reader declares (an open then infers nothing). The NetCDF4 and GRIB2
 exports share one bucket-grid sink (sources/sink.py) and supply only their
 encoders.
 
@@ -355,12 +357,22 @@ class GridStore:
 
     def _read(self, files: list[str]) -> DataFrame:
         """The one data-file reader: manifest-relative ``files`` as a frame
-        without the partition column. No files → an empty frame typed by
-        the descriptor's schema (no listing, no job)."""
+        without the partition column. It declares the descriptor's schema
+        (``time_bucket`` as a string partition), which :meth:`_publish`
+        enforces, so an open reads no file footer and runs no Spark job.
+        The listing stays on the driver up to Spark's
+        ``parallelPartitionDiscovery.threshold`` (32 paths); above it, an
+        uncompacted store's open still launches a listing job. No files →
+        an empty frame of the same schema."""
         if not files:
             return self.spark.createDataFrame([], self.desc.schema())
         paths = [str(self.data_path / f) for f in files]
-        df = self.spark.read.option("basePath", str(self.data_path)).parquet(*paths)
+        schema = self.desc.schema().add(_BUCKET_COL, "string")
+        df = (
+            self.spark.read.schema(schema)
+            .option("basePath", str(self.data_path))
+            .parquet(*paths)
+        )
         return df.drop(_BUCKET_COL)
 
     def time_sliced(self, start: dt.datetime, end: dt.datetime) -> DataFrame:
@@ -523,7 +535,7 @@ class GridStore:
 
     def _stage_files(self, df: DataFrame) -> list[str]:
         """Lay df out by bucket and stage it (:func:`stage_partitioned`)."""
-        out = self._layout(self._with_bucket(df.select(*self.desc.schema().fieldNames())))
+        out = self._layout(self._with_bucket(df))
         return stage_partitioned(
             out, self.root, self.data_path, _BUCKET_COL, compression=self.compression
         )
@@ -546,8 +558,9 @@ class GridStore:
         committed version, or None for a skipped empty input.
 
         ``keep``: live files carried over unchanged. ``new``: the update's
-        rows, observed for the manifest's time range and row count; None
-        stages nothing and re-commits ``keep`` (restore). ``carry``: rows
+        rows, cast to the descriptor's schema (the types :meth:`_read`
+        declares) and observed for the manifest's time range and row count;
+        None stages nothing and re-commits ``keep`` (restore). ``carry``: rows
         restaged with ``new`` but not counted (an insert's surviving bucket
         rows). ``base``: the version the caller read (None for an initial
         write, which races for the next slot).
@@ -566,7 +579,9 @@ class GridStore:
             if new is None:
                 rng = self._rng_of(self._read(keep))
             else:
-                observed, obs = self._observe_rng(new.select(*self.desc.schema().fieldNames()))
+                observed, obs = self._observe_rng(
+                    new.select(*(F.col(f.name).cast(f.dataType) for f in self.desc.schema()))
+                )
                 files = self._stage_files(
                     observed if carry is None else carry.unionByName(observed)
                 )
