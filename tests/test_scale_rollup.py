@@ -187,3 +187,35 @@ def test_rollup_incremental_refresh(rollup_store, spark, desc):
         .first()["m"]
     )
     assert after[key_oct] == direct
+
+
+@pytest.mark.parametrize("grain", ["day", "month", "year"])
+def test_rollup_incremental_reads_only_touched_buckets(tmp_path, spark, desc, initial_df, monkeypatch, grain):
+    """An incremental refresh reads only the store files whose bucket
+    overlaps a touched rollup bucket, at a finer, equal and coarser rollup
+    grain than the store's month buckets, and ends equal to a full
+    refresh."""
+    store = GridStore(tmp_path, desc, spark)
+    store.write_initial(initial_df)
+    rollup = RollupStore(store, grain=grain)
+    rollup.refresh_full()
+    t = dt.datetime(2021, 10, 15)
+    pdf = _tall([t], seed=51)
+    store.update(spark.createDataFrame(pdf, schema=desc.schema()))
+    read: list[list[str]] = []
+    real_read = GridStore._read
+
+    def spy(self, files):
+        read.append(list(files))
+        return real_read(self, files)
+
+    monkeypatch.setattr(GridStore, "_read", spy)
+    assert rollup.refresh_incremental([t]) == 1
+    monkeypatch.undo()
+    want = {"day": {"2021-10"}, "month": {"2021-10"}, "year": {"2021-09", "2021-10", "2021-11", "2021-12"}}
+    assert len(read) == 1
+    assert {f.split("/", 1)[0].split("=", 1)[1] for f in read[0]} == want[grain]
+    incremental = sorted(map(tuple, rollup.dataset().collect()))
+    rollup.refresh_full()
+    assert incremental == sorted(map(tuple, rollup.dataset().collect()))
+    store.destroy()

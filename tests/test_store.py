@@ -217,9 +217,11 @@ def test_vacuum_reclaims_old_files(store, spark, desc):
 
 
 def test_update_with_10k_distinct_times_plan_safe(store, spark, desc):
-    """Key routing must stay join-based: a 10k-key update routed through
-    isin() literal lists would bloat the plan tree; the semi-join form keeps
-    plan size O(1) in key count. 138 overwrites + 9,862 appends."""
+    """A 10k-key update (138 overwrites + 9,862 appends) plans, commits and
+    reads back every row once. The legs route by a literal ``isin`` of the
+    validator's 138 insert times, so the plan grows with the insert keys,
+    not the batch; bounding that literal list (a semi/anti-join above a
+    key-count threshold) is ROADMAP direction 6."""
     times = daily("2021-09-16", 10_000)  # covers all 138 existing + bridges
     pdf = _tall(times, seed=7)
     update = spark.createDataFrame(pdf, schema=desc.schema())
@@ -392,6 +394,91 @@ def test_append_conflict_retry_exhaustion_and_flag_hygiene(store, spark, desc, m
     assert store.properties()["update_in_progress"] is False
     store.append(df)  # guard not wedged; append succeeds afterward
     assert store.current_version() == 2
+
+
+def _race_after_validation(monkeypatch, store, spark, desc, racer_times):
+    """Right after ``store``'s next update validates, a second GridStore on
+    the same root commits ``racer_times`` through its own update."""
+    import zarr_climate_etl_ipfs_spark.sources.store as store_mod
+
+    real = store_mod.validate_update
+    racer = GridStore(store.root.parent, desc, spark)
+    fired: list[bool] = []
+
+    def validate_then_race(*a, **kw):
+        val = real(*a, **kw)
+        if not fired:
+            fired.append(True)
+            racer.update(
+                spark.createDataFrame(_tall(racer_times, seed=61), schema=desc.schema())
+            )
+        return val
+
+    monkeypatch.setattr(store_mod, "validate_update", validate_then_race)
+
+
+@pytest.mark.parametrize(
+    "times",
+    [daily("2022-02-01", 1), [dt.datetime(2021, 10, 10)] + daily("2022-02-01", 1)],
+    ids=["append", "mixed"],
+)
+def test_update_conflicts_with_a_commit_after_its_validation(store, spark, desc, monkeypatch, times):
+    """update validates and commits against one snapshot: a writer that
+    commits the same next day between this update's validation and its
+    commit makes the update a commit conflict — it must not land the day a
+    second time (a 16-cell day read back as 32 rows)."""
+    day = dt.datetime(2022, 2, 1)
+    _race_after_validation(monkeypatch, store, spark, desc, [day])
+    before = store.current_version()
+    with pytest.raises(StoreError, match="commit conflict"):
+        store.update(spark.createDataFrame(_tall(times, seed=62), schema=desc.schema()))
+    ds = store.dataset()
+    assert ds.filter(F.col("time") == day).count() == 16
+    assert ds.filter(F.col("time") == dt.datetime(2021, 10, 10)).count() == 16
+    assert store.current_version() == before + 1  # the racer's commit only
+    assert store.properties()["update_in_progress"] is False
+
+
+@pytest.mark.parametrize(
+    "method, times",
+    [
+        ("insert", [dt.datetime(2021, 10, 10)]),
+        ("update", [dt.datetime(2021, 10, 10)] + daily("2022-02-01", 2)),
+    ],
+    ids=["insert", "mixed_update"],
+)
+def test_lost_commit_unlinks_its_staged_files(store, spark, desc, monkeypatch, method, times):
+    """A write whose commit conflicts removes the files it staged into the
+    live partition dirs (no manifest references them), as the IVF index's
+    commit does, instead of leaving them for vacuum."""
+    df = spark.createDataFrame(_tall(times, seed=63), schema=desc.schema())
+    real_commit = GridStore._commit
+
+    def always_conflict(self, *a, **kw):
+        kw["base_version"] = 0  # v1 exists → guaranteed put-if-absent loss
+        return real_commit(self, *a, **kw)
+
+    monkeypatch.setattr(GridStore, "_commit", always_conflict)
+    before = sorted(store.data_path.rglob("*.parquet"))
+    with pytest.raises(StoreError, match="commit conflict"):
+        getattr(store, method)(df)
+    assert sorted(store.data_path.rglob("*.parquet")) == before
+    assert store.properties()["update_in_progress"] is False
+
+
+def test_update_dry_run_validates_and_writes_nothing(store, spark, desc, complex_update_df):
+    """dry_run=True (S16) returns the leg counts of a valid batch without
+    committing a version, staging a file or raising the update flag; an
+    invalid batch still raises."""
+    before = store.current_version()
+    files = sorted(store.data_path.rglob("*.parquet"))
+    assert store.update(complex_update_df, dry_run=True) == {"inserts": 24, "appends": 36}
+    assert store.current_version() == before
+    assert sorted(store.data_path.rglob("*.parquet")) == files
+    assert store.properties()["update_in_progress"] is False
+    holey = spark.createDataFrame(_tall(daily("2022-02-02", 4), seed=4), schema=desc.schema())
+    with pytest.raises(StoreError, match="append bridge broken"):
+        store.update(holey, dry_run=True)
 
 
 def test_vacuum_retention_protects_inflight_writer(store, spark, desc):

@@ -146,6 +146,34 @@ def _calls(name: str):
     return match
 
 
+def _self_call(node: ast.AST, name: str) -> bool:
+    """``node`` is a ``self.<name>(...)`` call."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == name
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "self"
+    )
+
+
+def test_update_and_insert_read_one_snapshot_and_write_once():
+    """GridStore.update and GridStore.insert each read the manifest once (and
+    open no second snapshot through dataset()) and commit every leg against
+    it through the carry-over rewrite, which reads no manifest of its own;
+    update never takes append()'s retrying path."""
+    calls = {
+        name: _sites(STORE, lambda n, name=name: _self_call(n, name))
+        for name in ("manifest", "dataset", "append", "_rewrite_touched")
+    }
+    for fn in ("GridStore.update", "GridStore.insert"):
+        assert calls["manifest"].count(fn) == 1, calls
+        assert fn not in calls["dataset"], calls
+        assert calls["_rewrite_touched"].count(fn) == 1, calls
+    assert "GridStore._rewrite_touched" not in calls["manifest"], calls
+    assert "GridStore.update" not in calls["append"], calls
+
+
 def test_one_commit_protocol_shared_by_store_and_ivf_index():
     """The put-if-absent ``os.link`` exists once in the package, inside the
     shared commit; the manifest read, the commit and the staged write are

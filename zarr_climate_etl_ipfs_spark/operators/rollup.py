@@ -18,7 +18,7 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from zarr_climate_etl_ipfs_spark.sources.store import GridStore
+from zarr_climate_etl_ipfs_spark.sources.store import GridStore, _bucket_of
 
 _GRAIN_FMT = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}
 
@@ -58,19 +58,25 @@ class RollupStore:
     def refresh_incremental(self, touched_times: list[dt.datetime]) -> int:
         """Recompute only the rollup buckets containing ``touched_times``
         (dynamic partition overwrite). Returns the number of buckets
-        refreshed. Source rows are re-read only for those buckets — one
-        pruned scan of the base table."""
+        refreshed. Source rows are re-read only for those buckets: the scan
+        lists just the manifest files whose store bucket overlaps a touched
+        rollup bucket, and the exact bucket filter trims the rows."""
         if not self.path.exists():
             self.refresh_full()
             return -1
         fmt = _GRAIN_FMT[self.grain]
         py = fmt.replace("yyyy", "%Y").replace("MM", "%m").replace("dd", "%d")
         buckets = sorted({t.strftime(py) for t in touched_times})
-        desc = self.store.desc
-        td = desc.time_dim
-        base = self.store.dataset().filter(
-            F.date_format(F.col(td), fmt).isin(buckets)
-        )
+        store = self.store
+
+        def overlaps(b: str) -> bool:
+            # bucket labels are calendar prefixes ("2021", "2021-10",
+            # "2021-10-15"): two buckets overlap iff one label prefixes the other
+            return any(b.startswith(r) or r.startswith(b) for r in buckets)
+
+        files = [f for f in store.manifest()["files"] if overlaps(_bucket_of(f))]
+        td = store.desc.time_dim
+        base = store._read(files).filter(F.date_format(F.col(td), fmt).isin(buckets))
         out = self._aggregate(base)
         out.repartition("bucket").write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"

@@ -15,7 +15,11 @@ table with a **manifest log** — a minimal Delta-style commit protocol:
     readable forever until :meth:`vacuum` reclaims unreferenced files. This
     is the Spark-native mapping of the reference's IPFS-CID time travel
     (S12, zarr_hash_to_dataset, utils/transform.py:541-558): manifest
-    version ↔ CID, latest version ↔ IPNS pointer.
+    version ↔ CID, latest version ↔ IPNS pointer. The analogy stops at the
+    digests: each manifest pins this store's file bytes for
+    :meth:`verify_integrity`, but parquet-java's bytes for the same rows
+    vary with the JVM's history, so a digest is not a cross-run content
+    address.
 
 Commit atomicity: the manifest file is written once, last; a crash mid-write
 leaves orphan data files (vacuumable) but never a half-visible table. The
@@ -23,7 +27,7 @@ commit point is a **put-if-absent** hard link of a writer-unique temp file
 onto ``v{N}.json``, where N is one past the version the writer READ when it
 built its file list (optimistic concurrency) — if a concurrent writer
 already committed N, the link raises and the loser gets a commit-conflict
-:class:`StoreError` with none of its files in any manifest (mutual exclusion
+:class:`StoreError` with its staged files unlinked (mutual exclusion
 on the version counter, the Delta-protocol property a plain rename lacks:
 POSIX rename silently overwrites, so two racing writers would both "succeed"
 and the second would clobber the first — and re-reading the counter at
@@ -251,11 +255,13 @@ class GridStore:
             "action": action,
             "committed_utc": dt.datetime.now(dt.timezone.utc).isoformat(),
             "files": sorted(files),
-            # content addressing (the IPFS-CID analog, S23): every live file
-            # is pinned by digest, and the manifest digest commits to the
-            # whole file set — a Merkle link, so a manifest version names
-            # immutable content the way a CID does. Carried-over files reuse
-            # the prior manifest's digests (no rehash of unchanged data).
+            # integrity pins (S23): every live file is pinned by digest, and
+            # the manifest digest commits to the whole file set — a Merkle
+            # link that verify_integrity checks. The digests hash this
+            # store's file bytes, not the rows: the same rows written after
+            # a different JVM history hash differently, so they are no
+            # cross-run content address. Carried-over files reuse the prior
+            # manifest's digests (no rehash of unchanged data).
             "file_digests": self._digests(files, base),
             "time_start": str(rng["lo"]),
             "time_end": str(rng["hi"]),
@@ -570,9 +576,11 @@ class GridStore:
         store: has_existing() True, nothing to read), else warns and skips
         (``obs.get`` would raise on metrics that never materialized).
 
-        Only a pure append passes ``retries``: its staged files stay valid
+        Only :meth:`append` passes ``retries``: its staged files stay valid
         whatever a racing writer committed, so a lost race re-reads the
-        latest manifest as ``keep`` and recommits without restaging."""
+        latest manifest as ``keep`` and recommits without restaging. A
+        commit that finally fails unlinks the files this call staged (no
+        manifest references them), as the IVF index's commit does."""
         self._flag_update(True, append_only)
         try:
             files: list[str] = []
@@ -599,21 +607,23 @@ class GridStore:
                     )
                 except StoreError:
                     if attempt == retries:
+                        for f in files:
+                            (self.data_path / f).unlink(missing_ok=True)
                         raise
                     m = self.manifest()  # re-read the winner's file list
                     keep, base = m["files"], m["version"]
         finally:
             self._flag_update(False, append_only)
 
-    def write_initial(self, df: DataFrame, dry_run: bool = False) -> None:
+    def write_initial(self, df: DataFrame) -> None:
         """S13: full (re)publish — a fresh manifest referencing only the new
         files; prior versions stay readable until vacuum. An empty input
         raises StoreError instead of committing an empty manifest."""
-        if not dry_run:
-            self._publish("initial", [], df)
+        self._publish("initial", [], df)
 
-    def append(self, df: DataFrame, dry_run: bool = False, max_retries: int = 3) -> None:
-        """S14: extend along the time dim (update_is_append_only=True).
+    def append(self, df: DataFrame, max_retries: int = 3) -> None:
+        """S14: blind extend along the time dim (update_is_append_only=True),
+        with no validation — :meth:`update` is the validated path.
 
         Commit conflicts auto-resolve, Delta-style: an append's staged
         files stay valid whatever a concurrent writer committed, so losing
@@ -624,23 +634,21 @@ class GridStore:
         Raises the final commit-conflict StoreError after ``max_retries``
         losses — pathological contention should be visible, not looped on
         forever. An empty batch warns and commits nothing."""
-        if dry_run:
-            return
         m = self.manifest()
         self._publish(
             "append", m["files"], df, base=m["version"], append_only=True,
             retries=max_retries,
         )
 
-    def insert(self, df: DataFrame, dry_run: bool = False) -> None:
+    def insert(self, df: DataFrame) -> None:
         """S15: overwrite existing time steps in place — only the buckets
         containing replaced steps are rewritten; untouched rows in those
         buckets are carried over via an anti-join on the time key. The old
         bucket files leave the manifest but stay on disk (time travel).
         The key collect and the staging write read one evaluation of ``df``
-        (:func:`~.ingest._evaluated_once`)."""
-        if dry_run:
-            return
+        (:func:`~.ingest._evaluated_once`); the rewrite commits against the
+        snapshot read first, so a commit that lands meanwhile conflicts."""
+        m = self.manifest()
         with _evaluated_once(df):
             update = self._with_bucket(df.select(*self.desc.schema().fieldNames()))
             # r16: ONE collect serves both the replaced time keys (now a literal
@@ -652,51 +660,64 @@ class GridStore:
             pairs = update.select(self.desc.time_dim, _BUCKET_COL).distinct().collect()
             times = sorted({r[0] for r in pairs if r[0] is not None})
             touched = {r[1] for r in pairs if r[1] is not None}
-            self._rewrite_touched(df, times, touched, action="insert")
+            self._rewrite_touched(m, df, times, touched, action="insert")
 
     def _rewrite_touched(
         self,
+        m: dict[str, Any],
         df: DataFrame,
         anti_times,
         touched: set,
         action: str,
-        prev_end: Any = None,
+        **publish_kw: Any,
     ) -> None:
-        """Carry-over rewrite for :meth:`insert` and the insert legs of
-        :meth:`update`: restage each touched bucket's rows minus the
-        replaced times together with ``df`` (the new rows — only they are
-        observed for the manifest range and row count) and commit them with
-        the untouched files against the snapshot's version. The replaced
-        times are a literal NOT-IN (``anti_times`` is the bounded collected
-        key list — r16: the key-FRAME broadcast anti-join re-executed its
-        store-scan + distinct subtree inside the staging write job);
-        NULL-time rows survive, matching left_anti's non-matching-row
-        semantics. No conflict retry: the rewritten buckets were computed
-        against the snapshot this writer READ — a racing commit is a true
+        """Carry-over rewrite against the snapshot manifest ``m``, the one
+        commit of :meth:`insert` and of every :meth:`update`: restage each
+        touched bucket's rows minus the replaced times together with ``df``
+        (the new rows — only they are observed for the manifest range and
+        row count) and commit them with the untouched files as version
+        ``m["version"] + 1``; ``publish_kw`` goes to :meth:`_publish`. No
+        touched bucket (an append) reads no carry and keeps every file. The
+        replaced times (those in the touched buckets) are a literal NOT-IN
+        (``anti_times`` is the bounded collected key list — r16: the
+        key-FRAME broadcast anti-join re-executed its store-scan + distinct
+        subtree inside the staging write job); NULL-time rows survive,
+        matching left_anti's non-matching-row semantics. No conflict retry:
+        the legs were planned against ``m`` — a racing commit is a true
         conflict the caller must re-plan against (Delta parity)."""
-        m = self.manifest()
-        carry = self._read([f for f in m["files"] if _bucket_of(f) in touched])
-        if anti_times:
+        carry = None
+        if touched:
             td = self.desc.time_dim
-            carry = carry.filter(F.coalesce(~F.col(td).isin(list(anti_times)), F.lit(True)))
+            carry = self._read([f for f in m["files"] if _bucket_of(f) in touched]).filter(
+                F.coalesce(~F.col(td).isin(list(anti_times)), F.lit(True))
+            )
         self._publish(
             action,
             [f for f in m["files"] if _bucket_of(f) not in touched],
             df,
             carry=carry,
             base=m["version"],
-            prev_end=prev_end,
+            **publish_kw,
         )
 
     def update(self, df: DataFrame, dry_run: bool = False) -> dict[str, int]:
         """The parse orchestration (publish.py:265-397 ``update_zarr``):
         split update keys into inserts/appends (J1), run the Q5 guards,
-        honor allow_overwrite (publish.py:287-294), then insert + append.
+        honor allow_overwrite (publish.py:287-294), then write both legs in
+        one commit. ``dry_run`` validates and returns the leg counts
+        without writing (S16).
 
-        The validated rows are the written rows: like the reference, which
-        validates and writes one parsed in-memory Dataset, validation, leg
-        routing and the staging write read one evaluation of ``df``, held
-        for the call (:func:`~.ingest._evaluated_once`). A lazy source —
+        One snapshot: like the reference, which splits, checks and writes
+        both legs against the one dataset it opened, ``update`` reads the
+        manifest once; validation reads that version's times and the one
+        commit (:meth:`_rewrite_touched`) lands as the next version. A
+        commit by any other writer in between — an update, append, insert,
+        compact or restore — is a commit-conflict StoreError with no rows
+        written; re-run ``update`` to validate against the new version.
+
+        The validated rows are the written rows: validation, leg routing
+        and the staging write read one evaluation of ``df``, held for the
+        call (:func:`~.ingest._evaluated_once`). A lazy source —
         ``read_binary_gridded``'s decoder — runs once per call, and one
         that changes between Spark actions cannot slip unvalidated rows
         into the commit (barring a lost cache block, which Spark
@@ -705,7 +726,8 @@ class GridStore:
         with _evaluated_once(df):
             desc = self.desc
             td = desc.time_dim
-            existing_times = self.dataset().select(td).distinct()
+            m = self.manifest()
+            existing_times = self._read(m["files"]).select(td).distinct()
             update_times = df.select(td).distinct()
             val = validate_update(
                 existing_times,
@@ -734,6 +756,7 @@ class GridStore:
             # validator's single aggregation already produced.
             n_ins = val.n_inserts
             n_app = val.n_appends
+            leg = df
             if n_ins and not desc.allow_overwrite:
                 # warn-and-skip semantics (publish.py:287-293) — the reference
                 # WARNS here (self.warn), and a silent skip is a data-loss
@@ -746,53 +769,41 @@ class GridStore:
                     "leg (if any) will be written",
                     stacklevel=2,
                 )
+                leg = df.filter(~F.col(td).isin(list(val.insert_times)))
                 n_ins = 0
-                skipped = val.insert_times or ()
-            else:
-                skipped = ()
-            if not n_ins and not n_app:
-                return {"inserts": 0, "appends": 0}
-            # r16 leg routing: the old broadcast semi-joins against the split
-            # key frames were IDENTITY on the pure paths (every non-NULL-time
-            # row of df belongs to the sole leg) apart from dropping
-            # NULL-time rows — which the literal filters below preserve.
-            if not n_ins:
-                # pure append: delegate — keeps the Delta-style conflict retry
-                leg = df.filter(F.col(td).isNotNull())
-                if skipped:
-                    leg = leg.filter(~F.col(td).isin(list(skipped)))
-                self.append(leg, dry_run)
-            elif not dry_run:
-                # Insert legs rewrite the touched buckets keyed by the
-                # validator's insert times and buckets — insert() would collect
-                # the same (time, bucket) pairs again, one more Spark action.
-                # A pure insert drops NULL-time rows, as its leg routing always
-                # did. A mixed update is ONE publish cycle (the reference's
-                # update_zarr is a single write + publish, publish.py:265-397):
-                # every row of df is one leg or the other (its distinct times
-                # ARE the update key set), so the whole frame is the new-rows
-                # leg, both legs stage in one write job and commit one version.
-                # Conflict semantics follow insert: the rewritten buckets were
-                # computed against this snapshot, so a racing commit is a true
-                # conflict (no retry).
-                #
-                # ``update_previous_end_date`` is anchored on ``last_append``
-                # (the append leg's max, None for a pure insert) inside the
-                # commit's own property write: a mixed commit's observed range
-                # spans BOTH legs, and with ``cadence_bounds`` set an irregular
-                # backfill append can end below an overwritten existing time —
-                # cadence anchoring must keep reading the append leg's max, not
-                # the whole-batch max. Threading it through ``_commit`` (instead
-                # of a second ``set_properties`` after it) leaves no crash
-                # window where the whole-batch max persists.
-                self._rewrite_touched(
-                    df if n_app else df.filter(F.col(td).isNotNull()),
-                    val.insert_times,
-                    set(val.insert_buckets),
-                    action="update" if n_app else "insert",
-                    prev_end=val.last_append,
-                )
-            return {"inserts": n_ins, "appends": n_app}
+            counts = {"inserts": n_ins, "appends": n_app}
+            if dry_run or not (n_ins or n_app):
+                return counts
+            # Leg routing: every row of df is one leg or the other (its
+            # distinct times ARE the update key set), so the written frame is
+            # df minus any skipped insert times; a single-leg update drops
+            # NULL-time rows, a mixed one keeps them. One commit for both legs
+            # (the reference's update_zarr is a single write + publish,
+            # publish.py:265-397): they stage in one write job, and the insert
+            # times and buckets come from the validator — insert() would
+            # collect the same (time, bucket) pairs again, one more Spark
+            # action. An append touches no bucket, reads no carry and keeps
+            # every file.
+            #
+            # ``update_previous_end_date`` is anchored on ``last_append``
+            # (the append leg's max, None for a pure insert) inside the
+            # commit's own property write: a mixed commit's observed range
+            # spans BOTH legs, and with ``cadence_bounds`` set an irregular
+            # backfill append can end below an overwritten existing time —
+            # cadence anchoring must keep reading the append leg's max, not
+            # the whole-batch max. Threading it through ``_commit`` (instead
+            # of a second ``set_properties`` after it) leaves no crash
+            # window where the whole-batch max persists.
+            self._rewrite_touched(
+                m,
+                leg if n_ins and n_app else leg.filter(F.col(td).isNotNull()),
+                val.insert_times,
+                set(val.insert_buckets) if n_ins else set(),
+                action="update" if n_ins and n_app else "insert" if n_ins else "append",
+                prev_end=val.last_append,
+                append_only=not n_ins,
+            )
+            return counts
 
     def compact(self, max_files_per_bucket: int = 1) -> dict[str, int]:
         """Small-file compaction (Delta OPTIMIZE analog). Every append/insert
