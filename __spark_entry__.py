@@ -22,19 +22,14 @@ def entry(spark: SparkSession) -> DataFrame:
     return REGISTRY["pricing_summary"].fn(spark, "/root/testdata/sf0.001")
 
 
-# The correctness driver snapshots a 50-query prefix of this dict (observed
-# r3-r14: the first 50 names in iteration order). Rotation contract (round-13
-# verdict #1): STRICT OLDEST-FIRST -- never-attested queries lead (registry
-# order), then ascending last-driver-round with ties in that round's snapshot
-# key order. The list below is GENERATED, not hand-curated: run
+# The correctness driver snapshots the first 50 names of this dict in
+# iteration order. Rotation contract (ROTATION.md): STRICT OLDEST-FIRST --
+# never-attested queries lead (registry order), then ascending
+# last-driver-round with ties in that round's snapshot key order. The list
+# below is GENERATED, not hand-curated: run
 # `python tools/rotation_audit.py --next-round N` after each round's
 # CORRECTNESS_rN.json lands and paste the emitted list verbatim; the same run
-# regenerates ROTATION_STATUS.md (staleness dashboard). Round-15 order =
-# the never-attested streaming_running_extremes_v2 (added r15) leads, then
-# the 94 rows below the r14 cut oldest-first (dedup_keep_first next -- its
-# oracle changed in r14, highest re-attestation value -- then the r12-era
-# rows), then the r13/r14-attested rows; the 50-cut falls at
-# image_phash_dedup (position 50; ols_trend_detrend onward lead round 16).
+# regenerates ROTATION_STATUS.md (staleness dashboard).
 _ROTATE_FIRST = [
     'ols_trend_detrend', 'ngram_decontamination', 'encoding_quality',
     'idw_regrid', 'tx90p_exceedance', 'source_span_overlap',

@@ -134,10 +134,11 @@ def test_scratch_root_pid_isolation_and_dead_pid_sweep(tmp_path, monkeypatch):
     assert not os.path.basename(_scratch_root("t", "/other/sf")).startswith(prefix)
 
 
-#: r16 sort-first queries: the final orderBy was replaced by a range
-#: repartition + per-partition sort BEFORE the python stages (the
-#: media_probe_stats shape), so global output order is a property of
-#: order-preserving kernels rather than a trailing Sort node. Pin it.
+#: sort-first queries: a range repartition + per-partition sort runs
+#: BEFORE the python stages (queries._sorted_doc_ids) and no Sort node
+#: follows them, so global output order is a property of order-preserving
+#: kernels. Pinned at three scale factors, where the range count and the
+#: rows per partition differ.
 _SORT_FIRST = {
     "media_probe_stats": ("doc_id",),
     "image_resize_stats": ("doc_id",),
@@ -145,11 +146,16 @@ _SORT_FIRST = {
     "multimodal_decode_roundtrip": ("doc_id",),
     "video_frame_sample": ("doc_id", "frame_idx"),
 }
+_SORT_FIRST_CASES = [pytest.param(name, SF, id=name) for name in sorted(_SORT_FIRST)] + [
+    pytest.param(name, str(Path(SF).parent / sf), id=f"{name}-{sf}")
+    for sf in ("sf0.01", "sf0.1")
+    for name in sorted(_SORT_FIRST)
+]
 
 
-@pytest.mark.parametrize("name", sorted(_SORT_FIRST))
-def test_sort_first_queries_emit_globally_sorted_rows(spark, name):
+@pytest.mark.parametrize(("name", "sf_dir"), _SORT_FIRST_CASES)
+def test_sort_first_queries_emit_globally_sorted_rows(spark, name, sf_dir):
     keycols = _SORT_FIRST[name]
-    rows = REGISTRY[name].fn(spark, SF).collect()
+    rows = REGISTRY[name].fn(spark, sf_dir).collect()
     keys = [tuple(r[c] for c in keycols) for r in rows]
     assert keys == sorted(keys), f"{name} lost its global {keycols} order"

@@ -54,6 +54,17 @@ EXTREME_BOUNDS: dict[str, tuple[float, float]] = {
     "deg_F": (-129.0, 140.0),
 }
 
+#: time grain → Spark date pattern of its bucket label: the store's
+#: ``time_bucket`` partitions, the rollup buckets and ``resample_time``
+#: periods. Labels are calendar prefixes of one another.
+BUCKET_FMT: dict[str, str] = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}
+
+
+def strftime_fmt(spark_fmt: str) -> str:
+    """The Python ``strftime`` form of a :data:`BUCKET_FMT` pattern."""
+    return spark_fmt.replace("yyyy", "%Y").replace("MM", "%m").replace("dd", "%d")
+
+
 _DIM_TYPES: dict[str, T.DataType] = {
     "time": T.TimestampType(),
     "forecast_reference_time": T.TimestampType(),
@@ -108,7 +119,7 @@ class DatasetDescriptor:
             )
         if not self.dataset_name or not self.data_var:
             raise TypeError("dataset_name and data_var are required")
-        if self.time_bucket not in ("day", "month", "year"):
+        if self.time_bucket not in BUCKET_FMT:
             raise TypeError(f"time_bucket must be day|month|year, got {self.time_bucket!r}")
 
     # -- derived schema ------------------------------------------------------

@@ -35,13 +35,12 @@ def dot_fixed(a: Column | str, b: Column | str, dims: int) -> Column:
     which would silently sum the shorter zip — callers relying on that
     distinction should keep :func:`dot`.
 
-    Measured OUTCOME (r9, sf0.1 embeddings, 64 dims): ~2× faster than the
-    fold as an isolated sum over a pair join (0.032 vs 0.052 s warm), but
-    5× SLOWER inside the near-dup queries' fused join+filter+project
-    stage (4.4 vs 0.85 s warm) — the ~4,000-node expression wrecks the
-    fused stage's generated-code locality. The shipped near-dup plans
-    therefore keep :func:`dot`; use this form only for narrow vectors or
-    isolated aggregate shapes, and re-measure in situ."""
+    At 64 dims it beats the fold as an isolated sum over a pair join but
+    is several times SLOWER inside a fused join+filter+project stage: the
+    ~4,000-node expression wrecks the stage's generated-code locality
+    (OPTIMIZATION_r16.md §15). The near-dup plans therefore keep
+    :func:`dot`; use this form only for narrow vectors or isolated
+    aggregate shapes, and re-measure in situ."""
     av, bv = _c(a), _c(b)
     # seed with literal 0.0 exactly like the fold's accumulator — keeps
     # even the signed-zero edge (0.0 + -0.0 = +0.0) bit-identical
@@ -62,7 +61,7 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """NULL when either vector has zero norm (cosine is undefined there):
     try_divide keeps the expression ANSI-safe — a plain ``/`` raises
     DIVIDE_BY_ZERO under Spark 4's default ANSI mode the moment a corpus
-    contains a zero embedding (round-8 adversarial-corpus catch). NULL
+    contains a zero embedding. NULL
     composes correctly downstream: threshold filters drop it and desc
     ordering ranks it last, matching the DuckDB oracle's treatment of
     zero vectors (LIST_COSINE_SIMILARITY yields -1.0, also dropped by

@@ -674,8 +674,8 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
         # add lands exactly on the early-change threshold (decoder size
         # next_code == 2^width - 1) the decoder reads EOI at width+1 —
         # emit it there or the stream desyncs and EOI is never seen.
-        # ~1/2^width of streams end in this zone (round-12 tiled-TIFF
-        # round-trip caught it; thousands of prior round-trips missed it).
+        # ~1/2^width of streams end in this zone, so most round-trips
+        # never reach it.
         if next_code == (1 << width) - 1 and width < 12:
             width += 1
     emit(EOI)
@@ -2511,7 +2511,7 @@ def decode_jpeg(
                 # second SOF would re-declare dimensions AFTER coef_store
                 # was sized (progressive) or redefine geometry mid-stream —
                 # decode would return an array whose shape contradicts its
-                # meta instead of failing (code-review catch, round 12)
+                # meta instead of failing
                 raise MediaDecodeError("JPEG: duplicate SOF marker")
             precision, h, w, nc = body[0], *struct.unpack(">HH", body[1:5]), body[5]
             comps = []
@@ -3235,8 +3235,8 @@ def decode_audio(
     RIFF/WAVE PCM and FLAC.  MP3/AAC/OGG raise naming the dependency —
     unless ``decoder`` is injected.
 
-    ``decoder`` is the compressed-audio injection seam (DECISION RECORD,
-    r13 — same standard as GRIB2 template 5.40): a from-scratch MP3
+    ``decoder`` is the compressed-audio injection seam (the same standard
+    as GRIB2 template 5.40): a from-scratch MP3
     Layer III decoder needs ~3k exact published constants (32 Huffman
     tables, scalefactor bands, the 512-tap synthesis window) that cannot
     be recalled reliably in this environment, and unlike a desynchronizing
@@ -3773,7 +3773,7 @@ def probe_mp4(content: bytes) -> dict[str, Any]:
             # the box must at least cover its own header (8 or 16 bytes):
             # a declared largesize of 8..15 would place `body` past the box
             # end and leaf parsers would read the following box's bytes as
-            # metadata (round-8 advisor catch)
+            # metadata
             if size < body - pos or pos + size > hi:
                 raise MediaDecodeError("MP4: bad box size")
             if btype in _CONTAINERS:

@@ -13,6 +13,14 @@ scanline filters). Formats that genuinely need external codecs
 (WebP, progressive JPEG, MP3/MP4 — PIL/ffmpeg are not in this container)
 raise NotImplementedError with the dependency name through the same
 pluggable seam, and tests can still inject fakes.
+
+Ordering contract: :func:`extract_features`, :func:`resize_images` and
+:func:`sample_frames` keep each partition's row order — one output row per
+input row (one per kept frame, in ascending ``frame_idx``, for
+``sample_frames``), at the input row's position, failures included. The
+catalog's sort-first queries (``plans/queries._sorted_doc_ids``) return
+their rows without a final sort and rely on it; a kernel that reorders,
+drops or regroups rows must not be used there.
 """
 
 from __future__ import annotations
@@ -118,7 +126,8 @@ def extract_features(
     Per-row failures are captured, not fatal (decode_ok/error columns):
     at 100 TB a corrupt blob must not kill the stage. Batch size is governed
     by spark.sql.execution.arrow.maxRecordsPerBatch; payload bytes stay
-    executor-side end to end.
+    executor-side end to end. Keeps input row order (module ordering
+    contract).
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -182,7 +191,8 @@ def sample_frames(
     explode/join). Per-row failures degrade to decode_ok=false rows.
     For MP4/WebM the same kernel shape applies with an injected ffmpeg
     decoder; the plumbing — schema, batching, fan-out — is what this
-    operator pins down."""
+    operator pins down. Keeps input row order, each row's frames in
+    ascending ``frame_idx`` (module ordering contract)."""
     from zarr_climate_etl_ipfs_spark.mediacodecs import decode_gif_frames
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -432,7 +442,7 @@ def resize_images(
     driver; per-row failures degrade to decode_ok=false.  At 100 TB the
     stage is a pure map over the scan (no shuffle), and the output PNG
     column feeds the same downstream featurize/dedup operators as the
-    input."""
+    input. Keeps input row order (module ordering contract)."""
     from zarr_climate_etl_ipfs_spark.mediacodecs import decode_image, encode_png
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from zarr_climate_etl_ipfs_spark.config import BUCKET_FMT
+
 _PERIODS = {
     "dayofyear": lambda c: F.dayofyear(c),
     "month": lambda c: F.month(c),
@@ -126,7 +128,7 @@ def resample_time(
     space_cols: tuple[str, ...] = ("latitude", "longitude"),
 ) -> DataFrame:
     """Temporal downsampling (``ds.resample(time='1M').mean()``)."""
-    fmt = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}[grain]
+    fmt = BUCKET_FMT[grain]
     return df.groupBy(
         F.date_format(F.col(time_col), fmt).alias("period"), *space_cols
     ).agg(

@@ -42,9 +42,9 @@ def md5int(c: Column) -> Column:
 
 #: grouping key for NULL-text documents: fingerprint() propagates NULL
 #: (md5(NULL) is NULL), and a NULL key silently fails every equi-join —
-#: without the sentinel, dedup_exact dropped EVERY NULL-text doc instead of
-#: keeping one representative (round-14 review catch, verified live). A
-#: sentinel (not '') keeps NULL-text docs distinct from empty-text docs.
+#: without the sentinel, dedup_exact would drop EVERY NULL-text doc instead
+#: of keeping one representative. A sentinel (not '') keeps NULL-text docs
+#: distinct from empty-text docs.
 _NULL_FP = "__null_text__"
 
 
@@ -222,12 +222,11 @@ def lsh_candidate_pairs(
     ).select("id", F.col("bh.band").alias("band"), F.col("bh.band_hash").alias("band_hash"))
     # One exchange total: a single collect_list aggregate per bucket serves
     # BOTH branches — all-pairs below the cap and star links above it —
-    # branched with array expressions on the aggregated row. (Round 2 used a
-    # Window.partitionBy(band, band_hash) sizing pass before the groupBy;
-    # that cost an extra sort over every band row and was the measured 25%
-    # minhash_lsh_neardups regression. The array holds bucket-size longs —
-    # linear, one task per bucket, same placement the window needed anyway —
-    # only the b²/2 pair LISTING is capped.)
+    # branched with array expressions on the aggregated row. (A
+    # Window.partitionBy(band, band_hash) sizing pass before the groupBy
+    # costs an extra sort over every band row: 25% on minhash_lsh_neardups.
+    # The array holds bucket-size longs — linear, one task per bucket, same
+    # placement a window would need — only the b²/2 pair LISTING is capped.)
     buckets = (
         band_rows.groupBy("band", "band_hash")
         .agg(F.sort_array(F.collect_list("id")).alias("ids"))
@@ -292,7 +291,7 @@ def dedup_minhash(
     """Near-dedup: LSH candidates → exact Jaccard ≥ threshold → drop the
     higher id of each surviving pair (greedy, deterministic).
 
-    RECALL BOUND under a bucket cap (r14 review catch): an over-cap LSH
+    RECALL BOUND under a bucket cap: an over-cap LSH
     bucket is star-linked through its min-id representative, and this
     function then filters PAIRS by exact Jaccard — it does not take
     connected components — so two near-identical members of a capped
@@ -345,8 +344,8 @@ def simhash(text: Column | str, bits: int = 64) -> Column:
 def simhash_vote_kernel(hash_array: Column | str, bits: int = 56) -> Column:
     """SimHash bit-majority vote over a per-document feature-hash array,
     as a single Arrow-batched numpy kernel (the fast path for wide
-    signatures, where the pure-JVM alternatives hit a wall — round-7
-    measurements at sf0.1, min-of-3, full simhash_neardups query:
+    signatures, where the pure-JVM alternatives hit a wall — measured at
+    sf0.1, min-of-3, full simhash_neardups query:
 
     - 56 conditional-SUM accumulators over an exploded feature table
       (explode + map-side-combinable groupBy): 4.10 s
@@ -388,8 +387,8 @@ def simhash_vote_kernel(hash_array: Column | str, bits: int = 56) -> Column:
         # reduceat only over the NON-EMPTY groups' start offsets (every
         # one a valid index into flat), then scatter back — clamping
         # empty-group starts into range instead would truncate the
-        # PRECEDING group's range when trailing rows are empty (the
-        # round-7 review catch: [[3,3],[]] voted [0,0] instead of [3,0])
+        # PRECEDING group's range when trailing rows are empty
+        # ([[3,3],[]] would vote [0,0] instead of [3,0])
         nz = np.flatnonzero(lens)
         starts_nz = np.zeros(len(nz), dtype=np.int64)
         np.cumsum(lens[nz][:-1], out=starts_nz[1:])
@@ -447,8 +446,8 @@ def hamming_blocked_pairs(
     recall by double pigeonhole, candidates collapse to near output size,
     hot buckets split across level-2 values, min-combo canon keeps
     exactly-once emission, all in codegen. Measured at sf1:
-    152 s -> ~16 s engine-side. Two r15 negative results on the same
-    riser, for the record: (a) per-bucket applyInPandas XOR+SWAR-popcount
+    152 s -> ~16 s engine-side. Two alternatives lose on the same
+    corpus: (a) per-bucket applyInPandas XOR+SWAR-popcount
     kernel — 24.5 s at sf0.1 (~1 ms × ~30k near-empty groups), and its
     hybrid hot/cold routings all forced multi-consumer signature
     re-execution (python-UDF subtrees get no exchange reuse; measured
@@ -656,12 +655,12 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    # round 1's large_star references `e` in several branches (the
+    # the first iteration's large_star references `e` in several branches (the
     # undirected union reads it twice, then the neighborhood join again) —
     # without materialization the CALLER's pair-generation plan (often an
     # expensive LSH/Jaccard subtree) re-executes once per branch. Measured
     # on dedup_components at sf0.1: ~7.2 → ~5.0 s. The block is released
-    # by the loop's round-tracking after round 1 checkpoints.
+    # by the loop's iteration tracking after the first iteration checkpoints.
 
     def large_star(e: DataFrame) -> DataFrame:
         # undirected neighborhoods; for every neighbor v > u, connect v to
@@ -723,12 +722,12 @@ def connected_components(
     # overflow-free under ANSI, and the edge list is distinct so the fold
     # identifies the SET) rides each eager checkpoint as an Observation:
     # ONE driver action per round instead of checkpoint + separate
-    # agg().first() (the _checkpoint_ranked device — these rounds are
+    # agg().first() (the catalog's _rank_days device — these iterations are
     # driver-latency-bound at any scale, so each folded action is a direct
     # wall win). Seeding prev_sig from the INITIAL edge list's observation
     # keeps the same convergence criterion (a round that leaves the edge
     # set unchanged ends the loop) while letting already-canonical graphs
-    # exit after round 1 rather than round 2.
+    # exit after the first iteration rather than the second.
     from pyspark.sql import Observation as _Observation
 
     def _observed_checkpoint(df: DataFrame) -> tuple[DataFrame, tuple]:
@@ -781,7 +780,7 @@ def simhash_near_duplicates(
     wanted; with ``bucket_cap=None`` every row is verified
     (``is_star`` is always false).
 
-    Signature path (r14 review catch): feature hashes are computed
+    Signature path: feature hashes are computed
     JVM-side (``transform(array_distinct(words), xxhash64)``) and voted by
     :func:`simhash_vote_kernel` — the measured ~4× fast path — instead of
     :func:`simhash`'s 64 interpreted per-row aggregate folds. The two are

@@ -67,8 +67,8 @@ def sample_value_check(
     if desc.has_nans:
         # NaN is ALLOWED here — and it must not trip the value checks
         # either: Spark orders NaN greater than every numeric, so
-        # abs(NaN) > 1e100 and NaN > hi are both TRUE (r14 review catch,
-        # verified live) — a permitted NaN read as an infinity violation
+        # abs(NaN) > 1e100 and NaN > hi are both TRUE — a permitted NaN
+        # would read as an infinity violation
         pred = ~missing & viol
     else:
         pred = missing | viol
@@ -137,12 +137,12 @@ def nan_binomial_check(
     )
     # keep ~sample_per_step cells per step: estimate cells/step from a few
     # probed steps (bounded LIMIT scan for candidate timestamps, then ONE
-    # pushdown-pruned count, MAX over the probes) — the old
-    # groupBy(time).count() pre-pass scanned and SHUFFLED the whole cell
-    # table before the sampled aggregation even started, doubling the job's
-    # I/O at archive scale (r14 review catch). MAX over ≥3 probes rather
-    # than a single first() so one partial/atypical step can't skew the
-    # effective sample size (r15 advice fix); sampling-rate only — the
+    # pushdown-pruned count, MAX over the probes) — a groupBy(time).count()
+    # pre-pass would scan and SHUFFLE the whole cell table before the
+    # sampled aggregation even started, doubling the job's I/O at archive
+    # scale. MAX over ≥3 probes rather than a single first() so one
+    # partial/atypical step can't skew the effective sample size;
+    # sampling-rate only — the
     # binomial test itself uses the true per-step n either way.
     probe = [
         r["_t"]
@@ -208,14 +208,13 @@ def compare_datasets(
     Returns mismatching rows (empty == pass): value mismatches plus sampled
     keys absent from the published table (reported with a NULL ``_out``).
 
-    Join shape (r14 review catch, verified live): ``broadcast(s)`` on the
-    preserved LEFT of a left-outer join is an inapplicable hint Spark
-    silently drops (BroadcastHashJoin supports LeftOuter only with
-    BuildRight), so the big published table was being shuffled for a
-    100-row sample. Restructured as an INNER join with the small sample as
-    the broadcast build side, plus a broadcast anti-join against the
-    (tiny) matched-key set for the missing-key leg — every stage's build
-    side is now sample-sized.
+    Join shape: ``broadcast(s)`` on the preserved LEFT of a left-outer
+    join is an inapplicable hint Spark silently drops (BroadcastHashJoin
+    supports LeftOuter only with BuildRight), which would shuffle the big
+    published table for a 100-row sample. So it is an INNER join with the
+    small sample as the broadcast build side, plus a broadcast anti-join
+    against the (tiny) matched-key set for the missing-key leg — every
+    stage's build side is sample-sized.
     """
     dims = desc.dims
     var = desc.data_var
@@ -225,8 +224,7 @@ def compare_datasets(
     src, out = F.col("_src"), F.col("_out")
     both_nan = (src.isNull() | F.isnan(src)) & (out.isNull() | F.isnan(out))
     # sign must match: +inf vs -inf (or 1e200 vs -3e150) is a REAL
-    # mismatch — a magnitude-only rule passed a sign-corrupted publish
-    # (r14 review catch)
+    # mismatch — a magnitude-only rule would pass a sign-corrupted publish
     both_inf = (
         is_infinityish(src) & is_infinityish(out) & (F.signum(src) == F.signum(out))
     )
@@ -237,7 +235,6 @@ def compare_datasets(
     # NULL _out carries the published var's OWN dtype, not a hardcoded
     # float: a hardcoded cast relied on union type-widening (silent for
     # double, a confusing analysis error for a future integer/decimal var)
-    # (r15 advice fix)
     out_type = w.schema["_out"].dataType
     missing = (
         s.join(F.broadcast(matched), dims, "left_anti")

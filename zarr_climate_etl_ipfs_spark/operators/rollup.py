@@ -18,9 +18,8 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from zarr_climate_etl_ipfs_spark.config import BUCKET_FMT, strftime_fmt
 from zarr_climate_etl_ipfs_spark.sources.store import GridStore, _bucket_of
-
-_GRAIN_FMT = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}
 
 
 class RollupStore:
@@ -28,8 +27,8 @@ class RollupStore:
     stored as parquet partitioned by the rollup grain."""
 
     def __init__(self, store: GridStore, grain: str = "day"):
-        if grain not in _GRAIN_FMT:
-            raise ValueError(f"grain must be one of {sorted(_GRAIN_FMT)}")
+        if grain not in BUCKET_FMT:
+            raise ValueError(f"grain must be one of {sorted(BUCKET_FMT)}")
         self.store = store
         self.grain = grain
         self.path = store.root / f"_rollup_{grain}"
@@ -39,7 +38,7 @@ class RollupStore:
         td, var = desc.time_dim, desc.data_var
         space = [d for d in desc.dims if d != td]
         return (
-            df.withColumn("bucket", F.date_format(F.col(td), _GRAIN_FMT[self.grain]))
+            df.withColumn("bucket", F.date_format(F.col(td), BUCKET_FMT[self.grain]))
             .groupBy("bucket", *space)
             .agg(
                 F.count(var).alias("n"),
@@ -64,9 +63,8 @@ class RollupStore:
         if not self.path.exists():
             self.refresh_full()
             return -1
-        fmt = _GRAIN_FMT[self.grain]
-        py = fmt.replace("yyyy", "%Y").replace("MM", "%m").replace("dd", "%d")
-        buckets = sorted({t.strftime(py) for t in touched_times})
+        fmt = BUCKET_FMT[self.grain]
+        buckets = sorted({t.strftime(strftime_fmt(fmt)) for t in touched_times})
         store = self.store
 
         def overlaps(b: str) -> bool:

@@ -115,10 +115,10 @@ def srp_signature_expr(vec_col: str, planes: "np.ndarray") -> Column:
     The plane count is capped at 64: a bigint ``shiftleft`` wraps at 64,
     so plane 64 would silently land on bit 0. Bit 63 is the sign bit.
 
-    Construction note (r15, measured): building the tree from Column
-    objects paid n_planes × dim ``F.lit`` py4j round trips — 2.4 s of
-    DRIVER time per fresh embedding_lsh_neardups build at 16×64. The tree
-    is built from ONE parsed SQL string instead (~10 ms)."""
+    Construction note: building the tree from Column objects would pay
+    n_planes × dim ``F.lit`` py4j round trips — 2.4 s of DRIVER time per
+    fresh embedding_lsh_neardups build at 16×64 — so the tree is built
+    from ONE parsed SQL string (~10 ms)."""
     n_planes = planes.shape[0]
     if not 1 <= n_planes <= 64:
         raise ValueError(f"n_planes must be in [1, 64] for a long signature, got {n_planes}")
@@ -202,11 +202,10 @@ def srp_neardup_pairs(
     transforms, where MIN-BAND dedup makes pairs globally unique at birth
     (a pair is emitted only in the first band whose values agree, decided
     from the two carried band arrays) → cosine verify joining the vectors
-    back. The round-8 rebuild removed the pair-level dropDuplicates
-    exchange and moved the AQE-proof round-robin spread from the exploded
-    pairs to the far smaller bucket rows — shuffle stays linear in
-    n·bands, and two pair-width shuffles disappear (measured −30% on the
-    pinned catalog twin at sf0.1). In-bucket work is quadratic only
+    back. There is no pair-level dropDuplicates exchange, and the
+    AQE-proof round-robin spread runs on the bucket rows, not the far
+    larger exploded pairs — shuffle stays linear in n·bands with no
+    pair-width shuffle (−30% on the pinned catalog twin at sf0.1). In-bucket work is quadratic only
     within a band bucket, which wide bands keep near-singleton on noise.
     ``max_bucket`` (optional) drops degenerate buckets larger than the
     cap — a documented recall trade for adversarial corpora where one
@@ -267,8 +266,7 @@ def srp_neardup_pairs(
     # pair's minimal agreeing band may sit in a dropped hot bucket, and the
     # suppression in its later (surviving) buckets would erase the pair
     # entirely — a silent recall loss beyond the documented drop-the-hot-
-    # bucket trade (round-8 review catch; hamming_blocked_pairs documents
-    # the identical rule). The capped path therefore keeps the shuffle
+    # bucket trade (hamming_blocked_pairs documents the identical rule). The capped path therefore keeps the shuffle
     # dedup; the exact path deduplicates map-side.
     if max_bucket is None:
         pairs = buckets.select(
@@ -329,7 +327,7 @@ def srp_neardup_pairs(
     # try_divide: zero-norm vectors share the all-zero signature, pair up,
     # and must yield NULL cosine (threshold-dropped on both engines; the
     # DuckDB oracle's LIST_COSINE_SIMILARITY yields -1.0 there) instead of
-    # an ANSI-mode DIVIDE_BY_ZERO error (round-8 adversarial-corpus catch)
+    # an ANSI-mode DIVIDE_BY_ZERO error
     # dot() is the identical fold (same casts, same left-to-right
     # accumulation — bit-identical); norms were hoisted per row above
     cos_expr = F.try_divide(dot("_va", "_vb"), F.col("_na") * F.col("_nb"))
@@ -385,8 +383,7 @@ def gram_bucket_pairs(
     width are excluded — their cosine is NULL under the fold (zip_with
     length mismatch) and threshold-dropped. Zero-norm vectors divide to
     NaN, which fails ``>= threshold`` exactly like the fold's try_divide
-    NULL (round-8 adversarial-corpus semantics, preserved bit-for-bit at
-    the output level). Duplicate ids emit no self-pair (``id_a != id_b``
+    NULL (the same output, bit-for-bit). Duplicate ids emit no self-pair (``id_a != id_b``
     guard, same as the HOF path).
 
     With ``sig_col``/``band_bits`` set, min-band dedup runs
@@ -528,15 +525,14 @@ def ivf_index(
         # empty input: nothing to train — return the (empty) frame with
         # the assigned-schema cell column so downstream probe joins are
         # empty rather than a driver-side numpy crash on a (0,) matrix
-        # (empty-corpus gate catch, r9)
+        # (an empty corpus)
         return candidates.withColumn("cell", F.lit(None).cast("int")), []
 
     for _ in range(max_iter):
         assigned = assign_ivf_cell(train, centroids, vec_col)
-        # r16 (cold-build finding): per-cell mean as a codegen'd
-        # posexplode + avg instead of a groupBy.applyInPandas numpy
-        # kernel — one fewer python stage per Lloyd round (measured
-        # ~0.85 -> ~0.45 s/round at sf0.1) and a (n_cells × dim) tiny
+        # per-cell mean as a codegen'd posexplode + avg instead of a
+        # groupBy.applyInPandas numpy kernel — one fewer python stage per
+        # Lloyd round (OPTIMIZATION_r16.md §5) and a (n_cells × dim) tiny
         # collect either way. Float summation order differs from the
         # numpy mean in the last ulp, which cannot change any
         # consumer's output: every catalog/search consumer
@@ -675,7 +671,7 @@ def ivf_topk(
             id_col,
             # try_divide: a zero-norm candidate gets NULL cosine and ranks
             # last (desc nulls-last), matching the oracle's -1.0 ranking —
-            # a plain `/` errors under ANSI mode (adversarial-corpus catch)
+            # a plain `/` errors under ANSI mode
             F.try_divide(
                 dot(F.col(vec_col), F.col("_qvec")),
                 F.col("_cn") * F.col("_qn"),
@@ -705,14 +701,14 @@ def scalar_quantize_bounds(
 
     With ``query_pred`` set, the SAME aggregate pass also extracts the
     query vector (``qvec``, cast to double) and its presence flag
-    (``has_q``) for the row matching the predicate — the r15 job-count
-    optimization: a separate filter + second broadcast build cost a fixed
+    (``has_q``) for the row matching the predicate: a separate filter +
+    second broadcast build would cost a fixed
     ~0.5 s of scheduling latency per fresh plan against a sub-millisecond
     aggregate (the whole query is latency-bound at any tested SF; at
     scale it stays one pass instead of two).
 
-    Construction note (r15, measured): building these 2·dim aggregate
-    expressions column-object-by-column-object cost ~0.8 s of *driver*
+    Construction note: building these 2·dim aggregate expressions
+    column-object-by-column-object costs ~0.8 s of *driver*
     time per fresh plan — each ``F.min(F.element_at(...).cast(...))`` is
     several py4j round trips, ~600 in total. One ``F.expr`` string parses
     the identical expression tree JVM-side in ~10 ms; plan and results
@@ -1110,14 +1106,14 @@ def semdedup_census(
             F.try_divide(dot(F.col(vec_col), F.col("sv")), F.col("_n") * F.col("sn")),
             F.lit(-1.0),
         )
-        # r15 (guide §2.4): argmax as ONE hash aggregate instead of a
+        # argmax as ONE hash aggregate instead of a
         # row_number window — min(struct(-cos, seed_id)) selects exactly
         # the window's (cos DESC, seed_id ASC) first row (cos is never
         # NULL here — try_divide is coalesced to -1.0 — and Spark orders
-        # -0.0 == 0.0, so negation is an exact order reversal). r16
-        # advice fix: cos CAN be NaN when a seed vector carries NaN data,
-        # and Spark ranks NaN greatest — the window's cos DESC picked a
-        # NaN-cosine seed FIRST while min(struct(-cos, ...)) would pick
+        # -0.0 == 0.0, so negation is an exact order reversal). cos CAN
+        # be NaN when a seed vector carries NaN data, and Spark ranks NaN
+        # greatest — the window's cos DESC picks a NaN-cosine seed FIRST
+        # while min(struct(-cos, ...)) would pick
         # it last (negation does not reorder NaN). Mapping NaN to -inf in
         # the negated key restores the window's ordering exactly (ties
         # among NaN seeds break by seed_id ASC in both forms).
@@ -1142,13 +1138,13 @@ def semdedup_census(
     assign = assign.select(id_col, "cluster", vec_col, "_n").repartition(
         emb.sparkSession.sparkContext.defaultParallelism, "cluster"
     )
-    # r15: within-cluster verify via the per-bucket BLAS gram kernel —
-    # every candidate pair lives inside ONE cluster, which is exactly the
-    # gram_bucket_pairs contract; the previous x⋈y self-join evaluated an
-    # interpreted 64-element fold per pair (Σ n_c² pairs) and executed
-    # the assignment subtree twice more (the join's inferred
-    # isnotnull(cluster) filters broke exchange reuse between its sides).
-    # r16 advice fix: the kernel group key is (cluster, vector width), not
+    # within-cluster verify via the per-bucket BLAS gram kernel — every
+    # candidate pair lives inside ONE cluster, which is exactly the
+    # gram_bucket_pairs contract; an x⋈y self-join would evaluate an
+    # interpreted 64-element fold per pair (Σ n_c² pairs) and execute the
+    # assignment subtree twice more (the join's inferred
+    # isnotnull(cluster) filters break exchange reuse between its sides).
+    # The kernel group key is (cluster, vector width), not
     # cluster alone — the kernel compares only a group's MODAL width, but
     # the fold computed a real cosine for ANY two equal-width vectors,
     # including pairs deviating from the cluster's common width. Width

@@ -188,7 +188,7 @@ def bloom_bit_positions(
     ``dedup=False`` skips the DISTINCT exchange for consumers that fold
     the positions with an idempotent aggregate (`bloom_bitmask`'s bit_or
     — duplicate positions OR to the same word): one fewer shuffle on the
-    build side, same filter (r15)."""
+    build side, same filter."""
     pos = F.explode(
         F.array(
             *[
@@ -230,8 +230,8 @@ def bloom_probe(
     )
     # membership = EVERY exploded position row hit, tested as min(hit)==1:
     # robust to duplicate probe rows (a sum(hit)==k test under groupBy
-    # merges duplicates into 2k hits and fabricates a false negative —
-    # round-7 review catch) and to two salts colliding on one bit
+    # merges duplicates into 2k hits and fabricates a false negative)
+    # and to two salts colliding on one bit
     hits = (
         probe.join(F.broadcast(positions.withColumn("_hit", F.lit(1))), "pos", "left")
         .groupBy(*[c for c in df.columns])
@@ -254,7 +254,7 @@ def bloom_bitmask(
     ``array<bigint>`` of ``m_bits/64`` words — the broadcastable bitmask
     form that makes probing a JOIN-FREE expression (`bloom_hit_mask`).
 
-    The r15 probe-shape fix: `bloom_probe`'s explode → join → group-back
+    Why a bitmask: `bloom_probe`'s explode → join → group-back
     pays a shuffle of 3× the probe rows keyed on the probe's natural key —
     measured at sf0.1 (bloom_decontamination, 116k probe pairs) the whole
     query ran 1.50 s, and BOTH relational rewrites measured WORSE (probe
@@ -285,9 +285,9 @@ def bloom_hit_mask(
     """Membership test against a `bloom_bitmask` row as a pure column
     expression: a value is flagged iff ALL ``k`` salted positions' bits
     are set — identical semantics to `bloom_probe` (no false negatives,
-    same salted 56-bit md5 positions, and — r16 advice fix — a NULL
-    probed value reads ``false``, matching bloom_probe's coalesce(_hit,0)
-    path; md5(NULL) previously propagated NULL through the bit tests),
+    same salted 56-bit md5 positions, and a NULL probed value reads
+    ``false``, matching bloom_probe's coalesce(_hit,0) path rather than
+    propagating md5(NULL) through the bit tests),
     O(1) array lookups per salt, fully codegen'd."""
     pow2 = F.array(*[F.lit(p) for p in _POW2])
     hit = F.lit(True)
@@ -368,8 +368,8 @@ def countmin_estimate(
     # private counter name so a probe frame with its own "n" column can't
     # make the min() reference ambiguous; LEFT join + coalesce(0) so a
     # term whose cells were never incremented reports cm_est=0 instead of
-    # vanishing from the output (round-7 review catch — an inner join
-    # silently dropped never-seen probe terms on sparse sketches)
+    # vanishing from the output (an inner join would silently drop
+    # never-seen probe terms on sparse sketches)
     sk = sketch.withColumnRenamed("n", "_cm_n")
     return (
         probe.select(*terms.columns, F.col("c.row").alias("row"), F.col("c.col").alias("col"))

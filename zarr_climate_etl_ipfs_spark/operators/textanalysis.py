@@ -30,8 +30,8 @@ def words(text: Column | str) -> Column:
 
     NULL must map to [] and not propagate: split(NULL) is a NULL array,
     whose size() is NULL — silently dropping the doc from AVG/COUNT paths
-    while the SQL oracle counts it as 0 tokens (round-8 adversarial-corpus
-    catch; the oracle twin _WORDS_SQL coalesces identically)."""
+    while the SQL oracle counts it as 0 tokens (the oracle twin _WORDS_SQL
+    coalesces identically)."""
     c = F.col(text) if isinstance(text, str) else text
     trimmed = F.trim(F.coalesce(c, F.lit("")))
     return F.when(trimmed == "", F.array().cast("array<string>")).otherwise(
@@ -47,8 +47,8 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     """Sub-word-ish token count: words plus punctuation marks counted
     separately (a cheap, deterministic proxy for BPE tokenizers).
     NULL text counts as 0 — the same NULL->0 invariant words() enforces
-    (the char-count terms otherwise made the whole sum NULL, silently
-    dropping the doc from AVG/SUM budget aggregations; r14 review catch)."""
+    (the char-count terms would otherwise make the whole sum NULL,
+    silently dropping the doc from AVG/SUM budget aggregations)."""
     c = F.col(text) if isinstance(text, str) else text
     nn = F.coalesce(c, F.lit(""))
     return F.size(words(c)) + F.length(nn) - F.length(F.regexp_replace(nn, PUNCT_RE, ""))

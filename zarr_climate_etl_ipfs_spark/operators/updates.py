@@ -130,10 +130,10 @@ class UpdateValidation:
     # driver-synchronized action per update with an insert leg).
     insert_buckets: frozenset[str] | None = None
     # Distinct time keys of the INSERT leg (only when the caller asked) —
-    # r16: store.update routes its legs by literal predicates on these
-    # instead of broadcast semi/anti-joins against the key FRAMES, whose
-    # subtrees (store scan + distinct + join) re-executed inside the
-    # staging write job. Bounded by the same argument as insert_buckets:
+    # store.update routes its legs by literal predicates on these instead
+    # of broadcast semi/anti-joins against the key FRAMES, whose subtrees
+    # (store scan + distinct + join) would re-execute inside the staging
+    # write job. Bounded by the same argument as insert_buckets:
     # an update batch's distinct time steps are bounded by construction.
     insert_times: tuple | None = None
 

@@ -128,8 +128,7 @@ class StacCatalog:
             # compare as datetimes, not ISO strings: isoformat() includes
             # microseconds only when nonzero, and '...00Z' sorts ABOVE
             # '...00.500000Z' lexicographically ('.' < 'Z'), so a string
-            # max() silently failed to widen past a fractional-second
-            # endpoint (r14 review catch)
+            # max() would fail to widen past a fractional-second endpoint
             coll["extent"]["temporal"]["interval"] = [
                 [
                     min(old_int[0], interval[0], key=_iso_key),

@@ -19,9 +19,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import reduce
 
 import pandas as pd  # noqa: F401 — pandas_udf type hints resolve via module globals
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from zarr_climate_etl_ipfs_spark.functions.scalars import _epoch_s
@@ -68,7 +69,7 @@ def _constant_raster_bytes(d: int, rotate_variants: bool) -> bytes:
     img = np.full((side, side, 3), shade, dtype=np.uint8)
     fmt = d % 5
     if fmt == 0:
-        # r12b rotation: Adam7 interlace on d%8==1, color-type-3 palette
+        # Adam7 interlace on d%8==1, color-type-3 palette
         # (1-bit, single-entry PLTE) on d%8==2, 4-bit palette + Adam7 on
         # d%8==6, and a palettized RLE8 BMP on d%8==4 (the sixth container
         # rides the PNG slot — the oracles are format-independent) —
@@ -114,7 +115,7 @@ def _constant_raster_bytes(d: int, rotate_variants: bool) -> bytes:
                 0: "jpeg", 1: "jpeg", 6: "deflate"}.get(
                     d % 8 if rotate_variants else -1, "none")
         # d%8==6: 16-bit big-endian + Deflate + predictor 2 — the GeoTIFF
-        # DEM/radiance flavor (r12b wide-sample path). The constant raster
+        # DEM/radiance flavor (the wide-sample path). The constant raster
         # keeps features identical: image_features works in value space,
         # and shade ≤ 250 reads the same at either depth.
         return encode_tiff(
@@ -138,6 +139,46 @@ def _constant_raster_bytes(d: int, rotate_variants: bool) -> bytes:
     if rotate_variants and d % 10 == 4:
         return encode_webp(img, palette=True)
     return encode_webp(img, use_subtract_green=rotate_variants and d % 10 == 9)
+
+
+def _raster_udf(rotate_variants: bool):
+    """The ``gen_img`` pandas UDF: doc_id → :func:`_constant_raster_bytes`.
+    The UDF's name appears in the plan string."""
+
+    @F.pandas_udf("binary")
+    def gen_img(doc_id: pd.Series) -> pd.Series:
+        return pd.Series(
+            [_constant_raster_bytes(int(d), rotate_variants=rotate_variants) for d in doc_id]
+        )
+
+    return gen_img
+
+
+def _gif_udf(step: int):
+    """The ``gen_vid`` pandas UDF: doc_id d → an animated GIF of
+    d%5+2 constant frames, side d%6+2, frame f shade (d + step·f) % 251.
+    The UDF's name appears in the plan string."""
+
+    @F.pandas_udf("binary")
+    def gen_vid(doc_id: pd.Series) -> pd.Series:
+        import numpy as np
+
+        from zarr_climate_etl_ipfs_spark.mediacodecs import encode_gif_animation
+
+        out = []
+        for d in doc_id:
+            side = int(d) % 6 + 2
+            nf = int(d) % 5 + 2
+            frames = np.stack(
+                [
+                    np.full((side, side, 3), (int(d) + step * f) % 251, dtype=np.uint8)
+                    for f in range(nf)
+                ]
+            )
+            out.append(encode_gif_animation(frames, delay_cs=10))
+        return pd.Series(out)
+
+    return gen_vid
 
 
 def _drain_memory_sink(
@@ -186,6 +227,45 @@ def _drain_memory_sink(
     return out
 
 
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``readStream`` over the events table. The file source wants a
+    directory, so a glob filter selects the one table; tz-less
+    TIMESTAMP(MICROS) parquet reads as TIMESTAMP_NTZ on Spark 4 (see
+    tests/test_runtime_contract.py)."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("event_id", T.LongType()),
+            T.StructField("ts", T.TimestampNTZType()),
+            T.StructField("user_id", T.LongType()),
+            T.StructField("event_type", T.StringType()),
+            T.StructField("value", T.DoubleType()),
+            T.StructField("props", T.StringType()),
+        ]
+    )
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+
+
+def _finite_events(*keys: str, lt: bool) -> Column:
+    """Events rows whose ``keys`` and ``value`` are non-NULL and whose
+    ``value`` is finite: the scan predicate of every exact-arithmetic
+    events query, matching the oracles' ``ISFINITE(value)``. Integer
+    cents and integer state have no form for NULL, NaN or ±inf, and
+    ``floor(inf*100).cast(long)`` raises ARITHMETIC_OVERFLOW under ANSI
+    mode. ``lt`` picks ``abs(value) < inf`` over ``abs(value) != inf``:
+    both keep the same rows but render different plans, so each query
+    keeps its own form."""
+    inf = F.lit(float("inf"))
+    finite = (F.abs("value") < inf) if lt else (F.abs("value") != inf)
+    preds = [F.col(k).isNotNull() for k in (*keys, "value")]
+    return reduce(Column.__and__, [*preds, ~F.isnan("value"), finite])
+
+
 @dataclass
 class QueryDef:
     fn: SparkQuery
@@ -203,8 +283,7 @@ def q(name: str, oracle: str | None):
 
         if name in REGISTRY:
             # A silent overwrite would drop the shadowed query from the
-            # oracle gate while every dashboard stays green (round-7 judge
-            # found exactly this: a dead duplicate rollup_revenue).
+            # oracle gate while every dashboard stays green.
             raise ValueError(f"duplicate query registration: {name!r}")
         REGISTRY[name] = QueryDef(wrapped, oracle)
         return wrapped
@@ -226,11 +305,10 @@ _T_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _t_sig(path: str) -> tuple:
-    """Content signature for the t() memo key — r16 advice fix for the two
-    staleness/identity holes: (a) a parquet DIRECTORY rewritten with
-    identical file names (or within mtime granularity) now changes the key
-    via per-part sizes and nanosecond mtimes; (b) plain files use
-    (size, mtime_ns) instead of second-granularity mtime."""
+    """Content signature for the t() memo key: a parquet DIRECTORY
+    rewritten with identical file names (or within mtime granularity)
+    changes the key via per-part sizes and nanosecond mtimes; plain files
+    key on (size, mtime_ns), not second-granularity mtime."""
     import os as _os
 
     try:
@@ -302,6 +380,55 @@ def t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     explicit repartition to cluster width is the correct plan at any scale
     when downstream cost is CPU-bound rather than scan-bound."""
     return t(spark, sf_dir, name).repartition(spark.sparkContext.defaultParallelism)
+
+
+def _sorted_doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents' ``doc_id`` column sorted FIRST, on the bare scan:
+    range-partitioned, then sorted within partitions, so the frame is
+    globally sorted by ``doc_id`` before any Python stage runs. A
+    trailing ``orderBy`` would instead re-run the generate and kernel
+    Arrow stages in its range-sampling job (Python subtrees get no
+    exchange reuse); here sampling touches only the scan, each kernel
+    runs once, and the plan has one exchange.
+
+    Ordering contract: the multimodal queries return these rows with no
+    final sort, so every stage between this frame and the output must
+    keep each partition's row order. The scalar pandas UDFs (the media
+    generators, ``probe``) return one row per input row in input order;
+    ``multimodal.extract_features`` and ``resize_images`` are
+    order-preserving maps; ``multimodal.sample_frames`` emits each doc's
+    sampled frames in ascending ``frame_idx`` at the doc's input position.
+    ``tests/test_query_catalog.py::test_sort_first_queries_emit_globally_sorted_rows``
+    pins it at three scale factors.
+
+    The range count is ``defaultParallelism // 4`` with a floor of 8,
+    not the 32-way shuffle default: each Python stage pays per-task
+    worker and Arrow-stream setup, and 32 ranges of a 5k-row corpus run
+    slower than 8 (OPTIMIZATION_r16.md §8). The simhash signature
+    barrier uses the same rule."""
+    n_part = max(8, spark.sparkContext.defaultParallelism // 4)
+    return (
+        t(spark, sf_dir, "documents")
+        .select("doc_id")
+        .repartitionByRange(n_part, "doc_id")
+        .sortWithinPartitions("doc_id")
+    )
+
+
+def _fenced_select(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """``df.select(*cols)`` behind a pushdown barrier: an always-true
+    filter on a nondeterministic column. Without it, a later predicate on
+    a derived column (``size(ws) >= 3``) is pushed into the scan's
+    DataFilters with its whole subtree inlined (the tokenizer), where it
+    runs at file-count parallelism, and CollapseProject can inline the
+    subtree into later projections. The filter must reference ``_mid``:
+    an unused nondeterministic column is pruned before pushdown runs and
+    the barrier dissolves."""
+    return (
+        df.select(*cols, F.monotonically_increasing_id().alias("_mid"))
+        .filter(F.col("_mid") >= 0)
+        .drop("_mid")
+    )
 
 
 def _proc_start_ticks(pid: int) -> int | None:
@@ -380,21 +507,133 @@ def _scratch_root(kind: str, sf_dir: str) -> str:
     return f"{base}/{prefix}{_owner_token()}"
 
 
-def _checkpoint_ranked(ranked: DataFrame) -> tuple[DataFrame, int]:
-    """Eagerly materialize the store queries' tiny day-ranked cell frame
-    and return ``(checkpointed_frame, n_days)`` from ONE Spark action:
-    ``max(rd)`` rides the checkpoint as an Observation instead of a
-    second ``agg().first()`` job. These lifecycle queries are pure
-    driver-action-latency floors (SCALE.md store section), so every
-    folded action is a direct wall-clock win at any data scale."""
+def _hourly_cents_grid(spark: SparkSession, sf_dir: str, ny: int, nx: int) -> DataFrame:
+    """The zarr round-trip grid: finite events summed into exact int64
+    cents per (hour ``t``, ``cell_y`` = user_id % ny, ``cell_x`` =
+    event_id % nx)."""
+    return (
+        t(spark, sf_dir, "events")
+        .filter(_finite_events("ts", "user_id", "event_id", lt=True))
+        .groupBy(
+            F.date_trunc("hour", "ts").alias("t"),
+            (F.col("user_id") % ny).alias("cell_y"),
+            (F.col("event_id") % nx).alias("cell_x"),
+        )
+        .agg(F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"))
+    )
+
+
+#: oracle fragments shared verbatim by several oracles
+_DAILY_TMEAN_SQL = """SELECT event_type, CAST(ts AS DATE) AS day, AVG(value) AS tmean
+      FROM events
+      WHERE event_type IS NOT NULL AND value IS NOT NULL AND ISFINITE(value)
+      GROUP BY event_type, CAST(ts AS DATE)"""
+_CENTS_SQL = """CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) % 100000
+                  AS BIGINT) AS cents
+      FROM events
+      WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_id IS NOT NULL
+        AND value IS NOT NULL AND ISFINITE(value)"""
+_DAY_RANK_SQL = """rd AS (
+      SELECT day, ROW_NUMBER() OVER (ORDER BY day) AS rd
+      FROM (SELECT DISTINCT day FROM cells)
+    )"""
+_KEPT_GRAMS_SQL = """kept AS (
+      SELECT doc_id, g FROM (
+        SELECT doc_id, g, COUNT(*) OVER (PARTITION BY g) AS df FROM ex
+      ) WHERE df <= 64
+    )"""
+
+
+def _zarr_cents_per_hour(spark: SparkSession, store: str) -> DataFrame:
+    """A zarr round-trip store read back and summed per hour ``t``."""
+    from zarr_climate_etl_ipfs_spark.sources.zarr2 import read_zarr_tall
+
+    back = read_zarr_tall(spark, store, var="cents", skip_fill=True)
+    return (
+        back.groupBy("t")
+        .agg(F.sum("cents").alias("sum_cents"), F.count("*").alias("n_cells"))
+        .orderBy("t")
+    )
+
+
+def _knn_rows(out: DataFrame) -> DataFrame:
+    """The IVF queries' output: top-k rows with ``rank`` as bigint and the
+    cosine rounded to 6 decimals, in (query_id, rank) order."""
+    return out.select(
+        "query_id", "vec_id", F.col("rank").cast("long").alias("rank"),
+        F.round("cosine", 6).alias("cosine"),
+    ).orderBy("query_id", "rank")
+
+
+def _daily_tmean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily mean per series (``event_type``, ``day``, ``tmean``) over
+    finite readings: the resample step the degree-day and ETCCDI queries
+    start from. The oracles' ``daily`` CTE is :data:`_DAILY_TMEAN_SQL`."""
+    return (
+        t(spark, sf_dir, "events")
+        .filter(_finite_events("event_type", lt=False))
+        .groupBy("event_type", F.to_date("ts").alias("day"))
+        .agg(F.avg("value").alias("tmean"))
+    )
+
+
+def _rank_days(cells: DataFrame) -> tuple[DataFrame, int]:
+    """Rank a store query's cells by day (``rd``, 1 = earliest day) and
+    materialize the tiny ranked frame once, returning ``(ranked, n_days)``
+    from ONE Spark action: every store action of the query branches off
+    it, and ``max(rd)`` rides the eager checkpoint as an Observation
+    instead of a second ``agg().first()`` job. These lifecycle queries
+    are driver-action-latency floors (SCALE.md store section), so each
+    folded action is a wall-clock win at any data scale."""
     from pyspark.sql import Observation as _Observation
 
+    rd = cells.select("day").distinct().withColumn(
+        "rd", F.row_number().over(Window.orderBy("day"))
+    )
     obs = _Observation()
     ck = (
-        ranked.observe(obs, F.max("rd").alias("n_days"))
+        cells.join(F.broadcast(rd), "day")
+        .observe(obs, F.max("rd").alias("n_days"))
         .localCheckpoint(eager=True)
     )
     return ck, int(obs.get["n_days"] or 0)
+
+
+def _cents_grid(spark: SparkSession, sf_dir: str, *keys: Column) -> DataFrame:
+    """The store family's grid: finite events summed per (day, ``keys``)
+    into exact integer cents modulo 100000 (< 2^24, exact in the store's
+    float32 cells, so every comparison is hash-stable)."""
+    return (
+        t(spark, sf_dir, "events")
+        .filter(_finite_events("ts", "user_id", "event_id", lt=True))
+        .groupBy(F.to_date("ts").alias("day"), *keys)
+        .agg(
+            (F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")) % 100000)
+            .alias("cents")
+        )
+    )
+
+
+def _to_store(df: DataFrame, desc) -> DataFrame:
+    """A ranked grid frame as ``desc``'s store rows: ``day`` becomes the
+    time dim, the grid keys take the other dims in column order, and
+    ``cents`` is the data var. ``GridStore`` casts the rows to
+    ``desc.schema()`` when it writes them."""
+    keys = [c for c in df.columns if c not in ("day", "cents", "rd")]
+    return df.select(
+        F.col("day").cast("timestamp").alias(desc.time_dim),
+        *(F.col(k).alias(d) for k, d in zip(keys, desc.dims[1:], strict=True)),
+        F.col("cents").alias(desc.data_var),
+    )
+
+
+def _fresh_store(spark: SparkSession, kind: str, sf_dir: str, desc):
+    """An empty ``GridStore`` under this process's scratch root for ``kind``."""
+    from zarr_climate_etl_ipfs_spark.sources.store import GridStore
+
+    gs = GridStore(_scratch_root(kind, sf_dir), desc, spark)
+    gs.destroy()
+    return gs
 
 
 def _corpus_fingerprint(sf_dir: str, name: str) -> str:
@@ -1210,8 +1449,7 @@ def snap_to_grid_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text yields an EMPTY list. A bare REGEXP_SPLIT_TO_ARRAY(TRIM(''), '\s+')
 # yields [''] — one phantom empty-string token — which silently diverged
 # from Spark on every word-derived statistic the moment a corpus contained
-# an empty doc (round-8 adversarial-corpus sweep caught 9 such queries;
-# tools/adversarial_check.py now pins the whole class).
+# an empty doc; tools/adversarial_check.py pins the whole class.
 _WORDS_SQL = (
     r"(CASE WHEN TRIM(COALESCE(text, '')) = '' THEN CAST([] AS VARCHAR[]) "
     r"ELSE REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+') END)"
@@ -1313,7 +1551,7 @@ def _lang_scores_sql() -> str:
         # COALESCE mirrors stopword_ratio_from_words' otherwise-0.0: a
         # 0-word doc scores 0.0 in every language (DuckDB's 0/0 is NULL,
         # which would fall through the argmax CASE to 'de' while Spark's
-        # all-zero scores argmax to 'zh' — adversarial-corpus catch)
+        # all-zero scores argmax to 'zh')
         parts.append(
             f"COALESCE(CAST(LEN(LIST_FILTER(w, x -> LIST_CONTAINS([{lst}], LOWER(x)))) AS DOUBLE)"
             f" / LEN(w), 0.0) AS s_{lang}"
@@ -1504,11 +1742,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id,
              UNNEST(LIST_TRANSFORM(grams, s -> {_MD5INT_SQL.format(x='s')})) AS g
       FROM sh
-    ), kept AS (
-      SELECT doc_id, g FROM (
-        SELECT doc_id, g, COUNT(*) OVER (PARTITION BY g) AS df FROM ex
-      ) WHERE df <= 64
-    ), sizes AS (
+    ), {_KEPT_GRAMS_SQL}, sizes AS (
       SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id
     ), inter AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
@@ -1751,44 +1985,14 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup scan, blocked by the label column (the
     metadata-blocking baseline; operators/similarity.py has the LSH-banded
     variant for unlabeled corpora). Label groups bound the pair space;
-    cosine verified exactly — since r15 as one BLAS gram matrix per label
-    group (operators/similarity.gram_bucket_pairs) instead of the
-    label self-join + per-pair interpreted fold. Measured min-of-5 warm:
-    sf0.1 1.12 → 0.79 s; sf1 92.8 → 2.5 s (the old plan paid ~20M
-    interpreted 64-element folds; DuckDB 10.8 s — the kernel WINS at 10×).
-    The historical records below describe the pre-r15 join plan and stay
-    for the negative-result audit trail.
-
-    Partitioning: hash-repartition by the JOIN KEY, not round-robin. Both
-    self-join branches then satisfy the join's distribution requirement, so
-    the only shuffle is this one — and because it is user-specified, AQE
-    cannot byte-coalesce it down to one task (the pair stage is CPU-bound
-    on 768-dim cosines while its shuffle bytes look tiny; AQE's size-based
-    coalescing was the round-2 +50% regression: measured 4.5-17.6s with
-    round-robin + AQE vs ~1.7s with this plan at sf0.1).
-
-    Norm hoisting: cosine = dot/(‖a‖·‖b‖) needs THREE interpreted
-    higher-order-function passes per pair, but the two norm folds depend on
-    one row each — computing ‖v‖ once per row BEFORE the join leaves one
-    array pass on the O(pairs) side. The fold is the same left-to-right
-    aggregate over the same array, so the result is bit-identical to the
-    per-pair form (no oracle drift); measured 1.74→0.9s at sf0.1.
-
-    Negative result (r9): replacing the fold with a flat 64-term getItem
-    multiply-add chain (functions/vectors.dot_fixed — bit-identical by
-    test) measured 0.85→4.4 s warm HERE, despite beating the fold ~2× in
-    an isolated sum over the same join (0.032 vs 0.052 s) — the huge
-    single expression inside the fused join+filter+project stage defeats
-    JIT/codegen locality that the isolated aggregate shape preserves.
-    The interpreted HOF fold stays."""
+    cosine is verified exactly as one BLAS gram matrix per label group
+    (operators/similarity.gram_bucket_pairs), not a label self-join with
+    a per-pair interpreted fold (OPTIMIZATION_r16.md §15)."""
     from zarr_climate_etl_ipfs_spark.operators.similarity import gram_bucket_pairs
 
-    # label IS the bucket: one BLAS gram per label group replaces the
-    # self-join + per-pair interpreted fold (gram_bucket_pairs docstring:
-    # the sf1-measured fifth verify shape — at 20k rows the old plan paid
-    # 20M interpreted folds, 93 s vs DuckDB's 10.8; the kernel computes the
-    # same cosines as 10 dgemms). NULL labels produce no pairs under the
-    # old equi-join and are filtered before the kernel for the same result.
+    # label IS the bucket: one BLAS gram per label group. NULL labels form
+    # no pairs (an equi-join on label would drop them too) and are
+    # filtered before the kernel.
     # Rounding stays engine-side (F.round of the kernel's raw float64).
     emb = (
         t(spark, sf_dir, "embeddings")
@@ -2121,9 +2325,9 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     colocation predicate; region/nation broadcast (true fixed-size dims),
     supplier stays hint-free — it scales with SF (10k rows per SF; a fact
     at the 100 TB design point), so AQE broadcasts it at test SFs and the
-    join becomes a key shuffle at real scale (round-8 consistency fix:
-    the same dims-broadcast/facts-shuffle rule the round-7 judge applied
-    to nation_pair_volume). The fact-fact join (orders⋈lineitem)
+    join becomes a key shuffle at real scale (the dims-broadcast /
+    facts-shuffle rule nation_pair_volume follows too). The fact-fact
+    join (orders⋈lineitem)
     shuffles on the order key only."""
     c = t(spark, sf_dir, "customer")
     o = t(spark, sf_dir, "orders").filter(
@@ -2400,8 +2604,8 @@ def cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 2 additions: semi/anti-join shapes, climate resample/coarsen/
-# interpolation, portable simhash pairs, IVF ANN
+# Semi/anti-join shapes, climate resample/coarsen/interpolation, portable
+# simhash pairs, IVF ANN
 # ---------------------------------------------------------------------------
 
 
@@ -2712,50 +2916,24 @@ def simhash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is linear in corpus size, quadratic only inside a bucket, and
     exact hamming is verified in-bucket. No cross join at any scale.
 
-    Round-7 resolution of the r5/r6 profiling saga (sf0.1, warm, min-of-3,
-    full query): the 56-accumulator exploded aggregate — r6's measured
-    floor at 2.8-3.0 s (4.10 s on the noisier r7 host) — is replaced by a
-    single Arrow-batched numpy vote kernel
-    (operators/dedup.simhash_vote_kernel): hashes stay JVM-side
-    (``F.transform(words, md5int)``), the 56 majority votes happen in one
-    vectorized bit-matrix pass per batch, and a repartition barrier pins
-    the signature (a python-UDF projection gets no exchange reuse, so the
-    self-join would re-execute it per side — measured 5.17 s without the
-    barrier). The barrier width matters too: each python-UDF partition
-    pays worker-startup + Arrow-stream overhead, and signature rows are
-    16 bytes — measured min-of-5 at sf0.1: 32 partitions 2.44 s, 8
-    partitions 1.74 s, 4 partitions 1.96 s (parallelism loss) — so the
-    barrier uses defaultParallelism/4 (floor 8), which still scales with
-    the cluster. vs the r6 agg form's 3.0-4.1 s, value-identical on all
-    132,578 sf0.1 pairs. Historical losers, for the record: per-row
-    aggregate() fold 9.4 s unbarriered / 3.3 s barriered, 4×14-bit
-    packed-lane fold 2.0 s signature alone, 12-bit-lane packed SUMs −8%.
-    The plan (linear-shuffle pigeonhole join, batch-bounded kernel
-    memory) is the one we want at 100 TB.
-
-    Round-13 floor re-certification (4th attempt, interleaved with the
-    DuckDB oracle on a quiet host, min-of-7): 2.30 s vs 0.80 s ≈ 2.9×.
-    Negative result #4: explode + 14 packed 16-bit-lane SUMs (bit k,
-    k+14, k+28, k+42 share a long; fully map-side-combinable; majority
-    unpacked as 56 shift/mask expressions per doc) is value-identical
-    but LOSES to the kernel — signature stage 0.85 s vs 0.66 s warm.
-    Decomposition of the 2.3 s: signature ≈ 0.9 s, pigeonhole join
-    ≈ 0.4 s, final orderBy + 132k-pair driver collect ≈ 0.6 s (orderBy
-    costs an extra range-sampling job but is the scale-correct total
-    sort; the collect is the benchmark's own harness cost, which an
-    in-process engine pays far less for). Measurement gotcha for future
-    rounds: a ``.cache()`` on any probe frame whose logical plan equals
-    the query's signature subplan gets substituted into the full query
-    by the CacheManager — a contaminated run measured 1.30 s and is NOT
-    the floor. Classification stays perf-weak at ~2.9×; the remaining
-    gap is Python-worker + harness fixed costs, not plan shape."""
+    Signature: hashes stay JVM-side (``F.transform(words, md5int)``) and
+    one Arrow-batched numpy vote kernel
+    (operators/dedup.simhash_vote_kernel) takes the 56 majority votes in
+    one vectorized bit-matrix pass per batch. The signature frame is
+    repartitioned to defaultParallelism/4 (floor 8; each python-UDF
+    partition pays worker-startup + Arrow-stream overhead and signature
+    rows are 16 bytes) and checkpointed, so both join sides read it and
+    the kernel runs once. The plan (linear-shuffle pigeonhole join,
+    batch-bounded kernel memory) is the one we want at 100 TB; the gap
+    to DuckDB (~2.9× at sf0.1) is Python-worker and harness fixed cost,
+    not plan shape (OPTIMIZATION_r16.md §3, §15)."""
     from zarr_climate_etl_ipfs_spark.operators.dedup import md5int, simhash_vote_kernel
     from zarr_climate_etl_ipfs_spark.operators.textanalysis import words
 
     d = t_wide(spark, sf_dir, "documents")
     # empty/null docs drop on BOTH sides by construction: DuckDB's
     # REGEXP_SPLIT_TO_ARRAY(TRIM(''),'\s+') yields [''] (NOT an empty
-    # list — round-8 advisor catch), so without the matching WHERE in the
+    # list), so without the matching WHERE in the
     # oracle's w CTE a whitespace-only doc would get an md5('')-derived
     # signature there while Spark drops it here; the explicit trim filter
     # in both engines makes them agree on any corpus. This predicate is
@@ -2767,17 +2945,10 @@ def simhash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(F.array_distinct(words("text")), lambda w: md5int(w)).alias("hvs"),
     )
     n_part = max(8, spark.sparkContext.defaultParallelism // 4)
-    # r16 (verdict #3): the signature frame is localCheckpoint'ed, so the
-    # vote kernel executes exactly ONCE — the repartition barrier only
-    # enabled exchange reuse, which still left the kernel + hashing
-    # subtree in the plan per join side (8 ArrowEvalPython nodes in the
-    # r15 dump; 0 in the r16 one — both sides now scan the checkpoint
-    # blocks). One extra eager action vs one fewer kernel execution was
-    # the verdict's measure-both-ways ask: interleaved A/B
-    # (tools/simhash_ab_r16.py, since deleted; last present at commit
-    # 978e419) had checkpoint win EVERY rep — mins
-    # 4.45/2.04/1.25 s for barrier-only / checkpoint / checkpoint
-    # without the final repartition.
+    # localCheckpoint: the vote kernel executes exactly ONCE and both
+    # join sides scan the checkpoint blocks (a repartition barrier alone
+    # leaves the kernel + hashing subtree in the plan per join side;
+    # OPTIMIZATION_r16.md §3 has the A/B)
     sh = (
         hvs.select("doc_id", simhash_vote_kernel("hvs", bits=56).alias("simhash"))
         .repartition(n_part, "doc_id")
@@ -2806,7 +2977,7 @@ def simhash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
         # range-sampling pass otherwise re-executes the whole pair join
         # (measured 53 s vs 29 s at sf1). On small corpora the join
         # re-run from the checkpoint is cheaper than the extra exchange
-        # (r16 A/B: 1.25 vs 2.04 s min) — same crossover as the engine.
+        # (1.25 vs 2.04 s min at sf0.1) — same crossover as the engine.
         out = out.repartition(spark.sparkContext.defaultParallelism)
     return out.orderBy("id_a", "id_b")
 
@@ -2818,11 +2989,7 @@ def simhash_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, {_SHINGLES_SQL} AS grams FROM documents
     ), ex AS (
       SELECT doc_id, UNNEST(grams) AS g FROM sh
-    ), kept AS (
-      SELECT doc_id, g FROM (
-        SELECT doc_id, g, COUNT(*) OVER (PARTITION BY g) AS df FROM ex
-      ) WHERE df <= 64
-    ), sizes AS (
+    ), {_KEPT_GRAMS_SQL}, sizes AS (
       SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id
     ), inter AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
@@ -2881,11 +3048,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, {_SHINGLES_SQL} AS grams FROM documents
     ), ex AS (
       SELECT doc_id, UNNEST(grams) AS g FROM sh
-    ), kept AS (
-      SELECT doc_id, g FROM (
-        SELECT doc_id, g, COUNT(*) OVER (PARTITION BY g) AS df FROM ex
-      ) WHERE df <= 64
-    ), sizes AS (
+    ), {_KEPT_GRAMS_SQL}, sizes AS (
       SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id
     ), inter AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
@@ -2999,8 +3162,8 @@ def ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IVF contract — FAISS trains the quantizer and holds the inverted
     lists in RAM at index-build time; every query after that is pure
     search. The bench's repeated runs therefore measure search latency
-    after the first run, not re-training + re-assignment (the verdict's
-    round-3 ask). Training itself is the DataFrame Lloyd engine
+    after the first run, not re-training + re-assignment. Training
+    itself is the DataFrame Lloyd engine
     (deterministic seeds + 1 round ≈ 3 codegen'd jobs, vs pyspark.ml's
     ~4.5 s driver-synchronized job storm at sf0.1); full probing keeps the
     output exactly the brute-force oracle for ANY centroids, so the memo
@@ -3019,10 +3182,7 @@ def ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     out = ivf_topk(assigned, centroids, query, k=5, n_probe=8)
-    return out.select(
-        "query_id", "vec_id", F.col("rank").cast("long").alias("rank"),
-        F.round("cosine", 6).alias("cosine"),
-    ).orderBy("query_id", "rank")
+    return _knn_rows(out)
 
 
 @q(
@@ -3080,16 +3240,13 @@ def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep the lowest-id representative per fingerprint group, report
     kept-vs-total per source.
 
-    r15 plan (guide §2.4): the census doesn't need dedup_exact's
-    semi-join at all — `min(struct(doc_id, source))` per fingerprint
-    group carries the keeper's source attribution out of ONE aggregate
-    (ids unique, so the struct min is the min-id row exactly), and the
-    per-source keeper counts fall out of a second tiny aggregate. The
-    previous shape (dedup_exact → groupBy source) scanned documents three
-    times, computed the md5 fingerprint twice, and moved bodies through
-    two repartition exchanges; measured 1.77 s isolated at sf0.1 vs
-    ~0.9 s for this form. dedup_exact keeps its semi-join contract for
-    callers that need the kept ROWS — this query only needs the census.
+    Plan: the census needs no dedup_exact semi-join —
+    `min(struct(doc_id, source))` per fingerprint group carries the
+    keeper's source attribution out of ONE aggregate (ids unique, so the
+    struct min is the min-id row exactly), and the per-source keeper
+    counts fall out of a second tiny aggregate (OPTIMIZATION_r15.md has
+    the A/B). dedup_exact keeps its semi-join contract for callers that
+    need the kept ROWS — this query only needs the census.
     The totals side reads the narrow scan (source column only; no
     repartition — a count per source is scan-bound, not CPU-bound)."""
     from zarr_climate_etl_ipfs_spark.operators.dedup import _fp_key
@@ -3097,7 +3254,7 @@ def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = t_wide(spark, sf_dir, "documents").select(
         "source", "doc_id", _fp_key("text").alias("_fp")
     )
-    # r16 advice fix: NULL doc_ids are excluded from the argmax the same
+    # NULL doc_ids are excluded from the argmax the same
     # way SQL MIN(doc_id) ignores NULLs (a bare min(struct) would order a
     # NULL doc_id smallest and elect a NULL-id keeper, diverging from the
     # oracle's keeper attribution on NULL-id corpora). A group holding
@@ -3149,26 +3306,7 @@ def streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounding state."""
     import uuid
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            # tz-less TIMESTAMP(MICROS) parquet reads as TIMESTAMP_NTZ on
-            # Spark 4 (see tests/test_runtime_contract.py)
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        # file source wants a directory; the glob filter selects one table
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _events_stream(spark, sf_dir)
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("value_sum"))
@@ -3385,8 +3523,8 @@ def value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nested_top_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-series top-5 values via a nested collect_list + sort_array +
     element extraction, surfaced as five scalar double columns. The array
-    stays an *internal* plan node only: round 6 established the driver's
-    canonicalizer cannot factorize array-typed cells (unhashable ndarray in
+    stays an *internal* plan node only: the driver's canonicalizer
+    cannot factorize array-typed cells (unhashable ndarray in
     pandas sort_values), so the driver-facing shape must be scalar-only —
     the top-k values are bit-identical copies of the parquet doubles on both
     engines, so scalar extraction keeps the hash exact with no float
@@ -3562,96 +3700,28 @@ def pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unlabeled embedding near-dup via hyperplane LSH (VERDICT r3 ask #9):
-    no label column, no all-pairs join. Signature = 16 sign bits against
-    md5-derived Rademacher planes (operators/similarity.rademacher_planes —
-    deterministic AND engine-portable, so the ORACLE computes the identical
-    signature with SQL md5 + list_inner_product); candidates = pairs
-    agreeing on >= 1 of 4 four-bit bands; exact cosine >= 0.35 verifies.
-    The band predicate is part of the operator contract on both sides, so
-    greenness does not ride on probabilistic recall.
+    """Unlabeled embedding near-dup via hyperplane LSH: no label column, no
+    all-pairs join. Signature = 16 sign bits against md5-derived
+    Rademacher planes (operators/similarity.rademacher_planes —
+    deterministic AND engine-portable, so the ORACLE computes the
+    identical signature with SQL md5 + list_inner_product); candidates =
+    pairs agreeing on >= 1 of 4 four-bit bands; exact cosine >= 0.35
+    verifies. The band predicate is part of the operator contract on both
+    sides, so greenness does not ride on probabilistic recall.
 
-    Plan shape (round-8 rebuild, the stage-level breakdown the r7 judge
-    asked for): signature is a JVM expression, banding is an explode to
-    (band, bv) keys, candidates come from one bucket aggregate — linear
-    shuffle, quadratic only within a band bucket — and pairs are born
-    globally unique via MIN-BAND dedup (a pair is emitted only in the
-    first band whose 4-bit values agree, decided from the two carried
-    signatures with bit math), so the old dropDuplicates shuffle is gone
-    entirely. Norms are hoisted per row before the pair join
-    (bit-identical to per-pair cosine, same fold).
-
-    Incremental stage costs measured at sf0.1 (tools/profile_lsh.py, since
-    deleted; last present at commit 978e419; noop sink, warm, min-of-3,
-    pre-rebuild plan): scan 0.14 s, +signature
-    0.08 s, +banding ~0, +bucket-agg 0.23 s, +pair-gen 0.17 s,
-    +pair-dedup 0.52 s, +verify 0.29 s, +final sort 0.37 s — no single
-    hot stage; the floor was ~8 jobs of spread cost, dominated by the
-    dedup shuffle, the 25 MB pair repartition, and the double broadcast
-    build. The rebuild attacks exactly those three (same host, same
-    session, min-of-6): min-band dedup kills the dropDuplicates exchange;
-    the round-robin spread moves from the exploded pairs (25 MB) to the
-    64 BUCKET rows (~640 KB) so the explode+verify runs parallel without
-    shuffling pair bytes (−0.55 s); the two verify-side broadcast builds
-    share one projected subtree (−0.1 s). Measured 2.07 s vs 2.85-2.99 s
-    for the r7 plan interleaved on the same host, value-identical on all
-    1,989 output rows. Remaining floor: ~0.2 s scan+signature, ~0.4 s
-    bucket agg, ~1.0 s the 464k-pair interpreted-HOF cosine verify,
-    ~0.27 s the contract-mandated global sort. Round-7 negative result
-    still stands: an Arrow einsum kernel for THIS verify stage measured
-    3.74 s vs 3.01 s — the Arrow transfer of 464k pairs × two 64-float
-    vectors costs more than the fold it replaces (opposite trade from
-    simhash, whose kernel input is one array per ROW). Carrying vectors
-    through the bucket lists instead of joining back measured 3.83 s —
-    collect_list over embedding-width structs swamps the join savings.
-
-    Third negative result (r9, closing the verify-floor question): a flat
-    codegen'd 64-term getItem multiply-add chain in place of the
-    interpreted fold (functions/vectors.dot_fixed, bit-identical by test)
-    measured ~2× FASTER in an isolated sum over the pair join (0.032 vs
-    0.052 s warm) but 5× SLOWER inside this query's fused
-    join+filter+project+sort shape (4.4 vs 0.85 s warm on the sibling
-    embedding_neardup_pairs; same blowup here) — the huge single
-    expression destroys the fused stage's JIT behavior.
-
-    FOURTH (FINAL) negative result (r14, the round-13 verdict's last
-    unexplored shapes; FLOOR RECORD — roster entry frozen the way
-    simhash_neardups froze at four attempts): (a) the single-aggregate
-    fold over arrays_zip'd structs and (b) the sequence-index fold
-    (aggregate over sequence(0,63) with two element_at lookups, zero
-    intermediate arrays) both measured EQUAL to the shipped
-    zip_with+aggregate within noise — same-session interleaved fresh
-    builds, minima 3.95 / 3.50 vs 3.88 s (shipped REGISTRY 3.41 s in the
-    same window), value-identical on all 1,989 rows. (c) The
-    quantized-int prefilter is structurally dominated, not worth a
-    measurement: a sound prefilter must still run one interpreted fold
-    per candidate pair (int multiplies are not cheaper than double
-    multiplies under interpreted HOF evaluation) PLUS the exact fold on
-    survivors, so it strictly adds work at any survivor rate. With Arrow
-    transfer (r7), vector-carry (r8), flat-codegen (r9), and
-    single-aggregate/index-fold (r14) all measured losers, the
-    interpreted-HOF verify IS the floor: a JVM engine evaluating a
-    per-element lambda ~30M times cannot meet an in-process C++ columnar
-    kernel on a 464k-pair/2k-vector workload; the gap closes only with
-    data scale (SCALE.md: the banded plan is linear-shuffle and beats the
-    oracle's quadratic candidate growth at 10×/100×).
-
-    FIFTH shape (r15) — the floor FALLS, and the fourth record's closing
-    scale claim is RETRACTED: the r15 sf1 measurement (tools/make_sf1.py,
-    10× rows) showed candidates growing quadratically (4-bit bands
-    saturate at 16 buckets/band, ≈46M pairs at 20k vectors), the HOF
-    verify at 314 s vs DuckDB's 5.7 s on the identical candidate set —
-    the gap does NOT close with scale; it explodes. The shape all four
-    attempts missed: every candidate lives inside one band bucket, so
-    pair LISTING + min-band dedup + cosine verify collapse into one BLAS
-    ``V @ V.T`` per bucket (operators/similarity.gram_bucket_pairs) with
-    one-vector-per-ROW Arrow transfer (linear — not per-pair like r7's
-    losing attempt #1). Measured min-of-5 warm, value-identical at every
-    gate: sf0.1 3.04 → 2.85 s, sf1 314.0 → 5.9 s (DuckDB 5.75 s — parity
-    at 10×, and the kernel's per-bucket strip-mining keeps memory
-    O(block_rows·bucket) at any scale). The sf0.1 row stays perf-weak
-    (fixed worker-launch + harness floor vs an in-process engine on 2k
-    vectors); the 100 TB answer is now measured, not argued."""
+    Plan shape: the signature is a JVM expression and banding an explode
+    to (band, bv) keys. Every candidate pair lives inside one band bucket,
+    so pair listing, MIN-BAND dedup (a pair is emitted only in the first
+    band whose 4-bit values agree) and the cosine verify collapse into
+    one BLAS ``V @ V.T`` per bucket (operators/similarity.gram_bucket_pairs)
+    with one-vector-per-ROW Arrow transfer and memory
+    O(block_rows·bucket). A per-pair verify cannot scale: 4-bit bands
+    saturate at 16 buckets per band, so candidates grow quadratically
+    (≈46M pairs at 20k vectors), and an interpreted per-pair fold took
+    314 s at sf1 against the kernel's 5.9 s and DuckDB's 5.75 s
+    (OPTIMIZATION_r15.md §1; the per-pair shapes that lost are in
+    OPTIMIZATION_r16.md §15). The sf0.1 row stays slower than DuckDB:
+    fixed worker-launch and harness cost on 2k vectors."""
     from zarr_climate_etl_ipfs_spark.operators.similarity import (
         gram_bucket_pairs,
         rademacher_planes,
@@ -3662,19 +3732,11 @@ def embedding_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = rademacher_planes(16, 64, seed=42)
     # JVM-expression signature (bit-identical to srp_band_values' Arrow
     # matmul, see srp_signature_expr): keeps the whole query Python-free, so no
-    # worker-launch stalls in the signature stage. The _mid filter is the
-    # always-true pushdown barrier (dedup_exact note): the verify
-    # threshold's constraint chain otherwise plants the whole
+    # worker-launch stalls in the signature stage. Behind the barrier, the
+    # verify threshold's constraint chain cannot plant the whole
     # isnotnull(sqrt(aggregate(...))) norm in the scan's DataFilters.
-    s = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            srp_signature_expr("embedding", planes).alias("sig"),
-            F.monotonically_increasing_id().alias("_mid"),
-        )
-        .filter(F.col("_mid") >= 0)
-        .drop("_mid")
+    s = _fenced_select(
+        emb, "vec_id", "embedding", srp_signature_expr("embedding", planes).alias("sig")
     )
     bands = F.array(
         *[
@@ -3688,10 +3750,8 @@ def embedding_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One (band, bv) explode carrying (id, sig, vector) — 4·n rows, linear
     # Arrow transfer — then the whole candidate-listing + min-band-dedup +
     # cosine-verify pipeline collapses into gram_bucket_pairs: one BLAS
-    # V @ V.T per band bucket (the FIFTH verify shape; see that function's
-    # docstring for why the four-attempt floor record inverted at sf1).
-    # Rounding stays engine-side (F.round on the kernel's raw float64), so
-    # the output's rounding semantics are exactly the old plan's.
+    # V @ V.T per band bucket. Rounding stays engine-side (F.round on the
+    # kernel's raw float64).
     banded = s.select(
         "vec_id", "sig", "embedding", F.explode(bands).alias("bb")
     ).select(
@@ -3765,7 +3825,7 @@ def embedding_lsh_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_lsh_neardups_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide-band hyperplane LSH near-dup — the SCALE-MODE variant of
-    embedding_lsh_neardups (VERDICT r5 ask #2). The pinned entry keeps 16
+    embedding_lsh_neardups. The pinned entry keeps 16
     planes / 4-bit bands for oracle portability but admits ~6% of random
     pairs (quadratic on cross-corpus noise); this entry exercises the
     production knob: band WIDTH. 48 planes / 4 bands of 12 bits admit a
@@ -3784,22 +3844,13 @@ def embedding_lsh_neardups_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate is part of the contract on both sides and greenness does not
     ride on probabilistic recall.
 
-    FLOOR RECORD (r14; roster entry frozen): the r13 local riser
-    1.19→3.12 s was interleave-A/B'd (BENCH_interleave_r13risers.json,
-    since deleted; last present at commit 978e419) —
-    quiet-host min 1.79 s, so the 3.12 s row was mostly ENVIRONMENT, with
-    a residual ~1.5× vs the r12 row that motivated one last attempt: a
-    pure-JVM 48-plane expression signature (no Python worker) is
-    bit-identical and FASTER in isolation (0.52 vs 0.65 s for the
-    signature stage) but 3.5× SLOWER end-to-end (4.82 vs 1.38 s min,
-    same-session interleaved) — the r9 flat-codegen pathology: the
-    3072-literal expression tree is re-executed in all three subtree
-    references (banded + both verify sides) and wrecks codegen. At 2,000
-    vectors the query is ~4 jobs of fixed Arrow/scheduler overhead
-    (signature stage alone: 0.58 s Arrow, of which <0.05 s is compute);
-    DuckDB's in-process run has no such floor. The 2× letter is
-    unreachable at demo scale by construction; the plan is the right one
-    at data scale (SCALE.md 200k-vector curve)."""
+    The signature stays in Python: a pure-JVM 48-plane expression
+    signature re-executes its 3072-literal tree in all three subtree
+    references (banded + both verify sides) and is slower end to end
+    (OPTIMIZATION_r16.md §15). At 2,000 vectors the query is ~4 jobs of
+    fixed Arrow/scheduler overhead that DuckDB's in-process run does not
+    pay; the plan is the right one at data scale (SCALE.md 200k-vector
+    curve)."""
     from zarr_climate_etl_ipfs_spark.operators.similarity import srp_neardup_pairs
 
     emb = t_wide(spark, sf_dir, "embeddings")
@@ -4023,9 +4074,8 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     nondeterministic filter, pinning the count filter (and the whole
     eight-regex chain) AFTER the t_wide repartition. The filter must
     REFERENCE the id — a bare unused nondeterministic Project column is
-    pruned before pushdown runs (round-9 plan sweep). The column is
-    dropped before output; results are unchanged. Measured at sf0.1:
-    1.58 → 0.97 s."""
+    pruned before pushdown runs. The column is dropped before output;
+    results are unchanged."""
     from zarr_climate_etl_ipfs_spark.operators.textanalysis import (
         PII_PATTERNS,
         scrub_pii,
@@ -4064,17 +4114,7 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         for name, p, _ in PII_PATTERNS
     ]
     return (
-        e.select(
-            "doc_id",
-            *counts,
-            F.md5(scrub_pii("text")).alias("scrub_fp"),
-            F.monotonically_increasing_id().alias("_mid"),
-        )
-        # pushdown barrier: the filter must REFERENCE _mid — a bare unused
-        # nondeterministic column is pruned before pushdown runs and the
-        # barrier dissolves (round-9 plan sweep caught exactly that here)
-        .filter(F.col("_mid") >= 0)
-        .drop("_mid")
+        _fenced_select(e, "doc_id", *counts, F.md5(scrub_pii("text")).alias("scrub_fp"))
         .withColumnRenamed("n_ipv4", "n_ip")
         .filter(
             F.col("n_email") + F.col("n_phone") + F.col("n_ip") + F.col("n_ssn") > 0
@@ -4111,29 +4151,14 @@ def repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zarr_climate_etl_ipfs_spark.operators.dedup import shingles_from_words, words
 
     # t_wide + filter on the CHEAP proxy (size(ws) >= 3 ⟺ size(grams) > 0,
-    # shingles_from_words contract): predicate pushdown inlines only the
-    # one-regex-split-per-doc into the single-partition scan, while the
-    # O(words²)-ish shingle build + array_distinct run AFTER the
-    # repartition on all cores. Filtering on size(grams) instead inlines
-    # the whole shingle subtree into the scan (the file-level scale note);
-    # with t() everything serialized on one task. Measured at sf0.1:
-    # 6.0 (inlined words) → 3.15 (materialized ws, t()) → 0.40 s (this).
+    # shingles_from_words contract): the O(words²)-ish shingle build +
+    # array_distinct run AFTER the repartition on all cores. Filtering on
+    # size(grams) instead inlines the whole shingle subtree into the scan
+    # (the file-level scale note); with t() everything serializes on one
+    # task. Behind the barrier the size(ws)>=3 gate cannot inline the
+    # tokenizer into the scan's DataFilters either.
     d = t_wide(spark, sf_dir, "documents")
-    w = (
-        d.select(
-            "doc_id",
-            words("text").alias("ws"),
-            F.monotonically_increasing_id().alias("_mid"),
-        )
-        # always-true pushdown barrier (dedup_exact note): without it the
-        # size(ws)>=3 gate inlines the tokenizer into the scan's
-        # DataFilters and the project re-tokenizes above — one split per
-        # row per side. Interleaved A/B at sf0.1: barrier ≤ proxy-at-scan
-        # on every sample (0.51-0.58 vs 0.58-0.67 s warm).
-        .filter(F.col("_mid") >= 0)
-        .drop("_mid")
-        .filter(F.size("ws") >= 3)
-    )
+    w = _fenced_select(d, "doc_id", words("text").alias("ws")).filter(F.size("ws") >= 3)
     g = w.select(
         "doc_id", shingles_from_words("ws", 3, distinct=False).alias("grams")
     )
@@ -4325,8 +4350,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # short docs ride through as an empty bigram array that explode()
     # drops — a filter on size(w) would inline the whole tokenize subtree
-    # into the scan stage as a DataFilter (the module-note anti-pattern;
-    # the catalog-wide plan gate caught exactly that here)
+    # into the scan stage as a DataFilter (the module-note anti-pattern)
     bg = d.select(
         "doc_id",
         F.explode(
@@ -4387,7 +4411,7 @@ def document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, boundary truncation (the last short chunk) and content
     slicing are all value-hash-checked against DuckDB's independent
     RANGE/list_slice derivation. Empty docs produce zero chunks on both
-    engines (the r8 phantom-token lesson, via the shared words()/_WORDS_SQL
+    engines (no phantom empty token, via the shared words()/_WORDS_SQL
     twins). Scale shape: generate-then-aggregate per doc — one narrow
     explode (no shuffle) into one groupBy on the already-distributed
     doc_id; chunk fingerprints are computed pre-explode, once per doc."""
@@ -4489,34 +4513,12 @@ def streaming_backfill_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch aggregate — duplicates in, batch truth out, which is the
     entire point of the operator. At scale the same plan runs with
     dropDuplicatesWithinWatermark to bound the key state."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            # tz-less TIMESTAMP(MICROS) parquet reads as TIMESTAMP_NTZ on
-            # Spark 4 (see tests/test_runtime_contract.py)
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-    def feed():
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
-    merged = feed().unionByName(feed())
+    merged = _events_stream(spark, sf_dir).unionByName(_events_stream(spark, sf_dir))
     # full-identity key (event_id, ts): re-delivered copies of one record
     # share both, while two legitimately distinct events that collide on a
     # sharded id generator differ in ts and BOTH survive — dedup on the id
-    # alone dropped one of them, silently diverging from the batch truth
-    # (round-8 adversarial catch: duplicate id at different timestamps).
+    # alone would drop one of them, silently diverging from the batch
+    # truth.
     # Rows sharing the full key are assumed identical payloads (the
     # re-delivery contract); the batch oracle dedups on the same key
     # (DISTINCT ON) so a full-key duplicate in the BASE table — a
@@ -4580,35 +4582,14 @@ def multimodal_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-exact, without needing either codec. Two Arrow python stages
     (generate, decode) over the scan; no shuffle except the output sort.
     The 12-dim feature vector is unpacked into 12 named scalar double
-    columns for the driver: round 6 showed the driver's canonicalizer
-    crashes on array-typed cells, so the array stays internal and the
+    columns for the driver: the driver's canonicalizer crashes on
+    array-typed cells, so the array stays internal and the
     driver-facing shape is scalar-only (values are exact small integers as
     doubles — hash-safe with no formatting)."""
     from zarr_climate_etl_ipfs_spark import multimodal as mm
 
-    @F.pandas_udf("binary")
-    def gen_img(doc_id: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_constant_raster_bytes(int(d), rotate_variants=True) for d in doc_id]
-        )
-
-    # r16: sort FIRST on the bare doc_id scan (the media_probe_stats
-    # shape) — the trailing orderBy's range-sampling re-executed the
-    # generate + decode Arrow stages; sampling now touches only the scan
-    # and both kernels run exactly once, order preserved end to end.
-    # Range count n_part (not the 32-way shuffle default): each python
-    # stage pays per-task worker/Arrow-stream setup, and 32-way split of
-    # a 5k-row corpus measured SLOWER than the sorted 8-way shape
-    # (image_resize_stats 2.58 vs 0.82 s min) — same cores/4 rule, and
-    # the same floor-8 scaling, as the simhash signature barrier.
-    n_part = max(8, spark.sparkContext.defaultParallelism // 4)
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartitionByRange(n_part, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-    d = d.select("doc_id", gen_img("doc_id").alias("content"))
+    gen_img = _raster_udf(rotate_variants=True)
+    d = _sorted_doc_ids(spark, sf_dir).select("doc_id", gen_img("doc_id").alias("content"))
     feats = mm.extract_features(d)
     names = [
         "height", "width", "channels", "mean_val", "std_val",
@@ -4736,7 +4717,7 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # materialized word array, not an inline words(text) expression: the
     # inline form re-runs the regex split once per CHUNK position inside
-    # the transform lambda (the repetition_ratio trap, r9)
+    # the transform lambda
     dw = t_wide(spark, sf_dir, "documents").select(
         "doc_id", "lang", words(F.col("text")).alias("ws")
     )
@@ -4806,25 +4787,9 @@ def streaming_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial counts; a batch-side sum collapses them, making the result
     independent of how the stream happened to micro-batch. State is three
     int64 per key — the bounded-state shape watermarked streaming needs."""
-    from pyspark.sql import types as T
-
     from zarr_climate_etl_ipfs_spark.streaming.incremental import zscore_anomalies_exact
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _events_stream(spark, sf_dir)
     return (
         _drain_memory_sink(
             spark,
@@ -4869,25 +4834,9 @@ def streaming_running_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     component is monotone, the batch-side max/min/max collapse over the
     per-batch snapshots is invariant to micro-batch boundaries — the
     result equals the one-shot batch GROUP BY the oracle computes."""
-    from pyspark.sql import types as T
-
     from zarr_climate_etl_ipfs_spark.streaming.incremental import running_extremes
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _events_stream(spark, sf_dir)
     return (
         _drain_memory_sink(
             spark,
@@ -4922,35 +4871,19 @@ def streaming_running_extremes_v2(spark: SparkSession, sf_dir: str) -> DataFrame
     """The SAME running-extremes semantics on the Spark-4 arbitrary-state
     v2 API (`transformWithStateInPandas` + `StatefulProcessor` ValueState),
     promoted to a catalog row now that protobuf resolves via the package's
-    `ensure_protobuf` shim (r14 verdict ask #6; the v1≡v2 identity is also
-    pytest-pinned in tests/test_streaming.py). Shares the v1 oracle — the
+    `ensure_protobuf` shim (the v1≡v2 identity is also pytest-pinned in
+    tests/test_streaming.py). Shares the v1 oracle — the
     monotone state components make the snapshot collapse micro-batch-
     invariant on either API. GUARDED LOUDLY: when protobuf is genuinely
     unimportable the query raises ImportError (a red driver row), never
     falls back to v1 silently — a regressed environment must be visible,
     not falsely green. TWS needs the column-family-capable RocksDB state
     store provider; the conf is scoped to the stream and restored."""
-    from pyspark.sql import types as T
-
     from zarr_climate_etl_ipfs_spark.streaming.incremental import (
         running_extremes_v2,
     )
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _events_stream(spark, sf_dir)
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     prev_prov = spark.conf.get(prov_key, None)
     spark.conf.set(
@@ -5013,9 +4946,9 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-uniform after the tf collapse. NLL rounds at 4 decimals on both
     engines (the per-doc sum is dozens of terms, ulp noise ~1e-13).
 
-    Negative result (r9): t_wide measured 1.18 s vs 0.77 s here — the
-    explode already feeds the (doc, term) groupBy shuffle, so
-    repartitioning the raw text first is pure extra I/O, unlike the
+    It reads with t(), not t_wide: the explode already feeds the
+    (doc, term) groupBy shuffle, so repartitioning the raw text first is
+    pure extra I/O, unlike the
     repetition_ratio/pii_scrub cases where heavy per-row work sat in the
     scan stage with no shuffle behind it."""
     from zarr_climate_etl_ipfs_spark.operators.textanalysis import words
@@ -5337,28 +5270,8 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is independent of micro-batching and equals the plain batch interval
     join the oracle runs. At 100 TB/day the state size is (join range ×
     click rate), not history."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-    def feed():
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
     clicks = (
-        feed()
+        _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
         # watermarks require TIMESTAMP (not NTZ); the session is UTC-pinned
         # so the cast is value-exact (see _epoch_s)
@@ -5366,7 +5279,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "2 hours")
     )
     purchases = (
-        feed()
+        _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user_id"),
@@ -5432,44 +5345,8 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     without either codec."""
     from zarr_climate_etl_ipfs_spark import multimodal as mm
 
-    @F.pandas_udf("binary")
-    def gen_vid(doc_id: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from zarr_climate_etl_ipfs_spark.mediacodecs import encode_gif_animation
-
-        out = []
-        for d in doc_id:
-            side = int(d) % 6 + 2
-            nf = int(d) % 5 + 2
-            frames = np.stack(
-                [
-                    np.full((side, side, 3), (int(d) + 17 * f) % 251, dtype=np.uint8)
-                    for f in range(nf)
-                ]
-            )
-            out.append(encode_gif_animation(frames, delay_cs=10))
-        return pd.Series(out)
-
-    # r16: sort FIRST on the bare doc_id scan (the media_probe_stats
-    # shape) — the trailing orderBy's range-sampling re-executed the
-    # generate + decode Arrow stages. The flat-map kernel emits each
-    # doc's frames in ascending frame_idx and preserves input row order,
-    # so range-partitioned doc_id order in means (doc_id, frame_idx)
-    # order out, with the kernels executing exactly once.
-    # Range count n_part (not the 32-way shuffle default): each python
-    # stage pays per-task worker/Arrow-stream setup, and 32-way split of
-    # a 5k-row corpus measured SLOWER than the sorted 8-way shape
-    # (image_resize_stats 2.58 vs 0.82 s min) — same cores/4 rule, and
-    # the same floor-8 scaling, as the simhash signature barrier.
-    n_part = max(8, spark.sparkContext.defaultParallelism // 4)
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartitionByRange(n_part, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-    d = d.select("doc_id", gen_vid("doc_id").alias("content"))
+    gen_vid = _gif_udf(step=17)
+    d = _sorted_doc_ids(spark, sf_dir).select("doc_id", gen_vid("doc_id").alias("content"))
     sampled = mm.sample_frames(d, every_n=2)
     return sampled.select(
         "doc_id", "frame_idx", "f_height", "f_width", "f_mean"
@@ -5553,23 +5430,7 @@ def audio_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return pd.Series(out)
 
-    # r16: sort FIRST on the bare doc_id scan (the media_probe_stats
-    # shape) — the trailing orderBy's range-sampling re-executed the
-    # encode+decode Arrow stage; sampling now touches only the scan and
-    # the kernel runs exactly once, order preserved by the projection.
-    # Range count n_part (not the 32-way shuffle default): each python
-    # stage pays per-task worker/Arrow-stream setup, and 32-way split of
-    # a 5k-row corpus measured SLOWER than the sorted 8-way shape
-    # (image_resize_stats 2.58 vs 0.82 s min) — same cores/4 rule, and
-    # the same floor-8 scaling, as the simhash signature barrier.
-    n_part = max(8, spark.sparkContext.defaultParallelism // 4)
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartitionByRange(n_part, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-    d = d.select("doc_id", wav_stats(gen_wav("doc_id")).alias("s"))
+    d = _sorted_doc_ids(spark, sf_dir).select("doc_id", wav_stats(gen_wav("doc_id")).alias("s"))
     return d.select(
         "doc_id",
         F.element_at("s", 1).alias("n_samples"),
@@ -5713,19 +5574,13 @@ def sq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     all dots (`operators/similarity.sq_asym_cosine_scan`),
     TakeOrderedAndProject — no shuffle at any corpus size.
 
-    r15 optimization record (guide §1.2/§4.2): this query is LATENCY-
-    bound, not compute-bound — the corpus is 2k×64 at sf0.1 and even
-    the old ~5-interpreted-HOF-passes-per-row Project was sub-100 ms of
-    actual CPU; the measured 1.78 s isolated (noop, warm, min-of-5) was
-    fixed scheduling cost: t_wide's repartition exchange, a separate
-    bounds job, TWO broadcast builds (bounds + query ≈ 0.25 s each on a
-    fresh plan), and two BroadcastNestedLoopJoins. The rewrite removes
-    the repartition (the kernel is batch-vectorized, so scan-split
-    parallelism suffices at any scale), folds the query-vector extraction
-    into the bounds aggregate (one broadcast build instead of two), and
-    replaces the per-row HOF math with the BLAS kernel. Output identical
-    (rounding engine-side, NULL semantics mirrored; see the kernel
-    docstring); measured 1.78 → ~0.55 s isolated."""
+    The query is LATENCY-bound, not compute-bound (2k×64 at sf0.1), so
+    the plan minimizes fixed scheduling cost: no repartition (the kernel
+    is batch-vectorized, so scan-split parallelism suffices at any
+    scale), the query-vector extraction folded into the bounds aggregate
+    (one broadcast build, not two), and the BLAS kernel instead of
+    per-row HOF math (rounding engine-side, NULL semantics mirrored; see
+    the kernel docstring; OPTIMIZATION_r15.md has the A/B)."""
     from zarr_climate_etl_ipfs_spark.operators.similarity import (
         scalar_quantize_bounds,
         sq_asym_cosine_scan,
@@ -5781,14 +5636,7 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     history."""
     e = (
         t(spark, sf_dir, "events")
-        # finite-only (matches the oracle WHERE): exact-cents state has no
-        # representation for NULL/NaN/inf — floor(inf*100).cast(long)
-        # raises ARITHMETIC_OVERFLOW under ANSI mode (adversarial catch)
-        .filter(
-            F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") < F.lit(float("inf")))
-        )
+        .filter(_finite_events(lt=True))
         .select(
             "event_type",
             F.to_date("ts").alias("day"),
@@ -5857,32 +5705,8 @@ def image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode/resize/encode stage; no shuffle but the output sort."""
     from zarr_climate_etl_ipfs_spark import multimodal as mm
 
-    @F.pandas_udf("binary")
-    def gen_img(doc_id: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_constant_raster_bytes(int(d), rotate_variants=False) for d in doc_id]
-        )
-
-    # r16: sort FIRST on the bare doc_id scan (the media_probe_stats
-    # shape) — with the sort last, orderBy's range-sampling job re-executed
-    # BOTH Arrow stages (python subtrees get no reuse); sampling now
-    # touches only the scan, the t_wide round-robin exchange is replaced
-    # by the range exchange, and generate+resize run exactly once. The
-    # kernels are order-preserving maps, so the output stays globally
-    # sorted by doc_id.
-    # Range count n_part (not the 32-way shuffle default): each python
-    # stage pays per-task worker/Arrow-stream setup, and 32-way split of
-    # a 5k-row corpus measured SLOWER than the sorted 8-way shape
-    # (image_resize_stats 2.58 vs 0.82 s min) — same cores/4 rule, and
-    # the same floor-8 scaling, as the simhash signature barrier.
-    n_part = max(8, spark.sparkContext.defaultParallelism // 4)
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartitionByRange(n_part, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-    d = d.select("doc_id", gen_img("doc_id").alias("content"))
+    gen_img = _raster_udf(rotate_variants=False)
+    d = _sorted_doc_ids(spark, sf_dir).select("doc_id", gen_img("doc_id").alias("content"))
     resized = mm.resize_images(d, target_h=3, target_w=3)
     return resized.select(
         "doc_id", "in_h", "in_w", "out_h", "out_w", "out_mean"
@@ -5973,8 +5797,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts.withColumn(
             "frac_of_top",
             # try_divide: an empty funnel top (0 signups after a filter)
-            # must yield NULL fractions, not a 0/0 ANSI crash — the
-            # minimal-corpus gate's catch (r9)
+            # must yield NULL fractions, not a 0/0 ANSI crash
             F.try_divide(
                 F.col("n_users"), F.first("n_users").over(top).cast("double")
             ),
@@ -6108,22 +5931,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     session stats the oracle computes. At scale, session state is bounded
     by watermark + session timeout — state ∝ OPEN sessions, not
     history."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
     stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        _events_stream(spark, sf_dir)
         # session_window needs TIMESTAMP (not NTZ); UTC-pinned cast is exact
         .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
     )
@@ -6277,12 +6086,12 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty array (explode drops the doc) but DuckDB's
     # REGEXP_SPLIT_TO_ARRAY(TRIM(''),'\s+') is [''] — without the matching
     # WHERE in the oracle CTEs a whitespace-only doc would probe/insert a
-    # w='' feature there only (round-8 advisor catch); the shared trim
+    # w='' feature there only; the shared trim
     # predicate makes the engines agree by construction on any corpus.
     d = t_wide(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
     # bench side reads the narrow scan, not the t_wide'd one: it feeds an
     # aggregate over ~1/19th of the docs, and the repartition exchange was
-    # pure latency there (r15; the probe side keeps t_wide — the explode
+    # pure latency there (the probe side keeps t_wide — the explode
     # plus 3 md5s per pair is the CPU-bound stage t_wide exists for)
     bench = (
         t(spark, sf_dir, "documents")
@@ -6293,16 +6102,12 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = d.select(
         "doc_id", F.explode(F.array_distinct(words("text"))).alias("w")
     )
-    # r15 (guide §2.3/§2.4): the probe is now a JOIN-FREE bitmask test —
-    # the filter folds to one broadcast row of 128 longs and each probe
-    # row tests its 3 salted bits in codegen, so the explode→join→
-    # group-back shuffle of 3× the probe rows is gone; one partial-
-    # aggregated shuffle to doc_id remains. Two relational rewrites were
-    # measured WORSE and are recorded in the bloom_bitmask docstring
-    # (distinct-vocab probe + join back: 3.2 s unhinted from 31-key skew,
-    # 2.0 s broadcast-hinted from the extra serial vocabulary job, vs
-    # 1.50 s for the old per-pair probe). bloom_hit per (doc, word) is
-    # identical by construction — same salted positions, ALL-k test.
+    # JOIN-FREE bitmask probe: the filter folds to one broadcast row of
+    # 128 longs and each probe row tests its 3 salted bits in codegen, so
+    # no explode→join→group-back shuffle of 3× the probe rows exists; one
+    # partial-aggregated shuffle to doc_id remains (the bloom_bitmask
+    # docstring has the relational rewrites that lose). bloom_hit per
+    # (doc, word) is the same salted positions, ALL-k test.
     mask = F.broadcast(bloom_bitmask(positions, m_bits=8192))
     return (
         pairs.crossJoin(mask)
@@ -6426,18 +6231,9 @@ def bigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zarr_climate_etl_ipfs_spark.operators.textanalysis import words
 
     d = t_wide(spark, sf_dir, "documents")
-    lst = (
-        d.select(
-            "doc_id",
-            words("text").alias("lst"),
-            F.monotonically_increasing_id().alias("_mid"),
-        )
-        # always-true pushdown barrier (dedup_exact note): the
-        # size(lst) >= 2 gate below otherwise inlines the tokenizer into
-        # the scan's DataFilters at file-count parallelism
-        .filter(F.col("_mid") >= 0)
-        .drop("_mid")
-    )
+    # the barrier keeps the size(lst) >= 2 gate below from inlining the
+    # tokenizer into the scan
+    lst = _fenced_select(d, "doc_id", words("text").alias("lst"))
     pairs = F.expr(
         "zip_with(slice(lst, 1, size(lst)-1), slice(lst, 2, size(lst)-1), "
         "(a, b) -> struct(a AS w1, b AS w2))"
@@ -6451,33 +6247,20 @@ def bigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p.w2").alias("w2"),
         )
     )
-    # r16: window keys on (w1, w2) directly — bg = concat_ws(' ', w1, w2)
+    # the window keys on (w1, w2) directly — bg = concat_ws(' ', w1, w2)
     # is a bijection for whitespace-split tokens (they contain no
     # whitespace), so the count is identical while the exchange carries
-    # two short columns instead of three (the concat duplicated both) —
-    # guide §2.3 "shuffle fewer bytes". Interleaved A/B won 7/8 reps vs
-    # the bg-keyed form.
+    # two short columns instead of three
     sp = sp.withColumn("n2", F.count("*").over(Window.partitionBy("w1", "w2")))
     cu = (
         lst.select(F.explode("lst").alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("n"))
     )
-    # r16 verdict #1 settlement: the r15 "tot from the unigram table"
-    # rewrite is REVERTED — it chained groupBy+sum onto the critical
-    # broadcast path and both committed r15 artifacts plus this round's
-    # interleaved A/Bs showed it slower (r15 1.91 s vs r14 1.50 s
-    # committed; r16 quiet-window mins S0 1.62-2.13 vs r14-shape
-    # 1.44-1.88 across four sessions). A straight COUNT over the token
-    # explode is a cheap concurrent broadcast-build job; Σn == COUNT(*)
-    # exactly, so results are unchanged. Also measured and rejected this
-    # round (tools/bigram_ab_r16.py, since deleted; last present at commit
-    # 978e419): folding t into the unigram
-    # broadcast via an unpartitioned window (mins ~1.5-1.7 s, no AQE
-    # broadcast reuse materialized), a broadcast join-back replacing the
-    # window (2.2 s), a localCheckpoint single-tokenize variant (2.3 s),
-    # and a repartition(w1,w2) pre-agg + exchange-free window (2.6 s) —
-    # all lose to concurrent broadcast builds at this scale.
+    # a straight COUNT over the token explode is a cheap concurrent
+    # broadcast-build job; deriving t from the unigram table instead
+    # chains groupBy+sum onto the critical broadcast path and is slower
+    # (OPTIMIZATION_r16.md §1, §15)
     tot = lst.select(F.explode("lst").alias("term")).agg(F.count("*").alias("t"))
     ca = cu.select(F.col("term").alias("w1"), F.col("n").alias("n1"))
     cb = cu.select(F.col("term").alias("w2"), F.col("n").alias("n2u"))
@@ -6581,30 +6364,11 @@ def media_probe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             columns=["fmt", "codec", "duration_ms", "width", "height", "n_streams"],
         )
 
-    # r16 (verdict #4): the staged decomposition refuted "the cost IS the
-    # codec work" — all 5000 encode+probe calls run in ~0.10 s of plain
-    # Python (OPTIMIZATION_r16.md §4), so the 0.9-1.45 s bench row was
-    # Spark overhead: a t_wide round-robin exchange feeding the UDF, and
-    # orderBy's range-sampling job re-executing the Arrow stage (python
-    # subtrees get no reuse — the simhash lesson). New shape: sort FIRST
-    # on the bare doc_id scan (sampling touches only the scan), then run
-    # the probe on the range-partitioned output — ordering and
-    # parallelism are preserved by the order-preserving projection, the
-    # UDF executes exactly once, and the plan has ONE exchange instead of
-    # two (plans/r16/media_probe_stats_{before,after}.txt).
-    # Range count n_part (not the 32-way shuffle default): each python
-    # stage pays per-task worker/Arrow-stream setup, and 32-way split of
-    # a 5k-row corpus measured SLOWER than the sorted 8-way shape
-    # (image_resize_stats 2.58 vs 0.82 s min) — same cores/4 rule, and
-    # the same floor-8 scaling, as the simhash signature barrier.
-    n_part = max(8, spark.sparkContext.defaultParallelism // 4)
-    d = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartitionByRange(n_part, "doc_id")
-        .sortWithinPartitions("doc_id")
-    )
-    return d.select("doc_id", probe("doc_id").alias("m")).select("doc_id", "m.*")
+    # The 5000 encode+probe calls take ~0.10 s of plain Python
+    # (OPTIMIZATION_r16.md §2), so this row's cost is Spark's: probing
+    # the sorted ids keeps the plan at one exchange and runs the UDF
+    # once (OPTIMIZATION_r16.md §2 has the before/after plans).
+    return _sorted_doc_ids(spark, sf_dir).select("doc_id", probe("doc_id").alias("m")).select("doc_id", "m.*")
 
 
 @q(
@@ -6636,9 +6400,8 @@ def nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier scale with SF exactly like orders (TPC-H 150k/10k rows per
     SF — tens of billions of rows at the 100 TB design point), so those
     joins stay hint-free and AQE broadcasts them at test SFs while they
-    correctly become key shuffles at real scale (round-7 judge catch:
-    forcing them broadcast misapplied the repo's own dims-broadcast/
-    facts-shuffle rule). The cross-border predicate evaluates inside
+    correctly become key shuffles at real scale (the repo's
+    dims-broadcast/facts-shuffle rule). The cross-border predicate evaluates inside
     the nation joins so same-nation lineitems die before the final
     group-by. Revenue is summed in exact integer cents
     (per-item fixed-pointing is engine-identical; float SUM order is
@@ -6656,7 +6419,7 @@ def nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orders is a FACT table: no broadcast hint — AQE auto-broadcasts it
     # under the threshold at test SFs, and at real scale this join
     # correctly becomes a shuffle join (a forced broadcast of orders
-    # would OOM the driver at 100 TB — round-7 review catch)
+    # would OOM the driver at 100 TB)
     j = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -6781,31 +6544,9 @@ def zarr_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins + a single shuffle on chunk ordinal to write; spark.range over
     chunk ordinals (no driver enumeration) + mapInPandas to read — the
     same plan at 10^8 chunks."""
-    import hashlib as _hashlib
-    import tempfile as _tempfile
+    from zarr_climate_etl_ipfs_spark.sources.zarr2 import write_zarr_tall
 
-    from zarr_climate_etl_ipfs_spark.sources.zarr2 import (
-        read_zarr_tall,
-        write_zarr_tall,
-    )
-
-    ev = t(spark, sf_dir, "events")
-    grid = (
-        ev.filter(
-            F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") < F.lit(float("inf")))
-        )
-        .groupBy(
-            F.date_trunc("hour", "ts").alias("t"),
-            (F.col("user_id") % 8).alias("cell_y"),
-            (F.col("event_id") % 16).alias("cell_x"),
-        )
-        .agg(F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"))
-    )
+    grid = _hourly_cents_grid(spark, sf_dir, ny=8, nx=16)
     # deterministic per-sf_dir scratch store, overwritten per run; the
     # returned frame stays lazy, so the store must outlive this call
     store = _scratch_root("zarr_rt", sf_dir)
@@ -6819,12 +6560,7 @@ def zarr_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         fill_value=fill,
         overwrite=True,
     )
-    back = read_zarr_tall(spark, store, var="cents", skip_fill=True)
-    return (
-        back.groupBy("t")
-        .agg(F.sum("cents").alias("sum_cents"), F.count("*").alias("n_cells"))
-        .orderBy("t")
-    )
+    return _zarr_cents_per_hour(spark, store)
 
 
 @q(
@@ -6877,18 +6613,9 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zarr_climate_etl_ipfs_spark.operators.textanalysis import words
 
     d = t_wide(spark, sf_dir, "documents")
-    dws = (
-        d.select(
-            "doc_id",
-            words(F.col("text")).alias("ws"),
-            F.monotonically_increasing_id().alias("_mid"),
-        )
-        # always-true pushdown barrier (dedup_exact note): the
-        # n_windows >= 1 gate below otherwise inlines the tokenizer into
-        # the scan's DataFilters at file-count parallelism
-        .filter(F.col("_mid") >= 0)
-        .drop("_mid")
-    )
+    # the barrier keeps the n_windows >= 1 gate below from inlining the
+    # tokenizer into the scan
+    dws = _fenced_select(d, "doc_id", words(F.col("text")).alias("ws"))
     dhs = dws.select(
         "doc_id",
         (F.size("ws") - 15).alias("n_windows"),
@@ -7002,15 +6729,12 @@ def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "degree_days",
-    """
+    f"""
     WITH daily AS (
       -- daily mean per series: the resample step every degree-day contract
       -- starts from; non-finite readings are skipped (sensor-corrupt rows
       -- must not turn a month's index into NaN), NULL series excluded
-      SELECT event_type, CAST(ts AS DATE) AS day, AVG(value) AS tmean
-      FROM events
-      WHERE event_type IS NOT NULL AND value IS NOT NULL AND ISFINITE(value)
-      GROUP BY event_type, CAST(ts AS DATE)
+      {_DAILY_TMEAN_SQL}
     )
     SELECT event_type,
            CAST(EXTRACT(YEAR FROM day) * 100 + EXTRACT(MONTH FROM day) AS INT)
@@ -7029,17 +6753,9 @@ def degree_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one shuffle, days collapse to (series, month) sums in a second over
     ~1/1000th the rows. At 100 TB the first shuffle is the only big one
     and its key (series, day) is hash-uniform — no hot keys, no window.
-    Non-finite readings are filtered at the scan (pushed predicate), the
-    round-8 contract for every exact-arith events op."""
-    e = t(spark, sf_dir, "events").filter(
-        F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
-    daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.avg("value").alias("tmean")
-    )
+    Non-finite readings are filtered at the scan (pushed predicate), as
+    in every exact-arith events op."""
+    daily = _daily_tmean(spark, sf_dir)
     return (
         daily.groupBy(
             "event_type",
@@ -7058,12 +6774,9 @@ def degree_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "heatwave_spells",
-    """
+    f"""
     WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, AVG(value) AS tmean
-      FROM events
-      WHERE event_type IS NOT NULL AND value IS NOT NULL AND ISFINITE(value)
-      GROUP BY event_type, CAST(ts AS DATE)
+      {_DAILY_TMEAN_SQL}
     ), ranked AS (
       SELECT event_type, day, tmean,
              ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY tmean, day) AS rn,
@@ -7107,15 +6820,7 @@ def heatwave_spells(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows partition by series key; the row count entering them is
     (series x days) — resample-scale, not event-scale — so the window
     stage is metadata-sized even at 100 TB of raw events."""
-    e = t(spark, sf_dir, "events").filter(
-        F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
-    daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.avg("value").alias("tmean")
-    )
+    daily = _daily_tmean(spark, sf_dir)
     wr = Window.partitionBy("event_type").orderBy("tmean", "day")
     wn = Window.partitionBy("event_type")
     ranked = daily.select(
@@ -7155,8 +6860,7 @@ def heatwave_spells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Training-data curation additions (round-9 session 4): ranked retrieval and
-# corpus mixing — the selection ops downstream of the dedup/quality family
+# Training-data curation: ranked retrieval and corpus mixing — the selection ops downstream of the dedup/quality family
 # ---------------------------------------------------------------------------
 
 _BM25_TERMS = ("spark", "merge", "filter")
@@ -7341,10 +7045,8 @@ def grib2_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregate to build cells, one axis-resolving aggregate, ONE
     shuffle on the bucket to write; binaryFile scan + flatMap decode to
     read — the per-file parallel unit of any at-scale GRIB archive."""
-    import hashlib as _hashlib
     import os as _os
     import shutil as _shutil
-    import tempfile as _tempfile
 
     from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
     from zarr_climate_etl_ipfs_spark.sources.grib2 import (
@@ -7355,14 +7057,7 @@ def grib2_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = t(spark, sf_dir, "events")
     grid = (
-        ev.filter(
-            F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") < F.lit(float("inf")))
-        )
+        ev.filter(_finite_events("ts", "user_id", "event_id", lt=True))
         .groupBy(
             F.date_trunc("hour", "ts").alias("t"),
             (F.col("user_id") % 8).cast("double").alias("lat"),
@@ -7459,10 +7154,7 @@ def ivf_persisted_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     out = search_ivf_index(spark, path, query, k=5, n_probe=8)
-    return out.select(
-        "query_id", "vec_id", F.col("rank").cast("long").alias("rank"),
-        F.round("cosine", 6).alias("cosine"),
-    ).orderBy("query_id", "rank")
+    return _knn_rows(out)
 
 
 #: Convex zones (CCW vertices) in the synthetic (lon 0-15, lat 0-7) cell
@@ -7522,13 +7214,7 @@ def zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg; a vertex TABLE (arbitrary polygons) would become a
     broadcast join with the same aggregate shape. Points on an edge count
     as inside (>= 0) on both engines, exactly."""
-    e = t(spark, sf_dir, "events").filter(
-        F.col("event_id").isNotNull()
-        & F.col("user_id").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
+    e = t(spark, sf_dir, "events").filter(_finite_events("event_id", "user_id", lt=False))
     px = (F.col("event_id") % 16).cast("long")
     py = (F.col("user_id") % 8).cast("long")
 
@@ -7563,12 +7249,9 @@ def zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "dry_spell_indices",
-    """
+    f"""
     WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, AVG(value) AS tmean
-      FROM events
-      WHERE event_type IS NOT NULL AND value IS NOT NULL AND ISFINITE(value)
-      GROUP BY event_type, CAST(ts AS DATE)
+      {_DAILY_TMEAN_SQL}
     ), ranked AS (
       SELECT event_type, day, tmean,
              ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY tmean, day) AS rn,
@@ -7608,15 +7291,7 @@ def dry_spell_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gaps-and-islands on the dry days). Same scale story as
     heatwave_spells: every window runs at resample scale (series x days),
     the raw-event shuffle happens once in the daily aggregate."""
-    e = t(spark, sf_dir, "events").filter(
-        F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
-    daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.avg("value").alias("tmean")
-    )
+    daily = _daily_tmean(spark, sf_dir)
     wr = Window.partitionBy("event_type").orderBy("tmean", "day")
     wn = Window.partitionBy("event_type")
     ranked = daily.select(
@@ -7657,12 +7332,9 @@ def dry_spell_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "streaming_degree_days",
-    """
+    f"""
     WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, AVG(value) AS tmean
-      FROM events
-      WHERE event_type IS NOT NULL AND value IS NOT NULL AND ISFINITE(value)
-      GROUP BY event_type, CAST(ts AS DATE)
+      {_DAILY_TMEAN_SQL}
     )
     SELECT event_type,
            CAST(EXTRACT(YEAR FROM day) * 100 + EXTRACT(MONTH FROM day) AS INT)
@@ -7685,30 +7357,9 @@ def streaming_degree_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     query; the daily grain is the state (bounded: series x days), the
     monthly rollup is stateless post-processing — at scale the drain
     target is a Delta table and the readout is any batch query."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _events_stream(spark, sf_dir)
     daily = (
-        stream.filter(
-            F.col("event_type").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") != float("inf"))
-        )
+        stream.filter(_finite_events("event_type", lt=False))
         .groupBy("event_type", F.window("ts", "1 day").alias("w"))
         .agg(F.avg("value").alias("tmean"))
         .select("event_type", F.to_date("w.start").alias("day"), "tmean")
@@ -7736,21 +7387,14 @@ def streaming_degree_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "store_lifecycle_diff",
-    """
+    f"""
     WITH cells AS (
       SELECT CAST(ts AS DATE) AS day,
              CAST(user_id % 4 AS BIGINT) AS la,
              CAST(event_id % 4 AS BIGINT) AS lo,
-             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) % 100000
-                  AS BIGINT) AS cents
-      FROM events
-      WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_id IS NOT NULL
-        AND value IS NOT NULL AND ISFINITE(value)
+             {_CENTS_SQL}
       GROUP BY day, la, lo
-    ), rd AS (
-      SELECT day, ROW_NUMBER() OVER (ORDER BY day) AS rd
-      FROM (SELECT DISTINCT day FROM cells)
-    ), base AS (
+    ), {_DAY_RANK_SQL}, base AS (
       SELECT c.* FROM cells c JOIN rd ON c.day = rd.day WHERE rd.rd <= 10
     ), ins AS (
       SELECT c.day, c.la, c.lo, c.cents + 7 AS cents
@@ -7790,53 +7434,16 @@ def store_lifecycle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff's change classification are all value-hash-checked against an
     independent derivation. Exact int cents (< 2^24, exact in the store's
     float32 cells) keep every comparison hash-stable."""
-    import hashlib as _hashlib
-    import tempfile as _tempfile
-
     from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
-    from zarr_climate_etl_ipfs_spark.sources.store import GridStore
 
-    ev = t(spark, sf_dir, "events")
-    cells = (
-        ev.filter(
-            F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") < F.lit(float("inf")))
-        )
-        .groupBy(
-            F.to_date("ts").alias("day"),
+    ranked, n_days = _rank_days(
+        _cents_grid(
+            spark, sf_dir,
             (F.col("user_id") % 4).cast("long").alias("la"),
             (F.col("event_id") % 4).cast("long").alias("lo"),
         )
-        .agg(
-            (F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")) % 100000)
-            .alias("cents")
-        )
     )
-    wd = Window.orderBy("day")
-    rd = cells.select("day").distinct().withColumn("rd", F.row_number().over(wd))
-    # Materialize the ranked-cells aggregate ONCE: five store actions branch
-    # off it (base.head, write_initial, upd.head, update, diff) and would
-    # each re-run the events groupBy + row_number pipeline otherwise (8.9 s
-    # -> ~3 s in the full-catalog bench). Tiny frame: n_days x 16 cells.
-    # n_days rides the SAME action as an Observation on the eager
-    # checkpoint (_checkpoint_ranked) — the separate agg().first() was one
-    # more driver-synchronized job in a query that is pure action-latency
-    # floor (r15 store-lifecycle consolidation).
-    ranked, n_days = _checkpoint_ranked(cells.join(F.broadcast(rd), "day"))
     out_schema = "change string, n_cells bigint, sum_old bigint, sum_new bigint"
-
-    def to_store_schema(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col("day").cast("timestamp").alias("time"),
-            F.col("la").cast("float").alias("latitude"),
-            F.col("lo").cast("float").alias("longitude"),
-            F.col("cents").cast("float").alias("cents"),
-        )
-
     if n_days == 0:  # empty corpus: no store, no diff
         return spark.createDataFrame([], out_schema)
     base = ranked.filter(F.col("rd") <= 10).select("day", "la", "lo", "cents")
@@ -7846,7 +7453,6 @@ def store_lifecycle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     app = ranked.filter(F.col("rd").isin(11, 12)).select("day", "la", "lo", "cents")
     upd = ins.unionByName(app)
 
-    root = _scratch_root("store_diff", sf_dir)
     desc = DatasetDescriptor(
         dataset_name="lifecycle",
         data_var="cents",
@@ -7856,12 +7462,11 @@ def store_lifecycle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         # overwrite path deliberately
         allow_overwrite=True,
     )
-    gs = GridStore(root, desc, spark)
-    gs.destroy()
-    gs.write_initial(to_store_schema(base))
+    gs = _fresh_store(spark, "store_diff", sf_dir, desc)
+    gs.write_initial(_to_store(base, desc))
     v1 = gs.current_version()
     if n_days >= 3:  # the insert leg (ranks 3-4) exists => upd is non-empty
-        gs.update(to_store_schema(upd))
+        gs.update(_to_store(upd, desc))
     return (
         gs.diff(v1)
         .filter(F.col("change") != "unchanged")
@@ -7881,7 +7486,7 @@ def store_lifecycle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "hindcast_store_roundtrip",
-    """
+    f"""
     WITH cells AS (
       SELECT CAST(ts AS DATE) AS day,
              CAST((user_id % 2 + 1) * 3600 AS BIGINT) AS step_s,
@@ -7889,16 +7494,9 @@ def store_lifecycle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST((user_id % 3) * 86400 AS BIGINT) AS fro,
              CAST(event_id % 3 AS BIGINT) AS la,
              CAST(user_id % 4 AS BIGINT) AS lo,
-             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) % 100000
-                  AS BIGINT) AS cents
-      FROM events
-      WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_id IS NOT NULL
-        AND value IS NOT NULL AND ISFINITE(value)
+             {_CENTS_SQL}
       GROUP BY day, step_s, member, fro, la, lo
-    ), rd AS (
-      SELECT day, ROW_NUMBER() OVER (ORDER BY day) AS rd
-      FROM (SELECT DISTINCT day FROM cells)
-    ), finalv AS (
+    ), {_DAY_RANK_SQL}, finalv AS (
       SELECT c.* FROM cells c JOIN rd ON c.day = rd.day WHERE rd.rd <= 8
     )
     SELECT CAST(day AS TIMESTAMP) AS hrt, fro, member,
@@ -7915,50 +7513,22 @@ def hindcast_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the widest schema; the ensemble twin covers the mixed-update
     path), read back per (reference time, offset, member)."""
     from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
-    from zarr_climate_etl_ipfs_spark.sources.store import GridStore
 
-    ev = t(spark, sf_dir, "events")
-    cells = (
-        ev.filter(
-            F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") < F.lit(float("inf")))
-        )
-        .groupBy(
-            F.to_date("ts").alias("day"),
+    ranked, n_days = _rank_days(
+        _cents_grid(
+            spark, sf_dir,
             ((F.col("user_id") % 2 + 1) * 3600).cast("long").alias("step_s"),
             (F.col("event_id") % 2).cast("long").alias("member"),
             ((F.col("user_id") % 3) * 86400).cast("long").alias("fro"),
             (F.col("event_id") % 3).cast("long").alias("la"),
             (F.col("user_id") % 4).cast("long").alias("lo"),
         )
-        .agg(
-            (F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")) % 100000)
-            .alias("cents")
-        )
     )
-    wd = Window.orderBy("day")
-    rd = cells.select("day").distinct().withColumn("rd", F.row_number().over(wd))
-    ranked, n_days = _checkpoint_ranked(cells.join(F.broadcast(rd), "day"))
     out_schema = (
         "hrt timestamp, fro bigint, member bigint, sum_cents bigint, n_cells bigint"
     )
     if n_days == 0:
         return spark.createDataFrame([], out_schema)
-
-    def to_store_schema(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col("day").cast("timestamp").alias("hindcast_reference_time"),
-            F.col("step_s").cast("long").alias("step"),
-            F.col("member").cast("int").alias("ensemble"),
-            F.col("fro").cast("long").alias("forecast_reference_offset"),
-            F.col("la").cast("float").alias("latitude"),
-            F.col("lo").cast("float").alias("longitude"),
-            F.col("cents").cast("float").alias("cents"),
-        )
 
     desc = DatasetDescriptor(
         dataset_name="hindcast_rt",
@@ -7966,12 +7536,10 @@ def hindcast_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         dataset_category="hindcast",
         time_bucket="month",
     )
-    root = _scratch_root("hindcast_rt", sf_dir)
-    gs = GridStore(root, desc, spark)
-    gs.destroy()
-    gs.write_initial(to_store_schema(ranked.filter(F.col("rd") <= 6)))
+    gs = _fresh_store(spark, "hindcast_rt", sf_dir, desc)
+    gs.write_initial(_to_store(ranked.filter(F.col("rd") <= 6), desc))
     if n_days >= 7:
-        gs.append(to_store_schema(ranked.filter(F.col("rd").isin(7, 8))))
+        gs.append(_to_store(ranked.filter(F.col("rd").isin(7, 8)), desc))
     return (
         gs.dataset()
         .groupBy(
@@ -7989,23 +7557,16 @@ def hindcast_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "forecast_store_roundtrip",
-    """
+    f"""
     WITH cells AS (
       SELECT CAST(ts AS DATE) AS day,
              CAST((user_id % 3 + 1) * 3600 AS BIGINT) AS step_s,
              CAST(event_id % 2 AS BIGINT) AS member,
              CAST(user_id % 2 AS BIGINT) AS la,
              CAST(event_id % 4 AS BIGINT) AS lo,
-             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) % 100000
-                  AS BIGINT) AS cents
-      FROM events
-      WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_id IS NOT NULL
-        AND value IS NOT NULL AND ISFINITE(value)
+             {_CENTS_SQL}
       GROUP BY day, step_s, member, la, lo
-    ), rd AS (
-      SELECT day, ROW_NUMBER() OVER (ORDER BY day) AS rd
-      FROM (SELECT DISTINCT day FROM cells)
-    ), base AS (
+    ), {_DAY_RANK_SQL}, base AS (
       SELECT c.* FROM cells c JOIN rd ON c.day = rd.day WHERE rd.rd <= 8
     ), ins AS (
       SELECT c.day, c.step_s, c.member, c.la, c.lo, c.cents + 5 AS cents
@@ -8038,50 +7599,21 @@ def forecast_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaces as a value-hash mismatch vs the oracle's independent
     recomputation."""
     from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
-    from zarr_climate_etl_ipfs_spark.sources.store import GridStore
 
-    ev = t(spark, sf_dir, "events")
-    cells = (
-        ev.filter(
-            F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") < F.lit(float("inf")))
-        )
-        .groupBy(
-            F.to_date("ts").alias("day"),
+    ranked, n_days = _rank_days(
+        _cents_grid(
+            spark, sf_dir,
             ((F.col("user_id") % 3 + 1) * 3600).cast("long").alias("step_s"),
             (F.col("event_id") % 2).cast("long").alias("member"),
             (F.col("user_id") % 2).cast("long").alias("la"),
             (F.col("event_id") % 4).cast("long").alias("lo"),
         )
-        .agg(
-            (F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")) % 100000)
-            .alias("cents")
-        )
     )
-    wd = Window.orderBy("day")
-    rd = cells.select("day").distinct().withColumn("rd", F.row_number().over(wd))
-    # materialized once: four store actions branch off it (store_lifecycle_
-    # diff's localCheckpoint pattern); tiny frame, n_days x <=48 cells
-    ranked, n_days = _checkpoint_ranked(cells.join(F.broadcast(rd), "day"))
     out_schema = (
         "frt timestamp, step_s bigint, member bigint, sum_cents bigint, n_cells bigint"
     )
     if n_days == 0:
         return spark.createDataFrame([], out_schema)
-
-    def to_store_schema(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col("day").cast("timestamp").alias("forecast_reference_time"),
-            F.col("step_s").cast("long").alias("step"),
-            F.col("member").cast("int").alias("ensemble"),
-            F.col("la").cast("float").alias("latitude"),
-            F.col("lo").cast("float").alias("longitude"),
-            F.col("cents").cast("float").alias("cents"),
-        )
 
     cols = ["day", "step_s", "member", "la", "lo"]
     base = ranked.filter(F.col("rd") <= 8).select(*cols, "cents")
@@ -8097,12 +7629,10 @@ def forecast_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         time_bucket="month",
         allow_overwrite=True,
     )
-    root = _scratch_root("forecast_rt", sf_dir)
-    gs = GridStore(root, desc, spark)
-    gs.destroy()
-    gs.write_initial(to_store_schema(base))
+    gs = _fresh_store(spark, "forecast_rt", sf_dir, desc)
+    gs.write_initial(_to_store(base, desc))
     if n_days >= 2:  # the insert leg (ranks 2-3) exists => update non-empty
-        gs.update(to_store_schema(ins.unionByName(app)))
+        gs.update(_to_store(ins.unionByName(app), desc))
     return (
         gs.dataset()
         .groupBy(
@@ -8120,17 +7650,14 @@ def forecast_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "catalog_lifecycle",
-    """
+    f"""
     WITH cells AS (
       SELECT CAST(ts AS DATE) AS day,
              CAST(user_id % 4 AS DOUBLE) * 10 AS la,
              CAST(event_id % 4 AS DOUBLE) * 20 AS lo
       FROM events
       WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_id IS NOT NULL
-    ), rd AS (
-      SELECT day, ROW_NUMBER() OVER (ORDER BY day) AS rd
-      FROM (SELECT DISTINCT day FROM cells)
-    ), tagged AS (
+    ), {_DAY_RANK_SQL}, tagged AS (
       SELECT c.day, c.la, c.lo,
              CASE WHEN rd.rd <= 4 THEN 1 WHEN rd.rd <= 8 THEN 2
                   ELSE 3 END AS v
@@ -8185,9 +7712,7 @@ def catalog_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("user_id") % 4).cast("double") * 10).alias("la"),
         ((F.col("event_id") % 4).cast("double") * 20).alias("lo"),
     )
-    wd = Window.orderBy("day")
-    rd = cells.select("day").distinct().withColumn("rd", F.row_number().over(wd))
-    ranked, n_days = _checkpoint_ranked(cells.join(F.broadcast(rd), "day"))
+    ranked, n_days = _rank_days(cells)
     out_schema = (
         "version bigint, start_ts timestamp, end_ts timestamp, "
         "min_lon double, min_lat double, max_lon double, max_lat double, "
@@ -8399,31 +7924,9 @@ def zarr_v3_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     a divergence isolates to the v3 codec/key/metadata layer. Previously
     the v3 WRITE path was pytest-only; this puts it under the value-hash
     gate at every SF and adversarial corpus."""
-    import hashlib as _hashlib
-    import tempfile as _tempfile
+    from zarr_climate_etl_ipfs_spark.sources.zarr2 import write_zarr_tall
 
-    from zarr_climate_etl_ipfs_spark.sources.zarr2 import (
-        read_zarr_tall,
-        write_zarr_tall,
-    )
-
-    ev = t(spark, sf_dir, "events")
-    grid = (
-        ev.filter(
-            F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") < F.lit(float("inf")))
-        )
-        .groupBy(
-            F.date_trunc("hour", "ts").alias("t"),
-            (F.col("user_id") % 8).alias("cell_y"),
-            (F.col("event_id") % 16).alias("cell_x"),
-        )
-        .agg(F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"))
-    )
+    grid = _hourly_cents_grid(spark, sf_dir, ny=8, nx=16)
     store = _scratch_root("zarr3_rt", sf_dir)
     fill = -(2**62)
     write_zarr_tall(
@@ -8436,12 +7939,7 @@ def zarr_v3_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         overwrite=True,
         zarr_format=3,
     )
-    back = read_zarr_tall(spark, store, var="cents", skip_fill=True)
-    return (
-        back.groupBy("t")
-        .agg(F.sum("cents").alias("sum_cents"), F.count("*").alias("n_cells"))
-        .orderBy("t")
-    )
+    return _zarr_cents_per_hour(spark, store)
 
 
 @q(
@@ -8476,34 +7974,15 @@ def kerchunk_refs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-sized by design (the reference holds them in dm.zarr_jsons),
     so the build/materialize steps are driver-side; the read stays
     spark.range-over-ordinals + mapInPandas."""
-    import hashlib as _hashlib
     import math as _math
     import os as _os
-    import tempfile as _tempfile
 
     from zarr_climate_etl_ipfs_spark.sources.zarr2 import (
         materialize_kerchunk_refs,
-        read_zarr_tall,
         write_zarr_tall,
     )
 
-    ev = t(spark, sf_dir, "events")
-    grid = (
-        ev.filter(
-            F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") < F.lit(float("inf")))
-        )
-        .groupBy(
-            F.date_trunc("hour", "ts").alias("t"),
-            (F.col("user_id") % 4).alias("cell_y"),
-            (F.col("event_id") % 4).alias("cell_x"),
-        )
-        .agg(F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"))
-    )
+    grid = _hourly_cents_grid(spark, sf_dir, ny=4, nx=4)
     src_store = _scratch_root("kc_src", sf_dir)
     dst_store = _scratch_root("kc_dst", sf_dir)
     fill = -(2**62)
@@ -8541,31 +8020,19 @@ def kerchunk_refs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _shutil.rmtree(dst_store, ignore_errors=True)
     materialize_kerchunk_refs(doc, dst_store)
-    back = read_zarr_tall(spark, dst_store, var="cents", skip_fill=True)
-    return (
-        back.groupBy("t")
-        .agg(F.sum("cents").alias("sum_cents"), F.count("*").alias("n_cells"))
-        .orderBy("t")
-    )
+    return _zarr_cents_per_hour(spark, dst_store)
 
 
 @q(
     "store_compact_effect",
-    """
+    f"""
     WITH cells AS (
       SELECT CAST(ts AS DATE) AS day,
              CAST(user_id % 4 AS BIGINT) AS la,
              CAST(event_id % 4 AS BIGINT) AS lo,
-             CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) % 100000
-                  AS BIGINT) AS cents
-      FROM events
-      WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_id IS NOT NULL
-        AND value IS NOT NULL AND ISFINITE(value)
+             {_CENTS_SQL}
       GROUP BY day, la, lo
-    ), rd AS (
-      SELECT day, ROW_NUMBER() OVER (ORDER BY day) AS rd
-      FROM (SELECT DISTINCT day FROM cells)
-    )
+    ), {_DAY_RANK_SQL}
     SELECT c.day, CAST(SUM(c.cents) AS BIGINT) AS sum_cents,
            COUNT(*) AS n_cells
     FROM cells c JOIN rd ON c.day = rd.day
@@ -8585,58 +8052,28 @@ def store_compact_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantee, checked by value rather than by trust). Batch routing is
     driven by ONE collected scalar (the ranked-day count) off a
     materialized input — no per-branch head() actions."""
-    import hashlib as _hashlib
-    import tempfile as _tempfile
-
     from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
-    from zarr_climate_etl_ipfs_spark.sources.store import GridStore
 
-    ev = t(spark, sf_dir, "events")
-    cells = (
-        ev.filter(
-            F.col("ts").isNotNull()
-            & F.col("user_id").isNotNull()
-            & F.col("event_id").isNotNull()
-            & F.col("value").isNotNull()
-            & ~F.isnan("value")
-            & (F.abs("value") < F.lit(float("inf")))
-        )
-        .groupBy(
-            F.to_date("ts").alias("day"),
+    ranked, n_days = _rank_days(
+        _cents_grid(
+            spark, sf_dir,
             (F.col("user_id") % 4).cast("long").alias("la"),
             (F.col("event_id") % 4).cast("long").alias("lo"),
         )
-        .agg(
-            (F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")) % 100000)
-            .alias("cents")
-        )
     )
-    wd = Window.orderBy("day")
-    rd = cells.select("day").distinct().withColumn("rd", F.row_number().over(wd))
-    ranked, n_days = _checkpoint_ranked(cells.join(F.broadcast(rd), "day"))
     out_schema = "day date, sum_cents bigint, n_cells bigint"
     if n_days == 0:
         return spark.createDataFrame([], out_schema)
 
-    def to_store_schema(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col("day").cast("timestamp").alias("time"),
-            F.col("la").cast("float").alias("latitude"),
-            F.col("lo").cast("float").alias("longitude"),
-            F.col("cents").cast("float").alias("cents"),
-        )
-
-    root = _scratch_root("store_compact", sf_dir)
     desc = DatasetDescriptor(
         dataset_name="compaction", data_var="cents", time_bucket="month"
     )
-    gs = GridStore(root, desc, spark)
-    gs.destroy()
-    gs.write_initial(to_store_schema(ranked.filter(F.col("rd") <= 10)))
+    gs = _fresh_store(spark, "store_compact", sf_dir, desc)
+    gs.write_initial(_to_store(ranked.filter(F.col("rd") <= 10), desc))
     for lo_rd, hi_rd in ((11, 12), (13, 14), (15, 16)):
         if n_days >= lo_rd:  # driver-known: no per-batch head() action
             gs.append(
-                to_store_schema(ranked.filter(F.col("rd").between(lo_rd, hi_rd)))
+                _to_store(ranked.filter(F.col("rd").between(lo_rd, hi_rd)), desc)
             )
     gs.compact(max_files_per_bucket=1)
     return (
@@ -8708,10 +8145,7 @@ def ivf_incremental_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     out = search_ivf_index(spark, path, query, k=5, n_probe=8)
-    return out.select(
-        "query_id", "vec_id", F.col("rank").cast("long").alias("rank"),
-        F.round("cosine", 6).alias("cosine"),
-    ).orderBy("query_id", "rank")
+    return _knn_rows(out)
 
 
 #: CONCAVE zones in the same integer cell space as _ZONES. Inside-ness is
@@ -8772,13 +8206,7 @@ def polygon_mask_concave(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: like zonal_stats, NO join — each point evaluates |zones|
     codegen'd literal predicates in one pass, then a map-side-partial
     aggregation on the tiny zone key; at 100 TB it is scan + partial agg."""
-    e = t(spark, sf_dir, "events").filter(
-        F.col("event_id").isNotNull()
-        & F.col("user_id").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
+    e = t(spark, sf_dir, "events").filter(_finite_events("event_id", "user_id", lt=False))
     px = (F.col("event_id") % 16).cast("long")
     py = (F.col("user_id") % 8).cast("long")
     cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
@@ -8818,9 +8246,8 @@ def polygon_mask_concave(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-12 additions: split leakage, shot boundaries, and two SURVEY §2
-# function rows (F5 bucket paths, F6 sentinel masking) promoted from
-# pytest-only to oracle-gated
+# Split leakage, shot boundaries, and two SURVEY §2 function rows (F5
+# bucket paths, F6 sentinel masking) under the oracle gate
 # ---------------------------------------------------------------------------
 
 
@@ -8928,25 +8355,7 @@ def shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate keyed on doc_id; sort only for driver output."""
     from zarr_climate_etl_ipfs_spark import multimodal as mm
 
-    @F.pandas_udf("binary")
-    def gen_vid(doc_id: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from zarr_climate_etl_ipfs_spark.mediacodecs import encode_gif_animation
-
-        out = []
-        for d in doc_id:
-            side = int(d) % 6 + 2
-            nf = int(d) % 5 + 2
-            frames = np.stack(
-                [
-                    np.full((side, side, 3), (int(d) + 40 * f) % 251, dtype=np.uint8)
-                    for f in range(nf)
-                ]
-            )
-            out.append(encode_gif_animation(frames, delay_cs=10))
-        return pd.Series(out)
-
+    gen_vid = _gif_udf(step=40)
     d = t_wide(spark, sf_dir, "documents").select(
         "doc_id", gen_vid("doc_id").alias("content")
     )
@@ -9019,7 +8428,7 @@ def sentinel_null_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def date_bucket_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Folder-path-from-date derivation (SURVEY F5: the store's
-    time_bucket partition key, `sources/store._BUCKET_FMT['month']`)
+    time_bucket partition key, `config.BUCKET_FMT['month']`)
     promoted to an oracle-gated row: derive each order's month bucket
     with the SAME format constant the GridStore writer partitions by, and
     aggregate per bucket — exactly the accounting a store operator runs
@@ -9027,14 +8436,14 @@ def date_bucket_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning: Catalyst pushes it to the scan, so at 100 TB only the
     selected year's row groups are read (min/max stats), mirroring the
     store's manifest bucket pruning."""
-    from zarr_climate_etl_ipfs_spark.sources.store import _BUCKET_FMT
+    from zarr_climate_etl_ipfs_spark.config import BUCKET_FMT
 
     o = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1996-01-01")
     )
     return (
         o.groupBy(
-            F.date_format("o_orderdate", _BUCKET_FMT["month"]).alias("bucket")
+            F.date_format("o_orderdate", BUCKET_FMT["month"]).alias("bucket")
         )
         .agg(
             F.count("*").alias("n_orders"),
@@ -9130,19 +8539,16 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 12b additions: OLS trend/detrend, exact n-gram decontamination,
+# OLS trend/detrend, exact n-gram decontamination,
 # encoding-quality audit, IDW scatter-to-grid interpolation
 # ---------------------------------------------------------------------------
 
 
 @q(
     "ols_trend_detrend",
-    """
+    f"""
     WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS day, AVG(value) AS tmean
-      FROM events
-      WHERE event_type IS NOT NULL AND value IS NOT NULL AND ISFINITE(value)
-      GROUP BY event_type, CAST(ts AS DATE)
+      {_DAILY_TMEAN_SQL}
     ), dx AS (
       SELECT event_type, tmean,
              DATE_DIFF('day', MIN(day) OVER (PARTITION BY event_type), day) AS x
@@ -9182,15 +8588,7 @@ def ols_trend_detrend(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast) back onto daily. At 100 TB the events scan dominates and
     happens once — everything after the first rollup is dimension-sized.
     No UDF anywhere: regr_* are Catalyst aggregates inside codegen."""
-    e = t(spark, sf_dir, "events").filter(
-        F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
-    daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.avg("value").alias("tmean")
-    )
+    daily = _daily_tmean(spark, sf_dir)
     w = Window.partitionBy("event_type")
     dx = daily.select(
         "event_type",
@@ -9274,22 +8672,10 @@ def ngram_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def grams(split_pred):
         # the cheap doc_id split predicate goes BELOW the barrier (it
-        # prunes at the scan), while ws is materialized in its own
-        # Project behind the nondeterministic _mid barrier
-        # (duplicate_spans' CollapseProject note): without the barrier
-        # Catalyst collapses this Project into the window transform and
-        # inlines the TOKENIZER into every per-window slice — measured
-        # 2.1× the whole query's cost at sf0.1 (3.9 s → 1.8 s)
-        dws = (
-            d.filter(split_pred)
-            .select(
-                "doc_id",
-                words(F.col("text")).alias("ws"),
-                F.monotonically_increasing_id().alias("_mid"),
-            )
-            .filter(F.col("_mid") >= 0)
-            .drop("_mid")
-        )
+        # prunes at the scan); behind it, Catalyst cannot collapse the ws
+        # Project into the window transform and inline the tokenizer into
+        # every per-window slice
+        dws = _fenced_select(d.filter(split_pred), "doc_id", words(F.col("text")).alias("ws"))
         return dws.select(
             "doc_id",
             F.when(
@@ -9453,13 +8839,7 @@ def idw_regrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform node keys, and a wider kernel radius only changes the
     constant. The same shape holds for any finite-support kernel
     (Cressman, Barnes): weights become literals in the offset array."""
-    e = t(spark, sf_dir, "events").filter(
-        F.col("event_id").isNotNull()
-        & F.col("user_id").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
+    e = t(spark, sf_dir, "events").filter(_finite_events("event_id", "user_id", lt=False))
     px = (F.col("event_id") % 16).cast("long")
     py = (F.col("user_id") % 8).cast("long")
     offsets = F.array(
@@ -9536,12 +8916,7 @@ def tx90p_exceedance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one raw-events shuffle into the daily rollup; every window runs
     at resample scale (series × days); the threshold is a k-row broadcast
     join back. Same 100 TB shape as the rest of the ETCCDI family."""
-    e = t(spark, sf_dir, "events").filter(
-        F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
+    e = t(spark, sf_dir, "events").filter(_finite_events("event_type", lt=False))
     daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.max("value").alias("tmax")
     )
@@ -9618,15 +8993,7 @@ def source_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zarr_climate_etl_ipfs_spark.operators.textanalysis import words
 
     d = t_wide(spark, sf_dir, "documents").filter(F.col("source").isNotNull())
-    dws = (
-        d.select(
-            "source",
-            words(F.col("text")).alias("ws"),
-            F.monotonically_increasing_id().alias("_mid"),
-        )
-        .filter(F.col("_mid") >= 0)
-        .drop("_mid")
-    )
+    dws = _fenced_select(d, "source", words(F.col("text")).alias("ws"))
     sh = (
         dws.select(
             "source",
@@ -9657,7 +9024,7 @@ def source_span_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-13 additions: lexical entity resolution + robust statistics
+# Lexical entity resolution + robust statistics
 # ---------------------------------------------------------------------------
 
 
@@ -9803,7 +9170,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic stage operates on thousands of rows per series. The join key
     is the series, so skew is bounded by series count.
 
-    T² BOUND (round-13 verdict #8): the pair stage is quadratic in days-
+    T² BOUND: the pair stage is quadratic in days-
     per-series. Fine for T ≲ 10⁴ (27-year daily ≈ 48M pairs/series — one
     shuffle-free map stage over a per-series relation that fits in an
     executor); a 30-year HOURLY archive (T ≈ 2.6×10⁵, 3.4×10¹⁰
@@ -9813,13 +9180,7 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Theil-Sen (pairs restricted to |d2-d1| ≤ W, linear in T·W, the standard
     large-archive form). SCALE.md carries the bound table; neither variant
     is needed at the catalog's daily cadence."""
-    ev = t(spark, sf_dir, "events").filter(
-        F.col("ts").isNotNull()
-        & F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
+    ev = t(spark, sf_dir, "events").filter(_finite_events("ts", "event_type", lt=False))
     daily = (
         ev.groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(
@@ -9895,12 +9256,7 @@ def robust_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the exact percentile is the operator the reference's QC layer
     needs (approx_percentile would break the oracle and the QC contract).
     """
-    ev = t(spark, sf_dir, "events").filter(
-        F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
+    ev = t(spark, sf_dir, "events").filter(_finite_events("event_type", lt=False))
     v = ev.select("event_type", "value")
     med = v.groupBy("event_type").agg(F.expr("percentile(value, 0.5)").alias("med"))
     dev = v.join(F.broadcast(med), "event_type").withColumn(
@@ -9979,13 +9335,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series daily relation (days-bounded, thousands of rows per series
     at any corpus size) — the per-series window state is the scale unit,
     never the raw rows. One final per-series top-1 via row_number."""
-    ev = t(spark, sf_dir, "events").filter(
-        F.col("ts").isNotNull()
-        & F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
+    ev = t(spark, sf_dir, "events").filter(_finite_events("ts", "event_type", lt=False))
     daily = ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
         F.sum(F.round(F.col("value") * 1e6).cast("long")).alias("ds")
     )
@@ -10060,25 +9410,9 @@ def streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline SUM with all comparisons cross-multiplied by n_b). Per-batch
     partials (counts sum, running max maxes) make the result independent
     of micro-batch boundaries."""
-    from pyspark.sql import types as T
-
     from zarr_climate_etl_ipfs_spark.streaming.incremental import cusum_drift
 
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampNTZType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _events_stream(spark, sf_dir)
     filtered = stream.filter(
         F.col("event_type").isNotNull()
         & F.col("ts").isNotNull()
@@ -10133,11 +9467,11 @@ def siegel_repeated_median_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     median slope against every OTHER day, then the median of those
     per-point medians (Siegel 1982). The 50%-breakdown upgrade of
     theil_sen_trend (Sen's single median breaks down at 29%), and the
-    DOCUMENTED MITIGATION that query's T² bound points at (round-13
-    verdict #8; SCALE.md "theil_sen_trend pair-stage bound") — this entry
-    ships the mitigation instead of only citing it.
+    DOCUMENTED MITIGATION that query's T² bound points at (SCALE.md
+    "theil_sen_trend pair-stage bound") — this entry ships the
+    mitigation instead of only citing it.
 
-    Capability gap closed (round-13 verdict #6 discipline): robust trend
+    Robust trend
     whose quadratic intermediate never has to be HELD — total pair work is
     still T(T-1) per series, but the inner median collapses each day's
     T-1 slopes inside one groupBy(series, day) aggregate, so the largest
@@ -10159,13 +9493,7 @@ def siegel_repeated_median_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions, and two nested order statistics — percentile(0.5) and
     DuckDB MEDIAN both average the two middle doubles on even counts, the
     pairing theil_sen_trend's green rows already certify."""
-    ev = t(spark, sf_dir, "events").filter(
-        F.col("ts").isNotNull()
-        & F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & ~F.isnan("value")
-        & (F.abs("value") != float("inf"))
-    )
+    ev = t(spark, sf_dir, "events").filter(_finite_events("ts", "event_type", lt=False))
     daily = (
         ev.groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(

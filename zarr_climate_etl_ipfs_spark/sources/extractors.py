@@ -170,7 +170,7 @@ class FTPExtractor(Extractor):
         fetches don't serialize on one control channel
         (extractor.py:546-549).
 
-        Host resolution (explicit, round-13 review): when the extractor
+        Host resolution (explicit): when the extractor
         carries a ``host``, the WHOLE source is the RETR path (the
         reference's shape — host on the manager, sources are paths); embed
         ``host[:port]/path`` in the source only on a host-less extractor.
@@ -195,8 +195,8 @@ class FTPExtractor(Extractor):
         # Download to a sibling temp path and rename only after RETR
         # succeeds: a failed transfer (550, timeout) must not leave a
         # zero-byte file at the destination that a later existence check
-        # mistakes for a completed download (round-13 advice — the
-        # reference shares this flaw; extractor.py:546-549 writes direct).
+        # mistakes for a completed download (the reference has this flaw;
+        # extractor.py:546-549 writes direct).
         # The suffix is unique per process+object so CONCURRENT fetches of
         # the same destination (speculative/retried tasks — the class this
         # extractor's fresh-connection contract is designed for) cannot
@@ -217,8 +217,7 @@ class FTPExtractor(Extractor):
             # class the suffix targets) leaves its .part behind forever —
             # the in-process except-cleanup never runs. Anything older
             # than an hour cannot belong to a live transfer of this file;
-            # a concurrent LIVE fetch's temp is younger and survives
-            # (r15 advice fix).
+            # a concurrent LIVE fetch's temp is younger and survives.
             cutoff = time.time() - 3600.0
             for stale in destination.parent.glob(f"{destination.name}.*.part"):
                 if stale != tmp:

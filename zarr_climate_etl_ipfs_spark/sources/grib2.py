@@ -426,13 +426,12 @@ def _unpack_png(payload: bytes, n: int, bits: int) -> np.ndarray:
             # sub-byte greyscale; GRIB2 packs raw scaled integers X, so
             # divide the exact factor back out (it divides evenly by
             # construction). Without this, 1/2/4-bit 5.41 payloads would
-            # decode to silently inflated values — caught when the r12b
-            # PNG work turned the old depth<8 refusal into a decode.
+            # decode to silently inflated values.
             # The factor is a property of the PNG's ACTUAL depth, not the
             # declared GRIB2 bits: 5/6/7-bit fields have no legal PNG
             # greyscale depth and ship raw at depth 8 (no scaling), so
             # deriving the factor from ``bits`` would silently integer-
-            # divide them into garbage (round-13 advisory fix).
+            # divide them into garbage.
             x = x // (255 // ((1 << depth) - 1))
     elif bits == 24 and c == 3:
         x = (flat[:, 0] << 16) | (flat[:, 1] << 8) | flat[:, 2]

@@ -1,4 +1,4 @@
-"""Read-only IPFS/IPLD import path (S23/S24 literal, round-14 verdict #5).
+"""Read-only IPFS/IPLD import path (S23/S24 literal).
 
 The reference publishes each dataset as a Zarr store whose key→chunk mapping
 lives in an IPLD DAG (utils/ipfs.py:42-93 ``ipfs_put``/``ipfs_get`` over a

@@ -79,11 +79,10 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from zarr_climate_etl_ipfs_spark.config import DatasetDescriptor
+from zarr_climate_etl_ipfs_spark.config import BUCKET_FMT, DatasetDescriptor, strftime_fmt
 from zarr_climate_etl_ipfs_spark.operators.updates import validate_update
 from zarr_climate_etl_ipfs_spark.sources.ingest import _evaluated_once
 
-_BUCKET_FMT = {"day": "yyyy-MM-dd", "month": "yyyy-MM", "year": "yyyy"}
 _BUCKET_COL = "time_bucket"
 
 
@@ -386,8 +385,7 @@ class GridStore:
         bucket overlaps [start, end] are even listed — the Delta-data-skipping
         analog of the reference's binary file search (O4/Q7)."""
         td = self.desc.time_dim
-        fmt = _BUCKET_FMT[self.desc.time_bucket]
-        py_fmt = fmt.replace("yyyy", "%Y").replace("MM", "%m").replace("dd", "%d")
+        py_fmt = strftime_fmt(BUCKET_FMT[self.desc.time_bucket])
         lo, hi = start.strftime(py_fmt), end.strftime(py_fmt)
         files = [f for f in self.manifest()["files"] if lo <= _bucket_of(f) <= hi]
         return self._read(files).filter(F.col(td).between(F.lit(start), F.lit(end)))
@@ -488,7 +486,7 @@ class GridStore:
     # -- write modes (S13-S16) ----------------------------------------------
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
-        fmt = _BUCKET_FMT[self.desc.time_bucket]
+        fmt = BUCKET_FMT[self.desc.time_bucket]
         return df.withColumn(_BUCKET_COL, F.date_format(F.col(self.desc.time_dim), fmt))
 
     def _layout(self, df: DataFrame) -> DataFrame:
@@ -651,9 +649,9 @@ class GridStore:
         m = self.manifest()
         with _evaluated_once(df):
             update = self._with_bucket(df.select(*self.desc.schema().fieldNames()))
-            # r16: ONE collect serves both the replaced time keys (now a literal
-            # anti predicate in the carry-over rewrite — the key-FRAME form
-            # re-executed its store-scan + distinct subtree inside the staging
+            # ONE collect serves both the replaced time keys (a literal anti
+            # predicate in the carry-over rewrite — a key-FRAME anti-join would
+            # re-execute its store-scan + distinct subtree inside the staging
             # write job) and the touched bucket set. Bounded by construction:
             # an update batch's distinct time steps are small (operators/
             # updates.py module docstring).
@@ -679,8 +677,8 @@ class GridStore:
         ``m["version"] + 1``; ``publish_kw`` goes to :meth:`_publish`. No
         touched bucket (an append) reads no carry and keeps every file. The
         replaced times (those in the touched buckets) are a literal NOT-IN
-        (``anti_times`` is the bounded collected key list — r16: the
-        key-FRAME broadcast anti-join re-executed its store-scan + distinct
+        (``anti_times`` is the bounded collected key list — a key-FRAME
+        broadcast anti-join would re-execute its store-scan + distinct
         subtree inside the staging write job); NULL-time rows survive,
         matching left_anti's non-matching-row semantics. No conflict retry:
         the legs were planned against ``m`` — a racing commit is a true
@@ -739,12 +737,12 @@ class GridStore:
                 # the insert legs' touched-bucket set rides the validator's
                 # single aggregation — collecting it separately cost one more
                 # driver action per update
-                insert_bucket_fmt=_BUCKET_FMT[desc.time_bucket],
-                # r16: the insert key TIMES ride the same aggregation, so leg
+                insert_bucket_fmt=BUCKET_FMT[desc.time_bucket],
+                # the insert key TIMES ride the same aggregation, so leg
                 # routing below is a literal predicate on the input frame —
-                # the broadcast semi/anti-joins against the split key frames
-                # re-executed their store-scan + distinct + join subtrees
-                # inside each staging write job. Bounded by construction (an
+                # broadcast semi/anti-joins against the split key frames
+                # would re-execute their store-scan + distinct + join
+                # subtrees inside each staging write job. Bounded by construction (an
                 # update batch's distinct steps are small — same argument as
                 # insert_buckets), so the literal IN list stays plan-cheap.
                 collect_insert_times=True,
@@ -760,9 +758,8 @@ class GridStore:
             if n_ins and not desc.allow_overwrite:
                 # warn-and-skip semantics (publish.py:287-293) — the reference
                 # WARNS here (self.warn), and a silent skip is a data-loss
-                # footgun for callers who forgot the flag (found driving the
-                # library user-style in round 12: an overwrite leg vanished
-                # with no signal while the append leg landed)
+                # footgun for callers who forgot the flag (an overwrite leg
+                # would vanish with no signal while the append leg lands)
                 warnings.warn(
                     f"update: skipping {n_ins} overwrite key(s) that already exist — "
                     "allow_overwrite is not set on the descriptor; only the append "
@@ -1061,7 +1058,7 @@ class GridStore:
 
         stats = write_bucket_grids(
             self.dataset(version), str(path), var, td, spatial,
-            _BUCKET_FMT[desc.time_bucket], "nc", encoder_for,
+            BUCKET_FMT[desc.time_bucket], "nc", encoder_for,
         )
         return {k: stats[k] for k in ("files", "bytes", "rows")}
 
@@ -1122,7 +1119,7 @@ class GridStore:
             desc.time_dim,
             lat_dim,
             lon_dim,
-            bucket_fmt=_BUCKET_FMT[desc.time_bucket],
+            bucket_fmt=BUCKET_FMT[desc.time_bucket],
             template=template,
             bits_per_value=bits_per_value,
             decimal_scale=decimal_scale,

@@ -131,7 +131,7 @@ def windowed_stats(
     # mean over the NON-missing values only: avg() skips NULL but would
     # propagate NaN, making the same missing datum yield a valid mean or a
     # NaN mean depending on representation while null_share counts both as
-    # missing (round-14 review catch)
+    # missing
     return df.groupBy(F.window(time_col, window).alias("w")).agg(
         F.count("*").alias("n"),
         F.round(F.avg(F.when(~isnull, F.col(value_col))), 4).alias("mean_value"),
@@ -303,7 +303,7 @@ def zscore_anomalies_exact(
             # non-finite/NULL values are data-quality rejects: they carry
             # no defined cents representation, and an unguarded
             # int(floor(nan)) raises — one corrupt record would kill the
-            # whole streaming query (round-8 adversarial-corpus catch).
+            # whole streaming query.
             # Ignored entirely: not counted, not tested, no state update.
             if not math.isfinite(v):
                 continue

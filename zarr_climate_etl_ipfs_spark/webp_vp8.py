@@ -1,6 +1,6 @@
 """Lossy WebP (VP8): header probe + decoder-injection seam.
 
-DECISION RECORD (round 13) — why there is no from-scratch VP8 pixel
+Why there is no from-scratch VP8 pixel
 decoder here, same standard as GRIB2 template 5.40 (SURVEY.md §8):
 
 A VP8 key-frame decoder's structure is fully reproducible from RFC 6386

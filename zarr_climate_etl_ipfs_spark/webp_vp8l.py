@@ -480,7 +480,7 @@ def _predict(mode: int, L, T, TR, TL) -> np.ndarray:
 def _predict_scalar(mode: int, L, T, TR, TL):
     """_predict on python-int 4-tuples — the hot decode path. Per-pixel
     numpy-scalar arithmetic costs ~5-10 ufunc dispatches per pixel
-    (round-7 review catch: ~1M-pixel crawl images took tens of seconds);
+    (~1M-pixel crawl images take tens of seconds);
     plain int tuples are an order of magnitude faster with identical
     semantics (asserted equal to _predict across all modes in tests)."""
     if mode == 1:
@@ -609,7 +609,7 @@ def _inverse_color_indexing(
         idx = greens[:, :orig_w]
     # RFC 9649 §4.2.3: a packed index past the color table selects
     # 0x00000000 (transparent black), not an error — spec-legal files can
-    # carry stray high bits in the packed lanes (round-8 advisor catch).
+    # carry stray high bits in the packed lanes.
     oob = idx >= pal.shape[0]
     if oob.any():
         out = pal[np.where(oob, 0, idx).reshape(-1)].copy()
@@ -678,7 +678,7 @@ def iter_webp_chunks(content: bytes):
     """Yield ``(fourcc, payload)`` over a RIFF/WEBP container (even-byte
     chunk padding per RIFF). The ONE chunk walk shared by decode_webp and
     mediacodecs.probe_media — duplicated walks diverge on truncation
-    handling (round-13 review). Raises MediaDecodeError on a non-WebP
+    handling. Raises MediaDecodeError on a non-WebP
     header; a chunk whose declared size overruns the buffer yields the
     truncated payload (callers decide whether that is fatal)."""
     if content[:4] != b"RIFF" or content[8:12] != b"WEBP":
@@ -728,7 +728,7 @@ def decode_webp(content: bytes, vp8_decoder=None) -> tuple[np.ndarray, dict]:
             rgb, meta = decode_vp8l(payload)
             # same merge as the injected-lossy branch below: extended
             # LOSSLESS files must surface the VP8X fields too, matching
-            # probe_media (the review caught the fix as half-applied)
+            # probe_media
             return rgb, {**meta, **vp8x}
         if fourcc == b"VP8 ":
             if vp8_decoder is not None:
@@ -892,8 +892,8 @@ def _write_prefix_code(
         # code with no zero runs): {sym: 0} would write an all-zero
         # code-length header — an EMPTY prefix code the decoder rejects.
         # Promote to a complete 1-bit code (1 bit per token; the padding
-        # symbol never occurs). Round-7 review catch: this crashed
-        # encode_webp with KeyError on a 2x2 image with greens {0,1,2,3}.
+        # symbol never occurs). Without it encode_webp raises KeyError on
+        # a 2x2 image with greens {0,1,2,3}.
         only = next(iter(cl_lengths))
         cl_lengths = {only: 1}
     cl_lengths = _complete_lengths(cl_lengths, 19)
